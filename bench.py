@@ -324,6 +324,18 @@ def _measure_canary(spark) -> float:
     return round(best, 4)
 
 
+def unclobbered(stem: str) -> str:
+    """``stem.json``, or the first free ``stem.rerunK.json`` when an
+    earlier run of the round already wrote it: the first run owns the
+    name and later runs land beside it, so no payload is overwritten."""
+    path = f"{stem}.json"
+    k = 1
+    while os.path.exists(path):
+        path = f"{stem}.rerun{k}.json"
+        k += 1
+    return path
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from hadoop_based_distributed_batch_processing_system_spark.registry import load_all
@@ -437,12 +449,7 @@ def main() -> None:
     }
     try:
         here = os.path.dirname(os.path.abspath(__file__))
-        stem = os.path.join(here, f"BENCH_LOCAL_r{_next_round()}")
-        local = f"{stem}.json"
-        k = 1
-        while os.path.exists(local):
-            local = f"{stem}.rerun{k}.json"
-            k += 1
+        local = unclobbered(os.path.join(here, f"BENCH_LOCAL_r{_next_round()}"))
         with open(local, "w") as fh:
             json.dump(payload, fh, indent=1, sort_keys=True)
     except OSError:

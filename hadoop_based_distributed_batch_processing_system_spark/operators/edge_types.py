@@ -27,6 +27,7 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_based_distributed_batch_processing_system_spark.built import built_once
 from hadoop_based_distributed_batch_processing_system_spark.registry import (
     interpolate_docstrings,
     register,
@@ -75,29 +76,14 @@ def _decimal_fixture(spark: SparkSession, sf_dir: str) -> str:
     side-fixture (flock + stamp, the conftest discipline) so the read
     path exercises parquet's real decimal physical encoding — logical
     type DECIMAL(18,2), not a double in disguise."""
-    import fcntl
-
     root = _decimal_fixture_dir(sf_dir)
-    stamp_file = os.path.join(root, "_BUILT")
-    stamp = "decfix-v1"
-    if os.path.exists(stamp_file) and open(stamp_file).read() == stamp:
-        return root
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if os.path.exists(stamp_file) and open(stamp_file).read() == stamp:
-            return root
+
+    def build() -> None:
         _decimal_frame(spark, sf_dir).write.mode("overwrite").parquet(
             os.path.join(root, "decimals")
         )
-        tmp = os.path.join(root, f"._BUILT.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_BUILT", "decfix-v1", build)
     return root
 
 

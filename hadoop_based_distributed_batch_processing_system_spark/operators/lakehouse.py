@@ -25,6 +25,12 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_based_distributed_batch_processing_system_spark.built import (
+    built_once,
+    read_text,
+    wipe_root,
+    write_atomic,
+)
 from hadoop_based_distributed_batch_processing_system_spark.registry import (
     interpolate_docstrings,
     register,
@@ -47,6 +53,7 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_dml_fingerprint,
     _tlog_dml_root,
     _tlog_latest_version,
+    _tlog_latest_version_safe,
     _tlog_live_dvs,
     _tlog_live_files,
     _tlog_dv_frame,
@@ -322,41 +329,16 @@ def _tlog_apply_wap(spark: SparkSession, sf_dir: str, root: str) -> None:
     staged and must FAIL its audit, leaving main byte-identical; then
     the GOOD slice stages, audits clean, and publishes as v3. Both
     sides of the gate are exercised on the table the registry reads."""
-    import fcntl
     import json
 
-    stamp_file = os.path.join(root, "_WAP")
     stamp = json.dumps(_TLOG_WAP_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        if _tlog_latest_version(root) != 2:
+    def build() -> None:
+        if _tlog_latest_version_safe(root) != 2:
             # mutations from a superseded spec on this root: wipe and
-            # rebuild the base (the DML recovery discipline). The
-            # build takes this same flock, so release around it.
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            # rebuild the base (the DML recovery discipline)
+            wipe_root(root)
             _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         if _tlog_latest_version(root) == 2:
             slice_df = (
                 load_table(spark, sf_dir, "orders")
@@ -381,13 +363,8 @@ def _tlog_apply_wap(spark: SparkSession, sf_dir: str, root: str) -> None:
                 )
             good = _tlog_wap_stage(slice_df, root, "file_wap_good")
             _tlog_wap_publish(spark, root, good)
-        tmp = os.path.join(root, f"._WAP.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_WAP", stamp, build)
 
 
 @register(
@@ -949,42 +926,15 @@ def _tlog_apply_trigger(spark: SparkSession, sf_dir: str, root: str) -> None:
     slice (4 groups), evaluate again (must FIRE — merge the two
     smallest). Decision records persist beside the stamp for the
     registry read."""
-    import fcntl
     import json
 
-    stamp_file = os.path.join(root, "_TRIGGER")
     stamp = json.dumps(_TLOG_TRG_SPEC, sort_keys=True)
     decisions_file = os.path.join(root, "_TRIGGER_DECISIONS")
 
-    def _ok() -> bool:
-        try:
-            return (
-                open(stamp_file).read() == stamp
-                and os.path.exists(decisions_file)
-            )
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        if _tlog_latest_version(root) != 2:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+    def build() -> None:
+        if _tlog_latest_version_safe(root) != 2:
+            wipe_root(root)
             _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         decisions = []
         d1 = _tlog_compact_trigger(spark, root)
         if d1["fired"] or _tlog_latest_version(root) != 2:
@@ -1011,17 +961,12 @@ def _tlog_apply_trigger(spark: SparkSession, sf_dir: str, root: str) -> None:
         if not d2["fired"]:
             raise RuntimeError(f"trigger failed to fire at threshold: {d2}")
         decisions.append({"step": 2, **d2})
-        tmp = os.path.join(root, f"._TRGDEC.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(decisions, fh)
-        os.replace(tmp, decisions_file)
-        tmp = os.path.join(root, f"._TRIGGER.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+        write_atomic(decisions_file, json.dumps(decisions))
+
+    built_once(
+        root, "_TRIGGER", stamp, build,
+        valid=lambda: os.path.exists(decisions_file),
+    )
 
 
 @register(
@@ -1144,27 +1089,12 @@ def _tlog_ev_stage_source(spark: SparkSession, sf_dir: str) -> str:
     — the landing zone a file-stream ingest tails in production
     (flock + stamp, hash-partitioned on event_id so every file's
     content is deterministic)."""
-    import fcntl
     import json
 
     src = _tlog_ev_src_dir(sf_dir)
-    stamp_file = os.path.join(src, "_STAGED")
     stamp = json.dumps(_TLOG_EV_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return src
-    os.makedirs(src, exist_ok=True)
-    lock_fh = open(os.path.join(src, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return src
+    def build() -> None:
         data = os.path.join(src, "data")
         (
             load_table(spark, sf_dir, "events")
@@ -1173,13 +1103,8 @@ def _tlog_ev_stage_source(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(data)
         )
-        tmp = os.path.join(src, f"._STAGED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(src, "_STAGED", stamp, build)
     return src
 
 
@@ -1192,53 +1117,21 @@ def _tlog_apply_ev_ingest(spark: SparkSession, sf_dir: str, root: str) -> None:
     engine's business — only the drained CONTENT is contracted — but
     the per-trigger cap guarantees a multi-batch history for the
     downstream incremental consumer."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
     )
 
-    stamp_file = os.path.join(root, "_INGESTED")
     spec = json.dumps(_TLOG_EV_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == spec
-        except OSError:
-            return False
+    spec_file = os.path.join(root, "_INGEST_SPEC")
 
-    if _ok():
-        return
-    src = _tlog_ev_stage_source(spark, sf_dir)
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        spec_file = os.path.join(root, "_INGEST_SPEC")
-        stale = False
-        try:
-            stale = open(spec_file).read() != spec
-        except OSError:
-            stale = os.path.isdir(os.path.join(root, "_log")) and any(
-                f.endswith(".json")
-                for f in os.listdir(os.path.join(root, "_log"))
-            )
-        if stale:
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        src = _tlog_ev_stage_source(spark, sf_dir)
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         if not os.path.exists(spec_file):
-            tmp = os.path.join(root, f"._SPEC.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(spec)
-            os.replace(tmp, spec_file)
+            write_atomic(spec_file, spec)
 
         def land(batch_df: DataFrame, batch_id: int) -> None:
             if batch_df.isEmpty():
@@ -1284,13 +1177,11 @@ def _tlog_apply_ev_ingest(spark: SparkSession, sf_dir: str, root: str) -> None:
                 f"events ingest landed {got} rows, source has {want} — "
                 "a batch was lost or double-applied"
             )
-        tmp = os.path.join(root, f"._INGESTED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(spec)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(
+        root, "_INGESTED", spec, build,
+        resume=lambda: read_text(spec_file) == spec,
+    )
 
 
 @register(
@@ -1482,12 +1373,9 @@ def _tlog_apply_ev_rollup(
     view refresh runs — each step reads ONLY that commit's change
     files. Crash-resumable: consumed versions are batch-keyed commits,
     so a resume applies only the missing ones."""
-    import fcntl
     import json
-    import shutil
 
     ev_latest = _tlog_latest_version(ev_root)
-    stamp_file = os.path.join(rollup_root, "_ROLLED")
     spec = json.dumps(
         {
             "impl": 1,
@@ -1498,50 +1386,19 @@ def _tlog_apply_ev_rollup(
         sort_keys=True,
     )
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == spec
-        except OSError:
-            return False
+    spec_file = os.path.join(rollup_root, "_ROLLUP_SPEC")
 
-    if _ok():
-        return
-    os.makedirs(rollup_root, exist_ok=True)
-    lock_fh = open(os.path.join(rollup_root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        spec_file = os.path.join(rollup_root, "_ROLLUP_SPEC")
-        stale = False
-        try:
-            stale = open(spec_file).read() != spec
-        except OSError:
-            stale = os.path.isdir(os.path.join(rollup_root, "_log")) and any(
-                f.endswith(".json")
-                for f in os.listdir(os.path.join(rollup_root, "_log"))
-            )
-        if stale:
-            for entry in os.listdir(rollup_root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(rollup_root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
         os.makedirs(os.path.join(rollup_root, "_log"), exist_ok=True)
         if not os.path.exists(spec_file):
-            tmp = os.path.join(rollup_root, f"._SPEC.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(spec)
-            os.replace(tmp, spec_file)
+            write_atomic(spec_file, spec)
         for v in range(ev_latest + 1):
             _tlog_rollup_consume(spark, rollup_root, ev_root, v)
-        tmp = os.path.join(rollup_root, f"._ROLLED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(spec)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(
+        rollup_root, "_ROLLED", spec, build,
+        resume=lambda: read_text(spec_file) == spec,
+    )
 
 
 @register(
@@ -1683,36 +1540,16 @@ def _tlog_apply_clone(spark: SparkSession, sf_dir: str, root: str) -> None:
     LOCAL group, v2 binds a LOCAL deletion vector to a BORROWED file —
     the clone diverges in both directions without the source changing
     by a byte (asserted)."""
-    import fcntl
     import json
-    import shutil
 
-    stamp_file = os.path.join(root, "_CLONED")
     stamp = json.dumps(_TLOG_CLN_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    src_root = _tlog_build(spark, sf_dir, _tlog_root(sf_dir))
-    src_latest = _tlog_latest_version(src_root)
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        src_root = _tlog_build(spark, sf_dir, _tlog_root(sf_dir))
+        src_latest = _tlog_latest_version(src_root)
         if os.path.isdir(os.path.join(root, "_log")):
             # stamped-stale or unknown-provenance dir: rebuild
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            wipe_root(root)
         _tlog_clone_shallow(src_root, root, src_latest)
         slice_df = (
             load_table(spark, sf_dir, "orders")
@@ -1750,13 +1587,8 @@ def _tlog_apply_clone(spark: SparkSession, sf_dir: str, root: str) -> None:
             raise RuntimeError(
                 "clone lifecycle mutated the SOURCE log — isolation broken"
             )
-        tmp = os.path.join(root, f"._CLONED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CLONED", stamp, build)
 
 
 @register(
@@ -1861,28 +1693,14 @@ def _tlog_apply_ev_cluster(spark: SparkSession, sf_dir: str, root: str) -> None:
     consumers (the rollup, the stream feeds) skip it instead of
     netting a table-sized add/remove pair to zero (Delta's OPTIMIZE
     flag). Flock + stamp idempotent."""
-    import fcntl
     import json
 
-    stamp_file = os.path.join(root, "_CLUSTERED")
     stamp = json.dumps(
         {"impl": 1, "weeks": _TLOG_EV_WEEKS, "src": _TLOG_EV_SPEC},
         sort_keys=True,
     )
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
         base = _tlog_latest_version(root)
         live = [
             os.path.basename(p) for p in _tlog_live_files(root, base)
@@ -1911,13 +1729,8 @@ def _tlog_apply_ev_cluster(spark: SparkSession, sf_dir: str, root: str) -> None:
             stats=stats,
             data_change=False,
         )
-        tmp = os.path.join(root, f"._CLUSTERED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CLUSTERED", stamp, build, resume=lambda: True)
 
 
 def _tlog_ts_prune(
@@ -2095,42 +1908,18 @@ def _tlog_apply_chk(spark: SparkSession, sf_dir: str, root: str) -> None:
     v3 ADDs the CHECK (existing data validated); an unsatisfiable
     constraint and a violating append are both REJECTED (asserted);
     v4 is a clean append through the enforcing write path."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_live_constraints,
     )
 
-    stamp_file = os.path.join(root, "_CHK")
     stamp = json.dumps(_TLOG_CHK_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        if _tlog_latest_version(root) != 2:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+    def build() -> None:
+        if _tlog_latest_version_safe(root) != 2:
+            wipe_root(root)
             _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         if _tlog_latest_version(root) == 2:
             # a constraint the data already violates must be rejected
             try:
@@ -2175,13 +1964,8 @@ def _tlog_apply_chk(spark: SparkSession, sf_dir: str, root: str) -> None:
                 root, add=promoted, remove=[], base_version=3,
                 read_set=set(), stats=stats,
             )
-        tmp = os.path.join(root, f"._CHK.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CHK", stamp, build)
 
 
 @register(
@@ -2260,9 +2044,7 @@ def _tlog_apply_rid(spark: SparkSession, sf_dir: str, root: str) -> None:
     of file_A (re-key + price bump) that CARRIES ``_rid`` through the
     rewrite. Carrying the id is the entire feature: it is what lets
     downstream consumers recognize the re-keyed row as the same row."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _TLOG_COMMITS,
@@ -2270,28 +2052,10 @@ def _tlog_apply_rid(spark: SparkSession, sf_dir: str, root: str) -> None:
         _tlog_commit,
     )
 
-    stamp_file = os.path.join(root, "_RID")
     stamp = json.dumps(_TLOG_RID_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        for entry in os.listdir(root):
-            if entry == ".lock":
-                continue
-            p = os.path.join(root, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_root(root)
         os.makedirs(os.path.join(root, "_log"))
         rows = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
@@ -2334,13 +2098,8 @@ def _tlog_apply_rid(spark: SparkSession, sf_dir: str, root: str) -> None:
             root, add=promoted, remove=["file_A"], base_version=2,
             read_set={"file_A"}, stats=stats or None,
         )
-        tmp = os.path.join(root, f"._RID.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_RID", stamp, build)
 
 
 def _tlog_cdc_images_by(
@@ -2543,37 +2302,17 @@ def _tlog_apply_pev(spark: SparkSession, sf_dir: str, root: str) -> None:
     spec to week(ts) — metadata only, not one data byte moves; v3
     appends days 17+ as week files. The table ends with BOTH layouts
     live at once."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit,
         _tlog_live_partitioning,
     )
 
-    stamp_file = os.path.join(root, "_PEV")
     stamp = json.dumps(_TLOG_PEV_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        for entry in os.listdir(root):
-            if entry == ".lock":
-                continue
-            p = os.path.join(root, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_root(root)
         os.makedirs(os.path.join(root, "_log"))
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "event_type", "value"
@@ -2608,13 +2347,8 @@ def _tlog_apply_pev(spark: SparkSession, sf_dir: str, root: str) -> None:
             raise RuntimeError("spec change did not replay")
         # v3: append the rest under the NEW spec (week files)
         _tlog_pev_write_under_spec(spark, root, events.filter(day >= 17), 2)
-        tmp = os.path.join(root, f"._PEV.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_PEV", stamp, build)
 
 
 @register(
@@ -2704,9 +2438,7 @@ def _tlog_apply_pcm(spark: SparkSession, sf_dir: str, root: str) -> None:
     physically under the NEW spelling — the table ends with both
     layouts AND both spellings live at once, the state a long-lived
     production table actually reaches."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit,
@@ -2714,28 +2446,10 @@ def _tlog_apply_pcm(spark: SparkSession, sf_dir: str, root: str) -> None:
         _tlog_live_partitioning,
     )
 
-    stamp_file = os.path.join(root, "_PCM")
     stamp = json.dumps(_TLOG_PCM_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        for entry in os.listdir(root):
-            if entry == ".lock":
-                continue
-            p = os.path.join(root, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_root(root)
         os.makedirs(os.path.join(root, "_log"))
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "event_type", "value"
@@ -2830,13 +2544,8 @@ def _tlog_apply_pcm(spark: SparkSession, sf_dir: str, root: str) -> None:
             root, add=promoted, remove=[], base_version=3, stats=stats,
             colphys={g: new_binding for g in promoted},
         )
-        tmp = os.path.join(root, f"._PCM.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_PCM", stamp, build)
 
 
 @register(
@@ -3106,33 +2815,14 @@ def _tlog_apply_txn(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     on A and a constraint-violating one on B — the whole transaction
     aborts and NEITHER table changes (A's staged branch is dropped
     despite auditing clean)."""
-    import fcntl
     import json
     import shutil
 
     root_a, root_b, coord = _tlog_txn_roots(sf_dir)
-    stamp_file = os.path.join(coord, "_TXN")
     stamp = json.dumps(_TLOG_TXN_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root_a, root_b
-    os.makedirs(coord, exist_ok=True)
-    lock_fh = open(os.path.join(coord, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root_a, root_b
-        for entry in os.listdir(coord):
-            if entry == ".lock":
-                continue
-            p = os.path.join(coord, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_root(coord)
         for r in (root_a, root_b):
             if os.path.isdir(r) and _tlog_latest_version_safe(r) != 2:
                 shutil.rmtree(r)
@@ -3191,21 +2881,9 @@ def _tlog_apply_txn(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         for r, group in ((root_a, "file_txn2_a"), (root_b, "file_txn2_b")):
             if os.path.exists(os.path.join(r, group)):
                 raise RuntimeError(f"aborted leg left data: {r}/{group}")
-        tmp = os.path.join(coord, f"._TXN.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(coord, "_TXN", stamp, build)
     return root_a, root_b
-
-
-def _tlog_latest_version_safe(root: str) -> int:
-    try:
-        return _tlog_latest_version(root)
-    except (RuntimeError, OSError):
-        return -2
 
 
 @register(
@@ -3298,38 +2976,18 @@ def _tlog_apply_sev(spark: SparkSession, sf_dir: str) -> str:
     phase's groups under their own physical schema; the table's
     manifest stats make the difference self-describing (phase-1
     groups simply record no ``quality`` bounds)."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
     )
 
     src, root = _tlog_sev_dirs(sf_dir)
-    stamp_file = os.path.join(root, "_SEV")
     stamp = json.dumps(_TLOG_SEV_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root
+    def build() -> None:
         for d in (root, src):
-            for entry in os.listdir(d) if os.path.isdir(d) else []:
-                if entry == ".lock":
-                    continue
-                p = os.path.join(d, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            wipe_root(d)
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "event_type", "value"
@@ -3398,13 +3056,8 @@ def _tlog_apply_sev(spark: SparkSession, sf_dir: str) -> str:
                 f"schema-evolving ingest landed {got} rows, source has "
                 f"{want} — a batch was lost, double-applied, or re-read"
             )
-        tmp = os.path.join(root, f"._SEV.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_SEV", stamp, build)
     return root
 
 
@@ -3881,33 +3534,14 @@ def _tlog_apply_ctx(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     published-yet-invisible, the catalog's WAP gap); ONE catalog swap
     commit then flips both pins together. Mid-swap invisibility and
     the never-mixed property are pytest-pinned."""
-    import fcntl
     import json
     import shutil
 
     root_a, root_b, cat = _tlog_ctx_roots(sf_dir)
-    stamp_file = os.path.join(cat, "_CTX")
     stamp = json.dumps(_TLOG_CTX_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root_a, root_b, cat
-    os.makedirs(cat, exist_ok=True)
-    lock_fh = open(os.path.join(cat, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root_a, root_b, cat
-        for entry in os.listdir(cat):
-            if entry == ".lock":
-                continue
-            p = os.path.join(cat, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_root(cat)
         for r in (root_a, root_b):
             if os.path.isdir(r) and _tlog_latest_version_safe(r) != 2:
                 shutil.rmtree(r)
@@ -3945,13 +3579,8 @@ def _tlog_apply_ctx(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
         ]
         path = _tlog_catalog_txn_prepare(cat, "ctx1", cat, 0, legs)
         _tlog_catalog_txn_commit(spark, path)
-        tmp = os.path.join(cat, f"._CTX.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(cat, "_CTX", stamp, build)
     return root_a, root_b, cat
 
 
@@ -4259,9 +3888,7 @@ def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
     the downstream preserves the upstream's visibility atomicity:
     a reader of the downstream catalog sees each upstream transaction
     whole or not at all, one swap per swap."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit,
@@ -4273,29 +3900,11 @@ def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
     _ra, _rb, src_cat = _tlog_apply_ctx(spark, sf_dir)
     dst_a, dst_b, dst_cat = _tlog_ccr_roots(sf_dir)
     dst_roots = {"a": dst_a, "b": dst_b}
-    stamp_file = os.path.join(dst_cat, "_CCR")
     stamp = json.dumps(_TLOG_CCR_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return dst_roots, dst_cat
-    os.makedirs(dst_cat, exist_ok=True)
-    lock_fh = open(os.path.join(dst_cat, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return dst_roots, dst_cat
+    def build() -> None:
         for d in (dst_cat, dst_a, dst_b):
-            for entry in os.listdir(d) if os.path.isdir(d) else []:
-                if entry == ".lock":
-                    continue
-                p = os.path.join(d, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            wipe_root(d)
         # bootstrap: each replica = the upstream catalog v0's PINNED
         # snapshot (not the table head — published-yet-unswapped work
         # must not leak into the replica's base)
@@ -4415,13 +4024,8 @@ def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
                 f"{_tlog_catalog_latest(dst_cat)} swaps vs upstream "
                 f"{_tlog_catalog_latest(src_cat)}"
             )
-        tmp = os.path.join(dst_cat, f"._CCR.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(dst_cat, "_CCR", stamp, build)
     return dst_roots, dst_cat
 
 
@@ -4570,7 +4174,6 @@ def _tlog_apply_vcf(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     append (v4) → FLOORED vacuum at retain=head, which clamps to the
     pin and reclaims NOTHING (the base groups are the pinned
     snapshot's live set)."""
-    import fcntl
     import json
     import shutil
 
@@ -4579,35 +4182,14 @@ def _tlog_apply_vcf(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
 
     root, cat = _tlog_vcf_roots(sf_dir)
-    stamp_file = os.path.join(root, "_VCF")
     stamp = json.dumps(_TLOG_VCF_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root, cat
-    _tlog_build(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root, cat
+    def build() -> None:
+        _tlog_build(spark, sf_dir, root)
         if _tlog_latest_version_safe(root) != 2 or os.path.isdir(cat):
             shutil.rmtree(cat, ignore_errors=True)
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_root(root)
             _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return root, cat
         _tlog_catalog_commit(
             cat, {"t": {"root": root, "version": 2}}, base=-1
         )
@@ -4649,13 +4231,8 @@ def _tlog_apply_vcf(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 f"floored vacuum drifted: horizon {effective}, "
                 f"deleted {deleted} — the catalog pin must clamp both"
             )
-        tmp = os.path.join(root, f"._VCF.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_VCF", stamp, build)
     return root, cat
 
 
@@ -4747,36 +4324,16 @@ def _tlog_apply_cma(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     dml v3 — the skewed-version case), v2 after its UPDATE (dml v4).
     The tables themselves are the shared read-only builds; only the
     catalog lives on this root."""
-    import fcntl
     import json
-    import shutil
 
     base_root = _tlog_build(spark, sf_dir, _tlog_root(sf_dir))
     dml_root = _tlog_build(spark, sf_dir, _tlog_dml_root(sf_dir))
     _tlog_apply_dml(spark, sf_dir, dml_root)
     cat = _tlog_cma_root(sf_dir)
-    stamp_file = os.path.join(cat, "_CMA")
     stamp = json.dumps(_TLOG_CMA_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return base_root, dml_root, cat
-    os.makedirs(cat, exist_ok=True)
-    lock_fh = open(os.path.join(cat, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return base_root, dml_root, cat
-        for entry in os.listdir(cat):
-            if entry == ".lock":
-                continue
-            p = os.path.join(cat, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
+        wipe_root(cat)
         pins = [
             {"base": 1, "dml": 1},  # mid-history
             {"base": 2, "dml": 3},  # after the DELETE (skewed versions)
@@ -4791,13 +4348,8 @@ def _tlog_apply_cma(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
                 },
                 base=i - 1,
             )
-        tmp = os.path.join(cat, f"._CMA.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(cat, "_CMA", stamp, build)
     return base_root, dml_root, cat
 
 
@@ -4995,7 +4547,6 @@ def _tlog_apply_cdeep(spark: SparkSession, sf_dir: str, root: str) -> None:
     VACUUMS it. The shallow clone would now be broken (the exact
     hazard ``_tlog_clone_live_files`` detects); the deepened clone
     reads on, byte-complete, from its own root."""
-    import fcntl
     import json
     import shutil
 
@@ -5004,35 +4555,17 @@ def _tlog_apply_cdeep(spark: SparkSession, sf_dir: str, root: str) -> None:
         _tlog_vacuum,
     )
 
-    stamp_file = os.path.join(root, "_CDEEP")
     stamp = json.dumps(_TLOG_CDEEP_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    src_root = _tlog_cdeep_src_root(sf_dir)
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        src_root = _tlog_cdeep_src_root(sf_dir)
         # the source is retired-and-vacuumed by this lifecycle, so an
         # unstamped run rebuilds BOTH sides from scratch (serialized
         # by the clone lock — the source is private to this lifecycle)
         shutil.rmtree(src_root, ignore_errors=True)
         _tlog_build(spark, sf_dir, src_root)
         if os.path.isdir(os.path.join(root, "_log")):
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            wipe_root(root)
         _tlog_clone_shallow(src_root, root, 2)
         # v1: local append
         slice_df = (
@@ -5083,13 +4616,8 @@ def _tlog_apply_cdeep(spark: SparkSession, sf_dir: str, root: str) -> None:
                 f"lifecycle expected the source vacuum to delete file_D, "
                 f"got {deleted}"
             )
-        tmp = os.path.join(root, f"._CDEEP.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CDEEP", stamp, build)
 
 
 @register(
@@ -5292,46 +4820,22 @@ def _tlog_apply_cmap(spark: SparkSession, sf_dir: str, root: str) -> None:
     renamed production table lives in;
     v6 DROPS ``channel`` (pure metadata — field 3 leaves the logical
     schema; file_F keeps the bytes, unreachable)."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit,
         _tlog_live_colmap,
     )
 
-    stamp_file = os.path.join(root, "_CMAP")
     stamp = json.dumps(_TLOG_CMAP_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_build(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_build(spark, sf_dir, root)
         if _tlog_latest_version_safe(root) != 2:
             # mutations from a superseded spec on this root: wipe and
-            # rebuild the base (the WAP recovery discipline). The
-            # build takes this same flock, so release around it.
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            # rebuild the base (the WAP recovery discipline)
+            wipe_root(root)
             _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         fields_v3 = [
             {"id": 1, "name": "o_orderkey"},
             {"id": 2, "name": "o_totalprice"},
@@ -5395,13 +4899,8 @@ def _tlog_apply_cmap(spark: SparkSession, sf_dir: str, root: str) -> None:
             "o_orderkey", "price_usd",
         ]:
             raise RuntimeError("column mapping did not replay to the head")
-        tmp = os.path.join(root, f"._CMAP.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CMAP", stamp, build)
 
 
 @register(
@@ -5632,53 +5131,24 @@ def _tlog_apply_cmd(spark: SparkSession, sf_dir: str, root: str) -> None:
     logical-name DELETE whose predicate spells the RENAMED column —
     hitting pre-rename files (physical o_totalprice) and post-rename
     files (physical price_usd) in the same statement."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMD")
     stamp = json.dumps(_TLOG_CMD_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
             # a stale/crashed delete on this root: rebuild the base
-            # lifecycle from scratch (release-around, WAP discipline)
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            # lifecycle from scratch (WAP discipline)
+            wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         _tlog_colmap_delete(spark, root, _TLOG_CMD_PRED)
-        tmp = os.path.join(root, f"._CMD.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CMD", stamp, build)
 
 
 @register(
@@ -5973,7 +5443,6 @@ def _tlog_apply_cmc(spark: SparkSession, sf_dir: str, root: str) -> None:
     DV-bound cohorts (file_A/C/D physical o_totalprice; file_F
     physical price_usd) rewrite under the head spelling with their
     DVs materialized, while file_G survives byte-identical."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
@@ -5981,38 +5450,15 @@ def _tlog_apply_cmc(spark: SparkSession, sf_dir: str, root: str) -> None:
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMC")
     stamp = json.dumps(_TLOG_CMC_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmd(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmd(spark, sf_dir, root)
         if _latest(root) != 7:
             # stale/crashed state on this root: rebuild the whole
-            # lifecycle from scratch (release-around, WAP discipline)
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            # lifecycle from scratch (WAP discipline)
+            wipe_root(root)
             _tlog_apply_cmd(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         # v8: append under the HEAD spelling, post-delete (keeps its
         # delete-band rows — the delete was a statement, not a rule)
         slice_df = (
@@ -6030,13 +5476,8 @@ def _tlog_apply_cmc(spark: SparkSession, sf_dir: str, root: str) -> None:
         )
         # v9: OPTIMIZE under the mapping
         _tlog_colmap_compact(spark, root)
-        tmp = os.path.join(root, f"._CMC.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CMC", stamp, build)
 
 
 @register(
@@ -6259,43 +5700,19 @@ def _tlog_apply_cmu(spark: SparkSession, sf_dir: str, root: str) -> None:
     pre-rename cohorts (file_A %4=0, file_D's %4=3 half) and the
     post-rename file_F, while file_C (%4=2) provably misses and is
     never rewritten."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMU")
     stamp = json.dumps(_TLOG_CMU_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         _, rewritten, untouched = _tlog_colmap_update(
             spark, root, _TLOG_CMU_PRED, "price_usd", _TLOG_CMU_BUMP
         )
@@ -6304,13 +5721,8 @@ def _tlog_apply_cmu(spark: SparkSession, sf_dir: str, root: str) -> None:
                 f"mapped UPDATE rewrote file_C (rewrote {rewritten}) — "
                 "CoW discovery must skip groups with no matched rows"
             )
-        tmp = os.path.join(root, f"._CMU.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CMU", stamp, build)
 
 
 @register(
@@ -6441,52 +5853,23 @@ def _tlog_apply_cmr(spark: SparkSession, sf_dir: str, root: str) -> None:
     file_F, DROP), then v7 RESTOREs to v3 (pre-rename: the OLD names
     come back, file_F leaves), then v8 RESTOREs to v6 (the rename AND
     file_F return — re-binding the re-added file)."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMR")
     stamp = json.dumps(_TLOG_CMR_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         _tlog_colmap_restore(spark, root, 3)   # roll back across the rename
         _tlog_colmap_restore(spark, root, 6)   # roll forward again
-        tmp = os.path.join(root, f"._CMR.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CMR", stamp, build)
 
 
 @register(
@@ -6721,43 +6104,19 @@ def _tlog_apply_cmm(spark: SparkSession, sf_dir: str, root: str) -> None:
     positive keys as matched updates (every copy of the key in both
     spellings' cohorts takes the bump), negated keys as not-matched
     inserts (landing head-spelled)."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMM")
     stamp = json.dumps(_TLOG_CMM_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         band = load_table(spark, sf_dir, "orders").filter(
             F.col("o_orderkey") % _TLOG_CMM_MOD == _TLOG_CMM_RES
         )
@@ -6770,13 +6129,8 @@ def _tlog_apply_cmm(spark: SparkSession, sf_dir: str, root: str) -> None:
             (F.col("o_totalprice") + _TLOG_CMM_INS_BUMP).alias("price_usd"),
         )
         _tlog_colmap_merge(spark, root, updates, inserts)
-        tmp = os.path.join(root, f"._CMM.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CMM", stamp, build)
 
 
 @register(
@@ -6933,43 +6287,19 @@ def _tlog_apply_cmk(spark: SparkSession, sf_dir: str, root: str) -> None:
     (asserted — the enforcement failure happens under the TRANSLATED
     predicate); v8 is a clean old-spelled append through the
     translating choke point."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMK")
     stamp = json.dumps(_TLOG_CMK_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         # an unsatisfiable mapped ADD is rejected after validating
         # THROUGH the mapping (both spellings' cohorts scanned)
         try:
@@ -7006,13 +6336,8 @@ def _tlog_apply_cmk(spark: SparkSession, sf_dir: str, root: str) -> None:
             orders.filter(F.expr(_TLOG_CMK_ADD_PRED)),
             "file_cmk_ok", old_binding,
         )
-        tmp = os.path.join(root, f"._CMK.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CMK", stamp, build)
 
 
 @register(
@@ -7103,43 +6428,19 @@ def _tlog_apply_cmx(spark: SparkSession, sf_dir: str, root: str) -> None:
     (source-driven CoW + inserts over the composed state). The order
     is the hostile one: every later statement must compose with the
     earlier statements' sidecar debt and binding churn."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_latest_version as _latest,
     )
 
-    stamp_file = os.path.join(root, "_CMX")
     stamp = json.dumps(_TLOG_CMX_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    _tlog_apply_cmap(spark, sf_dir, root)  # own flock; take ours after
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        _tlog_apply_cmap(spark, sf_dir, root)
         if _latest(root) != 6:
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         _tlog_colmap_delete(spark, root, _TLOG_CMD_PRED)
         _tlog_colmap_update(
             spark, root, _TLOG_CMU_PRED, "price_usd", _TLOG_CMU_BUMP
@@ -7159,13 +6460,8 @@ def _tlog_apply_cmx(spark: SparkSession, sf_dir: str, root: str) -> None:
                 (F.col("o_totalprice") + _TLOG_CMM_INS_BUMP).alias("price_usd"),
             ),
         )
-        tmp = os.path.join(root, f"._CMX.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_CMX", stamp, build)
 
 
 @register(
@@ -7547,9 +6843,7 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
     through the SAME checkpoint. Post-rename batches still land
     physical ``o_totalprice`` — the mapping, not a rewrite, serves
     them under ``price_usd``."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
@@ -7557,29 +6851,11 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
     )
 
     src, root = _tlog_scm_dirs(sf_dir)
-    stamp_file = os.path.join(root, "_SCM")
     stamp = json.dumps(_TLOG_SCM_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root
+    def build() -> None:
         for d in (root, src):
-            for entry in os.listdir(d) if os.path.isdir(d) else []:
-                if entry == ".lock":
-                    continue
-                p = os.path.join(d, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            wipe_root(d)
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_totalprice"
@@ -7665,13 +6941,8 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
                 f"rename-mid-stream ingest landed {got} rows, source has "
                 f"{want} — a batch was lost, double-applied, or re-read"
             )
-        tmp = os.path.join(root, f"._SCM.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_SCM", stamp, build)
     return root
 
 
@@ -7753,9 +7024,7 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
     but the writer resolves the LIVE mapping at commit time, so
     post-drop commits bind ONLY ids 1/2: the channel bytes land
     physically and are unreachable from birth."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
@@ -7764,29 +7033,11 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
     )
 
     src, root = _tlog_sdp_dirs(sf_dir)
-    stamp_file = os.path.join(root, "_SDP")
     stamp = json.dumps(_TLOG_SDP_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return root
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return root
+    def build() -> None:
         for d in (root, src):
-            for entry in os.listdir(d) if os.path.isdir(d) else []:
-                if entry == ".lock":
-                    continue
-                p = os.path.join(d, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            wipe_root(d)
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
@@ -7881,13 +7132,8 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
                 f"drop-mid-stream ingest landed {got} rows, source has "
                 f"{want} — a batch was lost, double-applied, or re-read"
             )
-        tmp = os.path.join(root, f"._SDP.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_SDP", stamp, build)
     return root
 
 
@@ -8173,7 +7419,6 @@ def _tlog_apply_bkt(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     the live spec (reads bucket(key, N) from the log, not from
     convention) — the mixed-commit state that proves co-location
     survives appends."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
@@ -8189,32 +7434,13 @@ def _tlog_apply_bkt(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     ]
     stamp = json.dumps(_TLOG_BKT_SPEC, sort_keys=True)
     for root, src, key, cols in jobs:
-        stamp_file = os.path.join(root, "_BKT")
 
-        def _ok() -> bool:
-            try:
-                return open(stamp_file).read() == stamp
-            except OSError:
-                return False
-
-        if _ok():
-            continue
-        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-        lock_fh = open(os.path.join(root, ".lock"), "w")
-        fcntl.flock(lock_fh, fcntl.LOCK_EX)
-        try:
-            if _ok():
-                continue
+        def build() -> None:
+            os.makedirs(os.path.join(root, "_log"), exist_ok=True)
             if _tlog_latest_version_safe(root) >= 0:
                 # commits without a matching stamp: stale partial
                 # lifecycle — wipe and rebuild
-                import shutil
-
-                for entry in os.listdir(root):
-                    if entry == ".lock":
-                        continue
-                    p = os.path.join(root, entry)
-                    shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+                wipe_root(root)
                 os.makedirs(os.path.join(root, "_log"), exist_ok=True)
             df = load_table(spark, sf_dir, src).select(*cols)
             spec = (key, _TLOG_BKT_N)
@@ -8234,13 +7460,8 @@ def _tlog_apply_bkt(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
                 "file_bkt1", live,
             )
             _tlog_bucketed_commit(root, ["file_bkt1"], 0, live)
-            tmp = os.path.join(root, f"._BKT.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(stamp)
-            os.replace(tmp, stamp_file)
-        finally:
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
-            lock_fh.close()
+
+        built_once(root, "_BKT", stamp, build)
     return o_root, l_root
 
 
@@ -8511,9 +7732,7 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
     the spec per batch, not per query: pre-evolution batch groups
     carry 8-way tags, post-evolution groups 16-way, and the mixed
     snapshot reads whole."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
@@ -8525,44 +7744,14 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
         register_synthetic_stream_source,
     )
 
-    stamp_file = os.path.join(root, "_BKTIN")
     stamp = json.dumps(_TLOG_BKTIN_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
+    spec_file = os.path.join(root, "_BKTIN_SPEC")
 
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        spec_file = os.path.join(root, "_BKTIN_SPEC")
-        stale = False
-        try:
-            stale = open(spec_file).read() != stamp
-        except OSError:
-            stale = os.path.isdir(os.path.join(root, "_log")) and any(
-                f.endswith(".json")
-                for f in os.listdir(os.path.join(root, "_log"))
-            )
-        if stale:
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         if not os.path.exists(spec_file):
-            tmp = os.path.join(root, f"._SPEC.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(stamp)
-            os.replace(tmp, spec_file)
+            write_atomic(spec_file, stamp)
         if _tlog_latest_version_safe(root) < 0:
             # v0: the spec entry alone — metadata bootstrap
             _tlog_commit(
@@ -8617,13 +7806,11 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
                 f"{want} — a batch was lost, double-applied, or the "
                 "mid-stream evolution did not land"
             )
-        tmp = os.path.join(root, f"._BKTIN.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(
+        root, "_BKTIN", stamp, build,
+        resume=lambda: read_text(spec_file) == stamp,
+    )
 
 
 # --- DML on a BUCKETED table (r19 queue candidate (a), machinery -----------
@@ -9180,9 +8367,7 @@ def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
     first RENAMES event_id -> evt_id — one atomic metadata commit —
     so pre-rename groups bind the old spelling and post-rename groups
     the new, the per-batch spelling-tracking proof."""
-    import fcntl
     import json
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
@@ -9195,44 +8380,14 @@ def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
         register_synthetic_stream_source,
     )
 
-    stamp_file = os.path.join(root, "_BKCMS")
     stamp = json.dumps(_TLOG_BKCMS_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
+    spec_file = os.path.join(root, "_BKCMS_SPEC")
 
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        spec_file = os.path.join(root, "_BKCMS_SPEC")
-        stale = False
-        try:
-            stale = open(spec_file).read() != stamp
-        except OSError:
-            stale = os.path.isdir(os.path.join(root, "_log")) and any(
-                f.endswith(".json")
-                for f in os.listdir(os.path.join(root, "_log"))
-            )
-        if stale:
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         if not os.path.exists(spec_file):
-            tmp = os.path.join(root, f"._SPEC.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(stamp)
-            os.replace(tmp, spec_file)
+            write_atomic(spec_file, stamp)
         if _tlog_latest_version_safe(root) < 0:
             # v0: bucket spec + column mapping — metadata bootstrap
             _tlog_commit(
@@ -9305,13 +8460,11 @@ def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
                 f"expected {want} — a batch was lost, double-applied, or "
                 "the mid-stream rename did not land"
             )
-        tmp = os.path.join(root, f"._BKCMS.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(
+        root, "_BKCMS", stamp, build,
+        resume=lambda: read_text(spec_file) == stamp,
+    )
 
 
 interpolate_docstrings(globals())

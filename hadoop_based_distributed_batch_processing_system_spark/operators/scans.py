@@ -20,6 +20,12 @@ import tempfile
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_based_distributed_batch_processing_system_spark.built import (
+    built_once,
+    read_text,
+    wipe_root,
+    write_atomic,
+)
 from hadoop_based_distributed_batch_processing_system_spark.registry import register
 from hadoop_based_distributed_batch_processing_system_spark.sources.io import corpus_tag, load_table, sink_parquet
 
@@ -640,14 +646,12 @@ def _tlog_built_ok(root: str) -> bool:
 
 
 def _tlog_build(spark: SparkSession, sf_dir: str, root: str) -> str:
-    """Synthesize the commit-log table dir (idempotent). The build is
-    ``fcntl.flock``-serialized across processes — concurrent pytest /
-    bench sessions previously raced a half-built dir, one overwriting
-    ``file_A..D`` while another scanned them (ADVICE r10) — and the
-    ``_BUILT`` stamp is the serialized slice+commit spec, so editing
-    the layout rebuilds instead of serving a stale table. A process
-    arriving after the winner releases the lock hits the stamp
-    fast-path, same discipline as tests/conftest._build_doc_subset.
+    """Synthesize the commit-log table dir once (``built_once``:
+    concurrent pytest / bench sessions previously raced a half-built
+    dir, one overwriting ``file_A..D`` while another scanned them —
+    ADVICE r10). The ``_BUILT`` stamp is the serialized slice+commit
+    spec, so editing the layout rebuilds instead of serving a stale
+    table.
 
     A rebuild WIPES the root first (everything but the held lock):
     derived commits (merge/schema/compaction/DV at v3+) and their
@@ -655,24 +659,11 @@ def _tlog_build(spark: SparkSession, sf_dir: str, root: str) -> str:
     place would leave stale derived files from the old slice layout
     being served as current — exactly the silent-stale failure the
     spec-stamp discipline exists to close (ADVICE r11 medium)."""
-    import fcntl
-    import shutil
 
-    if _tlog_built_ok(root):
-        return root
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _tlog_built_ok(root):
-            return root
+    def build() -> None:
         import json
 
-        for entry in os.listdir(root):
-            if entry == ".lock":
-                continue
-            p = os.path.join(root, entry)
-            shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+        wipe_root(root)
         orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
         for name, residues in _TLOG_SLICES.items():
             orders.filter((F.col("o_orderkey") % 4).isin(*residues)).write.mode(
@@ -717,17 +708,11 @@ def _tlog_build(spark: SparkSession, sf_dir: str, root: str) -> str:
             prev_ts = payload["ts"] = _tlog_next_ts(
                 json.dumps(c, sort_keys=True), prev_ts
             )
-            tmp = os.path.join(logd, f".{v:06d}.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                json.dump(payload, fh)
-            os.replace(tmp, os.path.join(logd, f"{v:06d}.json"))
-        tmp = os.path.join(root, f"._BUILT.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(_tlog_spec_stamp())
-        os.replace(tmp, os.path.join(root, "_BUILT"))
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+            write_atomic(os.path.join(logd, f"{v:06d}.json"), json.dumps(payload))
+
+    built_once(
+        root, "_BUILT", _tlog_spec_stamp(), build, valid=lambda: _tlog_built_ok(root)
+    )
     return root
 
 
@@ -746,50 +731,84 @@ def _tlog_next_ts(payload_json: str, prev_ts: int) -> int:
     return prev_ts + 2 + int(hashlib.md5(payload_json.encode()).hexdigest()[:8], 16) % 997
 
 
-def _tlog_checkpoint_ts_stamps(root: str, version: int) -> tuple[list[int], int]:
-    """Commit timestamps v0..cp from the newest checkpoint at or
-    before ``version`` that folded them (the ``ts`` key), plus the
-    delta-replay start. Checkpoints written before the key existed
-    fall back to a full replay — correctness never depends on
-    checkpoint vintage (the ``_tlog_replay_map`` contract)."""
+# Replayed table state, one entry per key a checkpoint folds. Per-file
+# maps (``dv``, ``stats``, ``colphys``) drop a removed file's entry and
+# take each commit's updates; ``constraints`` merges name -> predicate
+# (None drops); ``partitioning`` and ``column_mapping`` are replaced by
+# the newest commit that carries them; ``batches`` and ``ts`` only grow.
+_TLOG_SNAPSHOT_KEYS = (
+    "live", "dv", "stats", "batches", "ts", "constraints", "partitioning",
+    "column_mapping", "colphys",
+)
+
+
+def _tlog_snapshot(root: str, version: int) -> dict:
+    """Every piece of replayed log state at ``version`` in ONE fold:
+    start from the newest checkpoint at or before ``version`` and apply
+    each later commit once, so resolution cost is bounded by the
+    checkpoint cadence, not the log depth — at a real log depth
+    (thousands of commits) this, not the data plane, is what keeps
+    snapshot resolution O(1)-ish; it is why every production table
+    format checkpoints its log. A checkpoint written before one of
+    the keys existed is ignored whole (replay from v0), so correctness
+    never depends on checkpoint vintage. A commit the replay window
+    needs but cannot read raises: silently skipping it would drop its
+    files, bindings, constraints or batch id — a re-delivered batch
+    would then look new and be applied twice."""
     import json
 
     logd = os.path.join(root, "_log")
+    snap = {
+        "live": set(), "dv": {}, "stats": {}, "batches": set(), "ts": [],
+        "constraints": {}, "partitioning": None, "column_mapping": None,
+        "colphys": {},
+    }
+    start = 0
     for v in range(version, -1, -1):
         cp = os.path.join(logd, f"{v:06d}.checkpoint.json")
         if os.path.exists(cp):
-            c = json.load(open(cp))
-            if "ts" in c:
-                return [int(t) for t in c["ts"]], v + 1
+            with open(cp) as fh:
+                c = json.load(fh)
+            if all(k in c for k in _TLOG_SNAPSHOT_KEYS):
+                snap = {k: c[k] for k in _TLOG_SNAPSHOT_KEYS}
+                snap["live"], snap["batches"] = set(c["live"]), set(c["batches"])
+                snap["ts"] = [int(t) for t in c["ts"]]
+                start = v + 1
             break
-    return [], 0
+    for v in range(start, version + 1):
+        try:
+            with open(os.path.join(logd, f"{v:06d}.json")) as fh:
+                c = json.load(fh)
+        except OSError as e:
+            raise RuntimeError(
+                f"table log at {root} is missing commit {v:06d}.json: it is "
+                "unreadable and no checkpoint folds it (stale or partially-"
+                "built dir?) — delete the dir to force a clean rebuild, or "
+                "restore the log"
+            ) from e
+        snap["live"] -= set(c["remove"])
+        snap["live"] |= set(c["add"])
+        for key in ("dv", "stats", "colphys"):
+            for f in c["remove"]:
+                snap[key].pop(f, None)
+            snap[key].update(c.get(key, {}))
+        if c.get("batch") is not None:
+            snap["batches"].add(c["batch"])
+        snap["ts"].append(int(c.get("ts", 0)))
+        for name, pred in c.get("constraints", {}).items():
+            if pred is None:
+                snap["constraints"].pop(name, None)
+            else:
+                snap["constraints"][name] = pred
+        for key in ("partitioning", "column_mapping"):
+            if c.get(key) is not None:
+                snap[key] = c[key]
+    return snap
 
 
 def _tlog_ts_stamps(root: str, version: int) -> list[int]:
-    """All commit timestamps v0..``version``: the newest checkpoint's
-    folded ``ts`` list plus the post-checkpoint delta commits — so
-    as-of resolution is bounded by the checkpoint cadence, not the
-    log depth (ADVICE r12: the previous form read EVERY commit file,
-    O(log depth) per resolution, and the docstring's "bounded by
-    checkpoints" claim was false for timestamps)."""
-    import json
-
-    folded, start = _tlog_checkpoint_ts_stamps(root, version)
-    out = folded[: version + 1]
-    for v in range(max(start, len(out)), version + 1):
-        try:
-            c = json.load(open(os.path.join(root, "_log", f"{v:06d}.json")))
-        except OSError as e:
-            # severed pre-checkpoint history MUST resolve from a
-            # checkpoint fold; a silent ts 0 would mis-resolve every
-            # as-of read against this table (ADVICE r12)
-            raise RuntimeError(
-                f"commit {v:06d}.json at {root} is unreadable and no "
-                "checkpoint folds its timestamp — as-of resolution would "
-                "be wrong; rebuild the table or restore the log"
-            ) from e
-        out.append(int(c.get("ts", 0)))
-    return out
+    """All commit timestamps v0..``version``."""
+    return _tlog_snapshot(root, version)["ts"]
 
 
 def _tlog_commit_ts(root: str, version: int) -> int:
@@ -869,38 +888,23 @@ def _tlog_latest_version(root: str) -> int:
     return max(vs)
 
 
-def _tlog_live_files(root: str, version: int) -> list[str]:
-    """Resolve a snapshot's live file set. Starts from the NEWEST
-    checkpoint at or before ``version`` (if one exists) and replays
-    only the delta commits after it, so resolution cost is bounded by
-    the checkpoint cadence — at a real log depth (thousands of
-    commits) this, not the data plane, is what keeps snapshot
-    resolution O(1)-ish; it is why every production table format
-    checkpoints its log. A commit file the log should contain but
-    doesn't raises a descriptive error (ADVICE r10: a stale partial
-    dir otherwise surfaced as None/AttributeError downstream)."""
-    import json
+def _tlog_latest_version_safe(root: str) -> int:
+    """``_tlog_latest_version``, or -2 for a root with no readable log
+    (never built, or just wiped)."""
+    try:
+        return _tlog_latest_version(root)
+    except (RuntimeError, OSError):
+        return -2
 
-    logd = os.path.join(root, "_log")
-    live: set[str] = set()
-    start = 0
-    for v in range(version, -1, -1):
-        cp = os.path.join(logd, f"{v:06d}.checkpoint.json")
-        if os.path.exists(cp):
-            live = set(json.load(open(cp))["live"])
-            start = v + 1
-            break
-    for v in range(start, version + 1):
-        try:
-            c = json.load(open(os.path.join(logd, f"{v:06d}.json")))
-        except OSError as e:
-            raise RuntimeError(
-                f"table log at {root} is missing commit {v:06d}.json "
-                "(stale or partially-built dir?) — delete the dir to force "
-                "a clean rebuild"
-            ) from e
-        live -= set(c["remove"])
-        live |= set(c["add"])
+
+def _tlog_live_files(root: str, version: int) -> list[str]:
+    """A snapshot's live file paths (see ``_tlog_snapshot``)."""
+    return _tlog_unvacuumed(root, version, _tlog_snapshot(root, version)["live"])
+
+
+def _tlog_unvacuumed(root: str, version: int, live: set[str]) -> list[str]:
+    """``live`` as sorted paths, refusing a set that references file
+    groups vacuum already deleted."""
     gone = sorted(live & _tlog_vacuumed(root))
     if gone:
         raise RuntimeError(
@@ -1009,29 +1013,23 @@ def _tlog_commit(
     finally:
         os.unlink(tmp)
     if (v + 1) % _TLOG_CHECKPOINT_EVERY == 0:
-        live = [os.path.basename(p) for p in _tlog_live_files(root, v)]
+        snap = _tlog_snapshot(root, v)
         ctmp = os.path.join(
             logd, f".ckpt.{os.getpid()}.{threading.get_ident()}.{v}.tmp"
         )
         with open(ctmp, "w") as fh:
-            # checkpoints fold ALL replayed state — live set, DV
-            # bindings, manifest stats, batch ids, AND commit
-            # timestamps — so every resolution path (including as-of
-            # reads, ADVICE r12) is bounded by the cadence, not the
-            # log depth (the r11 form checkpointed only `live`,
-            # leaving DV/stats replay O(log depth))
+            # checkpoints fold ALL replayed state (keys in
+            # _TLOG_SNAPSHOT_KEYS order), so every resolution path, as-of
+            # reads included, is bounded by the cadence
             json.dump(
                 {
                     "version": v,
-                    "live": live,
-                    "dv": _tlog_live_dvs(root, v),
-                    "stats": _tlog_live_stats(root, v),
-                    "batches": _tlog_committed_batches(root, v),
-                    "ts": _tlog_ts_stamps(root, v),
-                    "constraints": _tlog_live_constraints(root, v),
-                    "partitioning": _tlog_live_partitioning(root, v),
-                    "column_mapping": _tlog_live_colmap(root, v),
-                    "colphys": _tlog_replay_map(root, v, "colphys"),
+                    **snap,
+                    "live": [
+                        os.path.basename(p)
+                        for p in _tlog_unvacuumed(root, v, snap["live"])
+                    ],
+                    "batches": sorted(snap["batches"]),
                 },
                 fh,
             )
@@ -1200,109 +1198,21 @@ _TLOG_FILE_RE = r"/(file_[A-Za-z0-9_]+)/"
 
 
 def _tlog_live_constraints(root: str, version: int) -> dict[str, str]:
-    """The CHECK constraints live at ``version``: fold each commit's
-    ``constraints`` map (name -> SQL predicate; None drops) from the
-    newest checkpoint that folded the key, else a full replay — the
-    same cadence bound as every other piece of replayed state."""
-    import json
-
-    logd = os.path.join(root, "_log")
-    out: dict[str, str] = {}
-    start = 0
-    for v in range(version, -1, -1):
-        cp = os.path.join(logd, f"{v:06d}.checkpoint.json")
-        if os.path.exists(cp):
-            c = json.load(open(cp))
-            if "constraints" in c:
-                out = dict(c["constraints"])
-                start = v + 1
-            break
-    for v in range(start, version + 1):
-        try:
-            c = json.load(open(os.path.join(logd, f"{v:06d}.json")))
-        except OSError as e:
-            # fail-loud like the ts replay (ADVICE r12 discipline): a
-            # severed commit inside the replay range could carry an
-            # ADD/DROP — silently skipping would let writers enforce a
-            # WRONG constraint set and checkpoints fold it permanently
-            raise RuntimeError(
-                f"commit {v:06d}.json at {root} is unreadable and no "
-                "checkpoint folds its constraints — the live constraint "
-                "set cannot be resolved; rebuild the table or restore "
-                "the log"
-            ) from e
-        for name, pred in c.get("constraints", {}).items():
-            if pred is None:
-                out.pop(name, None)
-            else:
-                out[name] = pred
-    return out
+    """The CHECK constraints live at ``version`` (name -> SQL predicate)."""
+    return _tlog_snapshot(root, version)["constraints"]
 
 
 def _tlog_live_partitioning(root: str, version: int) -> dict | None:
-    """The PARTITION SPEC live at ``version``: the newest commit's
-    ``partitioning`` value (spec changes replace, never merge), from
-    the newest checkpoint that folded the key, else replay. None on a
-    table that never declared one."""
-    import json
-
-    logd = os.path.join(root, "_log")
-    out = None
-    start = 0
-    for v in range(version, -1, -1):
-        cp = os.path.join(logd, f"{v:06d}.checkpoint.json")
-        if os.path.exists(cp):
-            c = json.load(open(cp))
-            if "partitioning" in c:
-                out = c["partitioning"]
-                start = v + 1
-            break
-    for v in range(start, version + 1):
-        try:
-            c = json.load(open(os.path.join(logd, f"{v:06d}.json")))
-        except OSError as e:
-            raise RuntimeError(
-                f"commit {v:06d}.json at {root} is unreadable and no "
-                "checkpoint folds its partition spec — the live spec "
-                "cannot be resolved; rebuild the table or restore the log"
-            ) from e
-        if c.get("partitioning") is not None:
-            out = c["partitioning"]
-    return out
+    """The PARTITION SPEC live at ``version``; None on a table that
+    never declared one."""
+    return _tlog_snapshot(root, version)["partitioning"]
 
 
 def _tlog_live_colmap(root: str, version: int) -> dict | None:
-    """The COLUMN MAPPING live at ``version``: the newest commit's
-    ``column_mapping`` value ({"fields": [{"id", "name"}, ...]} —
-    mapping changes replace, never merge), from the newest checkpoint
-    that folded the key, else replay. None on a table that never
-    enabled mapping (readers use physical names directly)."""
-    import json
-
-    logd = os.path.join(root, "_log")
-    out = None
-    start = 0
-    for v in range(version, -1, -1):
-        cp = os.path.join(logd, f"{v:06d}.checkpoint.json")
-        if os.path.exists(cp):
-            c = json.load(open(cp))
-            if "column_mapping" in c:
-                out = c["column_mapping"]
-                start = v + 1
-            break
-    for v in range(start, version + 1):
-        try:
-            c = json.load(open(os.path.join(logd, f"{v:06d}.json")))
-        except OSError as e:
-            raise RuntimeError(
-                f"commit {v:06d}.json at {root} is unreadable and no "
-                "checkpoint folds its column mapping — the live logical "
-                "schema cannot be resolved; rebuild the table or restore "
-                "the log"
-            ) from e
-        if c.get("column_mapping") is not None:
-            out = c["column_mapping"]
-    return out
+    """The COLUMN MAPPING live at ``version`` ({"fields": [{"id",
+    "name"}, ...]}); None on a table that never enabled mapping
+    (readers use physical names directly)."""
+    return _tlog_snapshot(root, version)["column_mapping"]
 
 
 def _tlog_constrained(df: DataFrame, constraints: dict[str, str]) -> DataFrame:
@@ -1850,17 +1760,6 @@ _TLOG_MERGE_SPEC = {
 }
 
 
-def _tlog_merged_ok(root: str) -> bool:
-    import json
-
-    try:
-        return open(os.path.join(root, "_MERGED")).read() == json.dumps(
-            _TLOG_MERGE_SPEC, sort_keys=True
-        )
-    except OSError:
-        return False
-
-
 def _tlog_apply_merge(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Run the MERGE-INTO commit once per table dir (flock-serialized,
     spec-stamped like the base build). Steps — the standard
@@ -1894,16 +1793,9 @@ def _tlog_apply_merge(spark: SparkSession, sf_dir: str, root: str) -> None:
     A lost commit race with IDENTICAL content (another session ran
     the same deterministic merge between our stamp check and commit)
     is recovery, not conflict: adopt the winner's commit."""
-    import fcntl
     import json
 
-    if _tlog_merged_ok(root):
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _tlog_merged_ok(root):
-            return
+    def build() -> None:
         base = _tlog_latest_version(root)
         live = _tlog_live_files(root, base)
         rel = _tlog_relation(spark, live).withColumn(
@@ -1975,13 +1867,11 @@ def _tlog_apply_merge(spark: SparkSession, sf_dir: str, root: str) -> None:
             read_set=set(affected),
             stats=stats or None,
         )
-        tmp = os.path.join(root, f"._MERGED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(_TLOG_MERGE_SPEC, sort_keys=True))
-        os.replace(tmp, os.path.join(root, "_MERGED"))
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(
+        root, "_MERGED", json.dumps(_TLOG_MERGE_SPEC, sort_keys=True), build,
+        resume=lambda: True,
+    )
 
 
 @register(
@@ -2077,33 +1967,15 @@ def _tlog_schema_root(sf_dir: str) -> str:
     return os.path.join(tempfile.gettempdir(), f"hbdbps_tablelogs_{corpus_tag(sf_dir)}")
 
 
-def _tlog_schema_ok(root: str) -> bool:
-    import json
-
-    try:
-        return open(os.path.join(root, "_SCHEMA_EVOLVED")).read() == json.dumps(
-            _TLOG_SCHEMA_SPEC, sort_keys=True
-        )
-    except OSError:
-        return False
-
-
 def _tlog_apply_schema_commit(spark: SparkSession, sf_dir: str, root: str) -> None:
     """Commit a WIDER-SCHEMA append once per table dir (flock +
     spec-stamp, the merge discipline): ``file_E`` carries a new
     ``o_flag`` column the base files don't have, published through
     the same put-if-absent commit protocol. Identical-content races
     are adopted as recovery, like the merge."""
-    import fcntl
     import json
 
-    if _tlog_schema_ok(root):
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _tlog_schema_ok(root):
-            return
+    def build() -> None:
         spec = _TLOG_SCHEMA_SPEC
         base = _tlog_latest_version(root)
         orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
@@ -2121,13 +1993,11 @@ def _tlog_apply_schema_commit(spark: SparkSession, sf_dir: str, root: str) -> No
         _tlog_commit_rebase(
             root, add=["file_E"], remove=[], base_version=base, read_set=set()
         )
-        tmp = os.path.join(root, f"._SCHEMA_EVOLVED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(spec, sort_keys=True))
-        os.replace(tmp, os.path.join(root, "_SCHEMA_EVOLVED"))
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(
+        root, "_SCHEMA_EVOLVED", json.dumps(_TLOG_SCHEMA_SPEC, sort_keys=True),
+        build, resume=lambda: True,
+    )
 
 
 @register(
@@ -2219,20 +2089,9 @@ def _tlog_apply_compact(spark: SparkSession, sf_dir: str, root: str) -> None:
     publish add+remove in a single put-if-absent commit. The
     snapshot's CONTENT is unchanged by construction — that is the
     oracle: compaction is a physical re-layout, logically a no-op."""
-    import fcntl
     import json
 
-    # v2 marker: the v1 layout (one file group, no stats) upgrades by
-    # re-compacting on top of its own latest snapshot — compaction is
-    # content-preserving, so stacking one more commit is safe.
-    marker = os.path.join(root, "_COMPACTED_V2")
-    if os.path.exists(marker):
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if os.path.exists(marker):
-            return
+    def build() -> None:
         base = _tlog_latest_version(root)
         live = _tlog_live_files(root, base)
         rel = _tlog_relation(spark, live)
@@ -2316,13 +2175,11 @@ def _tlog_apply_compact(spark: SparkSession, sf_dir: str, root: str) -> None:
             root, add=add, remove=removed, base_version=base,
             read_set=set(removed), stats=stats,
         )
-        tmp = os.path.join(root, f"._COMPACTED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write("v1")
-        os.replace(tmp, marker)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    # v2 marker: the v1 layout (one file group, no stats) upgrades by
+    # re-compacting on top of its own latest snapshot — compaction is
+    # content-preserving, so stacking one more commit is safe.
+    built_once(root, "_COMPACTED_V2", "v1", build, resume=lambda: True)
 
 
 def _tlog_vacuum(
@@ -2497,11 +2354,8 @@ def _tlog_replicate(
     but a NONEMPTY replica log wipes the replica and re-replicates
     from scratch — replication is change-sized, so redoing it beats
     reasoning about which half-applied commit to resume at."""
-    import fcntl
     import json
-    import shutil
 
-    stamp_file = os.path.join(dst_root, "_REPLICATED")
     # extra_stamp folds the SOURCE table's mutation spec in: a replica
     # of a DML'd table must re-replicate when the DML spec changes,
     # not just when the log format does
@@ -2509,29 +2363,13 @@ def _tlog_replicate(
         {"spec": _tlog_spec_stamp(), "src": extra_stamp}, sort_keys=True
     )
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(os.path.join(dst_root, "_log"), exist_ok=True)
-    lock_fh = open(os.path.join(dst_root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
+        os.makedirs(os.path.join(dst_root, "_log"), exist_ok=True)
         if any(
             f.endswith(".json")
             for f in os.listdir(os.path.join(dst_root, "_log"))
         ):
-            for entry in os.listdir(dst_root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(dst_root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+            wipe_root(dst_root)
             os.makedirs(os.path.join(dst_root, "_log"), exist_ok=True)
         from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
             register_table_log_feed_source,
@@ -2669,13 +2507,8 @@ def _tlog_replicate(
                 f"has {expected} change-bearing commits (head v{src_latest}) "
                 "— feed lost or double-applied a commit"
             )
-        tmp = os.path.join(dst_root, f"._REPLICATED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(dst_root, "_REPLICATED", stamp, build)
 
 
 @register(
@@ -2747,64 +2580,15 @@ def _tlog_batch_committed(root: str, batch_id: int) -> bool:
     """True iff some commit already carries this micro-batch id — the
     idempotent-sink check (Delta's txn appId/version table, reduced
     to a key in the commit payload): a replayed batch writes NOTHING.
-    Checkpoint-aware: committed batch ids fold into checkpoints (the
-    ``batches`` set), so the check replays at most one cadence of
-    delta commits instead of the whole log — without this, an
-    n-batch ingest pays O(n) log reads per batch, O(n²) total."""
-    import json
-
-    logd = os.path.join(root, "_log")
-    if not os.path.isdir(logd):
+    Committed batch ids fold into checkpoints, so the check replays at
+    most one cadence of delta commits, not the whole log."""
+    if not os.path.isdir(os.path.join(root, "_log")):
         return False
     try:
         latest = _tlog_latest_version(root)
     except RuntimeError:
         return False
-    start = 0
-    for v in range(latest, -1, -1):
-        cp = os.path.join(logd, f"{v:06d}.checkpoint.json")
-        if os.path.exists(cp):
-            c = json.load(open(cp))
-            if "batches" in c:
-                if batch_id in c["batches"]:
-                    return True
-                start = v + 1
-            break
-    for v in range(start, latest + 1):
-        try:
-            c = json.load(open(os.path.join(logd, f"{v:06d}.json")))
-        except OSError:
-            continue  # severed pre-checkpoint history
-        if c.get("batch") == batch_id:
-            return True
-    return False
-
-
-def _tlog_committed_batches(root: str, version: int) -> list[int]:
-    """All batch ids committed at or before ``version`` (for the
-    checkpoint fold). Batch ids never un-commit — unlike the per-file
-    maps, removes don't drop them."""
-    import json
-
-    logd = os.path.join(root, "_log")
-    out: set[int] = set()
-    start = 0
-    for v in range(version, -1, -1):
-        cp = os.path.join(logd, f"{v:06d}.checkpoint.json")
-        if os.path.exists(cp):
-            c = json.load(open(cp))
-            if "batches" in c:
-                out = set(c["batches"])
-                start = v + 1
-            break
-    for v in range(start, version + 1):
-        try:
-            c = json.load(open(os.path.join(logd, f"{v:06d}.json")))
-        except OSError:
-            continue
-        if c.get("batch") is not None:
-            out.add(c["batch"])
-    return sorted(out)
+    return batch_id in _tlog_snapshot(root, latest)["batches"]
 
 
 def _tlog_apply_ingest(spark: SparkSession, root: str) -> None:
@@ -2829,47 +2613,16 @@ def _tlog_apply_ingest(spark: SparkSession, root: str) -> None:
     which the batch-id dedup makes safe (ADVICE r11: the replica's
     existence-only stamp had no such path and double-applied
     forever)."""
-    import fcntl
     import json
-    import shutil
 
-    stamp_file = os.path.join(root, "_INGESTED")
     spec = _tlog_ingest_spec()
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == spec
-        except OSError:
-            return False
+    spec_file = os.path.join(root, "_INGEST_SPEC")
 
-    if _ok():
-        return
-    os.makedirs(root, exist_ok=True)
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        spec_file = os.path.join(root, "_INGEST_SPEC")
-        stale_spec = False
-        try:
-            stale_spec = open(spec_file).read() != spec
-        except OSError:
-            stale_spec = os.path.isdir(os.path.join(root, "_log")) and any(
-                f.endswith(".json") for f in os.listdir(os.path.join(root, "_log"))
-            )
-        if stale_spec:
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
+    def build() -> None:
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         if not os.path.exists(spec_file):
-            tmp = os.path.join(root, f"._SPEC.{os.getpid()}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(spec)
-            os.replace(tmp, spec_file)
+            write_atomic(spec_file, spec)
 
         from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
             register_synthetic_stream_source,
@@ -2923,13 +2676,11 @@ def _tlog_apply_ingest(spark: SparkSession, root: str) -> None:
                 f"ingest drained {n_commits} commits, expected {want} — "
                 "feed lost or double-applied a batch"
             )
-        tmp = os.path.join(root, f"._INGESTED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(spec)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(
+        root, "_INGESTED", spec, build,
+        resume=lambda: read_text(spec_file) == spec,
+    )
 
 
 @register(
@@ -2996,41 +2747,16 @@ _TLOG_DV_SPEC = {"target": "file_D", "del_mod": 9, "del_residue": 3}
 
 
 def _tlog_replay_map(root: str, version: int, key: str) -> dict:
-    """Checkpoint-aware replay of a per-file state map carried in
-    commits under ``key`` (``dv`` bindings, ``stats`` bounds): start
-    from the newest checkpoint at or before ``version`` that folded
-    this key (checkpoints written before the key existed fall back
-    to a full replay — correctness never depends on checkpoint
-    vintage), then apply the delta commits: a removed file drops its
-    entry, a commit's map updates win. Same cadence bound as
-    ``_tlog_live_files`` — resolution cost is O(checkpoint cadence),
-    not O(log depth)."""
-    import json
-
-    logd = os.path.join(root, "_log")
-    state: dict = {}
-    start = 0
-    for v in range(version, -1, -1):
-        cp = os.path.join(logd, f"{v:06d}.checkpoint.json")
-        if os.path.exists(cp):
-            c = json.load(open(cp))
-            if key in c:
-                state = dict(c[key])
-                start = v + 1
-            break
-    for v in range(start, version + 1):
-        c = json.load(open(os.path.join(logd, f"{v:06d}.json")))
-        for f in c["remove"]:
-            state.pop(f, None)
-        state.update(c.get(key, {}))
-    return state
+    """A per-file state map carried in commits under ``key`` (``dv``
+    bindings, ``stats`` bounds, ``colphys`` bindings) at ``version``."""
+    return _tlog_snapshot(root, version)[key]
 
 
 def _tlog_live_dvs(root: str, version: int) -> dict[str, str]:
     """Deletion-vector state at ``version``: a commit's ``dv`` map
     binds a sidecar to a live file (latest binding wins); removing a
-    file drops its DV. Checkpoint-aware via ``_tlog_replay_map``."""
-    return _tlog_replay_map(root, version, "dv")
+    file drops its DV."""
+    return _tlog_snapshot(root, version)["dv"]
 
 
 def _tlog_dv_frame(spark: SparkSession, root: str, dvs: dict[str, str]) -> DataFrame:
@@ -3080,26 +2806,12 @@ def _tlog_apply_dv(spark: SparkSession, sf_dir: str, root: str) -> None:
     regex never confuse it for a data file) and one commit binds the
     sidecar to its target file. The target file's bytes are NEVER
     touched."""
-    import fcntl
     import json
 
     spec = _TLOG_DV_SPEC
-    stamp_file = os.path.join(root, "_DV")
     stamp = json.dumps(spec, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def build() -> None:
         base = _tlog_latest_version(root)
         target_rel = spark.read.parquet(os.path.join(root, spec["target"]))
         doomed = target_rel.filter(
@@ -3112,13 +2824,8 @@ def _tlog_apply_dv(spark: SparkSession, sf_dir: str, root: str) -> None:
             root, add=[], remove=[], base_version=base,
             read_set={spec["target"]}, dv={spec["target"]: dv_name},
         )
-        tmp = os.path.join(root, f"._DV.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_DV", stamp, build, resume=lambda: True)
 
 
 @register(
@@ -3245,8 +2952,8 @@ def table_log_compact_materialize_dv(spark: SparkSession, sf_dir: str) -> DataFr
 def _tlog_live_stats(root: str, version: int) -> dict[str, dict]:
     """Per-file column stats (manifest min/max) at ``version``: a
     commit's ``stats`` map binds bounds to files it adds; removing a
-    file drops its stats. Checkpoint-aware via ``_tlog_replay_map``."""
-    return _tlog_replay_map(root, version, "stats")
+    file drops its stats."""
+    return _tlog_snapshot(root, version)["stats"]
 
 
 def _tlog_stats_prune(
@@ -3353,21 +3060,13 @@ def _tlog_apply_zorder_compact(spark: SparkSession, sf_dir: str, root: str) -> N
     bounds on its own column only; the Z-layout gives every group a
     bounded window in EACH dimension, so manifest-stats pruning
     works for predicates on either or both (VERDICT r11 item 5)."""
-    import fcntl
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.sorts import (
         _morton_expr,
     )
 
-    marker = os.path.join(root, "_ZORDERED")
-    if os.path.exists(marker):
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if os.path.exists(marker):
-            return
+    def build() -> None:
         base = _tlog_latest_version(root)
         live = _tlog_live_files(root, base)
         rel = _tlog_relation(spark, live)
@@ -3429,13 +3128,8 @@ def _tlog_apply_zorder_compact(spark: SparkSession, sf_dir: str, root: str) -> N
             root, add=promoted, remove=removed, base_version=base,
             read_set=set(removed), stats=stats,
         )
-        tmp = os.path.join(root, f"._ZORDERED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write("v1")
-        os.replace(tmp, marker)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_ZORDERED", "v1", build, resume=lambda: True)
 
 
 @register(
@@ -3674,62 +3368,24 @@ def _tlog_apply_restore_lifecycle(spark: SparkSession, sf_dir: str, root: str) -
     file's binding must DROP, exercising the touch path); v5 RESTOREs
     to v3 BY TIMESTAMP (the binding must RE-BIND). Head then equals
     the DV'd snapshot, reached purely through restore commits."""
-    import fcntl
     import json
 
-    stamp_file = os.path.join(root, "_RESTORED")
     stamp = json.dumps(_TLOG_RESTORE_SPEC, sort_keys=True)
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        try:
-            # a COMPLETED lifecycle under a superseded spec/impl
-            stale = open(stamp_file).read() != stamp
-        except OSError:
+    def build() -> None:
+        if _tlog_latest_version_safe(root) > 4:
             # no stamp: resumable iff within the lifecycle's version
-            # range (the ==3/==4 gates), unknown provenance beyond it
-            stale = _tlog_latest_version(root) > 4
-        if stale:
-            # wipe and rebuild the base (the DML/ingest recovery
-            # discipline). The build and DV steps take this same
-            # flock, so release around them (flock is per-fd — a
-            # second open of the lock file blocks even within one
-            # process).
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            # range (the ==3/==4 gates), unknown provenance beyond it —
+            # wipe and rebuild the base (the DML/ingest discipline)
+            wipe_root(root)
         _tlog_build(spark, sf_dir, root)  # no-op when intact
         _tlog_apply_dv(spark, sf_dir, root)  # v3: DV on file_D
-        fcntl.flock(lock_fh, fcntl.LOCK_EX)
-        if _ok():
-            return
         if _tlog_latest_version(root) == 3:
             _tlog_restore(root, to_version=2)  # v4: binding drops
         if _tlog_latest_version(root) == 4:
             _tlog_restore(root, to_ts=_tlog_commit_ts(root, 3))  # v5: rebinds
-        tmp = os.path.join(root, f"._RESTORED.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_RESTORED", stamp, build)
 
 
 @register(
@@ -4057,54 +3713,24 @@ def _tlog_apply_dml(spark: SparkSession, sf_dir: str, root: str) -> None:
     int keys only where 251 doesn't divide — they do intersect (e.g.
     3012 if %251==7... the oracle composes both regardless), so the
     serial order DELETE-then-UPDATE is what the oracle recomputes."""
-    import fcntl
 
-    stamp_file = os.path.join(root, "_DML")
     stamp = _tlog_dml_spec_json()
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    lock_fh = open(os.path.join(root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
-        if _tlog_latest_version(root) != 2:
+    def build() -> None:
+        if _tlog_latest_version_safe(root) != 2:
             # mutations from a superseded spec/impl on this root:
             # wipe and rebuild the base (the ingest recovery
-            # discipline — DML composes on exact versions). The
-            # build takes this same flock, so release around it.
-            import shutil
-
-            for entry in os.listdir(root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            fcntl.flock(lock_fh, fcntl.LOCK_UN)
+            # discipline — DML composes on exact versions)
+            wipe_root(root)
             _tlog_build(spark, sf_dir, root)
-            fcntl.flock(lock_fh, fcntl.LOCK_EX)
-            if _ok():
-                return
         if _tlog_latest_version(root) == 2:
             _tlog_dml_delete_where(spark, root, _TLOG_DELETE_PRED)
         if _tlog_latest_version(root) == 3:
             _tlog_dml_update_set(
                 spark, root, _TLOG_UPDATE_PRED, _TLOG_UPDATE_BUMP
             )
-        tmp = os.path.join(root, f"._DML.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(root, "_DML", stamp, build)
 
 
 def _tlog_dml_fingerprint(spark: SparkSession, root: str) -> DataFrame:

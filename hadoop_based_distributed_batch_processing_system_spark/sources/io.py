@@ -332,9 +332,3 @@ def sink_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def sink_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """CSV sink (header on). Row-oriented text output ≈ the reference
-    class's TextOutputFormat part-files."""
-    df.write.mode(mode).option("header", "true").csv(path)

@@ -29,6 +29,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession
 
+from hadoop_based_distributed_batch_processing_system_spark.built import built_once, read_text
 from hadoop_based_distributed_batch_processing_system_spark.registry import register
 from hadoop_based_distributed_batch_processing_system_spark.sources.io import corpus_tag, events_ts_spec
 from hadoop_based_distributed_batch_processing_system_spark.streaming.event_time import (
@@ -1625,10 +1626,8 @@ def _tlog_mv_live_drain(
     batch-keyed for replay idempotence. Flock + stamp with the
     replica's recovery discipline (wipe a stamp-less nonempty view
     and re-drain; the drain is change-sized)."""
-    import fcntl
     import json
     import os
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         TableLogConflictError,
@@ -1654,44 +1653,24 @@ def _tlog_mv_live_drain(
         sort_keys=True,
     )
 
-    def _ok() -> bool:
-        try:
-            return open(stamp_file).read() == stamp
-        except OSError:
-            return False
-
-    if _ok():
-        return
-    os.makedirs(os.path.join(mv_root, "_log"), exist_ok=True)
-    lock_fh = open(os.path.join(mv_root, ".lock"), "w")
-    fcntl.flock(lock_fh, fcntl.LOCK_EX)
-    try:
-        if _ok():
-            return
+    def resumable() -> bool:
         # a view whose SPEC matches but whose "through" lags the
         # source RESUMES from its stream checkpoint (the incremental
         # catch-up production MVs run on a schedule); anything else
         # nonempty is unknown provenance — wipe and re-drain
-        cents = F.round(F.col("o_totalprice") * 100).cast("long")
-        resume = False
         try:
-            old = json.loads(open(stamp_file).read())
-            resume = {k: old.get(k) for k in base_spec} == base_spec
-        except (OSError, ValueError):
-            resume = False
-        has_log = any(
+            old = json.loads(read_text(stamp_file) or "")
+        except ValueError:
+            return False
+        return {k: old.get(k) for k in base_spec} == base_spec
+
+    def build() -> None:
+        cents = F.round(F.col("o_totalprice") * 100).cast("long")
+        os.makedirs(os.path.join(mv_root, "_log"), exist_ok=True)
+        if not any(
             f.endswith(".json")
             for f in os.listdir(os.path.join(mv_root, "_log"))
-        )
-        if has_log and not resume:
-            for entry in os.listdir(mv_root):
-                if entry == ".lock":
-                    continue
-                p = os.path.join(mv_root, entry)
-                shutil.rmtree(p) if os.path.isdir(p) else os.unlink(p)
-            os.makedirs(os.path.join(mv_root, "_log"), exist_ok=True)
-            has_log = False
-        if not has_log:
+        ):
             boot = (
                 _tlog_relation(spark, _tlog_live_files(src_root, 0))
                 .groupBy((F.col("o_orderkey") % 4).cast("int").alias("bucket"))
@@ -1785,13 +1764,8 @@ def _tlog_mv_live_drain(
                 "change-bearing source commits — a fold was lost or "
                 "double-applied"
             )
-        tmp = os.path.join(mv_root, f"._MV_LIVE.{os.getpid()}.tmp")
-        with open(tmp, "w") as fh:
-            fh.write(stamp)
-        os.replace(tmp, stamp_file)
-    finally:
-        fcntl.flock(lock_fh, fcntl.LOCK_UN)
-        lock_fh.close()
+
+    built_once(mv_root, "_MV_LIVE", stamp, build, resume=resumable)
 
 
 @register(

@@ -167,6 +167,39 @@ def test_checkpoint_written_and_resolution_matches_replay(tlog_dir):
     assert set(os.path.basename(p) for p in _tlog_live_files(tlog_dir, nxt)) == (
         live - {"file_A"}
     ) | {"file_post"}
+    # every folded key, across two more cadences: the fold through the
+    # checkpoints equals the fold with every checkpoint file removed
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_snapshot,
+    )
+
+    v = nxt
+    for i in range(2 * _TLOG_CHECKPOINT_EVERY):
+        f = f"file_k{i}"
+        v = _tlog_commit(
+            tlog_dir,
+            add=[f],
+            remove=[f"file_k{i - 2}"] if i % 3 == 2 else [],
+            base_version=v,
+            dv={f"file_k{i - 1}": f"dv_file_k{i - 1}_v{v + 1}"} if i else None,
+            stats={f: {"o_orderkey": [i, i + 9]}},
+            batch=i,
+            constraints={f"c{i % 2}": None if i % 4 == 3 else f"o_orderkey > {-i}"},
+            partitioning={"spec_id": i, "rule": f"bucket(o_orderkey, {i + 1})"},
+            column_mapping={"fields": [{"id": 1, "name": f"k{i}"}]},
+            colphys={f: {"1": f"k{i}"}},
+        )
+    logd = os.path.join(tlog_dir, "_log")
+    cps = sorted(f for f in os.listdir(logd) if f.endswith(".checkpoint.json"))
+    assert len(cps) >= 3, cps
+    through_cp = {x: _tlog_snapshot(tlog_dir, x) for x in range(v + 1)}
+    for f in cps:
+        os.remove(os.path.join(logd, f))
+    for x in range(v + 1):
+        replayed = _tlog_snapshot(tlog_dir, x)
+        assert through_cp[x].keys() == replayed.keys()
+        for key in replayed:
+            assert through_cp[x][key] == replayed[key], (x, key)
 
 
 def test_merge_is_cow_minimal_and_checkpointed(spark):
@@ -620,6 +653,30 @@ def test_checkpoints_fold_dv_and_stats_state(tlog_dir):
     v2 = _tlog_commit(tlog_dir, add=[], remove=["file_A", "file_X"], base_version=v)
     assert _tlog_live_dvs(tlog_dir, v2) == {}
     assert set(_tlog_live_stats(tlog_dir, v2)) == {"file_C", "file_D"}
+
+
+def test_batch_check_raises_on_an_unreadable_commit(tlog_dir):
+    """A commit the batch-id check cannot read raises instead of being
+    skipped: a severed commit that carried batch 7 would otherwise make
+    a re-delivered batch 7 look new, so it would be applied twice."""
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_batch_committed,
+    )
+
+    v = _tlog_latest_version(tlog_dir)
+    while (v + 1) % _TLOG_CHECKPOINT_EVERY != 0:
+        v = _tlog_commit(tlog_dir, add=[f"file_f{v}"], remove=[], base_version=v)
+    v7 = _tlog_commit(tlog_dir, add=["file_b7"], remove=[], base_version=v, batch=7)
+    after = _tlog_commit(tlog_dir, add=["file_next"], remove=[], base_version=v7)
+    logd = os.path.join(tlog_dir, "_log")
+    assert not any(
+        os.path.exists(os.path.join(logd, f"{x:06d}.checkpoint.json"))
+        for x in (v7, after)
+    )
+    assert _tlog_batch_committed(tlog_dir, 7)
+    os.remove(os.path.join(logd, f"{v7:06d}.json"))
+    with pytest.raises(RuntimeError, match=f"missing commit {v7:06d}"):
+        _tlog_batch_committed(tlog_dir, 7)
 
 
 def test_timestamp_as_of_resolution_and_retention(spark, tlog_dir):

@@ -5,7 +5,8 @@ entries had never had a recorded wall-time, leaving the 2x-of-baseline
 bar attested only for the benched set. This sweep runs EVERY registry
 entry once at $SPARK_GRAFT_SF_DIR (default sf0.1) — one warm-up + one
 timed run (cheaper than the curated best-of-3; the goal is outlier
-DETECTION, not trend precision) — and writes BENCH_FULL_r{N}.json with
+DETECTION, not trend precision) — and writes BENCH_FULL_r{N}.json (or,
+when the round already has one, the next free .rerunK beside it) with
 per-query seconds plus a family-median outlier report (family = the
 query name's leading token), so a never-benched op hiding a quadratic
 corner surfaces.
@@ -24,7 +25,7 @@ import time
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
-from bench import ACTION, _next_round, jvm_canary, run_action  # noqa: E402
+from bench import ACTION, _next_round, jvm_canary, run_action, unclobbered  # noqa: E402
 
 
 # Documented ground-truth BRUTE-FORCE baselines whose design scale is
@@ -169,7 +170,7 @@ def main() -> None:
             "pid": os.getpid(),
         },
     }
-    out = os.path.join(HERE, f"BENCH_FULL_r{_next_round()}.json")
+    out = unclobbered(os.path.join(HERE, f"BENCH_FULL_r{_next_round()}"))
     with open(out, "w") as fh:
         json.dump(payload, fh, indent=1, sort_keys=True)
     print(json.dumps({k: payload[k] for k in ("metric", "value", "unit", "n_queries", "n_errors")}))
