@@ -47,19 +47,27 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _TLOG_UPDATE_PRED,
     _tlog_apply_dml,
     _tlog_build,
+    _tlog_bindings_ever,
+    _tlog_change_rows_for,
     _tlog_change_units,
+    _tlog_changes_fingerprint,
+    _tlog_colmap_binding,
     _tlog_commit_rebase,
     _tlog_commit_ts,
-    _tlog_dml_fingerprint,
     _tlog_dml_root,
+    _tlog_dv_frame,
+    _tlog_feed_units,
+    _tlog_fingerprint,
     _tlog_latest_version,
     _tlog_latest_version_safe,
     _tlog_live_dvs,
     _tlog_live_files,
-    _tlog_dv_frame,
     _tlog_live_stats,
     _tlog_relation,
+    _tlog_respell,
     _tlog_root,
+    _tlog_rows,
+    _tlog_snapshot_fingerprints,
     _tlog_staged_write_with_stats,
     _tlog_vacuumed,
     _tlog_version_as_of,
@@ -98,7 +106,6 @@ def _tlog_wap_stage(
     commit file that main's resolver never reads. Returns the branch
     payload (also on disk)."""
     import json
-    import threading
 
     base = _tlog_latest_version(root)
     promoted, stats = _tlog_staged_write_with_stats(
@@ -113,10 +120,7 @@ def _tlog_wap_stage(
     }
     bpath = _tlog_branch_path(root, branch, base + 1)
     os.makedirs(os.path.dirname(bpath), exist_ok=True)
-    tmp = f"{bpath}.{os.getpid()}.{threading.get_ident()}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(payload, fh)
-    os.replace(tmp, bpath)
+    write_atomic(bpath, json.dumps(payload))
     return payload
 
 
@@ -419,80 +423,10 @@ def table_log_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the ref namespace from growing unboundedly."""
     root = _tlog_build(spark, sf_dir, _tlog_wap_root(sf_dir))
     _tlog_apply_wap(spark, sf_dir, root)
-    return _tlog_dml_fingerprint(spark, root)
+    return _tlog_fingerprint(spark, root)
 
 
 # --- Row-level CDC pre/post images (S9-cdf'') -----------------------------
-
-
-def _tlog_change_rows_for(
-    spark: SparkSession,
-    root: str,
-    key: str,
-    cols: list[str],
-    versions: list[int] | None = None,
-) -> DataFrame:
-    """ROW-LEVEL change frame, schema-agnostic: (version, side,
-    *cols) for the given commit ``versions`` (default: every
-    post-bootstrap commit) under the DV-complete contract of
-    ``_tlog_change_units``. ``key`` is the column DV sidecars store
-    (their doomed-keys list), so include/exclude filters join on it.
-    Change-sized: one scan of the union of change files joined to a
-    broadcast unit membership, with broadcast include/exclude
-    semi-filters against the (doomed-keys-sized) sidecar relation."""
-    if versions is None:
-        versions = list(range(1, _tlog_latest_version(root) + 1))
-    units = [
-        (v, side, f, incl, excl)
-        for v in versions
-        for side, f, incl, excl in _tlog_change_units(root, v)
-    ]
-    if not units:
-        raise RuntimeError(
-            f"table log at {root} has no change units for versions "
-            f"{versions} — stale or partially-built dir? delete it to "
-            "force a clean rebuild"
-        )
-    files = sorted({os.path.join(root, f) for _v, _s, f, _i, _e in units})
-    rel = _tlog_relation(spark, files).withColumn(
-        "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-    )
-    uframe = spark.createDataFrame(
-        units, "version int, side string, file string, incl string, excl string"
-    )
-    rows = rel.join(F.broadcast(uframe), "file")
-    sidecars = sorted(
-        {i for _v, _s, _f, i, _e in units if i}
-        | {e for _v, _s, _f, _i, e in units if e}
-    )
-    if sidecars:
-        sc = _tlog_relation(
-            spark, [os.path.join(root, s) for s in sidecars]
-        ).select(
-            F.regexp_extract(
-                F.input_file_name(), r"/(dv_[A-Za-z0-9_]+)/", 1
-            ).alias("sc_name"),
-            key,
-        )
-        rows = rows.join(
-            F.broadcast(
-                sc.select(
-                    F.col("sc_name").alias("incl"), key, F.lit(1).alias("_in")
-                )
-            ),
-            ["incl", key],
-            "left",
-        ).filter(F.col("incl").isNull() | F.col("_in").isNotNull())
-        rows = rows.join(
-            F.broadcast(
-                sc.select(
-                    F.col("sc_name").alias("excl"), key, F.lit(1).alias("_ex")
-                )
-            ),
-            ["excl", key],
-            "left",
-        ).filter(F.col("_ex").isNull())
-    return rows.select("version", "side", *cols)
 
 
 def _tlog_change_rows(spark: SparkSession, root: str) -> DataFrame:
@@ -500,7 +434,8 @@ def _tlog_change_rows(spark: SparkSession, root: str) -> DataFrame:
     (version, side, o_orderkey, o_totalprice) for every post-bootstrap
     commit."""
     return _tlog_change_rows_for(
-        spark, root, "o_orderkey", ["o_orderkey", "o_totalprice"]
+        spark, root, _tlog_feed_units(root), "o_orderkey",
+        ["o_orderkey", "o_totalprice"],
     )
 
 
@@ -636,105 +571,6 @@ def table_log_cdc_images(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Consistent cross-table as-of reads (S9-masof) -------------------------
 
 
-def _tlog_dv_snapshot_fingerprints(
-    spark: SparkSession, root: str, labeled: list[tuple[int, int]], tbl: str
-) -> DataFrame:
-    """Fingerprint several snapshots of ONE table in one pass, DV-
-    aware: files WITHOUT a sidecar binding at a label combine through
-    per-file partial aggregates and a broadcast (label, file)
-    membership join (each distinct file scans once however many
-    snapshots share it — the manifest-stats shape); files WITH a
-    binding take a row-level half (the anti-join against the sidecar
-    needs rows), tagged by the same membership mechanism. The halves
-    union into per-label totals. ``labeled`` is (label, version)."""
-    plain: list[tuple[int, str]] = []
-    dvd: list[tuple[int, str, str]] = []
-    for label, v in labeled:
-        dvs = _tlog_live_dvs(root, v)
-        for p in _tlog_live_files(root, v):
-            f = os.path.basename(p)
-            if f in dvs:
-                dvd.append((label, f, dvs[f]))
-            else:
-                plain.append((label, f))
-    cents = F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-    halves: list[DataFrame] = []
-    if plain:
-        # the DV-less half IS the existing one-scan membership plan —
-        # delegate to it (labels ride its version column) so the two
-        # fingerprint paths cannot drift apart
-        from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-            _tlog_snapshot_fingerprints,
-        )
-
-        halves.append(
-            _tlog_snapshot_fingerprints(spark, root, plain).select(
-                F.col("version").alias("label"),
-                F.col("n_rows").alias("n"),
-                F.col("sum_cents").alias("c"),
-                F.col("min_key").alias("mn"),
-                F.col("max_key").alias("mx"),
-            )
-        )
-    if dvd:
-        files = sorted({os.path.join(root, f) for _l, f, _s in dvd})
-        rows = (
-            _tlog_relation(spark, files)
-            .withColumn(
-                "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-            )
-            .join(
-                F.broadcast(
-                    spark.createDataFrame(
-                        dvd, "label int, file string, sidecar string"
-                    )
-                ),
-                "file",
-            )
-        )
-        sidecars = sorted({s for _l, _f, s in dvd})
-        sc = _tlog_relation(
-            spark, [os.path.join(root, s) for s in sidecars]
-        ).select(
-            F.regexp_extract(
-                F.input_file_name(), r"/(dv_[A-Za-z0-9_]+)/", 1
-            ).alias("sidecar"),
-            "o_orderkey",
-            F.lit(1).alias("_doomed"),
-        )
-        rows = rows.join(
-            F.broadcast(sc), ["sidecar", "o_orderkey"], "left"
-        ).filter(F.col("_doomed").isNull())
-        halves.append(
-            rows.groupBy("label").agg(
-                F.count(F.lit(1)).alias("n"),
-                cents.alias("c"),
-                F.min("o_orderkey").cast("long").alias("mn"),
-                F.max("o_orderkey").cast("long").alias("mx"),
-            )
-        )
-    merged = halves[0]
-    for h in halves[1:]:
-        merged = merged.unionByName(h)
-    return (
-        merged.groupBy("label")
-        .agg(
-            F.sum("n").alias("n_rows"),
-            F.sum("c").alias("sum_cents"),
-            F.min("mn").alias("min_key"),
-            F.max("mx").alias("max_key"),
-        )
-        .select(
-            F.col("label").alias("instant"),
-            F.lit(tbl).alias("tbl"),
-            "n_rows",
-            "sum_cents",
-            "min_key",
-            "max_key",
-        )
-    )
-
-
 @register(
     "table_log_multi_asof",
     # Hash oracle: both tables' snapshots at each shared instant,
@@ -825,10 +661,13 @@ def table_log_multi_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
                     f"v{expected[tbl][label]}"
                 )
             labeled.append((label, v))
-        parts.append(_tlog_dv_snapshot_fingerprints(spark, root, labeled, tbl))
-    return parts[0].unionByName(parts[1]).select(
-        "instant", "tbl", "n_rows", "sum_cents", "min_key", "max_key"
-    )
+        parts.append(
+            _tlog_snapshot_fingerprints(spark, root, labeled).select(
+                F.col("version").alias("instant"), F.lit(tbl).alias("tbl"),
+                "n_rows", "sum_cents", "min_key", "max_key",
+            )
+        )
+    return parts[0].unionByName(parts[1])
 
 
 # --- Metadata-driven compaction trigger (S9-ctr) ---------------------------
@@ -881,18 +720,7 @@ def _tlog_compact_trigger(
     sizes = {g: _tlog_group_bytes(root, g) for g in live}
     victims = sorted(live, key=lambda g: (sizes[g], g))[:k]
     merged = f"file_ctr_{base + 1}"
-    dvs = {
-        f: s for f, s in _tlog_live_dvs(root, base).items() if f in set(victims)
-    }
-    rel = _tlog_relation(
-        spark, [os.path.join(root, g) for g in victims]
-    ).withColumn("file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1))
-    if dvs:
-        rel = rel.join(
-            F.broadcast(_tlog_dv_frame(spark, root, dvs)),
-            ["file", "o_orderkey"],
-            "left_anti",
-        )
+    rel = _tlog_rows(spark, root, base, [os.path.join(root, g) for g in victims])
     promoted, stats = _tlog_staged_write_with_stats(
         rel.select("o_orderkey", "o_totalprice").withColumn("tgt", F.lit(merged)),
         root,
@@ -1027,8 +855,8 @@ def table_log_compact_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _tlog_build(spark, sf_dir, _tlog_trg_root(sf_dir))
     _tlog_apply_trigger(spark, sf_dir, root)
     decisions = json.load(open(os.path.join(root, "_TRIGGER_DECISIONS")))
-    fps = _tlog_dv_snapshot_fingerprints(
-        spark, root, [(d["step"], d["version"]) for d in decisions], "t"
+    fps = _tlog_snapshot_fingerprints(
+        spark, root, [(d["step"], d["version"]) for d in decisions]
     )
     ddf = spark.createDataFrame(
         [
@@ -1038,7 +866,7 @@ def table_log_compact_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
         "step int, fired int, live_before int, live_after int",
     )
     return (
-        fps.select(F.col("instant").alias("step"), "n_rows", "sum_cents")
+        fps.select(F.col("version").alias("step"), "n_rows", "sum_cents")
         .join(F.broadcast(ddf), "step")
         .select("step", "fired", "live_before", "live_after", "n_rows", "sum_cents")
     )
@@ -1266,8 +1094,8 @@ def _tlog_rollup_consume(
     bucket = (F.dayofmonth("day") % _TLOG_EV_ROLLUP_BUCKETS).cast("int")
     delta = (
         _tlog_change_rows_for(
-            spark, ev_root, "event_id", ["ts", "event_type", "value"],
-            versions=[version],
+            spark, ev_root, _tlog_feed_units(ev_root, [version]), "event_id",
+            ["ts", "event_type", "value"],
         )
         .select(
             F.date_trunc("day", F.col("ts")).alias("day"),
@@ -1645,35 +1473,8 @@ def table_log_clone_shallow(spark: SparkSession, sf_dir: str) -> DataFrame:
     just the replica operator (``stream_table_log_replicate``)."""
     root = _tlog_clone_root(sf_dir)
     _tlog_apply_clone(spark, sf_dir, root)
-    files = _tlog_clone_live_files(root)
-    latest = _tlog_latest_version(root)
-    dvs = _tlog_live_dvs(root, latest)
-    rel = _tlog_relation(spark, files).withColumn(
-        "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-    )
-    if dvs:
-        rel = rel.join(
-            F.broadcast(_tlog_dv_frame(spark, root, dvs)),
-            ["file", "o_orderkey"],
-            "left_anti",
-        )
-    return (
-        rel.select(
-            (F.col("o_orderkey") % 4).cast("int").alias("bucket"),
-            "o_orderkey",
-            "o_totalprice",
-        )
-        .groupBy("bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "sum_cents"
-            ),
-            F.min("o_orderkey").cast("long").alias("min_key"),
-            F.max("o_orderkey").cast("long").alias("max_key"),
-        )
-        .select("bucket", "n_rows", "sum_cents", "min_key", "max_key")
-    )
+    _tlog_clone_live_files(root)  # the source-vacuum hazard check
+    return _tlog_fingerprint(spark, root)
 
 
 # --- Time-clustering + timestamp-range pruned read (S9-tsp) ----------------
@@ -1870,17 +1671,7 @@ def _tlog_add_constraint(
     )
 
     base = _tlog_latest_version(root)
-    files = _tlog_live_files(root, base)
-    dvs = _tlog_live_dvs(root, base)
-    rel = _tlog_relation(spark, files).withColumn(
-        "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-    )
-    if dvs:
-        rel = rel.join(
-            F.broadcast(_tlog_dv_frame(spark, root, dvs)),
-            ["file", "o_orderkey"],
-            "left_anti",
-        )
+    rel = _tlog_rows(spark, root, base)
     bad = rel.filter(~F.coalesce(F.expr(pred), F.lit(True))).count()
     if bad:
         raise RuntimeError(
@@ -2011,7 +1802,7 @@ def table_log_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     code to remember it."""
     root = _tlog_build(spark, sf_dir, _tlog_chk_root(sf_dir))
     _tlog_apply_chk(spark, sf_dir, root)
-    return _tlog_dml_fingerprint(spark, root)
+    return _tlog_fingerprint(spark, root)
 
 
 # --- Row lineage: stable row ids through key-changing rewrites (S9-rid) ----
@@ -2117,7 +1908,8 @@ def _tlog_cdc_images_by(
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     paired = (
         _tlog_change_rows_for(
-            spark, root, pair_key, [pair_key, "o_orderkey", "o_totalprice"]
+            spark, root, _tlog_feed_units(root), pair_key,
+            [pair_key, "o_orderkey", "o_totalprice"],
         )
         .select(
             "version", pair_key, "side",
@@ -2590,11 +2382,6 @@ def table_log_colmap_partition_evolution(spark: SparkSession, sf_dir: str) -> Da
     on rename pay each axis separately and their product combinatorially."""
     root = _tlog_pcm_root(sf_dir)
     _tlog_apply_pcm(spark, sf_dir, root)
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_colmap,
-        _tlog_replay_map,
-    )
-
     latest = _tlog_latest_version(root)
     kept, skipped = _tlog_colmap_prune(
         root, latest, "event_ts", _TLOG_PCM_LO, _TLOG_PCM_HI
@@ -2605,26 +2392,7 @@ def table_log_colmap_partition_evolution(spark: SparkSession, sf_dir: str) -> Da
         raise RuntimeError(
             f"two-axis pruning must skip in BOTH layouts; skipped={skipped}"
         )
-    cmap = _tlog_live_colmap(root, latest)
-    phys = _tlog_replay_map(root, latest, "colphys")
-    cohorts: dict[tuple, list[str]] = {}
-    for g in kept:
-        cohorts.setdefault(
-            tuple(sorted(_tlog_colmap_binding(phys, g).items())), []
-        ).append(os.path.join(root, g))
-    parts = []
-    for key, paths in sorted(cohorts.items()):
-        binding = dict(key)
-        cols = [
-            F.col(pname).alias(f["name"])
-            if (pname := binding.get(str(f["id"]))) is not None
-            else F.lit(None).alias(f["name"])
-            for f in cmap["fields"]
-        ]
-        parts.append(_tlog_relation(spark, paths).select(*cols))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = _tlog_rows(spark, root, latest, [os.path.join(root, g) for g in kept])
     return (
         out.filter(
             (F.col("event_ts") >= F.lit(_TLOG_PCM_LO.replace("T", " ")).cast("timestamp"))
@@ -2670,10 +2438,7 @@ def _tlog_txn_prepare(coord_root: str, txn_id: str, legs: list[tuple[str, dict]]
 
     os.makedirs(coord_root, exist_ok=True)
     path = os.path.join(coord_root, f"{txn_id}.json")
-    tmp = f"{path}.{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump([{"root": r, "payload": p} for r, p in legs], fh)
-    os.replace(tmp, path)
+    write_atomic(path, json.dumps([{"root": r, "payload": p} for r, p in legs]))
     return path
 
 
@@ -2940,7 +2705,7 @@ def table_log_multi_table_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for tbl, root in (("a", root_a), ("b", root_b)):
         parts.append(
-            _tlog_dml_fingerprint(spark, root)
+            _tlog_fingerprint(spark, root)
             .withColumn("tbl", F.lit(tbl))
             .select("tbl", "bucket", "n_rows", "sum_cents")
         )
@@ -3171,24 +2936,18 @@ def table_log_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-check introspection against ground truth."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_snapshot_fingerprints,
-    )
-
     root = _tlog_build(spark, sf_dir, _tlog_root(sf_dir))
     latest = _tlog_latest_version(root)
     meta = []
-    membership = []
     for v in range(latest + 1):
         c = json.load(open(os.path.join(root, "_log", f"{v:06d}.json")))
         meta.append((v, len(c["add"]), len(c["remove"])))
-        membership += [
-            (v, os.path.basename(p)) for p in _tlog_live_files(root, v)
-        ]
     meta_df = spark.createDataFrame(
         meta, "version int, n_added int, n_removed int"
     )
-    fps = _tlog_snapshot_fingerprints(spark, root, membership)
+    fps = _tlog_snapshot_fingerprints(
+        spark, root, [(v, v) for v in range(latest + 1)]
+    )
     return fps.join(F.broadcast(meta_df), "version").select(
         "version", "n_added", "n_removed", "n_rows", "sum_cents"
     )
@@ -3358,19 +3117,18 @@ def _tlog_catalog_txn_prepare(
 
     os.makedirs(coord_root, exist_ok=True)
     path = os.path.join(coord_root, f"{txn_id}.json")
-    tmp = f"{path}.{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(
+    write_atomic(
+        path,
+        json.dumps(
             {
                 "cat": cat_root,
                 "cat_base": cat_base,
                 "legs": [
                     {"name": n, "root": r, "payload": p} for n, r, p in legs
                 ],
-            },
-            fh,
-        )
-    os.replace(tmp, path)
+            }
+        ),
+    )
     return path
 
 
@@ -4427,7 +4185,10 @@ def table_log_catalog_multi_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
             by_table.setdefault(tbl, []).append((cv, pin["version"]))
             roots[tbl] = pin["root"]
     parts = [
-        _tlog_dv_snapshot_fingerprints(spark, roots[tbl], labeled, tbl)
+        _tlog_snapshot_fingerprints(spark, roots[tbl], labeled).select(
+            F.col("version").alias("instant"), F.lit(tbl).alias("tbl"),
+            "n_rows", "sum_cents", "min_key", "max_key",
+        )
         for tbl, labeled in sorted(by_table.items())
     ]
     out = parts[0]
@@ -4679,29 +4440,7 @@ def table_log_clone_deepen(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             f"deepened clone still borrows {still_borrowed}"
         )
-    latest = _tlog_latest_version(root)
-    dvs = _tlog_live_dvs(root, latest)
-    rel = _tlog_relation(spark, files).withColumn(
-        "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-    )
-    if dvs:
-        rel = rel.join(
-            F.broadcast(_tlog_dv_frame(spark, root, dvs)),
-            ["file", "o_orderkey"],
-            "left_anti",
-        )
-    return (
-        rel.groupBy((F.col("o_orderkey") % 4).cast("int").alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias(
-                "sum_cents"
-            ),
-            F.min("o_orderkey").cast("long").alias("min_key"),
-            F.max("o_orderkey").cast("long").alias("max_key"),
-        )
-        .select("bucket", "n_rows", "sum_cents", "min_key", "max_key")
-    )
+    return _tlog_fingerprint(spark, root)
 
 
 # --- Column mapping: RENAME/DROP COLUMN as pure metadata (S9-cmap) --------
@@ -4714,61 +4453,6 @@ def _tlog_cmap_root(sf_dir: str) -> str:
     return os.path.join(
         tempfile.gettempdir(), f"hbdbps_tlogcmap_{corpus_tag(sf_dir)}"
     )
-
-
-def _tlog_colmap_read(
-    spark: SparkSession, root: str, version: int
-) -> DataFrame:
-    """Resolve a snapshot THROUGH its column mapping: live file groups
-    are cohorted by their physical field-id bindings (files written
-    before a rename spell a field differently than files written
-    after), each cohort is read once and its physical names aliased to
-    the version's LOGICAL names by field id, and the cohorts union. A
-    field with no binding in some cohort (added after those files were
-    written) reads as NULL — the add-column rule; a physical column
-    not reachable from any live field (dropped) is simply never
-    selected. Mapping-less tables (``column_mapping`` never committed)
-    read raw — physical names ARE the schema.
-
-    Scale: resolution is O(live file groups) driver-side metadata; the
-    data plane is one scan per distinct binding signature (bounded by
-    the number of schema changes, not the file count), each with
-    column pruning intact because the select lists physical names."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_colmap,
-        _tlog_replay_map,
-    )
-
-    files = _tlog_live_files(root, version)
-    cmap = _tlog_live_colmap(root, version)
-    if cmap is None:
-        return _tlog_relation(spark, files)
-    phys = _tlog_replay_map(root, version, "colphys")
-    cohorts: dict[tuple, list[str]] = {}
-    for p in files:
-        g = os.path.basename(p)
-        binding = phys.get(g)
-        if binding is None:
-            raise RuntimeError(
-                f"column mapping is active but live file group {g} has no "
-                "physical binding — the mapping bootstrap must bind every "
-                "live group"
-            )
-        cohorts.setdefault(tuple(sorted(binding.items())), []).append(p)
-    parts = []
-    for key, paths in sorted(cohorts.items()):
-        binding = dict(key)
-        cols = [
-            F.col(pname).alias(f["name"])
-            if (pname := binding.get(str(f["id"]))) is not None
-            else F.lit(None).alias(f["name"])
-            for f in cmap["fields"]
-        ]
-        parts.append(_tlog_relation(spark, paths).select(*cols))
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out
 
 
 def _tlog_colmap_prune(
@@ -4951,7 +4635,7 @@ def table_log_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema-change count, not file count."""
     root = _tlog_cmap_root(sf_dir)
     _tlog_apply_cmap(spark, sf_dir, root)
-    rel = _tlog_colmap_read(spark, root, _tlog_latest_version(root))
+    rel = _tlog_rows(spark, root, _tlog_latest_version(root))
     if "channel" in rel.columns:
         raise RuntimeError("dropped column still reachable at head")
     return (
@@ -4982,8 +4666,10 @@ def _tlog_cmd_root(sf_dir: str) -> str:
 
 
 def _tlog_colmap_translate(pred: str, fields: list[dict], binding: dict) -> str:
-    """Rewrite a LOGICAL-name predicate into one file cohort's
-    PHYSICAL spelling in ONE alternation pass: every identifier in
+    """Rewrite a LOGICAL-name predicate into one writer's PHYSICAL
+    spelling (readers filter logical names above ``_tlog_rows``
+    instead; a writer enforces the table's constraints on the frame
+    it writes) in ONE alternation pass: every identifier in
     the predicate is rewritten at most once, so swap renames (a→b
     while b's physical spelling is a) and chained renames can never
     re-substitute an earlier substitution's output — the sequential
@@ -5018,30 +4704,15 @@ def _tlog_colmap_translate(pred: str, fields: list[dict], binding: dict) -> str:
     )
 
 
-def _tlog_colmap_binding(phys: dict, group: str) -> dict:
-    """Guarded physical-binding lookup: a live file group without a
-    binding under an active mapping is the same bootstrap violation
-    ``_tlog_colmap_read`` refuses — raise its descriptive error
-    instead of a bare KeyError (ADVICE r15)."""
-    binding = phys.get(group)
-    if binding is None:
-        raise RuntimeError(
-            f"column mapping is active but live file group {group} has no "
-            "physical binding — the mapping bootstrap must bind every "
-            "live group"
-        )
-    return binding
-
-
 def _tlog_colmap_delete(
     spark: SparkSession, root: str, logical_pred: str
 ) -> tuple[int, dict[str, str]]:
     """DELETE WHERE <logical predicate> on a COLUMN-MAPPED table,
-    compiled to MERGE-ON-READ deletion vectors: the predicate is
-    translated per file cohort into that cohort's physical spelling
-    (``_tlog_colmap_translate``), doomed keys are collected across
-    every cohort in one staged write, and ONE OCC commit binds every
-    sidecar — statement-atomic across cohorts. The mechanism is
+    compiled to MERGE-ON-READ deletion vectors: the predicate filters
+    the snapshot read (``_tlog_rows`` respells every cohort to the
+    logical names), doomed keys are collected across every cohort in
+    one staged write, and ONE OCC commit binds every sidecar —
+    statement-atomic across cohorts. The mechanism is
     DV-only BY DESIGN under mapping: a sidecar references ROWS (by
     key), never column spellings, so it is immune to the physical-
     schema divergence that makes a copy-on-write rewrite under
@@ -5053,49 +4724,22 @@ def _tlog_colmap_delete(
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit_rebase,
         _tlog_live_colmap,
-        _tlog_replay_map,
     )
 
     base = _tlog_latest_version(root)
-    cmap = _tlog_live_colmap(root, base)
-    if cmap is None:
+    if _tlog_live_colmap(root, base) is None:
         raise RuntimeError("logical-name DELETE requires an active mapping")
-    phys = _tlog_replay_map(root, base, "colphys")
     dvs = _tlog_live_dvs(root, base)
-    cohorts: dict[tuple, list[str]] = {}
-    for p in _tlog_live_files(root, base):
-        g = os.path.basename(p)
-        cohorts.setdefault(
-            tuple(sorted(_tlog_colmap_binding(phys, g).items())), []
-        ).append(p)
     v = base + 1
-    parts = []
-    for key, paths in sorted(cohorts.items()):
-        binding = dict(key)
-        tpred = _tlog_colmap_translate(logical_pred, cmap["fields"], binding)
-        rel = _tlog_relation(spark, paths).withColumn(
-            "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
+    doomed = (
+        _tlog_rows(spark, root, base)
+        .filter(F.expr(logical_pred))
+        .select(
+            F.concat(F.lit("dv_"), "file", F.lit(f"_v{v}")).alias("tgt"),
+            "o_orderkey",
+            F.col("file").alias("src_file"),
         )
-        cohort_dvs = {
-            f: s for f, s in dvs.items()
-            if f in {os.path.basename(p) for p in paths}
-        }
-        if cohort_dvs:
-            rel = rel.join(
-                F.broadcast(_tlog_dv_frame(spark, root, cohort_dvs)),
-                ["file", "o_orderkey"],
-                "left_anti",
-            )
-        parts.append(
-            rel.filter(F.expr(tpred)).select(
-                F.concat(F.lit("dv_"), "file", F.lit(f"_v{v}")).alias("tgt"),
-                "o_orderkey",
-                F.col("file").alias("src_file"),
-            )
-        )
-    doomed = parts[0]
-    for p in parts[1:]:
-        doomed = doomed.unionByName(p)
+    )
     hit = sorted(
         r["src_file"]
         for r in doomed.select("src_file").distinct().collect()
@@ -5155,8 +4799,7 @@ def _tlog_apply_cmd(spark: SparkSession, sf_dir: str, root: str) -> None:
     "table_log_colmap_delete",
     # Hash oracle: the mapped table's content (base + post-rename
     # append) minus the logical delete band, recomputed from orders —
-    # the per-cohort predicate translation must be invisible to
-    # values.
+    # the per-cohort respelling must be invisible to values.
     oracle=f"""
         WITH t AS (
           SELECT o_orderkey, o_totalprice FROM orders
@@ -5178,10 +4821,11 @@ def table_log_colmap_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9-cmap'' — DELETE WHERE under COLUMN MAPPING: the write side
     of the mapping story (S9-cmap proved reads; a mapping that breaks
     DML would be a read-only trick). The user's predicate spells the
-    RENAMED column (``price_usd``); the engine translates it per file
-    cohort into each file's physical spelling — the same statement
-    dooms rows in pre-rename files (physical ``o_totalprice``) and
-    post-rename files (physical ``price_usd``) — and commits every
+    RENAMED column (``price_usd``); the engine filters the snapshot
+    read, which respells every file cohort to the logical names — the
+    same statement dooms rows in pre-rename files (physical
+    ``o_totalprice``) and post-rename files (physical ``price_usd``) —
+    and commits every
     sidecar binding in ONE OCC commit (statement-atomic across
     cohorts). The mechanism is merge-on-read BY DESIGN under mapping:
     sidecars reference rows by key, never column spellings, so
@@ -5196,47 +4840,7 @@ def table_log_colmap_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     deleting — is the full-table I/O the mapping exists to avoid."""
     root = _tlog_cmd_root(sf_dir)
     _tlog_apply_cmd(spark, sf_dir, root)
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_colmap,
-        _tlog_replay_map,
-    )
-
-    latest = _tlog_latest_version(root)
-    cmap = _tlog_live_colmap(root, latest)
-    phys = _tlog_replay_map(root, latest, "colphys")
-    dvs = _tlog_live_dvs(root, latest)
-    cohorts: dict[tuple, list[str]] = {}
-    for p in _tlog_live_files(root, latest):
-        g = os.path.basename(p)
-        cohorts.setdefault(
-            tuple(sorted(_tlog_colmap_binding(phys, g).items())), []
-        ).append(p)
-    parts = []
-    for key, paths in sorted(cohorts.items()):
-        binding = dict(key)
-        rel = _tlog_relation(spark, paths).withColumn(
-            "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-        )
-        cohort_dvs = {
-            f: s for f, s in dvs.items()
-            if f in {os.path.basename(p) for p in paths}
-        }
-        if cohort_dvs:
-            rel = rel.join(
-                F.broadcast(_tlog_dv_frame(spark, root, cohort_dvs)),
-                ["file", "o_orderkey"],
-                "left_anti",
-            )
-        cols = [
-            F.col(pname).alias(f["name"])
-            if (pname := binding.get(str(f["id"]))) is not None
-            else F.lit(None).alias(f["name"])
-            for f in cmap["fields"]
-        ]
-        parts.append(rel.select(*cols))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+    out = _tlog_rows(spark, root, _tlog_latest_version(root))
     return (
         out.groupBy((F.col("o_orderkey") % 4).cast("int").alias("bucket"))
         .agg(
@@ -5261,55 +4865,6 @@ def _tlog_cmc_root(sf_dir: str) -> str:
     return os.path.join(
         tempfile.gettempdir(), f"hbdbps_tlogcmc_{corpus_tag(sf_dir)}"
     )
-
-
-def _tlog_colmap_snapshot(spark: SparkSession, root: str, version: int) -> DataFrame:
-    """DV-aware MAPPED snapshot read: live files grouped into
-    binding-signature cohorts, each cohort anti-joined against its
-    bound sidecars and re-spelled to the LOGICAL schema (missing
-    fields null-filled), then unioned. One scan per binding signature
-    — bounded by schema-change count, not file count."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_colmap,
-        _tlog_replay_map,
-    )
-
-    cmap = _tlog_live_colmap(root, version)
-    if cmap is None:
-        raise RuntimeError("mapped snapshot read requires an active mapping")
-    phys = _tlog_replay_map(root, version, "colphys")
-    dvs = _tlog_live_dvs(root, version)
-    cohorts: dict[tuple, list[str]] = {}
-    for p in _tlog_live_files(root, version):
-        g = os.path.basename(p)
-        cohorts.setdefault(
-            tuple(sorted(_tlog_colmap_binding(phys, g).items())), []
-        ).append(p)
-    parts = []
-    for key, paths in sorted(cohorts.items()):
-        binding = dict(key)
-        rel = _tlog_relation(spark, paths)
-        names = {os.path.basename(p) for p in paths}
-        cohort_dvs = {f: s for f, s in dvs.items() if f in names}
-        if cohort_dvs:
-            rel = rel.withColumn(
-                "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-            ).join(
-                F.broadcast(_tlog_dv_frame(spark, root, cohort_dvs)),
-                ["file", "o_orderkey"],
-                "left_anti",
-            )
-        cols = [
-            F.col(pname).alias(f["name"])
-            if (pname := binding.get(str(f["id"]))) is not None
-            else F.lit(None).alias(f["name"])
-            for f in cmap["fields"]
-        ]
-        parts.append(rel.select(*cols))
-    out = parts[0]
-    for part in parts[1:]:
-        out = out.unionByName(part)
-    return out
 
 
 def _tlog_colmap_compact(spark: SparkSession, root: str) -> tuple[int, list[str], list[str]]:
@@ -5350,7 +4905,6 @@ def _tlog_colmap_compact(spark: SparkSession, root: str) -> tuple[int, list[str]
     phys = _tlog_replay_map(root, base, "colphys")
     dvs = _tlog_live_dvs(root, base)
     stats_all = _tlog_live_stats(root, base)
-    rewrite: dict[tuple, list[str]] = {}
     kept: list[str] = []
     doomed: list[str] = []
     for p in _tlog_live_files(root, base):
@@ -5362,46 +4916,24 @@ def _tlog_colmap_compact(spark: SparkSession, root: str) -> tuple[int, list[str]
         # differently-spelled group garbage-collects dropped columns
         live_spelling = {fid: binding.get(fid) for fid in head_binding}
         if g in dvs or live_spelling != head_binding:
-            rewrite.setdefault(tuple(sorted(binding.items())), []).append(p)
             doomed.append(g)
         else:
             kept.append(g)
     if not doomed:
         return base, [], kept
-    parts = []
     key_lo, key_hi = None, None
     key_fid = str(cmap["fields"][0]["id"])  # cluster on the lead field
-    for key, paths in sorted(rewrite.items()):
-        binding = dict(key)
-        rel = _tlog_relation(spark, paths)
-        names = {os.path.basename(p) for p in paths}
-        cohort_dvs = {f: s for f, s in dvs.items() if f in names}
-        if cohort_dvs:
-            rel = rel.withColumn(
-                "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-            ).join(
-                F.broadcast(_tlog_dv_frame(spark, root, cohort_dvs)),
-                ["file", "o_orderkey"],
-                "left_anti",
-            )
-        cols = [
-            F.col(pname).alias(f["name"])
-            if (pname := binding.get(str(f["id"]))) is not None
-            else F.lit(None).alias(f["name"])
-            for f in cmap["fields"]
-        ]
-        parts.append(rel.select(*cols))
-        # range split point from MANIFEST stats under each cohort's
-        # own physical spelling — metadata, no extra job
-        pkey = binding.get(key_fid)
-        for g in names:
-            st = stats_all.get(g, {}).get(pkey) if pkey else None
-            if st is not None:
-                key_lo = st[0] if key_lo is None else min(key_lo, st[0])
-                key_hi = st[1] if key_hi is None else max(key_hi, st[1])
-    merged = parts[0]
-    for part in parts[1:]:
-        merged = merged.unionByName(part)
+    for g in doomed:
+        # range split point from MANIFEST stats under each group's own
+        # physical spelling — metadata, no extra job
+        pkey = phys[g].get(key_fid)
+        st = stats_all.get(g, {}).get(pkey) if pkey else None
+        if st is not None:
+            key_lo = st[0] if key_lo is None else min(key_lo, st[0])
+            key_hi = st[1] if key_hi is None else max(key_hi, st[1])
+    merged = _tlog_rows(
+        spark, root, base, [os.path.join(root, g) for g in sorted(doomed)]
+    ).drop("file")
     v = base + 1
     key_name = head_binding[key_fid]
     if key_lo is not None and key_lo < key_hi:
@@ -5535,7 +5067,7 @@ def table_log_colmap_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = _tlog_cmc_root(sf_dir)
     _tlog_apply_cmc(spark, sf_dir, root)
     latest = _tlog_latest_version(root)
-    out = _tlog_colmap_snapshot(spark, root, latest)
+    out = _tlog_rows(spark, root, latest)
     return (
         out.groupBy((F.col("o_orderkey") % 4).cast("int").alias("bucket"))
         .agg(
@@ -5566,21 +5098,18 @@ def _tlog_colmap_update(
     spark: SparkSession, root: str, logical_pred: str, set_col: str, bump: float
 ) -> tuple[int, list[str], list[str]]:
     """UPDATE SET under COLUMN MAPPING, copy-on-write: discovery
-    translates the LOGICAL predicate into each cohort's physical
-    spelling (one matched-groups scan per binding signature — the
-    translation is needed ONLY here, against raw cohort bytes); the
-    rewrite then re-spells each matched group to the HEAD names FIRST
-    and applies the logical predicate directly — no second
-    translation, and the rewrite normalizes spelling opportunistically
-    (the compact operator's rule: CoW work already paid for re-binds
-    for free). Unmatched groups are never read again, never rewritten
-    (mtime-pinned). New groups bind the head spelling in ``colphys``;
-    ONE OCC commit publishes the statement. Returns
-    (version, rewritten groups, untouched groups)."""
+    filters the snapshot read by the LOGICAL predicate (every cohort
+    respelled to the head names — one matched-groups job); the
+    rewrite re-reads ONLY the matched groups through the same reader
+    and applies the logical update — the rewrite normalizes spelling
+    opportunistically (the compact operator's rule: CoW work already
+    paid for re-binds for free). Unmatched groups are never read
+    again, never rewritten (mtime-pinned). New groups bind the head
+    spelling in ``colphys``; ONE OCC commit publishes the statement.
+    Returns (version, rewritten groups, untouched groups)."""
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit_rebase,
         _tlog_live_colmap,
-        _tlog_replay_map,
     )
 
     base = _tlog_latest_version(root)
@@ -5588,93 +5117,45 @@ def _tlog_colmap_update(
     if cmap is None:
         raise RuntimeError("logical-name UPDATE requires an active mapping")
     head_binding = {str(f["id"]): f["name"] for f in cmap["fields"]}
-    phys = _tlog_replay_map(root, base, "colphys")
-    dvs = _tlog_live_dvs(root, base)
-    cohorts: dict[tuple, list[str]] = {}
-    for p in _tlog_live_files(root, base):
-        g = os.path.basename(p)
-        cohorts.setdefault(
-            tuple(sorted(_tlog_colmap_binding(phys, g).items())), []
-        ).append(p)
-    # DISCOVERY: matched groups per cohort, translated predicate.
-    # Live deletion vectors are anti-joined HERE too (not only in the
-    # rewrite): a group whose only matching rows are already DV-dead
-    # must classify as unmatched, else the rewrite stages an empty
-    # group and require_all aborts the statement on a legal table
-    # state (ADVICE r16 #1). The key joins under the cohort's OWN
-    # field-1 spelling — a mapped table may have renamed the key.
-    matched: set[str] = set()
-    for key, paths in sorted(cohorts.items()):
-        binding = dict(key)
-        tpred = _tlog_colmap_translate(logical_pred, cmap["fields"], binding)
-        rel = _tlog_relation(spark, paths).withColumn(
-            "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-        )
-        names = {os.path.basename(p) for p in paths}
-        cohort_dvs = {f: s for f, s in dvs.items() if f in names}
-        if cohort_dvs:
-            key_col = binding.get("1", "o_orderkey")
-            dvf = _tlog_dv_frame(spark, root, cohort_dvs)
-            if key_col != "o_orderkey":
-                dvf = dvf.withColumnRenamed("o_orderkey", key_col)
-            rel = rel.join(F.broadcast(dvf), ["file", key_col], "left_anti")
-        matched |= {
-            r["file"]
-            for r in rel.filter(F.expr(tpred))
-            .select("file").distinct().collect()
-        }
+    # DISCOVERY through the DV-aware reader (ADVICE r16 #1): a group
+    # whose only matching rows are already DV-dead must classify as
+    # unmatched, else the rewrite stages an empty group and
+    # require_all aborts the statement on a legal table state.
+    matched = {
+        r["file"]
+        for r in _tlog_rows(spark, root, base)
+        .filter(F.expr(logical_pred))
+        .select("file")
+        .distinct()
+        .collect()
+    }
     untouched = sorted(
         os.path.basename(p)
-        for paths in cohorts.values() for p in paths
+        for p in _tlog_live_files(root, base)
         if os.path.basename(p) not in matched
     )
     if not matched:
         return base, [], untouched
     v = base + 1
-    parts = []
-    new_names: list[str] = []
-    for key, paths in sorted(cohorts.items()):
-        binding = dict(key)
-        hit = [p for p in paths if os.path.basename(p) in matched]
-        if not hit:
-            continue
-        rel = _tlog_relation(spark, hit).withColumn(
-            "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-        )
-        names = {os.path.basename(p) for p in hit}
-        cohort_dvs = {f: s for f, s in dvs.items() if f in names}
-        if cohort_dvs:
-            rel = rel.join(
-                F.broadcast(_tlog_dv_frame(spark, root, cohort_dvs)),
-                ["file", "o_orderkey"],
-                "left_anti",
-            )
-        cols = [
-            F.col(pname).alias(f["name"])
-            if (pname := binding.get(str(f["id"]))) is not None
-            else F.lit(None).alias(f["name"])
-            for f in cmap["fields"]
-        ]
-        respelled = rel.select(F.col("file"), *cols)
-        upd = respelled.withColumn(
+    respelled = _tlog_rows(
+        spark, root, base, [os.path.join(root, g) for g in sorted(matched)]
+    )
+    staged = (
+        respelled.withColumn(
             set_col,
             F.when(
                 F.expr(logical_pred), F.col(set_col) + F.lit(bump)
             ).otherwise(F.col(set_col)),
         )
-        new_names += [f"file_cmu{v}_{g.removeprefix('file_')}" for g in sorted(names)]
-        parts.append(
-            upd.withColumn(
-                "tgt",
-                F.concat(
-                    F.lit(f"file_cmu{v}_"),
-                    F.regexp_replace("file", "^file_", ""),
-                ),
-            ).drop("file")
+        .withColumn(
+            "tgt",
+            F.concat(
+                F.lit(f"file_cmu{v}_"), F.regexp_replace("file", "^file_", "")
+            ),
         )
-    staged = parts[0]
-    for p in parts[1:]:
-        staged = staged.unionByName(p)
+        .drop("file")
+    )
+    new_names = [f"file_cmu{v}_{g.removeprefix('file_')}" for g in matched]
     promoted, stats = _tlog_staged_write_with_stats(
         staged, root, sorted(new_names), require_all=True,
     )
@@ -5729,8 +5210,8 @@ def _tlog_apply_cmu(spark: SparkSession, sf_dir: str, root: str) -> None:
     "table_log_colmap_update",
     # Hash oracle: the mapped table's content (base + post-rename
     # append) with the bump applied to rows matching the logical
-    # predicate, recomputed from orders — translation-for-discovery
-    # and respell-then-update must be invisible to values.
+    # predicate, recomputed from orders — respell-then-update must be
+    # invisible to values.
     oracle=f"""
         WITH t AS (
           SELECT o_orderkey, o_totalprice FROM orders
@@ -5753,12 +5234,12 @@ def table_log_colmap_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9-cmap''''' — UPDATE SET under COLUMN MAPPING (r16 —
     completes the mapped DML story: read S9-cmap, DELETE S9-cmap'',
     OPTIMIZE S9-cmap''', UPDATE here). The logical predicate spells
-    the RENAMED column; discovery translates it per cohort
-    (pre-rename files match on physical ``o_totalprice``) and finds
-    the matched groups in one scan per binding signature; the CoW
-    rewrite then RE-SPELLS each matched group to the head names first
-    and applies the logical predicate directly — the second
-    translation disappears, and the rewrite normalizes spelling
+    the RENAMED column; discovery filters the snapshot read (every
+    cohort respelled to the head names, so pre-rename files match on
+    their physical ``o_totalprice``) and finds the matched groups in
+    one job; the CoW rewrite re-reads the matched groups through the
+    same reader and applies the logical predicate directly — no
+    predicate is ever translated, and the rewrite normalizes spelling
     opportunistically (rewrite work already paid for re-binds for
     free, the compact operator's rule). file_C contains no matched
     rows and survives unrewritten (lifecycle-asserted, live-set
@@ -5766,14 +5247,13 @@ def table_log_colmap_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     their ``colphys`` bindings.
 
     Scale: UPDATE cost stays proportional to MATCHED files exactly as
-    on the unmapped table — the mapping adds one predicate-translation
-    per binding signature (driver-side string work) and zero extra
-    scans; every rewritten byte also pays down rename debt, so a
+    on the unmapped table — the mapping adds one respell projection
+    per binding signature and zero extra scans; every rewritten byte also pays down rename debt, so a
     write-hot mapped table converges to single-spelling without ever
     running a dedicated rewrite."""
     root = _tlog_cmu_root(sf_dir)
     _tlog_apply_cmu(spark, sf_dir, root)
-    out = _tlog_colmap_snapshot(spark, root, _tlog_latest_version(root))
+    out = _tlog_rows(spark, root, _tlog_latest_version(root))
     return (
         out.groupBy((F.col("o_orderkey") % 4).cast("int").alias("bucket"))
         .agg(
@@ -5806,11 +5286,10 @@ def _tlog_colmap_restore(spark: SparkSession, root: str, to_version: int) -> int
     loses its binding from the live replay; re-referencing it without
     re-binding would strand the mapped read on the bootstrap error).
     Bindings come from the immutable cross-version union — the same
-    resolution the mapped change feed uses."""
+    resolution the mapped change feed uses (``_tlog_bindings_ever``)."""
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit_rebase,
         _tlog_live_colmap,
-        _tlog_replay_map,
     )
 
     head = _tlog_latest_version(root)
@@ -5827,9 +5306,7 @@ def _tlog_colmap_restore(spark: SparkSession, root: str, to_version: int) -> int
         if dv_t.get(f) != dv_h.get(f) or st_t.get(f) != st_h.get(f)
     }
     add, remove = add | touch, remove | touch
-    phys: dict[str, dict] = {}
-    for v in range(head + 1):
-        phys.update(_tlog_replay_map(root, v, "colphys"))
+    phys = _tlog_bindings_ever(root, head)
     colphys = {f: _tlog_colmap_binding(phys, f) for f in sorted(add)}
     return _tlog_commit_rebase(
         root,
@@ -5929,7 +5406,7 @@ def table_log_colmap_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     for phase, v in (("rolled_back", 7), ("rolled_forward", 8)):
         cmap = _tlog_live_colmap(root, v)
         price_col = {str(f["id"]): f["name"] for f in cmap["fields"]}["2"]
-        out = _tlog_colmap_snapshot(spark, root, v)
+        out = _tlog_rows(spark, root, v)
         parts.append(
             out.groupBy(
                 (F.col("o_orderkey") % 4).cast("int").alias("bucket")
@@ -5967,9 +5444,9 @@ def _tlog_colmap_merge(
     spark: SparkSession, root: str, updates: DataFrame, inserts: DataFrame
 ) -> tuple[int, list[str], list[str]]:
     """MERGE INTO a COLUMN-MAPPED table, copy-on-write: discovery
-    joins the source's match keys against each cohort under the
-    cohort's OWN key spelling (field 1's physical name — a mapped
-    table may have renamed the key too); matched groups rewrite
+    joins the source's match keys against the snapshot read (every
+    cohort's key respelled to its logical name — a mapped table may
+    have renamed the key too); matched groups rewrite
     re-spelled to the head names with the update applied (broadcast
     left join — merge sources are dimension-sized; at terabyte
     source scale this becomes a bucketed shuffle join), not-matched
@@ -5981,7 +5458,6 @@ def _tlog_colmap_merge(
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit_rebase,
         _tlog_live_colmap,
-        _tlog_replay_map,
     )
 
     base = _tlog_latest_version(root)
@@ -5989,78 +5465,37 @@ def _tlog_colmap_merge(
     if cmap is None:
         raise RuntimeError("mapped MERGE requires an active mapping")
     head_binding = {str(f["id"]): f["name"] for f in cmap["fields"]}
-    phys = _tlog_replay_map(root, base, "colphys")
-    dvs = _tlog_live_dvs(root, base)
-    cohorts: dict[tuple, list[str]] = {}
-    for p in _tlog_live_files(root, base):
-        g = os.path.basename(p)
-        cohorts.setdefault(
-            tuple(sorted(_tlog_colmap_binding(phys, g).items())), []
-        ).append(p)
-    match_keys = updates.select("o_orderkey")
-    # Discovery anti-joins live DVs (ADVICE r16 #1, same as UPDATE):
-    # a group whose only source-matched rows are DV-dead is NOT a
-    # rewrite target — without this the rewrite stages it empty and
-    # require_all aborts the whole MERGE on a legal table state.
-    matched: set[str] = set()
-    for key, paths in sorted(cohorts.items()):
-        key_col = dict(key)["1"]
-        rel = _tlog_relation(spark, paths).select(
-            F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1).alias("file"),
-            F.col(key_col).alias("o_orderkey"),
-        )
-        names = {os.path.basename(p) for p in paths}
-        cohort_dvs = {f: s for f, s in dvs.items() if f in names}
-        if cohort_dvs:
-            rel = rel.join(
-                F.broadcast(_tlog_dv_frame(spark, root, cohort_dvs)),
-                ["file", "o_orderkey"],
-                "left_anti",
-            )
-        matched |= {
-            r["file"]
-            for r in rel.join(F.broadcast(match_keys), "o_orderkey")
-            .select("file").distinct().collect()
-        }
+    # Discovery reads through the DV-aware reader (ADVICE r16 #1,
+    # same as UPDATE): a group whose only source-matched rows are
+    # DV-dead is NOT a rewrite target — without this the rewrite
+    # stages it empty and require_all aborts the whole MERGE on a
+    # legal table state.
+    matched = {
+        r["file"]
+        for r in _tlog_rows(spark, root, base)
+        .select("file", "o_orderkey")
+        .join(F.broadcast(updates.select("o_orderkey")), "o_orderkey")
+        .select("file")
+        .distinct()
+        .collect()
+    }
     untouched = sorted(
         os.path.basename(p)
-        for paths in cohorts.values() for p in paths
+        for p in _tlog_live_files(root, base)
         if os.path.basename(p) not in matched
     )
     v = base + 1
     parts = []
-    new_names: list[str] = []
-    for key, paths in sorted(cohorts.items()):
-        binding = dict(key)
-        hit = [p for p in paths if os.path.basename(p) in matched]
-        if not hit:
-            continue
-        rel = _tlog_relation(spark, hit).withColumn(
-            "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
+    new_names = [f"file_cmm{v}_{g.removeprefix('file_')}" for g in matched]
+    if matched:
+        respelled = _tlog_rows(
+            spark, root, base, [os.path.join(root, g) for g in sorted(matched)]
         )
-        names = {os.path.basename(p) for p in hit}
-        cohort_dvs = {f: s for f, s in dvs.items() if f in names}
-        if cohort_dvs:
-            rel = rel.join(
-                F.broadcast(_tlog_dv_frame(spark, root, cohort_dvs)),
-                ["file", "o_orderkey"],
-                "left_anti",
-            )
-        cols = [
-            F.col(pname).alias(f["name"])
-            if (pname := binding.get(str(f["id"]))) is not None
-            else F.lit(None).alias(f["name"])
-            for f in cmap["fields"]
-        ]
-        respelled = rel.select(F.col("file"), *cols)
         merged = (
             respelled.join(F.broadcast(updates), "o_orderkey", "left")
-            .withColumn(
-                "price_usd", F.coalesce("new_price", "price_usd")
-            )
+            .withColumn("price_usd", F.coalesce("new_price", "price_usd"))
             .drop("new_price")
         )
-        new_names += [f"file_cmm{v}_{g.removeprefix('file_')}" for g in sorted(names)]
         parts.append(
             merged.withColumn(
                 "tgt",
@@ -6183,7 +5618,7 @@ def table_log_colmap_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     respell-then-apply rule shared with UPDATE and OPTIMIZE)."""
     root = _tlog_cmm_root(sf_dir)
     _tlog_apply_cmm(spark, sf_dir, root)
-    out = _tlog_colmap_snapshot(spark, root, _tlog_latest_version(root))
+    out = _tlog_rows(spark, root, _tlog_latest_version(root))
     return (
         out.groupBy((F.col("o_orderkey") % 4).cast("int").alias("bucket"))
         .agg(
@@ -6224,7 +5659,7 @@ def _tlog_colmap_add_constraint(
     )
 
     base = _tlog_latest_version(root)
-    snap = _tlog_colmap_snapshot(spark, root, base)
+    snap = _tlog_rows(spark, root, base)
     bad = snap.filter(~F.coalesce(F.expr(logical_pred), F.lit(True))).count()
     if bad:
         raise RuntimeError(
@@ -6388,7 +5823,7 @@ def table_log_colmap_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     implements."""
     root = _tlog_cmk_root(sf_dir)
     _tlog_apply_cmk(spark, sf_dir, root)
-    out = _tlog_colmap_snapshot(spark, root, _tlog_latest_version(root))
+    out = _tlog_rows(spark, root, _tlog_latest_version(root))
     return (
         out.groupBy((F.col("o_orderkey") % 4).cast("int").alias("bucket"))
         .agg(
@@ -6525,7 +5960,7 @@ def table_log_colmap_dml_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     statement."""
     root = _tlog_cmx_root(sf_dir)
     _tlog_apply_cmx(spark, sf_dir, root)
-    out = _tlog_colmap_snapshot(spark, root, _tlog_latest_version(root))
+    out = _tlog_rows(spark, root, _tlog_latest_version(root))
     return (
         out.groupBy((F.col("o_orderkey") % 4).cast("int").alias("bucket"))
         .agg(
@@ -6539,134 +5974,6 @@ def table_log_colmap_dml_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Change feed under column mapping (S9-cmap-cdf, r16) -------------------
-
-
-def _tlog_colmap_changes_fingerprint(spark: SparkSession, root: str) -> DataFrame:
-    """Per-(version, side) change-feed fingerprints of a MAPPED
-    table: the plain feed (``_tlog_changes_fingerprint``) reads every
-    unit file in ONE relation — impossible once cohorts spell the
-    same logical field differently — so here units group by their
-    file's PHYSICAL BINDING SIGNATURE and each cohort re-spells to
-    the field-id view (key = field 1, price = field 2) before the
-    same two-path change-sized plan: per-file partial aggregates +
-    broadcast membership join for plain units; broadcast
-    include/exclude sidecar joins for DV units. One scan per binding
-    signature per path — bounded by schema-change count, exactly the
-    mapped-read rule applied to the feed. A unit file with no binding
-    raises the descriptive bootstrap error."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_replay_map,
-    )
-
-    latest = _tlog_latest_version(root)
-    units = [
-        (v, side, f, incl, excl)
-        for v in range(1, latest + 1)
-        for side, f, incl, excl in _tlog_change_units(root, v)
-    ]
-    if not units:
-        raise RuntimeError(f"mapped table at {root} has no change units")
-    # bindings are IMMUTABLE once written (a file's physical spelling
-    # is fixed at write time forever), but each version's replay map
-    # carries only files live THERE — a feed spans history, so union
-    # the replays across versions (later wins vacuously; O(versions)
-    # checkpoint-bounded metadata reads — production formats carry
-    # the binding in each file's manifest entry instead)
-    phys: dict[str, dict] = {}
-    for v in range(latest + 1):
-        phys.update(_tlog_replay_map(root, v, "colphys"))
-    by_sig: dict[tuple, list[tuple]] = {}
-    for u in units:
-        sig = tuple(sorted(_tlog_colmap_binding(phys, u[2]).items()))
-        by_sig.setdefault(sig, []).append(u)
-    cents = F.sum(F.round(F.col("_price") * 100).cast("long"))
-    halves: list[DataFrame] = []
-    for sig, sig_units in sorted(by_sig.items()):
-        binding = dict(sig)
-        key_col, price_col = binding["1"], binding["2"]
-        plain = [(v, s, f) for v, s, f, i, e in sig_units if not i and not e]
-        if plain:
-            files = sorted({os.path.join(root, f) for _v, _s, f in plain})
-            partials = (
-                _tlog_relation(spark, files)
-                .select(
-                    F.regexp_extract(
-                        F.input_file_name(), _TLOG_FILE_RE, 1
-                    ).alias("file"),
-                    F.col(price_col).alias("_price"),
-                )
-                .groupBy("file")
-                .agg(F.count(F.lit(1)).alias("pn"), cents.alias("pc"))
-            )
-            mem = spark.createDataFrame(
-                plain, "version int, side string, file string"
-            )
-            halves.append(
-                partials.join(F.broadcast(mem), "file")
-                .groupBy("version", "side")
-                .agg(F.sum("pn").alias("n_rows"), F.sum("pc").alias("sum_cents"))
-            )
-        dv_units = [u for u in sig_units if u[3] or u[4]]
-        if dv_units:
-            files = sorted({os.path.join(root, f) for _v, _s, f, _i, _e in dv_units})
-            rel = _tlog_relation(spark, files).select(
-                F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1).alias("file"),
-                F.col(key_col).alias("o_orderkey"),
-                F.col(price_col).alias("_price"),
-            )
-            uframe = spark.createDataFrame(
-                dv_units,
-                "version int, side string, file string, incl string, excl string",
-            )
-            rows = rel.join(F.broadcast(uframe), "file")
-            sidecars = sorted(
-                {i for _v, _s, _f, i, _e in dv_units if i}
-                | {e for _v, _s, _f, _i, e in dv_units if e}
-            )
-            sc = _tlog_relation(
-                spark, [os.path.join(root, s) for s in sidecars]
-            ).select(
-                F.regexp_extract(
-                    F.input_file_name(), r"/(dv_[A-Za-z0-9_]+)/", 1
-                ).alias("sc_name"),
-                "o_orderkey",
-            )
-            rows = rows.join(
-                F.broadcast(
-                    sc.select(
-                        F.col("sc_name").alias("incl"), "o_orderkey",
-                        F.lit(1).alias("_in"),
-                    )
-                ),
-                ["incl", "o_orderkey"],
-                "left",
-            ).filter(F.col("incl").isNull() | F.col("_in").isNotNull())
-            rows = rows.join(
-                F.broadcast(
-                    sc.select(
-                        F.col("sc_name").alias("excl"), "o_orderkey",
-                        F.lit(1).alias("_ex"),
-                    )
-                ),
-                ["excl", "o_orderkey"],
-                "left",
-            ).filter(F.col("_ex").isNull())
-            halves.append(
-                rows.groupBy("version", "side").agg(
-                    F.count(F.lit(1)).alias("n_rows"), cents.alias("sum_cents")
-                )
-            )
-    merged = halves[0]
-    for h in halves[1:]:
-        merged = merged.unionByName(h)
-    return (
-        merged.groupBy("version", "side")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.sum("sum_cents").alias("sum_cents"),
-        )
-        .select("version", "side", "n_rows", "sum_cents")
-    )
 
 
 @register(
@@ -6719,16 +6026,17 @@ def _tlog_colmap_changes_fingerprint(spark: SparkSession, root: str) -> DataFram
 def table_log_colmap_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9-cmap-cdf — the CHANGE FEED OF A MAPPED TABLE (r16): CDC and
     column mapping compose only if the feed re-spells each unit file
-    through ITS OWN physical binding — the plain feed reads every
-    unit in one relation, which breaks (or worse, silently
-    mis-columns) the moment pre-rename and post-rename files land in
-    the same feed. Here the UPDATE's CoW pair (S9-cmap''''' on this
-    root) removes files spelled ``o_totalprice`` AND ``price_usd``
-    in one commit and adds head-spelled rewrites; units group by
-    binding signature, each cohort re-spells to the field-id view,
-    and the same change-sized two-path plan (partial aggregates +
-    broadcast membership; broadcast sidecar include/exclude) runs
-    per cohort. Metadata-only commits (mapping enable, RENAME, DROP)
+    through ITS OWN physical binding — one relation over every unit
+    file breaks (or worse, silently mis-columns) the moment
+    pre-rename and post-rename files land in the same feed. Here the
+    UPDATE's CoW pair (S9-cmap''''' on this root) removes files
+    spelled ``o_totalprice`` AND ``price_usd`` in one commit and adds
+    head-spelled rewrites; the one feed (``_tlog_changes_fingerprint``)
+    groups unit files by binding signature, re-spells each cohort to
+    the field-id view and unions them under the same change-sized
+    two-path plan as an unmapped table (partial aggregates +
+    broadcast membership; broadcast sidecar include/exclude).
+    Metadata-only commits (mapping enable, RENAME, DROP)
     emit nothing — renames are invisible to row transitions, exactly
     the property consumers need. Every (version, side) is
     hash-checked against the change sets recomputed from orders.
@@ -6739,7 +6047,7 @@ def table_log_colmap_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     learns the source ever renamed anything."""
     root = _tlog_cmu_root(sf_dir)
     _tlog_apply_cmu(spark, sf_dir, root)
-    return _tlog_colmap_changes_fingerprint(spark, root)
+    return _tlog_changes_fingerprint(spark, root)
 
 
 # --- Replication THROUGH the mapped feed (S9-repl'', r16) ------------------
@@ -6804,7 +6112,6 @@ def stream_table_log_replicate_colmap(spark: SparkSession, sf_dir: str) -> DataF
     _tlog_apply_cmu(spark, sf_dir, src)
     dst = _tlog_rcm_root(sf_dir)
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_fingerprint,
         _tlog_replicate,
     )
 
@@ -6812,7 +6119,7 @@ def stream_table_log_replicate_colmap(spark: SparkSession, sf_dir: str) -> DataF
         spark, sf_dir, src, dst,
         extra_stamp=json.dumps(_TLOG_CMU_SPEC, sort_keys=True),
     )
-    return _tlog_latest_fingerprint(spark, dst)
+    return _tlog_fingerprint(spark, dst)
 
 
 # --- RENAME lands mid-stream: column mapping x streaming (S9-cmap') --------
@@ -6932,9 +6239,7 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
         drain()  # same checkpoint, same declared schema, same code
         if _tlog_latest_version(root) <= phase1_latest + 1:
             raise RuntimeError("post-rename drain processed no new files")
-        got = _tlog_colmap_read(
-            spark, root, _tlog_latest_version(root)
-        ).count()
+        got = _tlog_rows(spark, root, _tlog_latest_version(root)).count()
         want = orders.count()
         if got != want:
             raise RuntimeError(
@@ -6981,7 +6286,7 @@ def stream_ingest_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     under ordinary OCC, and every reader and writer stays correct
     through it."""
     root = _tlog_apply_scm(spark, sf_dir)
-    rel = _tlog_colmap_read(spark, root, _tlog_latest_version(root))
+    rel = _tlog_rows(spark, root, _tlog_latest_version(root))
     if "o_totalprice" in rel.columns:
         raise RuntimeError("rename did not reach the read path")
     return (
@@ -7123,9 +6428,7 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
         drain()  # same checkpoint, same declared schema, same code
         if _tlog_latest_version(root) <= phase1_latest + 1:
             raise RuntimeError("post-drop drain processed no new files")
-        got = _tlog_colmap_read(
-            spark, root, _tlog_latest_version(root)
-        ).count()
+        got = _tlog_rows(spark, root, _tlog_latest_version(root)).count()
         want = orders.count()
         if got != want:
             raise RuntimeError(
@@ -7178,7 +6481,7 @@ def stream_ingest_colmap_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     and no reader anywhere can observe the dropped field after the
     commit."""
     root = _tlog_apply_sdp(spark, sf_dir)
-    rel = _tlog_colmap_read(spark, root, _tlog_latest_version(root))
+    rel = _tlog_rows(spark, root, _tlog_latest_version(root))
     if "channel" in rel.columns:
         raise RuntimeError("the drop did not reach the read path")
     return (
@@ -8236,13 +7539,11 @@ def _tlog_bucket_respell(spark: SparkSession, root: str) -> int:
         if binding == head_binding and wspec == spec:
             continue
         stale.extend(os.path.basename(p) for p in paths)
-        sel = [
-            F.col(pname).alias(f["name"])
-            if (pname := binding.get(str(f["id"]))) is not None
-            else F.lit(None).alias(f["name"])
-            for f in cmap["fields"]
-        ]
-        parts.append(_tlog_relation(spark, sorted(paths)).select(*sel))
+        parts.append(
+            _tlog_relation(spark, sorted(paths)).select(
+                *_tlog_respell(cmap["fields"], binding)
+            )
+        )
     if not parts:
         return head
     out = parts[0]
@@ -8264,8 +7565,7 @@ def _tlog_bucket_colmap_delete(
 ) -> int:
     """DELETE WHERE <logical predicate> on a MAPPED bucketed table —
     the triangle of bucketing x column mapping x DML. Discovery
-    translates the predicate into each cohort's physical spelling
-    (``_tlog_colmap_translate``, one scan per binding signature);
+    filters the snapshot read by the logical predicate (one job);
     matched groups' survivors are RE-SPELLED TO THE HEAD NAMES FIRST
     and the logical predicate applied on top (the respell-then-apply
     rule shared with the colmap DML grid), staged under the head
@@ -8290,31 +7590,24 @@ def _tlog_bucket_colmap_delete(
             "mapping for the mapped bucketed DELETE"
         )
     fields = cmap["fields"]
+    hits = {
+        r["file"]
+        for r in _tlog_rows(spark, root, head)
+        .filter(F.expr(logical_pred))
+        .select("file")
+        .distinct()
+        .collect()
+    }
     matched: list[str] = []
     parts: list[DataFrame] = []
     for binding, _wspec, paths in _tlog_bucket_mapped_cohorts(root, head):
-        ppred = _tlog_colmap_translate(logical_pred, fields, binding)
-        rel = _tlog_relation(spark, sorted(paths)).withColumn(
-            "_g", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-        )
-        hit = sorted(
-            r["_g"]
-            for r in rel.filter(F.expr(ppred)).select("_g").distinct().collect()
-        )
+        hit = sorted(os.path.basename(p) for p in paths if os.path.basename(p) in hits)
         if not hit:
             continue
         matched.extend(hit)
-        cohort = _tlog_relation(
+        respelled = _tlog_relation(
             spark, [os.path.join(root, g) for g in hit]
-        )
-        respelled = cohort.select(
-            *[
-                F.col(pname).alias(f["name"])
-                if (pname := binding.get(str(f["id"]))) is not None
-                else F.lit(None).alias(f["name"])
-                for f in fields
-            ]
-        )
+        ).select(*_tlog_respell(fields, binding))
         parts.append(respelled.filter(~F.expr(logical_pred)))
     if not matched:
         return head

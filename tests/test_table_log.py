@@ -2193,6 +2193,22 @@ def test_malformed_dv_binding_fails_instead_of_resurrecting(spark, tlog_dir):
     # a mismatched target (right shape, wrong file) also fails
     with pytest.raises(RuntimeError, match="naming convention"):
         _tlog_dv_frame(spark, tlog_dir, {"file_A": "dv_file_C_v9"})
+    # once COMMITTED, the binding fails the same way on every read
+    # path: the snapshot read and the change feed (whose DV-only unit
+    # includes the sidecar) share the one sidecar relation
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_changes_fingerprint,
+        _tlog_rows,
+    )
+
+    v = _tlog_commit(
+        tlog_dir, add=[], remove=[],
+        base_version=_tlog_latest_version(tlog_dir), dv={"file_C": "dv_oops"},
+    )
+    with pytest.raises(RuntimeError, match="naming convention"):
+        _tlog_rows(spark, tlog_dir, v)
+    with pytest.raises(RuntimeError, match="naming convention"):
+        _tlog_changes_fingerprint(spark, tlog_dir)
 
 
 def test_rollup_consumer_decrements_under_deletes_and_is_idempotent(spark, tmp_path):
@@ -3047,7 +3063,9 @@ def test_column_mapping_rename_drop_are_pure_metadata(spark, tmp_path):
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
         _tlog_apply_cmap,
         _tlog_colmap_prune,
-        _tlog_colmap_read,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_rows,
     )
     from tests.conftest import SF_SMOKE
 
@@ -3067,13 +3085,13 @@ def test_column_mapping_rename_drop_are_pure_metadata(spark, tmp_path):
         c = json.load(open(os.path.join(root, "_log", f"{v:06d}.json")))
         assert c["add"] == [] and c["remove"] == [], f"v{v} moved data"
     # (b) the mapping resolves at the READ version
-    assert _tlog_colmap_read(spark, root, 3).columns == [
+    assert _tlog_rows(spark, root, 3).drop("file").columns == [
         "o_orderkey", "o_totalprice",
     ]
-    assert _tlog_colmap_read(spark, root, 5).columns == [
+    assert _tlog_rows(spark, root, 5).drop("file").columns == [
         "o_orderkey", "price_usd", "channel",
     ]
-    head = _tlog_colmap_read(spark, root, 6)
+    head = _tlog_rows(spark, root, 6).drop("file")
     assert head.columns == ["o_orderkey", "price_usd"]
     # pre-rename rows and post-rename rows serve ONE logical column
     n_base = spark.read.parquet(
@@ -3556,11 +3574,11 @@ def test_rename_mid_stream_serves_both_phases_under_new_name(spark):
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
         _tlog_apply_scm,
-        _tlog_colmap_read,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_live_colmap,
         _tlog_replay_map,
+        _tlog_rows,
     )
     from tests.conftest import SF_SMOKE
 
@@ -3580,10 +3598,10 @@ def test_rename_mid_stream_serves_both_phases_under_new_name(spark):
     assert [f["name"] for f in _tlog_live_colmap(root, rename_v - 1)["fields"]] == [
         "o_orderkey", "o_totalprice",
     ]
-    assert _tlog_colmap_read(spark, root, rename_v - 1).columns == [
+    assert _tlog_rows(spark, root, rename_v - 1).drop("file").columns == [
         "o_orderkey", "o_totalprice",
     ]
-    head = _tlog_colmap_read(spark, root, latest)
+    head = _tlog_rows(spark, root, latest).drop("file")
     assert head.columns == ["o_orderkey", "price_usd"]
     # (a) + (d): every live batch group is bound, and a post-rename
     # group's parquet footer still spells the OLD physical name
@@ -4139,12 +4157,12 @@ def test_colmap_compact_rewrites_only_debt_and_preserves_content(spark, tmp_path
         _tlog_apply_cmc,
         _tlog_colmap_compact,
         _tlog_colmap_prune,
-        _tlog_colmap_snapshot,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_live_colmap,
         _tlog_live_dvs,
         _tlog_replay_map,
+        _tlog_rows,
     )
     from tests.conftest import SF_SMOKE
 
@@ -4154,8 +4172,8 @@ def test_colmap_compact_rewrites_only_debt_and_preserves_content(spark, tmp_path
     assert head == 9  # 0-6 cmap, 7 delete, 8 append G, 9 compact
 
     # (a) pre-compact (v8) content == post-compact (v9) content
-    pre = sorted(map(tuple, _tlog_colmap_snapshot(spark, root, 8).collect()))
-    post = sorted(map(tuple, _tlog_colmap_snapshot(spark, root, 9).collect()))
+    pre = sorted(map(tuple, _tlog_rows(spark, root, 8).drop("file").collect()))
+    post = sorted(map(tuple, _tlog_rows(spark, root, 9).drop("file").collect()))
     assert pre == post and len(pre) > 0
 
     # (b) live set: file_G survives; all pre-compact debt groups gone
@@ -4352,7 +4370,9 @@ def test_drop_mid_stream_unbinds_field_without_disrupting_checkpoint(spark):
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
         _tlog_apply_sdp,
-        _tlog_colmap_read,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_rows,
     )
     from tests.conftest import SF_SMOKE
 
@@ -4389,10 +4409,10 @@ def test_drop_mid_stream_unbinds_field_without_disrupting_checkpoint(spark):
     ids = sorted(b[1] for b in batches)
     assert ids == list(range(len(ids)))
     # (d) the pre-drop snapshot still serves channel for its rows
-    old = _tlog_colmap_read(spark, root, drop_v - 1)
+    old = _tlog_rows(spark, root, drop_v - 1)
     assert "channel" in old.columns
     assert old.filter(F.col("channel").isNull()).count() == 0
-    new = _tlog_colmap_read(spark, root, head)
+    new = _tlog_rows(spark, root, head)
     assert "channel" not in new.columns
 
 
@@ -4500,7 +4520,9 @@ def test_colmap_update_is_cow_minimal_and_respells(spark, tmp_path):
         _TLOG_CMU_BUMP,
         _TLOG_CMU_PRED,
         _tlog_apply_cmu,
-        _tlog_colmap_snapshot,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_rows,
     )
     from tests.conftest import SF_SMOKE
 
@@ -4539,7 +4561,7 @@ def test_colmap_update_is_cow_minimal_and_respells(spark, tmp_path):
         .count()
     )
     got = (
-        _tlog_colmap_snapshot(spark, root, head)
+        _tlog_rows(spark, root, head)
         .filter(F.col("o_orderkey") % 4 == 0)
         .agg(F.sum(F.round(F.col("price_usd") * 100).cast("long")))
         .collect()[0][0]
@@ -4629,7 +4651,9 @@ def test_colmap_feed_dv_path_and_metadata_silence(spark):
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
         _tlog_apply_cmd,
         _tlog_cmd_root,
-        _tlog_colmap_changes_fingerprint,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_changes_fingerprint,
     )
     from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
         load_table,
@@ -4640,7 +4664,7 @@ def test_colmap_feed_dv_path_and_metadata_silence(spark):
     _tlog_apply_cmd(spark, SF_SMOKE, root)
     feed = {
         (r["version"], r["side"]): (r["n_rows"], r["sum_cents"])
-        for r in _tlog_colmap_changes_fingerprint(spark, root).collect()
+        for r in _tlog_changes_fingerprint(spark, root).collect()
     }
     # (b) metadata commits silent; v7 has no add side
     assert not {v for v, _s in feed} & {3, 4, 6}
@@ -4660,6 +4684,94 @@ def test_colmap_feed_dv_path_and_metadata_silence(spark):
         ).collect()[0][0],
     )
     assert feed[(7, "remove")] == want
+    # (c) the snapshot reader and the feed agree at EVERY version: the
+    # snapshot delta v-1 -> v is the feed's add minus its remove at v,
+    # on this mapped root (read through the mapping) and on the
+    # unmapped DML root (DV-only DELETE, then a CoW UPDATE of a
+    # DV-bound file; DV-aware snapshot fingerprints)
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_apply_dml,
+        _tlog_dml_root,
+        _tlog_live_colmap,
+        _tlog_rows,
+        _tlog_snapshot_fingerprints,
+    )
+
+    def assert_agree(root, feed, snapshot):
+        prev = snapshot(0)
+        for v in range(1, _tlog_latest_version(root) + 1):
+            cur = snapshot(v)
+            add = feed.get((v, "add"), (0, 0))
+            rm = feed.get((v, "remove"), (0, 0))
+            assert tuple(c - p for c, p in zip(cur, prev)) == (
+                add[0] - rm[0], add[1] - rm[1]
+            ), f"{root} v{v}: snapshot delta disagrees with the feed"
+            prev = cur
+
+    def mapped_snapshot(v):
+        cmap = _tlog_live_colmap(root, v)
+        price = (
+            {str(f["id"]): f["name"] for f in cmap["fields"]}["2"]
+            if cmap
+            else "o_totalprice"
+        )
+        r = _tlog_rows(spark, root, v).agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.round(F.col(price) * 100).cast("long")).alias("c"),
+        ).collect()[0]
+        return r["n"], r["c"] or 0
+
+    assert_agree(root, feed, mapped_snapshot)
+    dml = _tlog_dml_root(SF_SMOKE)
+    _tlog_apply_dml(spark, SF_SMOKE, dml)
+    dml_feed = {
+        (r["version"], r["side"]): (r["n_rows"], r["sum_cents"])
+        for r in _tlog_changes_fingerprint(spark, dml).collect()
+    }
+    dml_snaps = {
+        r["version"]: (r["n_rows"], r["sum_cents"])
+        for r in _tlog_snapshot_fingerprints(
+            spark, dml, [(v, v) for v in range(_tlog_latest_version(dml) + 1)]
+        ).collect()
+    }
+    assert_agree(dml, dml_feed, dml_snaps.__getitem__)
+
+
+def test_mapped_read_applies_deletion_vectors(spark):
+    """The mapped snapshot read at the head of the mapped-DELETE root
+    (a DV-only commit) returns exactly the rows the DELETE left: the
+    base table plus the post-rename slice, minus the logical delete
+    band — no deleted row resurrects through the column mapping."""
+    import pyspark.sql.functions as F
+
+    from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
+        _TLOG_CMAP_PRED,
+        _TLOG_CMD_PRED,
+        _tlog_apply_cmd,
+        _tlog_cmd_root,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_live_dvs,
+        _tlog_rows,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+        load_table,
+    )
+
+    root = _tlog_cmd_root(SF_SMOKE)
+    _tlog_apply_cmd(spark, SF_SMOKE, root)
+    head = _tlog_latest_version(root)
+    assert _tlog_live_dvs(root, head)  # the head carries sidecars
+    orders = load_table(spark, SF_SMOKE, "orders").select(
+        "o_orderkey", F.col("o_totalprice").alias("price_usd")
+    )
+    want = (
+        orders.unionByName(orders.filter(F.expr(_TLOG_CMAP_PRED)))
+        .filter(~F.expr(_TLOG_CMD_PRED))
+        .collect()
+    )
+    got = _tlog_rows(spark, root, head).drop("file").collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def test_colmap_merge_updates_both_spellings_and_inserts_once(spark, tmp_path):
@@ -4676,7 +4788,9 @@ def test_colmap_merge_updates_both_spellings_and_inserts_once(spark, tmp_path):
         _TLOG_CMM_RES,
         _TLOG_CMM_UPD_BUMP,
         _tlog_apply_cmm,
-        _tlog_colmap_snapshot,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_rows,
     )
     from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
         load_table,
@@ -4694,7 +4808,7 @@ def test_colmap_merge_updates_both_spellings_and_inserts_once(spark, tmp_path):
         b == {"1": "o_orderkey", "2": "price_usd"}
         for b in c["colphys"].values()
     )
-    snap = _tlog_colmap_snapshot(spark, root, head)
+    snap = _tlog_rows(spark, root, head)
     band = load_table(spark, SF_SMOKE, "orders").filter(
         F.col("o_orderkey") % _TLOG_CMM_MOD == _TLOG_CMM_RES
     )
@@ -6098,10 +6212,10 @@ def test_bucket_key_rename_under_column_mapping(spark, tmp_path):
         _tlog_bucketed_commit,
         _tlog_bucketed_serve_mapped,
         _tlog_bucketed_stage,
-        _tlog_colmap_read,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_change_units,
+        _tlog_rows,
     )
     from hadoop_based_distributed_batch_processing_system_spark.plans.inspect import (
         physical_plan,
@@ -6205,7 +6319,7 @@ def test_bucket_key_rename_under_column_mapping(spark, tmp_path):
     assert "Exchange" not in plan
     # cross-machinery agreement with the generic mapped read
     assert _agg(
-        _tlog_colmap_read(spark, root, v3), "order_id"
+        _tlog_rows(spark, root, v3), "order_id"
     ) == _agg(expect, "order_id")
 
     # (e) respell compaction: stale cohort folds, zero-Exchange back
