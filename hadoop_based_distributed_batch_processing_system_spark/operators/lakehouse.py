@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from hadoop_based_distributed_batch_processing_system_spark.built import (
     built_once,
-    read_text,
     wipe_root,
     write_atomic,
 )
@@ -45,6 +44,7 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _TLOG_FILE_RE,
     _TLOG_UPDATE_BUMP,
     _TLOG_UPDATE_PRED,
+    _tlog_apply_changes,
     _tlog_apply_dml,
     _tlog_build,
     _tlog_bindings_ever,
@@ -55,9 +55,13 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_commit_rebase,
     _tlog_commit_ts,
     _tlog_dml_root,
+    _tlog_drain,
+    _tlog_drain_once,
     _tlog_dv_frame,
+    _tlog_feed_groups,
     _tlog_feed_units,
     _tlog_fingerprint,
+    _tlog_land,
     _tlog_latest_version,
     _tlog_latest_version_safe,
     _tlog_live_dvs,
@@ -69,8 +73,10 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_rows,
     _tlog_snapshot_fingerprints,
     _tlog_staged_write_with_stats,
+    _tlog_synthetic_stream,
     _tlog_vacuumed,
     _tlog_version_as_of,
+    _tlog_zone_write,
 )
 
 
@@ -906,7 +912,7 @@ _TLOG_EV_SCHEMA = (
     "event_id long, ts timestamp, event_type string, value double"
 )
 _TLOG_EV_SPEC = {
-    "impl": 1,
+    "impl": 2,
     "files": _TLOG_EV_SRC_FILES,
     "per_trigger": _TLOG_EV_PER_TRIGGER,
 }
@@ -923,13 +929,11 @@ def _tlog_ev_stage_source(spark: SparkSession, sf_dir: str) -> str:
     stamp = json.dumps(_TLOG_EV_SPEC, sort_keys=True)
 
     def build() -> None:
-        data = os.path.join(src, "data")
-        (
-            load_table(spark, sf_dir, "events")
-            .select("event_id", "ts", "event_type", "value")
-            .repartition(_TLOG_EV_SRC_FILES, F.col("event_id"))
-            .write.mode("overwrite")
-            .parquet(data)
+        _tlog_zone_write(
+            load_table(spark, sf_dir, "events").select(
+                "event_id", "ts", "event_type", "value"
+            ),
+            os.path.join(src, "data"), _TLOG_EV_SRC_FILES, "event_id",
         )
 
     built_once(src, "_STAGED", stamp, build)
@@ -941,55 +945,23 @@ def _tlog_apply_ev_ingest(spark: SparkSession, sf_dir: str, root: str) -> None:
     REAL Structured Streaming file source (``maxFilesPerTrigger``
     bounds each micro-batch), one atomic commit per batch keyed by
     batch id (the stream_table_log_ingest exactly-once discipline, on
-    the package's real corpus table). Batch BOUNDARIES are the
-    engine's business — only the drained CONTENT is contracted — but
-    the per-trigger cap guarantees a multi-batch history for the
-    downstream incremental consumer."""
+    the package's real corpus table). The landing zone's names and
+    mtimes fix the batch BOUNDARIES (``_tlog_zone_write``), so two
+    drains of one corpus write the same commits, and the per-trigger
+    cap guarantees a multi-batch history for the downstream
+    incremental consumer."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_batch_committed,
-    )
-
-    spec = json.dumps(_TLOG_EV_SPEC, sort_keys=True)
-
-    spec_file = os.path.join(root, "_INGEST_SPEC")
-
     def build() -> None:
-        src = _tlog_ev_stage_source(spark, sf_dir)
-        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-        if not os.path.exists(spec_file):
-            write_atomic(spec_file, spec)
-
-        def land(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            if _tlog_batch_committed(root, batch_id):
-                return  # re-delivered batch: idempotent no-op
-            name = f"file_evb{batch_id}"
-            _, stats = _tlog_staged_write_with_stats(
-                batch_df.withColumn("tgt", F.lit(name)), root, [name]
-            )
-            try:
-                base = _tlog_latest_version(root)
-            except RuntimeError:
-                base = -1
-            _tlog_commit_rebase(
-                root, add=[name], remove=[], base_version=base,
-                read_set=set(), batch=batch_id, stats=stats or None,
-            )
-
-        query = (
+        _tlog_drain(
             spark.readStream.schema(_TLOG_EV_SCHEMA)
             .option("maxFilesPerTrigger", _TLOG_EV_PER_TRIGGER)
-            .parquet(os.path.join(src, "data"))
-            .writeStream.foreachBatch(land)
-            .option("checkpointLocation", os.path.join(root, ".ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
+            .parquet(os.path.join(_tlog_ev_stage_source(spark, sf_dir), "data")),
+            lambda batch_df, batch_id: _tlog_land(
+                spark, root, batch_df, batch_id, f"file_evb{batch_id}"
+            ),
+            root,
         )
-        query.processAllAvailable()
-        query.stop()
         n_commits = _tlog_latest_version(root) + 1
         if n_commits < 2:
             raise RuntimeError(
@@ -1006,9 +978,9 @@ def _tlog_apply_ev_ingest(spark: SparkSession, sf_dir: str, root: str) -> None:
                 "a batch was lost or double-applied"
             )
 
-    built_once(
-        root, "_INGESTED", spec, build,
-        resume=lambda: read_text(spec_file) == spec,
+    _tlog_drain_once(
+        root, "_INGESTED", json.dumps(_TLOG_EV_SPEC, sort_keys=True),
+        "_INGEST_SPEC", build,
     )
 
 
@@ -1041,9 +1013,10 @@ def stream_events_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the landing write itself — including the event timestamp as
     ISO-string bounds — so the ingested table is time-range and
     key-range prunable from the first commit. Batch boundaries are
-    the engine's business; the contract is the drained content
-    (hash-checked per event type) plus a multi-batch history for the
-    downstream incremental consumer (``table_log_rollup_incremental``).
+    fixed by the landing zone's file order; the contract is the
+    drained content (hash-checked per event type) plus a multi-batch
+    history for the downstream incremental consumer
+    (``table_log_rollup_incremental``).
 
     Scale: the file-stream + commit-per-batch pair is the standard
     object-store ingest topology (S3 landing bucket → Delta/Iceberg
@@ -1214,19 +1187,11 @@ def _tlog_apply_ev_rollup(
         sort_keys=True,
     )
 
-    spec_file = os.path.join(rollup_root, "_ROLLUP_SPEC")
-
     def build() -> None:
-        os.makedirs(os.path.join(rollup_root, "_log"), exist_ok=True)
-        if not os.path.exists(spec_file):
-            write_atomic(spec_file, spec)
         for v in range(ev_latest + 1):
             _tlog_rollup_consume(spark, rollup_root, ev_root, v)
 
-    built_once(
-        rollup_root, "_ROLLED", spec, build,
-        resume=lambda: read_text(spec_file) == spec,
-    )
+    _tlog_drain_once(rollup_root, "_ROLLED", spec, "_ROLLUP_SPEC", build)
 
 
 @register(
@@ -2725,7 +2690,7 @@ def _tlog_sev_dirs(sf_dir: str) -> tuple[str, str]:
     )
 
 
-_TLOG_SEV_SPEC = {"impl": 1, "per_trigger": _TLOG_SEV_PER_TRIGGER}
+_TLOG_SEV_SPEC = {"impl": 2, "per_trigger": _TLOG_SEV_PER_TRIGGER}
 _TLOG_SEV_SCHEMA_V1 = "event_id long, ts timestamp, event_type string, value double"
 _TLOG_SEV_SCHEMA_V2 = _TLOG_SEV_SCHEMA_V1 + ", quality double"
 
@@ -2743,10 +2708,6 @@ def _tlog_apply_sev(spark: SparkSession, sf_dir: str) -> str:
     groups simply record no ``quality`` bounds)."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_batch_committed,
-    )
-
     src, root = _tlog_sev_dirs(sf_dir)
     stamp = json.dumps(_TLOG_SEV_SPEC, sort_keys=True)
 
@@ -2758,53 +2719,29 @@ def _tlog_apply_sev(spark: SparkSession, sf_dir: str) -> str:
             "event_id", "ts", "event_type", "value"
         )
         data = os.path.join(src, "data")
-        (
-            events.filter(F.col("event_id") % 2 == 0)
-            .repartition(4, F.col("event_id"))
-            .write.mode("overwrite")
-            .parquet(data)
+        _tlog_zone_write(
+            events.filter(F.col("event_id") % 2 == 0), data, 4, "event_id"
         )
 
-        def land(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            if _tlog_batch_committed(root, batch_id):
-                return
-            name = f"file_sevb{batch_id}"
-            _, stats = _tlog_staged_write_with_stats(
-                batch_df.withColumn("tgt", F.lit(name)), root, [name]
-            )
-            try:
-                base = _tlog_latest_version(root)
-            except RuntimeError:
-                base = -1
-            _tlog_commit_rebase(
-                root, add=[name], remove=[], base_version=base,
-                read_set=set(), batch=batch_id, stats=stats or None,
-            )
-
         def drain(schema: str) -> None:
-            q = (
+            _tlog_drain(
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", _TLOG_SEV_PER_TRIGGER)
-                .parquet(data)
-                .writeStream.foreachBatch(land)
-                .option("checkpointLocation", os.path.join(root, ".ckpt"))
-                .trigger(processingTime="0 seconds")
-                .start()
+                .parquet(data),
+                lambda batch_df, batch_id: _tlog_land(
+                    spark, root, batch_df, batch_id, f"file_sevb{batch_id}"
+                ),
+                root,
             )
-            q.processAllAvailable()
-            q.stop()
 
         drain(_TLOG_SEV_SCHEMA_V1)
         phase1_latest = _tlog_latest_version(root)
         # the producer evolves: 5-column files land in the SAME zone
-        (
-            events.filter(F.col("event_id") % 2 == 1)
-            .withColumn("quality", F.col("value") * 2)
-            .repartition(4, F.col("event_id"))
-            .write.mode("append")
-            .parquet(data)
+        _tlog_zone_write(
+            events.filter(F.col("event_id") % 2 == 1).withColumn(
+                "quality", F.col("value") * 2
+            ),
+            data, 4, "event_id", append=True,
         )
         # the consumer redeploys with the widened schema, SAME checkpoint
         drain(_TLOG_SEV_SCHEMA_V2)
@@ -3681,77 +3618,20 @@ def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
         )
 
         def apply_swap(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
+            groups, _ = _tlog_feed_groups(batch_df, ["tbl", "side"], "cat_version")
+            if not groups:
                 return
-            pins = {}
-            for tbl in sorted(dst_roots):
-                dst = dst_roots[tbl]
-                base = _tlog_latest_version(dst)
-                rows = batch_df.filter(F.col("tbl") == tbl)
-                adds = rows.filter(F.col("side") == "add").select(
-                    "o_orderkey", "o_totalprice"
-                )
-                removes = rows.filter(F.col("side") == "remove").select(
-                    "o_orderkey"
-                )
-                add_files: list[str] = []
-                remove_files: list[str] = []
-                parts: list[DataFrame] = []
-                if not removes.isEmpty():
-                    affected = sorted(
-                        r["file"]
-                        for r in _tlog_relation(
-                            spark, _tlog_live_files(dst, base)
-                        )
-                        .withColumn(
-                            "file",
-                            F.regexp_extract(
-                                F.input_file_name(), _TLOG_FILE_RE, 1
-                            ),
-                        )
-                        .join(F.broadcast(removes), "o_orderkey")
-                        .select("file").distinct().collect()
-                    )
-                    if affected:
-                        parts.append(
-                            _tlog_relation(
-                                spark,
-                                [os.path.join(dst, f) for f in affected],
-                            )
-                            .join(F.broadcast(removes), "o_orderkey", "left_anti")
-                            .select(
-                                F.concat(
-                                    F.regexp_extract(
-                                        F.input_file_name(), _TLOG_FILE_RE, 1
-                                    ),
-                                    F.lit(f"_s{batch_id}"),
-                                ).alias("tgt"),
-                                "o_orderkey", "o_totalprice",
-                            )
-                        )
-                        add_files += [f"{f}_s{batch_id}" for f in affected]
-                        remove_files += affected
-                if not adds.isEmpty():
-                    parts.append(
-                        adds.select(
-                            F.lit(f"file_swap_{batch_id}").alias("tgt"),
-                            "o_orderkey", "o_totalprice",
-                        )
-                    )
-                    add_files.append(f"file_swap_{batch_id}")
-                v = base
-                if parts:
-                    union = parts[0]
-                    for p in parts[1:]:
-                        union = union.unionByName(p)
-                    add_files, stats = _tlog_staged_write_with_stats(
-                        union, dst, add_files, require_all=False
-                    )
-                    v = _tlog_commit(
-                        dst, add=add_files, remove=remove_files,
-                        base_version=base, stats=stats or None,
-                    )
-                pins[tbl] = {"root": dst, "version": v}
+            pins = {
+                tbl: {
+                    "root": dst,
+                    "version": _tlog_apply_changes(
+                        spark, dst, batch_df.filter(F.col("tbl") == tbl),
+                        {side for (t, side) in groups if t == tbl},
+                        f"_s{batch_id}", f"file_swap_{batch_id}",
+                    ),
+                }
+                for tbl, dst in sorted(dst_roots.items())
+            }
             # ONE downstream swap per upstream swap: visibility
             # atomicity replicates with the data
             _tlog_catalog_commit(
@@ -3759,21 +3639,16 @@ def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
             )
 
         register_catalog_feed_source(spark)
-        raw = (
-            spark.readStream.format("catalog_feed")
-            .option("catalog", src_cat)
-            .load()
-        )
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
-            q = (
-                raw.writeStream.foreachBatch(apply_swap)
-                .trigger(processingTime="0 seconds")
-                .start()
+            _tlog_drain(
+                spark.readStream.format("catalog_feed")
+                .option("catalog", src_cat)
+                .load(),
+                apply_swap,
+                dst_cat,
             )
-            q.processAllAvailable()
-            q.stop()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
         if _tlog_catalog_latest(dst_cat) != _tlog_catalog_latest(src_cat):
@@ -6135,7 +6010,7 @@ def _tlog_scm_dirs(sf_dir: str) -> tuple[str, str]:
     )
 
 
-_TLOG_SCM_SPEC = {"impl": 1, "per_trigger": _TLOG_SCM_PER_TRIGGER}
+_TLOG_SCM_SPEC = {"impl": 2, "per_trigger": _TLOG_SCM_PER_TRIGGER}
 _TLOG_SCM_SCHEMA = "o_orderkey long, o_totalprice double"
 
 
@@ -6153,7 +6028,6 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_batch_committed,
         _tlog_commit,
     )
 
@@ -6168,11 +6042,8 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
             "o_orderkey", "o_totalprice"
         )
         data = os.path.join(src, "data")
-        (
-            orders.filter(F.col("o_orderkey") % 2 == 0)
-            .repartition(4, F.col("o_orderkey"))
-            .write.mode("overwrite")
-            .parquet(data)
+        _tlog_zone_write(
+            orders.filter(F.col("o_orderkey") % 2 == 0), data, 4, "o_orderkey"
         )
         # v0: the table is BORN MAPPED — fields get ids before any data
         _tlog_commit(
@@ -6185,37 +6056,20 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
             },
         )
 
-        def land(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            if _tlog_batch_committed(root, batch_id):
-                return
-            name = f"file_scmb{batch_id}"
-            _, stats = _tlog_staged_write_with_stats(
-                batch_df.withColumn("tgt", F.lit(name)), root, [name]
-            )
+        def drain() -> None:
             # the WRITER records its physical binding per field id —
             # whatever the logical names say at commit time, the bytes
             # spell o_totalprice (the producer never heard of renames)
-            _tlog_commit(
-                root, add=[name], remove=[],
-                base_version=_tlog_latest_version(root), batch=batch_id,
-                stats=stats or None,
-                colphys={name: {"1": "o_orderkey", "2": "o_totalprice"}},
-            )
-
-        def drain() -> None:
-            q = (
+            _tlog_drain(
                 spark.readStream.schema(_TLOG_SCM_SCHEMA)
                 .option("maxFilesPerTrigger", _TLOG_SCM_PER_TRIGGER)
-                .parquet(data)
-                .writeStream.foreachBatch(land)
-                .option("checkpointLocation", os.path.join(root, ".ckpt"))
-                .trigger(processingTime="0 seconds")
-                .start()
+                .parquet(data),
+                lambda batch_df, batch_id: _tlog_land(
+                    spark, root, batch_df, batch_id, f"file_scmb{batch_id}",
+                    colphys={"1": "o_orderkey", "2": "o_totalprice"},
+                ),
+                root,
             )
-            q.processAllAvailable()
-            q.stop()
 
         drain()
         phase1_latest = _tlog_latest_version(root)
@@ -6230,11 +6084,9 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
                 ]
             },
         )
-        (
-            orders.filter(F.col("o_orderkey") % 2 == 1)
-            .repartition(4, F.col("o_orderkey"))
-            .write.mode("append")
-            .parquet(data)
+        _tlog_zone_write(
+            orders.filter(F.col("o_orderkey") % 2 == 1), data, 4, "o_orderkey",
+            append=True,
         )
         drain()  # same checkpoint, same declared schema, same code
         if _tlog_latest_version(root) <= phase1_latest + 1:
@@ -6314,7 +6166,7 @@ def _tlog_sdp_dirs(sf_dir: str) -> tuple[str, str]:
     )
 
 
-_TLOG_SDP_SPEC = {"impl": 1, "per_trigger": _TLOG_SDP_PER_TRIGGER}
+_TLOG_SDP_SPEC = {"impl": 2, "per_trigger": _TLOG_SDP_PER_TRIGGER}
 _TLOG_SDP_SCHEMA = "o_orderkey long, o_totalprice double, channel int"
 
 
@@ -6332,7 +6184,6 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_batch_committed,
         _tlog_commit,
         _tlog_live_colmap,
     )
@@ -6350,11 +6201,8 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
             (F.col("o_orderkey") % 3).cast("int").alias("channel"),
         )
         data = os.path.join(src, "data")
-        (
-            orders.filter(F.col("o_orderkey") % 2 == 0)
-            .repartition(4, F.col("o_orderkey"))
-            .write.mode("overwrite")
-            .parquet(data)
+        _tlog_zone_write(
+            orders.filter(F.col("o_orderkey") % 2 == 0), data, 4, "o_orderkey"
         )
         # v0: born mapped, three fields
         _tlog_commit(
@@ -6372,39 +6220,24 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
         phys_by_id = {"1": "o_orderkey", "2": "o_totalprice", "3": "channel"}
 
         def land(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            if _tlog_batch_committed(root, batch_id):
-                return
-            base = _tlog_latest_version(root)
             # resolve the LIVE mapping at commit time: only live field
             # ids get a binding — a dropped field's bytes still land
             # (the producer never heard of the drop) but are
             # unreachable from birth (VERDICT r15 #5)
-            live = _tlog_live_colmap(root, base)["fields"]
-            binding = {str(f["id"]): phys_by_id[str(f["id"])] for f in live}
-            name = f"file_sdpb{batch_id}"
-            _, stats = _tlog_staged_write_with_stats(
-                batch_df.withColumn("tgt", F.lit(name)), root, [name]
-            )
-            _tlog_commit(
-                root, add=[name], remove=[], base_version=base,
-                batch=batch_id, stats=stats or None,
-                colphys={name: binding},
+            live = _tlog_live_colmap(root, _tlog_latest_version(root))["fields"]
+            _tlog_land(
+                spark, root, batch_df, batch_id, f"file_sdpb{batch_id}",
+                colphys={str(f["id"]): phys_by_id[str(f["id"])] for f in live},
             )
 
         def drain() -> None:
-            q = (
+            _tlog_drain(
                 spark.readStream.schema(_TLOG_SDP_SCHEMA)
                 .option("maxFilesPerTrigger", _TLOG_SDP_PER_TRIGGER)
-                .parquet(data)
-                .writeStream.foreachBatch(land)
-                .option("checkpointLocation", os.path.join(root, ".ckpt"))
-                .trigger(processingTime="0 seconds")
-                .start()
+                .parquet(data),
+                land,
+                root,
             )
-            q.processAllAvailable()
-            q.stop()
 
         drain()
         phase1_latest = _tlog_latest_version(root)
@@ -6419,11 +6252,9 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
                 ]
             },
         )
-        (
-            orders.filter(F.col("o_orderkey") % 2 == 1)
-            .repartition(4, F.col("o_orderkey"))
-            .write.mode("append")
-            .parquet(data)
+        _tlog_zone_write(
+            orders.filter(F.col("o_orderkey") % 2 == 1), data, 4, "o_orderkey",
+            append=True,
         )
         drain()  # same checkpoint, same declared schema, same code
         if _tlog_latest_version(root) <= phase1_latest + 1:
@@ -7038,23 +6869,12 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_batch_committed,
         _tlog_commit,
-        _tlog_commit_rebase,
-        _tlog_latest_version,
-    )
-    from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
-        register_synthetic_stream_source,
     )
 
     stamp = json.dumps(_TLOG_BKTIN_SPEC, sort_keys=True)
 
-    spec_file = os.path.join(root, "_BKTIN_SPEC")
-
     def build() -> None:
-        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-        if not os.path.exists(spec_file):
-            write_atomic(spec_file, stamp)
         if _tlog_latest_version_safe(root) < 0:
             # v0: the spec entry alone — metadata bootstrap
             _tlog_commit(
@@ -7064,43 +6884,21 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
             )
 
         def land(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            if _tlog_batch_committed(root, batch_id):
-                return  # re-delivered batch: idempotent no-op
-            if batch_id == _TLOG_BKTIN_EVOLVE_AT:
-                if _tlog_bucket_spec(root, _tlog_latest_version(root)) == (
-                    "event_id", 8,
-                ):
-                    _tlog_bucket_evolve(root, "event_id", 16)
-            base = _tlog_latest_version(root)
-            live = _tlog_bucket_spec(root, base)
-            name = f"file_bktin_b{batch_id}"
-            _tlog_bucketed_stage(
-                spark, batch_df.select("event_id", "bucket", "value"),
-                root, name, live,
-            )
-            _tlog_bucketed_commit_validate(root, [name], live, live)
-            _tlog_commit_rebase(
-                root, add=[name], remove=[], base_version=base,
-                read_set=set(), batch=batch_id,
+            # idempotent: a re-delivered batch finds the spec evolved
+            if batch_id == _TLOG_BKTIN_EVOLVE_AT and _tlog_bucket_spec(
+                root, _tlog_latest_version(root)
+            ) == ("event_id", 8):
+                _tlog_bucket_evolve(root, "event_id", 16)
+            _tlog_land(
+                spark, root, batch_df.select("event_id", "bucket", "value"),
+                batch_id, f"file_bktin_b{batch_id}", bucketed=True,
             )
 
-        register_synthetic_stream_source(spark)
-        raw = (
-            spark.readStream.format("synthetic_events_stream")
-            .option("rows", str(_TLOG_BKTIN_ROWS))
-            .option("batch", str(_TLOG_BKTIN_BATCH))
-            .load()
+        _tlog_drain(
+            _tlog_synthetic_stream(spark, _TLOG_BKTIN_ROWS, _TLOG_BKTIN_BATCH),
+            land,
+            root,
         )
-        query = (
-            raw.writeStream.foreachBatch(land)
-            .option("checkpointLocation", os.path.join(root, ".ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
         n_commits = _tlog_latest_version(root) + 1
         want = 1 + _TLOG_BKTIN_ROWS // _TLOG_BKTIN_BATCH + 1  # boot+batches+evolve
         if n_commits != want:
@@ -7110,10 +6908,7 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
                 "mid-stream evolution did not land"
             )
 
-    built_once(
-        root, "_BKTIN", stamp, build,
-        resume=lambda: read_text(spec_file) == stamp,
-    )
+    _tlog_drain_once(root, "_BKTIN", stamp, "_BKTIN_SPEC", build)
 
 
 # --- DML on a BUCKETED table (r19 queue candidate (a), machinery -----------
@@ -7663,24 +7458,13 @@ def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
     import json
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_batch_committed,
         _tlog_commit,
-        _tlog_commit_rebase,
-        _tlog_latest_version,
         _tlog_live_colmap,
-    )
-    from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
-        register_synthetic_stream_source,
     )
 
     stamp = json.dumps(_TLOG_BKCMS_SPEC, sort_keys=True)
 
-    spec_file = os.path.join(root, "_BKCMS_SPEC")
-
     def build() -> None:
-        os.makedirs(os.path.join(root, "_log"), exist_ok=True)
-        if not os.path.exists(spec_file):
-            write_atomic(spec_file, stamp)
         if _tlog_latest_version_safe(root) < 0:
             # v0: bucket spec + column mapping — metadata bootstrap
             _tlog_commit(
@@ -7697,54 +7481,31 @@ def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
             )
 
         def land(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            if _tlog_batch_committed(root, batch_id):
-                return  # re-delivered batch: idempotent no-op
-            if batch_id == _TLOG_BKCMS_RENAME_AT:
-                if _tlog_bucket_spec(root, _tlog_latest_version(root)) == (
-                    "event_id", 8,
-                ):
-                    _tlog_bucket_key_rename(root, "evt_id")
-            base = _tlog_latest_version(root)
-            live = _tlog_bucket_spec(root, base)
-            cmap = _tlog_live_colmap(root, base)
+            # idempotent: a re-delivered batch finds the key renamed
+            if batch_id == _TLOG_BKCMS_RENAME_AT and _tlog_bucket_spec(
+                root, _tlog_latest_version(root)
+            ) == ("event_id", 8):
+                _tlog_bucket_key_rename(root, "evt_id")
             # the writer speaks the LIVE logical schema: source
             # columns map positionally onto field ids 1/2/3
-            sel = [
-                F.col(src).alias(f["name"])
-                for src, f in zip(
-                    ("event_id", "bucket", "value"), cmap["fields"]
-                )
-            ]
-            name = f"file_bkcms_b{batch_id}"
-            _tlog_bucketed_stage(
-                spark, batch_df.select(*sel), root, name, live,
-            )
-            _tlog_bucketed_commit_validate(root, [name], live, live)
-            _tlog_commit_rebase(
-                root, add=[name], remove=[], base_version=base,
-                read_set=set(), batch=batch_id,
-                colphys={
-                    name: {str(f["id"]): f["name"] for f in cmap["fields"]}
-                },
+            fields = _tlog_live_colmap(root, _tlog_latest_version(root))["fields"]
+            _tlog_land(
+                spark, root,
+                batch_df.select(
+                    *(
+                        F.col(src).alias(f["name"])
+                        for src, f in zip(("event_id", "bucket", "value"), fields)
+                    )
+                ),
+                batch_id, f"file_bkcms_b{batch_id}", bucketed=True,
+                colphys={str(f["id"]): f["name"] for f in fields},
             )
 
-        register_synthetic_stream_source(spark)
-        raw = (
-            spark.readStream.format("synthetic_events_stream")
-            .option("rows", str(_TLOG_BKCMS_ROWS))
-            .option("batch", str(_TLOG_BKCMS_BATCH))
-            .load()
+        _tlog_drain(
+            _tlog_synthetic_stream(spark, _TLOG_BKCMS_ROWS, _TLOG_BKCMS_BATCH),
+            land,
+            root,
         )
-        query = (
-            raw.writeStream.foreachBatch(land)
-            .option("checkpointLocation", os.path.join(root, ".ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
-        query.processAllAvailable()
-        query.stop()
         n_commits = _tlog_latest_version(root) + 1
         want = 1 + _TLOG_BKCMS_ROWS // _TLOG_BKCMS_BATCH + 1  # boot+batches+rename
         if n_commits != want:
@@ -7754,10 +7515,7 @@ def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
                 "the mid-stream rename did not land"
             )
 
-    built_once(
-        root, "_BKCMS", stamp, build,
-        resume=lambda: read_text(spec_file) == stamp,
-    )
+    _tlog_drain_once(root, "_BKCMS", stamp, "_BKCMS_SPEC", build)
 
 
 interpolate_docstrings(globals())

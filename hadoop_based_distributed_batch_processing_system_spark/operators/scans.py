@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -2602,91 +2603,25 @@ def _tlog_replicate(
         except TableLogConflictError:
             pass  # a concurrent replicator bootstrapped identically
 
-        def apply_commit(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            version = batch_df.agg(F.max("version")).collect()[0][0]
-            adds = batch_df.filter(F.col("side") == "add").select(
-                "o_orderkey", "o_totalprice"
-            )
-            removes = batch_df.filter(F.col("side") == "remove").select("o_orderkey")
-            base = _tlog_latest_version(dst_root)
-            add_files: list[str] = []
-            remove_files: list[str] = []
-            # ONE staged write per batch however many replica files
-            # the remove set touches (VERDICT r11 item 1): rewritten
-            # survivors of every affected file + the appended adds
-            # all land through a single partitioned-by-target job.
-            parts: list[DataFrame] = []
-            if not removes.isEmpty():
-                affected = sorted(
-                    r["file"]
-                    for r in _tlog_relation(spark, _tlog_live_files(dst_root, base))
-                    .withColumn(
-                        "file",
-                        F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1),
-                    )
-                    .join(F.broadcast(removes), "o_orderkey")
-                    .select("file")
-                    .distinct()
-                    .collect()
+        def apply_commit(batch_df: DataFrame, _batch_id: int) -> None:
+            groups, version = _tlog_feed_groups(batch_df, ["side"], "version")
+            if groups:  # a metadata-only source commit delivers nothing
+                _tlog_apply_changes(
+                    spark, dst_root, batch_df, {side for (side,) in groups},
+                    f"_r{version}", f"file_add_{version}",
                 )
-                if affected:
-                    parts.append(
-                        _tlog_relation(
-                            spark, [os.path.join(dst_root, f) for f in affected]
-                        )
-                        .join(F.broadcast(removes), "o_orderkey", "left_anti")
-                        .select(
-                            F.concat(
-                                F.regexp_extract(
-                                    F.input_file_name(), _TLOG_FILE_RE, 1
-                                ),
-                                F.lit(f"_r{version}"),
-                            ).alias("tgt"),
-                            "o_orderkey",
-                            "o_totalprice",
-                        )
-                    )
-                    add_files.extend(f"{f}_r{version}" for f in affected)
-                    remove_files.extend(affected)
-            if not adds.isEmpty():
-                parts.append(
-                    adds.select(
-                        F.lit(f"file_add_{version}").alias("tgt"),
-                        "o_orderkey",
-                        "o_totalprice",
-                    )
-                )
-                add_files.append(f"file_add_{version}")
-            stats: dict[str, dict] = {}
-            if parts:
-                union = parts[0]
-                for p in parts[1:]:
-                    union = union.unionByName(p)
-                # replica files record per-column stats in the same
-                # write (r14): the replica stays prunable like the
-                # source
-                add_files, stats = _tlog_staged_write_with_stats(
-                    union, dst_root, add_files, require_all=False
-                )
-            _tlog_commit(
-                dst_root, add=add_files, remove=remove_files,
-                base_version=base, stats=stats or None,
-            )
 
         register_table_log_feed_source(spark)
-        raw = spark.readStream.format("table_log_feed").option("root", src_root).load()
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
-            query = (
-                raw.writeStream.foreachBatch(apply_commit)
-                .trigger(processingTime="0 seconds")
-                .start()
+            _tlog_drain(
+                spark.readStream.format("table_log_feed")
+                .option("root", src_root)
+                .load(),
+                apply_commit,
+                dst_root,
             )
-            query.processAllAvailable()
-            query.stop()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
         src_latest = _tlog_latest_version(src_root)
@@ -2789,84 +2724,234 @@ def _tlog_batch_committed(root: str, batch_id: int) -> bool:
     return batch_id in _tlog_snapshot(root, latest)["batches"]
 
 
-def _tlog_apply_ingest(spark: SparkSession, root: str) -> None:
-    """Drain the bounded synthetic event stream into a table-log
-    table, ONE atomic commit per micro-batch, keyed by batch id
-    (flock-serialized). Three-layer exactly-once:
+def _tlog_drain_once(
+    root: str, stamp_name: str, spec: str, spec_name: str, build: Callable[[], None]
+) -> None:
+    """``built_once`` for a drain that RESUMES: ``spec_name`` is
+    written before the first commit, so a root with no completion
+    stamp but a matching spec file is a crashed drain, resumed in
+    place (the batch-id dedup makes that safe); any other nonempty
+    root is wiped and re-drained."""
+    spec_file = os.path.join(root, spec_name)
 
-    1. the source replays any offset range deterministically
-       (checkpoint-replay exactly-once, the Kafka contract);
-    2. each batch's file group publishes via the put-if-absent
-       commit — readers see a whole batch or none of it;
-    3. the commit records its BATCH ID, so a re-delivered batch
-       (rerun with a lost checkpoint, foreachBatch retry after a
-       commit that DID land) writes nothing — the idempotent-sink
-       rule every production streaming-into-lakehouse pipeline
-       implements (Delta txn appId/version).
-
-    Recovery discipline: ``_INGEST_SPEC`` is written BEFORE the first
-    commit; a root carrying a different spec (or commits with no spec
-    at all) is wiped and re-ingested, while a matching spec with a
-    missing completion stamp is a CRASHED DRAIN — resumed in place,
-    which the batch-id dedup makes safe (ADVICE r11: the replica's
-    existence-only stamp had no such path and double-applied
-    forever)."""
-    import json
-
-    spec = _tlog_ingest_spec()
-
-    spec_file = os.path.join(root, "_INGEST_SPEC")
-
-    def build() -> None:
+    def run() -> None:
         os.makedirs(os.path.join(root, "_log"), exist_ok=True)
         if not os.path.exists(spec_file):
             write_atomic(spec_file, spec)
+        build()
 
-        from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
-            register_synthetic_stream_source,
-        )
+    built_once(
+        root, stamp_name, spec, run,
+        resume=lambda: read_text(spec_file) == spec,
+    )
 
-        def land(batch_df: DataFrame, batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            if _tlog_batch_committed(root, batch_id):
-                return  # re-delivered batch: idempotent no-op
-            name = f"file_ingest_b{batch_id}"
-            # batch files carry per-column stats from the landing
-            # write itself (r14): a streaming-ingested table is
-            # key-range prunable without waiting for a compaction
-            _, stats = _tlog_staged_write_with_stats(
-                batch_df.select(
-                    F.lit(name).alias("tgt"), "event_id", "bucket", "value"
-                ),
-                root,
-                [name],
-            )
-            try:
-                base = _tlog_latest_version(root)
-            except RuntimeError:
-                base = -1
-            # a batch landing is a blind append: empty read set
-            _tlog_commit_rebase(
-                root, add=[name], remove=[], base_version=base,
-                read_set=set(), batch=batch_id, stats=stats or None,
-            )
 
-        register_synthetic_stream_source(spark)
-        raw = (
-            spark.readStream.format("synthetic_events_stream")
-            .option("rows", str(_TLOG_INGEST_ROWS))
-            .option("batch", str(_TLOG_INGEST_BATCH))
-            .load()
-        )
-        query = (
-            raw.writeStream.foreachBatch(land)
-            .option("checkpointLocation", os.path.join(root, ".ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
-        )
+def _tlog_drain(stream: DataFrame, fn, root: str) -> None:
+    """THE drain loop of every table-log streaming write: ``fn`` per
+    micro-batch (``foreachBatch``), the stream checkpoint at
+    ``root/.ckpt`` (wiped with the root on rebuild), run until the
+    bounded source is exhausted."""
+    query = (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", os.path.join(root, ".ckpt"))
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    try:
         query.processAllAvailable()
+    finally:
         query.stop()
+
+
+def _tlog_land(
+    spark: SparkSession, root: str, batch_df: DataFrame, batch_id: int,
+    name: str, bucketed: bool = False, colphys: dict[str, str] | None = None,
+) -> None:
+    """THE landing of an append drain: micro-batch ``batch_id`` becomes
+    file group ``name`` and ONE atomic commit keyed by the batch id.
+    The source replays offsets deterministically, the put-if-absent
+    commit publishes the whole group or none of it, and the batch id
+    is checked FIRST, from metadata alone: a re-delivered batch runs
+    no Spark job and writes nothing (Delta's txn appId/version rule).
+    The group is staged with per-column stats from the write itself,
+    or on a ``bucketed`` table hash-routed under the live spec and
+    checked at the bucket gate; a batch that stages nothing commits
+    nothing. ``colphys`` is a mapped group's field id -> physical name
+    binding. The commit is a blind append, rebased over any concurrent
+    commit."""
+    if _tlog_batch_committed(root, batch_id):
+        return  # re-delivered batch: idempotent no-op
+    base = max(_tlog_latest_version_safe(root), -1)
+    stats: dict[str, dict] = {}
+    if bucketed:
+        import glob
+        import shutil
+
+        from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
+            _tlog_bucket_spec,
+            _tlog_bucketed_commit_validate,
+            _tlog_bucketed_stage,
+        )
+
+        live = _tlog_bucket_spec(root, base)
+        _tlog_bucketed_stage(spark, batch_df, root, name, live)
+        if not glob.glob(os.path.join(root, name, "*.parquet")):
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+            return
+        _tlog_bucketed_commit_validate(root, [name], live, live)
+    else:
+        promoted, stats = _tlog_staged_write_with_stats(
+            batch_df.withColumn("tgt", F.lit(name)), root, [name],
+            require_all=False,
+        )
+        if not promoted:
+            return
+    _tlog_commit_rebase(
+        root, add=[name], remove=[], base_version=base, read_set=set(),
+        batch=batch_id, stats=stats or None,
+        colphys={name: colphys} if colphys else None,
+    )
+
+
+def _tlog_feed_groups(
+    batch_df: DataFrame, keys: list[str], version: str
+) -> tuple[set[tuple], int | None]:
+    """What a change-feed drain must know before it applies a
+    micro-batch, in ONE job: the ``keys`` groups that hold rows and the
+    largest ``version``. A metadata-only source commit delivers an
+    empty batch: ``(set(), None)``."""
+    rows = batch_df.groupBy(*keys).agg(F.max(version).alias("v")).collect()
+    return (
+        {tuple(r[k] for k in keys) for r in rows},
+        max((r["v"] for r in rows), default=None),
+    )
+
+
+def _tlog_apply_changes(
+    spark: SparkSession, dst: str, changes: DataFrame, sides: set[str],
+    suffix: str, add_name: str,
+) -> int:
+    """Apply one change-feed micro-batch (``side``, ``o_orderkey``,
+    ``o_totalprice`` rows, of the ``sides`` given) to a replica as ONE
+    commit: adds land as group ``add_name``; each replica file holding
+    a removed key is rewritten as ``<file><suffix>`` by a broadcast
+    anti-join. All groups land in ONE staged write with per-column
+    stats. Returns the committed version, or the base when the batch
+    changes nothing."""
+    import functools
+
+    base = _tlog_latest_version(dst)
+    add_files: list[str] = []
+    remove_files: list[str] = []
+    parts: list[DataFrame] = []
+    if "remove" in sides:
+        removes = changes.filter(F.col("side") == "remove").select("o_orderkey")
+        affected = sorted(
+            r["file"]
+            for r in _tlog_rows(spark, dst, base)
+            .join(F.broadcast(removes), "o_orderkey")
+            .select("file")
+            .distinct()
+            .collect()
+        )
+        if affected:
+            parts.append(
+                _tlog_rows(spark, dst, base, [os.path.join(dst, f) for f in affected])
+                .join(F.broadcast(removes), "o_orderkey", "left_anti")
+                .select(
+                    F.concat("file", F.lit(suffix)).alias("tgt"),
+                    "o_orderkey",
+                    "o_totalprice",
+                )
+            )
+            add_files += [f"{f}{suffix}" for f in affected]
+            remove_files += affected
+    if "add" in sides:
+        parts.append(
+            changes.filter(F.col("side") == "add").select(
+                F.lit(add_name).alias("tgt"), "o_orderkey", "o_totalprice"
+            )
+        )
+        add_files.append(add_name)
+    if not parts:
+        return base
+    add_files, stats = _tlog_staged_write_with_stats(
+        functools.reduce(DataFrame.unionByName, parts), dst, add_files,
+        require_all=False,
+    )
+    return _tlog_commit(
+        dst, add=add_files, remove=remove_files, base_version=base,
+        stats=stats or None,
+    )
+
+
+# A file-stream landing zone's first file carries this mtime (epoch
+# seconds); each later file one second more.
+_TLOG_ZONE_EPOCH = 1_700_000_000
+
+
+def _tlog_zone_write(
+    df: DataFrame, data: str, n_files: int, key: str, append: bool = False
+) -> None:
+    """Write ``df`` into the landing zone ``data`` as ``n_files`` files
+    hash-partitioned on ``key``. The file source cuts a micro-batch
+    every ``maxFilesPerTrigger`` files in mtime order, and Spark
+    stamps part files in task-finish order; so each new file takes
+    the zone's next sequential name (an append continues the
+    numbering) and an mtime one second past its predecessor's, and
+    which files form a batch is a function of the data."""
+    import re
+
+    df.repartition(n_files, F.col(key)).write.mode(
+        "append" if append else "overwrite"
+    ).parquet(data)
+    stable = re.compile(r"part-\d{5}\.parquet")
+    names = os.listdir(data)
+    seq = sum(1 for f in names if stable.fullmatch(f))
+    for f in sorted(
+        f for f in names
+        if f.startswith("part-") and f.endswith(".parquet")
+        and not stable.fullmatch(f)
+    ):
+        dst = os.path.join(data, f"part-{seq:05d}.parquet")
+        os.rename(os.path.join(data, f), dst)
+        crc = os.path.join(data, f".{f}.crc")
+        if os.path.exists(crc):
+            os.unlink(crc)  # the checksum of a name that is gone
+        os.utime(dst, (_TLOG_ZONE_EPOCH + seq,) * 2)
+        seq += 1
+
+
+def _tlog_synthetic_stream(spark: SparkSession, rows: int, batch: int) -> DataFrame:
+    """The bounded synthetic event stream: ``rows`` events (event_id,
+    bucket, value), ``batch`` per micro-batch."""
+    from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
+        register_synthetic_stream_source,
+    )
+
+    register_synthetic_stream_source(spark)
+    return (
+        spark.readStream.format("synthetic_events_stream")
+        .option("rows", str(rows))
+        .option("batch", str(batch))
+        .load()
+    )
+
+
+def _tlog_apply_ingest(spark: SparkSession, root: str) -> None:
+    """Drain the bounded synthetic event stream into a table-log
+    table, ONE atomic commit per micro-batch, keyed by batch id
+    (``_tlog_land``); a crashed drain resumes (``_tlog_drain_once``)."""
+
+    def build() -> None:
+        _tlog_drain(
+            _tlog_synthetic_stream(spark, _TLOG_INGEST_ROWS, _TLOG_INGEST_BATCH),
+            lambda batch_df, batch_id: _tlog_land(
+                spark, root, batch_df.select("event_id", "bucket", "value"),
+                batch_id, f"file_ingest_b{batch_id}",
+            ),
+            root,
+        )
         n_commits = _tlog_latest_version(root) + 1
         want = _TLOG_INGEST_ROWS // _TLOG_INGEST_BATCH
         if n_commits != want:
@@ -2875,10 +2960,7 @@ def _tlog_apply_ingest(spark: SparkSession, root: str) -> None:
                 "feed lost or double-applied a batch"
             )
 
-    built_once(
-        root, "_INGESTED", spec, build,
-        resume=lambda: read_text(spec_file) == spec,
-    )
+    _tlog_drain_once(root, "_INGESTED", _tlog_ingest_spec(), "_INGEST_SPEC", build)
 
 
 @register(

@@ -1631,11 +1631,12 @@ def _tlog_mv_live_drain(
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         TableLogConflictError,
-        _TLOG_FILE_RE,
         _tlog_batch_committed,
         _tlog_commit,
         _tlog_commit_rebase,
         _tlog_dml_spec_json,
+        _tlog_drain,
+        _tlog_feed_groups,
         _tlog_latest_version,
         _tlog_live_files,
         _tlog_relation,
@@ -1689,9 +1690,9 @@ def _tlog_mv_live_drain(
                 pass  # a concurrent drain bootstrapped identically
 
         def fold(batch_df: DataFrame, _batch_id: int) -> None:
-            if batch_df.isEmpty():
-                return
-            version = batch_df.agg(F.max("version")).collect()[0][0]
+            _, version = _tlog_feed_groups(batch_df, ["side"], "version")
+            if version is None:
+                return  # a metadata-only source commit delivers nothing
             if _tlog_batch_committed(mv_root, version):
                 return  # replayed source commit: idempotent no-op
             sign = F.when(F.col("side") == "add", F.lit(1)).otherwise(F.lit(-1))
@@ -1731,17 +1732,13 @@ def _tlog_mv_live_drain(
                     raise  # a real conflict; a raced fold is adoption
 
         register_table_log_feed_source(spark)
-        query = (
+        _tlog_drain(
             spark.readStream.format("table_log_feed")
             .option("root", src_root)
-            .load()
-            .writeStream.foreachBatch(fold)
-            .option("checkpointLocation", os.path.join(mv_root, ".ckpt"))
-            .trigger(processingTime="0 seconds")
-            .start()
+            .load(),
+            fold,
+            mv_root,
         )
-        query.processAllAvailable()
-        query.stop()
         # completion = one view commit per source commit THAT EMITS
         # CHANGE ROWS: a dataChange:false commit (OPTIMIZE-style
         # rewrite) yields zero change units, the feed emits an empty

@@ -1,0 +1,72 @@
+"""tools/fixture_diff.py on two tiny hand-made fixture trees."""
+
+import os
+import shutil
+import subprocess
+import sys
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOL = os.path.join(REPO, "tools", "fixture_diff.py")
+
+
+def _tree(top: str, part_name: str) -> None:
+    """One table root: a commit, a stamp, a checkpoint dir the tool
+    skips, and one file group whose part file carries ``part_name``."""
+    root = os.path.join(top, "hbdbps_tlogx_abc")
+    os.makedirs(os.path.join(root, "_log"))
+    os.makedirs(os.path.join(root, ".ckpt"))
+    with open(os.path.join(root, "_log", "000000.json"), "w") as fh:
+        fh.write('{"add": ["file_b0"], "remove": [], "batch": 0, "ts": 1}')
+    with open(os.path.join(root, "_INGESTED"), "w") as fh:
+        fh.write('{"impl": 2}')
+    with open(os.path.join(root, ".ckpt", "offsets"), "w") as fh:
+        fh.write(part_name)  # differs per run: never compared
+    group = os.path.join(root, "file_b0")
+    os.makedirs(group)
+    pq.write_table(
+        pa.table({"event_id": [1, 2, 3], "value": [0.5, 1.5, 2.5]}),
+        os.path.join(group, part_name),
+    )
+    open(os.path.join(group, "_SUCCESS"), "w").close()
+
+
+def _run(a: str, b: str) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, TOOL, a, b], capture_output=True, text=True, timeout=120
+    )
+
+
+def test_identical_trees_exit_0_and_a_changed_commit_byte_exits_1(tmp_path):
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    # part-file names differ between runs (per-write UUID): content decides
+    _tree(a, "part-00000-0f8b6c1e-2d4a-4c3b-9a51-6e7d8c9b0a12-c000.snappy.parquet")
+    _tree(b, "part-00000-7a2e4d90-5b1c-4f6e-8d3a-1c2b3e4f5a67-c000.snappy.parquet")
+    same = _run(a, b)
+    assert same.returncode == 0, same.stdout + same.stderr
+    assert same.stdout == ""
+
+    commit = os.path.join(b, "hbdbps_tlogx_abc", "_log", "000000.json")
+    data = bytearray(open(commit, "rb").read())
+    data[data.index(b'"ts": 1') + 6] = ord("2")
+    open(commit, "wb").write(bytes(data))
+    changed = _run(a, b)
+    assert changed.returncode == 1, changed.stdout + changed.stderr
+    assert changed.stdout.split() == [
+        os.path.join("hbdbps_tlogx_abc", "_log", "000000.json")
+    ]
+
+    # a group whose rows differ is reported by its directory
+    shutil.copy(commit.replace(os.path.join(b, ""), os.path.join(a, "")), commit)
+    group = os.path.join(b, "hbdbps_tlogx_abc", "file_b0")
+    for n in os.listdir(group):
+        if n.endswith(".parquet"):
+            pq.write_table(
+                pa.table({"event_id": [1, 2, 4], "value": [0.5, 1.5, 2.5]}),
+                os.path.join(group, n),
+            )
+    rows = _run(a, b)
+    assert rows.returncode == 1
+    assert rows.stdout.split() == [os.path.join("hbdbps_tlogx_abc", "file_b0") + "/"]

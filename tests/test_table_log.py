@@ -765,15 +765,18 @@ def test_compaction_materializes_deletion_vectors(spark):
     assert _tlog_latest_version(root) == latest
 
 
-def test_stream_ingest_replay_writes_nothing_and_crash_resumes(spark):
+def test_stream_ingest_replay_writes_nothing_and_crash_resumes(spark, monkeypatch):
     """Batch-id -> commit idempotence for streaming ingest: (a) a
     re-drain with a wiped checkpoint leaves the log byte-identical
-    (every batch already committed -> zero writes); (b) a CRASHED
+    (every batch already committed -> zero writes) and its landing
+    runs no Spark job (the batch-id check comes first, from metadata
+    alone); (b) a CRASHED
     drain (completion stamp missing, last commit gone) resumes and
     applies only the missing batch, reproducing the identical commit
     (deterministic source + logical-clock stamps)."""
     import json
 
+    import hadoop_based_distributed_batch_processing_system_spark.operators.scans as sc
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_apply_ingest,
         _tlog_ingest_root,
@@ -808,8 +811,22 @@ def test_stream_ingest_replay_writes_nothing_and_crash_resumes(spark):
         # (a) replay: wipe checkpoint + completion stamp, re-drain
         os.remove(os.path.join(clone, "_INGESTED"))
         shutil.rmtree(os.path.join(clone, ".ckpt"))
+        dag = spark.sparkContext._jsc.sc().dagScheduler()
+        real_land = sc._tlog_land
+        landing_jobs = []
+
+        def counting_land(*a, **kw):
+            j0 = dag.nextJobId()
+            real_land(*a, **kw)
+            landing_jobs.append(dag.nextJobId() - j0)
+
+        monkeypatch.setattr(sc, "_tlog_land", counting_land)
         _tlog_apply_ingest(spark, clone)
+        monkeypatch.undo()
         assert log_bytes() == before, "replayed drain must write nothing"
+        assert landing_jobs == [0, 0, 0, 0], (
+            f"re-delivered batches ran Spark jobs in the landing: {landing_jobs}"
+        )
         # (b) crash recovery: drop the last commit + its file group
         last = json.load(open(os.path.join(clone, "_log", "000003.json")))
         os.remove(os.path.join(clone, "_log", "000003.json"))
@@ -825,6 +842,106 @@ def test_stream_ingest_replay_writes_nothing_and_crash_resumes(spark):
         assert _tlog_latest_version(clone) == 3
     finally:
         shutil.rmtree(clone, ignore_errors=True)
+
+
+def test_empty_micro_batch_lands_nothing(spark, tmp_path):
+    """An empty micro-batch through the one landing commits nothing
+    and leaves no group dir, on a plain root and on a bucketed root —
+    and returns: the staged write's observed stats must not wait on
+    metrics an empty write never reports (run under a timeout)."""
+    import threading
+
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_commit,
+        _tlog_land,
+        _tlog_latest_version_safe,
+    )
+
+    plain, bucketed = str(tmp_path / "plain"), str(tmp_path / "bucketed")
+    os.makedirs(os.path.join(plain, "_log"))
+    os.makedirs(os.path.join(bucketed, "_log"))
+    _tlog_commit(
+        bucketed, add=[], remove=[], base_version=-1, data_change=False,
+        partitioning={"spec_id": 0, "rule": "bucket(event_id, 8)"},
+    )
+    empty = spark.createDataFrame([], "event_id long, bucket int, value double")
+    for root, kw, head in ((plain, {}, -2), (bucketed, {"bucketed": True}, 0)):
+        done: list = []
+        t = threading.Thread(
+            target=lambda: done.append(
+                _tlog_land(spark, root, empty, 0, "file_empty_b0", **kw)
+            ),
+            daemon=True,
+        )
+        t.start()
+        t.join(180)
+        assert done == [None], f"landing an empty batch on {root} did not return"
+        assert _tlog_latest_version_safe(root) == head, "an empty batch committed"
+        assert sorted(os.listdir(root)) == ["_log"], os.listdir(root)
+
+
+def test_landing_zone_mtime_order_is_name_order(spark, tmp_path):
+    """A file-stream source cuts micro-batches in file-mtime order, so
+    the staged landing zone's mtimes must follow its (stable,
+    sequential) file names strictly — a Spark write alone stamps part
+    files in task-finish order — and an append must continue both."""
+    import pyspark.sql.functions as F
+
+    from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
+        _tlog_ev_stage_source,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_zone_write,
+    )
+
+    def zone(data):
+        names = sorted(f for f in os.listdir(data) if f.endswith(".parquet"))
+        return names, [os.stat(os.path.join(data, f)).st_mtime for f in names]
+
+    names, mtimes = zone(os.path.join(_tlog_ev_stage_source(spark, SF_SMOKE), "data"))
+    assert len(names) > 1
+    by_mtime = [f for _, f in sorted(zip(mtimes, names))]
+    assert by_mtime == names, "mtime order is not name order"
+    assert all(b - a >= 1 for a, b in zip(mtimes, mtimes[1:])), mtimes
+
+    data = str(tmp_path / "zone")
+    rows = spark.range(200).withColumn("v", F.col("id") * 2)
+    _tlog_zone_write(rows.filter("id < 100"), data, 4, "id")
+    _tlog_zone_write(rows.filter("id >= 100"), data, 4, "id", append=True)
+    names, mtimes = zone(data)
+    assert names == [f"part-{i:05d}.parquet" for i in range(len(names))]
+    assert len(names) == 8
+    assert all(b - a >= 1 for a, b in zip(mtimes, mtimes[1:])), mtimes
+    assert mtimes[-1] - mtimes[0] < 7 * 24 * 3600  # inside maxFileAge
+    assert spark.read.parquet(data).count() == 200
+
+
+def test_file_stream_drain_is_reproducible(spark, tmp_path, monkeypatch):
+    """Two builds of one file-source root — landing zone staged anew,
+    then drained — write byte-identical logs: batch boundaries, and so
+    every commit's stats and stamp, are fixed by the data."""
+    import hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse as lh
+
+    logs = []
+    for run in ("a", "b"):
+        monkeypatch.setattr(
+            lh, "_tlog_ev_src_dir", lambda _sf, run=run: str(tmp_path / f"src_{run}")
+        )
+        root = str(tmp_path / f"root_{run}")
+        lh._tlog_apply_ev_ingest(spark, SF_SMOKE, root)
+        logd = os.path.join(root, "_log")
+        logs.append(
+            {
+                f: open(os.path.join(logd, f), "rb").read()
+                for f in os.listdir(logd)
+                if f.endswith(".json")
+            }
+        )
+    assert len(logs[0]) >= 2
+    assert logs[0] == logs[1], sorted(
+        f for f in logs[0].keys() | logs[1].keys()
+        if logs[0].get(f) != logs[1].get(f)
+    )
 
 
 def test_time_travel_composes_over_ingest_history(spark):
@@ -1832,6 +1949,7 @@ def test_live_stream_drain_races_compaction_commit(spark):
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_batch_committed,
         _tlog_commit_rebase,
+        _tlog_land,
         _tlog_staged_write,
     )
     from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
@@ -1843,23 +1961,9 @@ def test_live_stream_drain_races_compaction_commit(spark):
     rows, batch = 10_000, 1_000
 
     def land(batch_df, batch_id):
-        if batch_df.isEmpty() or _tlog_batch_committed(root, batch_id):
-            return
-        name = f"file_ingest_b{batch_id}"
-        _tlog_staged_write(
-            batch_df.select(
-                F.lit(name).alias("tgt"), "event_id", "bucket", "value"
-            ),
-            root,
-            [name],
-        )
-        try:
-            base = _tlog_latest_version(root)
-        except RuntimeError:
-            base = -1
-        _tlog_commit_rebase(
-            root, add=[name], remove=[], base_version=base,
-            read_set=set(), batch=batch_id,
+        _tlog_land(
+            spark, root, batch_df.select("event_id", "bucket", "value"),
+            batch_id, f"file_ingest_b{batch_id}",
         )
 
     compact: dict = {}

@@ -1,0 +1,105 @@
+#!/usr/bin/env python
+"""Compare the fixture trees that two runs built under two temp dirs.
+
+    python tools/fixture_diff.py A B
+
+Walks A and B side by side (hidden entries such as ``.ckpt``,
+``.lock``, ``.staging_*`` and checksum files are skipped, as are
+``_SUCCESS`` markers):
+
+- every other non-parquet file — ``_log/*.json`` commits,
+  ``*.checkpoint.json``, branch refs, stamps, spec files, catalogs and
+  any other root-level file — is compared byte for byte, once each
+  tree's own path (which catalogs record) is replaced by a token;
+- every directory holding parquet files (a table-log file group, a
+  deletion-vector sidecar, a landing zone) is compared by content:
+  each part file's schema and rows, in file order. Part-file names
+  carry a per-write UUID, so files are matched by name with UUIDs
+  removed (and by content among equal names).
+
+Prints each path that differs (or exists on one side only) and exits
+1 if any does, 0 otherwise.
+"""
+
+from __future__ import annotations
+
+import os
+import re
+import sys
+
+_UUID = re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}")
+
+
+def _walk(top: str) -> tuple[set[str], set[str]]:
+    """(plain files, parquet group dirs) under ``top``, relative."""
+    files, groups = set(), set()
+    for d, dirs, names in os.walk(top):
+        dirs[:] = sorted(x for x in dirs if not x.startswith("."))
+        rel = os.path.relpath(d, top)
+        if any(n.endswith(".parquet") for n in names):
+            groups.add(rel)
+        for n in names:
+            if n.startswith(".") or n == "_SUCCESS" or n.endswith(".parquet"):
+                continue
+            files.add(os.path.normpath(os.path.join(rel, n)))
+    return files, groups
+
+
+def _group(path: str) -> list:
+    """One entry per part file: (name without UUIDs, schema, rows in
+    file order), sorted."""
+    import pyarrow.parquet as pq
+
+    parts = []
+    for n in os.listdir(path):
+        if n.endswith(".parquet") and not n.startswith("."):
+            t = pq.read_table(os.path.join(path, n))
+            parts.append(
+                (_UUID.sub("", n), str(t.schema.remove_metadata()), repr(t.to_pylist()))
+            )
+    return sorted(parts)
+
+
+def _same_group(a: str, b: str) -> bool:
+    return _group(a) == _group(b)
+
+
+def _text(path: str, top: str) -> bytes:
+    with open(path, "rb") as fh:
+        data = fh.read()
+    for prefix in {os.path.realpath(top), os.path.abspath(top)}:
+        data = data.replace(prefix.encode(), b"<TOP>")
+    return data
+
+
+def diff(a: str, b: str) -> tuple[list[str], int, int]:
+    """(differing relative paths, files compared, groups compared)."""
+    fa, ga = _walk(a)
+    fb, gb = _walk(b)
+    differ = sorted((fa ^ fb) | (ga ^ gb))
+    for rel in sorted(fa & fb):
+        if _text(os.path.join(a, rel), a) != _text(os.path.join(b, rel), b):
+            differ.append(rel)
+    for rel in sorted(ga & gb):
+        if not _same_group(os.path.join(a, rel), os.path.join(b, rel)):
+            differ.append(rel + "/")
+    return sorted(differ), len(fa & fb), len(ga & gb)
+
+
+def main(argv: list[str]) -> int:
+    if len(argv) != 2 or not all(os.path.isdir(p) for p in argv):
+        print(__doc__.strip().splitlines()[2].strip(), file=sys.stderr)
+        return 2
+    differ, n_files, n_groups = diff(*argv)
+    for rel in differ:
+        print(rel)
+    print(
+        f"{len(differ)} differ; compared {n_files} files byte for byte "
+        f"and {n_groups} parquet groups by content",
+        file=sys.stderr,
+    )
+    return 1 if differ else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))
