@@ -6852,6 +6852,7 @@ _TLOG_BKTIN_SPEC = {
     "rows": _TLOG_BKTIN_ROWS,
     "batch": _TLOG_BKTIN_BATCH,
     "evolve_at": _TLOG_BKTIN_EVOLVE_AT,
+    "source": "zone",  # the checkpoint's source (_tlog_synthetic_stream)
 }
 
 
@@ -7442,6 +7443,7 @@ _TLOG_BKCMS_SPEC = {
     "rows": _TLOG_BKCMS_ROWS,
     "batch": _TLOG_BKCMS_BATCH,
     "rename_at": _TLOG_BKCMS_RENAME_AT,
+    "source": "zone",  # the checkpoint's source (_tlog_synthetic_stream)
 }
 
 

@@ -2338,6 +2338,10 @@ def _tlog_apply_compact(spark: SparkSession, sf_dir: str, root: str) -> None:
         # 4 disjoint key ranges, sorted within each, ONE write job: a
         # staging dir partitioned by the range id, then each range is
         # promoted to its own top-level file group (the log's unit).
+        # The ranges split the snapshot's key extent into equal
+        # widths, so the groups are a function of the snapshot alone
+        # (a sampled range partitioner seeds its sketch from the RDD
+        # id, which moves with everything the process ran before).
         # Per-group [min, max] stats for EVERY column are observed in
         # the SAME write (the zorder path's r12/r13 discipline; the
         # old form paid a post-write read job and recorded only
@@ -2346,6 +2350,9 @@ def _tlog_apply_compact(spark: SparkSession, sf_dir: str, root: str) -> None:
 
         columns = rel.columns
         n_ranges = 4
+        suffix = _tlog_regroup_suffix(live, "file_compact_r", base)
+        kmin, kmax = _tlog_extents(root, base, rel, ["o_orderkey"])["o_orderkey"]
+        kspan = max(1, kmax - kmin + 1)
         obs = Observation("compact_group_stats")
         aggs = []
         for i in range(n_ranges):
@@ -2357,9 +2364,12 @@ def _tlog_apply_compact(spark: SparkSession, sf_dir: str, root: str) -> None:
                 ]
         staging = os.path.join(root, ".compact_staging")
         (
-            rel.repartitionByRange(n_ranges, "o_orderkey")
-            .sortWithinPartitions("o_orderkey")
-            .withColumn("rg", F.spark_partition_id())
+            rel.withColumn(
+                "rg",
+                F.expr(f"CAST((o_orderkey - {kmin}) * {n_ranges} div {kspan} AS INT)"),
+            )
+            .repartition(n_ranges, "rg")
+            .sortWithinPartitions("rg", "o_orderkey")
             .observe(obs, *aggs)
             .write.mode("overwrite")
             .partitionBy("rg")
@@ -2374,7 +2384,7 @@ def _tlog_apply_compact(spark: SparkSession, sf_dir: str, root: str) -> None:
         add, stats = [], {}
         for d in groups:
             rg = d.split("=")[1]
-            gname = f"file_compact_r{rg}"
+            gname = f"file_compact_r{rg}{suffix}"
             dst = os.path.join(root, gname)
             shutil.rmtree(dst, ignore_errors=True)
             os.replace(os.path.join(staging, d), dst)
@@ -2396,10 +2406,11 @@ def _tlog_apply_compact(spark: SparkSession, sf_dir: str, root: str) -> None:
             read_set=set(removed), stats=stats,
         )
 
-    # v2 marker: the v1 layout (one file group, no stats) upgrades by
-    # re-compacting on top of its own latest snapshot — compaction is
-    # content-preserving, so stacking one more commit is safe.
-    built_once(root, "_COMPACTED_V2", "v1", build, resume=lambda: True)
+    # v2 marker: an older layout (v1: one file group, no stats; spec
+    # "v1": sampled range boundaries) upgrades by re-compacting on top
+    # of its own latest snapshot — compaction is content-preserving,
+    # so stacking one more commit is safe.
+    built_once(root, "_COMPACTED_V2", "v2", build, resume=lambda: True)
 
 
 def _tlog_vacuum(
@@ -2704,6 +2715,9 @@ def _tlog_ingest_spec() -> str:
             "batch": _TLOG_INGEST_BATCH,
             "log_format": _tlog_spec_stamp(),
             "stats_cols": 1,  # r14: batch commits carry per-column stats
+            # a file-source checkpoint: a drain that read another
+            # source is wiped, never resumed
+            "source": "zone",
         },
         sort_keys=True,
     )
@@ -2922,19 +2936,54 @@ def _tlog_zone_write(
         seq += 1
 
 
-def _tlog_synthetic_stream(spark: SparkSession, rows: int, batch: int) -> DataFrame:
-    """The bounded synthetic event stream: ``rows`` events (event_id,
-    bucket, value), ``batch`` per micro-batch."""
+def _tlog_synthetic_zone(rows: int, batch: int) -> str:
+    """The landing zone of the bounded synthetic event stream: ``rows``
+    events (event_id, bucket, value) as ``ceil(rows/batch)`` parquet
+    files, staged once per ``(rows, batch)``. File ``b`` holds ids
+    ``[b*batch, (b+1)*batch)``, written on the driver from the closed
+    form (no Spark job), and takes the zone's ``b``-th name and mtime
+    (the ``_tlog_zone_write`` convention). Returns the data dir."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
-        register_synthetic_stream_source,
+        synthetic_event,
     )
 
-    register_synthetic_stream_source(spark)
+    zone = os.path.join(tempfile.gettempdir(), f"hbdbps_tlogsyn_{rows}_{batch}")
+    data = os.path.join(zone, "data")
+    schema = pa.schema(
+        [("event_id", pa.int64()), ("bucket", pa.int32()), ("value", pa.float64())]
+    )
+
+    def build() -> None:
+        os.makedirs(data, exist_ok=True)
+        for seq, lo in enumerate(range(0, rows, batch)):
+            cols = zip(*(synthetic_event(i) for i in range(lo, min(lo + batch, rows))))
+            dst = os.path.join(data, f"part-{seq:05d}.parquet")
+            pq.write_table(pa.table(list(cols), schema=schema), dst)
+            os.utime(dst, (_TLOG_ZONE_EPOCH + seq,) * 2)
+
+    built_once(
+        zone, "_STAGED", json.dumps({"impl": 1, "rows": rows, "batch": batch}), build
+    )
+    return data
+
+
+def _tlog_synthetic_stream(spark: SparkSession, rows: int, batch: int) -> DataFrame:
+    """The bounded synthetic event stream, ``batch`` events per
+    micro-batch: the file source reads the landing zone one file per
+    trigger, so micro-batch ``b`` is exactly file ``b``."""
+    from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
+        SYNTHETIC_EVENTS_SCHEMA,
+    )
+
     return (
-        spark.readStream.format("synthetic_events_stream")
-        .option("rows", str(rows))
-        .option("batch", str(batch))
-        .load()
+        spark.readStream.schema(SYNTHETIC_EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(_tlog_synthetic_zone(rows, batch))
     )
 
 
@@ -3163,6 +3212,34 @@ def table_log_compact_materialize_dv(spark: SparkSession, sf_dir: str) -> DataFr
     return _tlog_fingerprint(spark, root)
 
 
+def _tlog_regroup_suffix(live: list[str], prefix: str, base: int) -> str:
+    """``""``, or ``_v{base+1}`` when a live group already carries
+    ``prefix``: a rewrite stacked on an older rewrite's groups must not
+    reuse their names, or the versions that reference them would read
+    the new files (time travel and vacuum would see the wrong data)."""
+    names = (os.path.basename(p) for p in live)
+    return f"_v{base + 1}" if any(n.startswith(prefix) for n in names) else ""
+
+
+def _tlog_extents(
+    root: str, base: int, rel: DataFrame, cols: list[str]
+) -> dict[str, tuple]:
+    """``{col: (min, max)}`` over the snapshot at ``base``: from the
+    log's manifest stats when every live file recorded all ``cols``
+    (driver metadata, no data pass — how a production engine plans
+    maintenance), else one aggregate over ``rel``, the snapshot's rows
+    (third-party files committed without stats)."""
+    live = [os.path.basename(p) for p in _tlog_live_files(root, base)]
+    stats = _tlog_live_stats(root, base)
+    if live and all(set(cols) <= stats.get(n, {}).keys() for n in live):
+        return {
+            c: (min(stats[n][c][0] for n in live), max(stats[n][c][1] for n in live))
+            for c in cols
+        }
+    row = rel.agg(*(f(c) for c in cols for f in (F.min, F.max))).first()
+    return {c: (row[2 * i], row[2 * i + 1]) for i, c in enumerate(cols)}
+
+
 def _tlog_live_stats(root: str, version: int) -> dict[str, dict]:
     """Per-file column stats (manifest min/max) at ``version``: a
     commit's ``stats`` map binds bounds to files it adds; removing a
@@ -3284,26 +3361,8 @@ def _tlog_apply_zorder_compact(spark: SparkSession, sf_dir: str, root: str) -> N
         base = _tlog_latest_version(root)
         live = _tlog_live_files(root, base)
         rel = _tlog_relation(spark, live)
-        # scaling extents come from the LOG's manifest stats when
-        # every live file recorded both columns — pure driver
-        # metadata, no data pass (how a production engine plans
-        # maintenance); the agg fallback covers third-party files
-        # committed without stats
-        stats = _tlog_live_stats(root, base)
-        live_names = [os.path.basename(p) for p in live]
-        if all(
-            {"o_orderkey", "o_totalprice"} <= stats.get(n, {}).keys()
-            for n in live_names
-        ):
-            kmin = min(stats[n]["o_orderkey"][0] for n in live_names)
-            kmax = max(stats[n]["o_orderkey"][1] for n in live_names)
-            pmin = min(stats[n]["o_totalprice"][0] for n in live_names)
-            pmax = max(stats[n]["o_totalprice"][1] for n in live_names)
-        else:
-            kmin, kmax, pmin, pmax = rel.agg(
-                F.min("o_orderkey"), F.max("o_orderkey"),
-                F.min("o_totalprice"), F.max("o_totalprice"),
-            ).first()
+        ext = _tlog_extents(root, base, rel, ["o_orderkey", "o_totalprice"])
+        (kmin, kmax), (pmin, pmax) = ext["o_orderkey"], ext["o_totalprice"]
         kspan, pspan = max(1, kmax - kmin + 1), max(pmax - pmin, 1e-9)
         a = (
             f"CAST(least((CAST(o_orderkey AS BIGINT) - {kmin}) * 256"
@@ -3314,18 +3373,24 @@ def _tlog_apply_zorder_compact(spark: SparkSession, sf_dir: str, root: str) -> N
             f" / {pspan!r}) AS BIGINT), 255) AS BIGINT)"
         )
         zexpr = _morton_expr(a, b, lambda x, n: f"shiftleft({x}, {n})")
-        add = [f"file_zorder_r{i}" for i in range(_TLOG_Z_GROUPS)]
+        suffix = _tlog_regroup_suffix(live, "file_zorder_r", base)
+        add = [f"file_zorder_r{i}{suffix}" for i in range(_TLOG_Z_GROUPS)]
+        # group = the zkey's equal-width range over its 16-bit extent
+        # (its top bits: a quadtree cell of the scaled key x price
+        # plane), a function of the snapshot's extents alone
         clustered = (
             rel.withColumn("zkey", F.expr(zexpr))
-            .repartitionByRange(_TLOG_Z_GROUPS, "zkey")
-            .sortWithinPartitions("zkey")
-            .select(
+            .withColumn(
+                "tgt",
                 F.concat(
-                    F.lit("file_zorder_r"), F.spark_partition_id()
-                ).alias("tgt"),
-                "o_orderkey",
-                "o_totalprice",
+                    F.lit("file_zorder_r"),
+                    F.expr(f"zkey * {_TLOG_Z_GROUPS} div 65536"),
+                    F.lit(suffix),
+                ),
             )
+            .repartition(_TLOG_Z_GROUPS, "tgt")
+            .sortWithinPartitions("tgt", "zkey")
+            .select("tgt", "o_orderkey", "o_totalprice")
         )
         # per-group [min, max] stats for EVERY column are OBSERVED
         # during the staged write itself (conditional aggregates over
@@ -3343,7 +3408,9 @@ def _tlog_apply_zorder_compact(spark: SparkSession, sf_dir: str, root: str) -> N
             read_set=set(removed), stats=stats,
         )
 
-    built_once(root, "_ZORDERED", "v1", build, resume=lambda: True)
+    # spec "v1" cut its groups at sampled zkey boundaries; an older
+    # root re-clusters on top of its own snapshot (content-preserving)
+    built_once(root, "_ZORDERED", "v2", build, resume=lambda: True)
 
 
 @register(
@@ -3385,8 +3452,9 @@ def table_log_zorder_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     OPTIMIZE ZORDER BY, Iceberg sort orders) because interleaved
     bits bound EVERY clustered column's range within each file. The
     extent-relative bit scaling is what production engines do with
-    range-indexed column stats; equal-count range groups keep file
-    sizes uniform under skew."""
+    range-indexed column stats; the groups are equal-width zkey
+    ranges, so the same snapshot always yields the same files (at the
+    price of uneven file sizes under skew)."""
     root = _tlog_build(spark, sf_dir, _tlog_zroot(sf_dir))
     _tlog_apply_zorder_compact(spark, sf_dir, root)
     latest = _tlog_latest_version(root)

@@ -36,6 +36,16 @@ from pyspark.sql.datasource import (
 
 _DEFAULT_ROWS = 10_000
 _DEFAULT_PARTITIONS = 8
+SYNTHETIC_EVENTS_SCHEMA = "event_id BIGINT, bucket INT, value DOUBLE"
+
+
+def synthetic_event(event_id: int) -> tuple[int, int, float]:
+    """The synthetic event table's closed form: every cell a function of
+    ``event_id``. The batch source, the stream source and the table-log
+    landing zone all emit rows through it."""
+    import math
+
+    return (event_id, event_id % 10, round(math.sqrt(event_id + 1.0), 6))
 
 
 class SyntheticEventsDataSource(DataSource):
@@ -46,7 +56,7 @@ class SyntheticEventsDataSource(DataSource):
         return "synthetic_events"
 
     def schema(self) -> str:
-        return "event_id BIGINT, bucket INT, value DOUBLE"
+        return SYNTHETIC_EVENTS_SCHEMA
 
     def reader(self, schema) -> "SyntheticEventsReader":
         return SyntheticEventsReader(self.options)
@@ -64,12 +74,10 @@ class SyntheticEventsReader(DataSourceReader):
         return [InputPartition(i) for i in range(self.num_parts)]
 
     def read(self, partition):
-        import math
-
         i = partition.value
         for eid in range(i, self.n, self.num_parts):
             # closed-form cells: deterministic, partition-independent
-            yield (eid, eid % 10, round(math.sqrt(eid + 1.0), 6))
+            yield synthetic_event(eid)
 
 
 def register_synthetic_source(spark: SparkSession) -> None:
@@ -93,9 +101,7 @@ class SyntheticEventsStreamReader(SimpleDataSourceStreamReader):
         return {"next": 0}
 
     def _rows(self, start: int, end: int):
-        import math
-
-        return [(i, i % 10, round(math.sqrt(i + 1.0), 6)) for i in range(start, end)]
+        return [synthetic_event(i) for i in range(start, end)]
 
     def read(self, start):
         lo = start["next"]
@@ -114,7 +120,7 @@ class SyntheticEventsStreamSource(DataSource):
         return "synthetic_events_stream"
 
     def schema(self) -> str:
-        return "event_id BIGINT, bucket INT, value DOUBLE"
+        return SYNTHETIC_EVENTS_SCHEMA
 
     def simpleStreamReader(self, schema) -> "SyntheticEventsStreamReader":
         return SyntheticEventsStreamReader(self.options)

@@ -3,9 +3,12 @@
 checkpointing, copy-on-write minimality, and stale-dir recovery —
 the write-path properties the hash oracles can't see."""
 
+import contextlib
 import json
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
 
 import pytest
@@ -33,6 +36,56 @@ def tlog_dir(spark):
     _tlog_build(spark, SF_SMOKE, root)
     yield root
     shutil.rmtree(root, ignore_errors=True)
+
+
+def _zone_files(data):
+    """A landing zone's parquet file names, sorted, and their mtimes."""
+    names = sorted(f for f in os.listdir(data) if f.endswith(".parquet"))
+    return names, [os.stat(os.path.join(data, f)).st_mtime for f in names]
+
+
+def _assert_mtime_order_is_name_order(data):
+    names, mtimes = _zone_files(data)
+    assert len(names) > 1
+    by_mtime = [f for _, f in sorted(zip(mtimes, names))]
+    assert by_mtime == names, "mtime order is not name order"
+    assert all(b - a >= 1 for a, b in zip(mtimes, mtimes[1:])), mtimes
+
+
+@contextlib.contextmanager
+def _stream_sources(spark):
+    """Collect ``sources[0].description`` of every streaming progress
+    event posted while the block runs (the listener bus is drained on
+    exit, so the list is complete when the block ends)."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    seen = []
+
+    class Sources(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            seen.append(event.progress.sources[0].description)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = Sources()
+    spark.streams.addListener(listener)
+    try:
+        yield seen
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+
+
+def _assert_file_source(seen):
+    assert seen, "the drain posted no progress event"
+    assert all(d.startswith("FileStreamSource") for d in seen), seen
 
 
 def test_occ_exactly_one_winner(tlog_dir):
@@ -894,26 +947,56 @@ def test_landing_zone_mtime_order_is_name_order(spark, tmp_path):
         _tlog_zone_write,
     )
 
-    def zone(data):
-        names = sorted(f for f in os.listdir(data) if f.endswith(".parquet"))
-        return names, [os.stat(os.path.join(data, f)).st_mtime for f in names]
-
-    names, mtimes = zone(os.path.join(_tlog_ev_stage_source(spark, SF_SMOKE), "data"))
-    assert len(names) > 1
-    by_mtime = [f for _, f in sorted(zip(mtimes, names))]
-    assert by_mtime == names, "mtime order is not name order"
-    assert all(b - a >= 1 for a, b in zip(mtimes, mtimes[1:])), mtimes
+    _assert_mtime_order_is_name_order(
+        os.path.join(_tlog_ev_stage_source(spark, SF_SMOKE), "data")
+    )
 
     data = str(tmp_path / "zone")
     rows = spark.range(200).withColumn("v", F.col("id") * 2)
     _tlog_zone_write(rows.filter("id < 100"), data, 4, "id")
     _tlog_zone_write(rows.filter("id >= 100"), data, 4, "id", append=True)
-    names, mtimes = zone(data)
+    names, mtimes = _zone_files(data)
     assert names == [f"part-{i:05d}.parquet" for i in range(len(names))]
     assert len(names) == 8
     assert all(b - a >= 1 for a, b in zip(mtimes, mtimes[1:])), mtimes
     assert mtimes[-1] - mtimes[0] < 7 * 24 * 3600  # inside maxFileAge
     assert spark.read.parquet(data).count() == 200
+
+
+def test_synthetic_ingest_reads_a_file_zone_cut_at_id_ranges(spark, tmp_path):
+    """The synthetic ingest drains its landing zone through the file
+    source (every progress event names ``FileStreamSource``), and the
+    zone fixes the batch boundaries: commit ``v`` adds
+    ``file_ingest_b{v}`` holding exactly the ids
+    ``[v*batch, (v+1)*batch)``, and the zone's mtime order is its name
+    order."""
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _TLOG_INGEST_BATCH,
+        _TLOG_INGEST_ROWS,
+        _tlog_apply_ingest,
+        _tlog_synthetic_zone,
+    )
+
+    root = str(tmp_path / "ingest")
+    with _stream_sources(spark) as seen:
+        _tlog_apply_ingest(spark, root)
+    _assert_file_source(seen)
+    latest = _tlog_latest_version(root)
+    assert latest + 1 == _TLOG_INGEST_ROWS // _TLOG_INGEST_BATCH
+    for v in range(latest + 1):
+        commit = json.load(open(os.path.join(root, "_log", f"{v:06d}.json")))
+        group = f"file_ingest_b{v}"
+        assert commit["add"] == [group] and commit["batch"] == v, commit
+        ids = sorted(
+            r[0]
+            for r in spark.read.parquet(os.path.join(root, group))
+            .select("event_id")
+            .collect()
+        )
+        assert ids == list(range(v * _TLOG_INGEST_BATCH, (v + 1) * _TLOG_INGEST_BATCH))
+    _assert_mtime_order_is_name_order(
+        _tlog_synthetic_zone(_TLOG_INGEST_ROWS, _TLOG_INGEST_BATCH)
+    )
 
 
 def test_file_stream_drain_is_reproducible(spark, tmp_path, monkeypatch):
@@ -1010,6 +1093,31 @@ def test_zorder_pruning_skips_on_both_dimensions(spark):
             khi < _TLOG_Z_KLO or klo > _TLOG_Z_KHI
             or phi < _TLOG_Z_PLO or plo > _TLOG_Z_PHI
         ), f"{p} skipped but not provably disjoint on any dimension"
+
+
+def test_compaction_groups_do_not_depend_on_process_history(spark, tmp_path):
+    """The range and Z-order compactions cut their file groups from the
+    snapshot alone: two builds in one session, with a different number
+    of unrelated RDD jobs run before each (a sampled range partitioner
+    seeds its sketch from the RDD id), give identical roots."""
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_apply_compact,
+        _tlog_apply_zorder_compact,
+    )
+
+    for run, throwaway in (("a", 0), ("b", 5)):
+        for _ in range(throwaway):
+            spark.sparkContext.parallelize(range(8), 2).count()
+        for name, apply in (("c", _tlog_apply_compact), ("z", _tlog_apply_zorder_compact)):
+            root = str(tmp_path / run / name)
+            _tlog_build(spark, SF_SMOKE, root)
+            apply(spark, SF_SMOKE, root)
+    tool = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "fixture_diff.py")
+    got = subprocess.run(
+        [sys.executable, tool, str(tmp_path / "a"), str(tmp_path / "b")],
+        capture_output=True, text=True,
+    )
+    assert got.returncode == 0, got.stdout + got.stderr
 
 
 def test_zorder_extents_resolve_from_manifest_stats(spark, monkeypatch):
@@ -5906,7 +6014,9 @@ def test_bucketed_stream_ingest_tracks_spec_per_batch(spark, tmp_path):
     )
 
     root = str(tmp_path / "bktin")
-    _tlog_apply_bkt_ingest(spark, root)
+    with _stream_sources(spark) as seen:
+        _tlog_apply_bkt_ingest(spark, root)
+    _assert_file_source(seen)
     head = _tlog_latest_version(root)
     n_batches = _TLOG_BKTIN_ROWS // _TLOG_BKTIN_BATCH
     assert head + 1 == 1 + n_batches + 1  # (a)
@@ -6621,7 +6731,9 @@ def test_mapped_bucketed_stream_ingest_tracks_spelling_per_batch(spark, tmp_path
     )
 
     root = str(tmp_path / "bkcms")
-    _tlog_apply_bktcm_ingest(spark, root)
+    with _stream_sources(spark) as seen:
+        _tlog_apply_bktcm_ingest(spark, root)
+    _assert_file_source(seen)
     head = _tlog_latest_version(root)
     n_batches = _TLOG_BKCMS_ROWS // _TLOG_BKCMS_BATCH
     assert head + 1 == 1 + n_batches + 1  # (a)
