@@ -67,6 +67,7 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_live_dvs,
     _tlog_live_files,
     _tlog_live_stats,
+    _tlog_read,
     _tlog_relation,
     _tlog_respell,
     _tlog_root,
@@ -161,7 +162,7 @@ def _tlog_wap_audit(spark: SparkSession, root: str, payload: dict) -> list[str]:
     ]
     per_group = {
         r["g"]: r
-        for r in spark.read.parquet(*files)
+        for r in _tlog_read(spark, files)
         .withColumn("g", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1))
         .groupBy("g")
         .agg(

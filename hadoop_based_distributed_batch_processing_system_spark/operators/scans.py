@@ -666,46 +666,29 @@ def _tlog_build(spark: SparkSession, sf_dir: str, root: str) -> str:
 
         wipe_root(root)
         orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-        for name, residues in _TLOG_SLICES.items():
-            orders.filter((F.col("o_orderkey") % 4).isin(*residues)).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(root, f"file_{name}"))
-        # per-slice manifest stats for the base commits (ONE bounded
-        # agg job, len(slices) rows): writers record column bounds at
-        # commit time, which is what lets later maintenance (Z-order
-        # extents) and pruned reads plan from pure log metadata
-        slice_stats: dict[str, dict] = {}
-        per_residue = {
-            int(r["s"]): r
-            for r in orders.withColumn("s", (F.col("o_orderkey") % 4).cast("int"))
-            .groupBy("s")
-            .agg(
-                F.min("o_orderkey").alias("klo"), F.max("o_orderkey").alias("khi"),
-                F.min("o_totalprice").alias("plo"), F.max("o_totalprice").alias("phi"),
-            )
-            .collect()
-        }
-        for name, residues in _TLOG_SLICES.items():
-            rows = [per_residue[x] for x in residues if x in per_residue]
-            if rows:
-                slice_stats[f"file_{name}"] = {
-                    "o_orderkey": [
-                        int(min(r["klo"] for r in rows)),
-                        int(max(r["khi"] for r in rows)),
-                    ],
-                    "o_totalprice": [
-                        float(min(r["plo"] for r in rows)),
-                        float(max(r["phi"] for r in rows)),
-                    ],
-                }
+        # every slice in ONE staged write: each row goes to every slice
+        # whose residues hold it (file_D overlaps file_B), and the
+        # per-slice manifest stats of the base commits are observed in
+        # that same job — writers record column bounds at commit time,
+        # which is what lets later maintenance (Z-order extents) and
+        # pruned reads plan from pure log metadata
+        residue = F.col("o_orderkey") % 4
+        tgt = F.array(*[
+            F.when(residue.isin(*rs), F.lit(f"file_{name}"))
+            for name, rs in _TLOG_SLICES.items()
+        ])
+        _, slice_stats = _tlog_staged_write_with_stats(
+            orders.withColumn("tgt", F.explode(F.filter(tgt, lambda t: t.isNotNull()))),
+            root,
+            [f"file_{name}" for name in _TLOG_SLICES],
+            constraints={},
+        )
         logd = os.path.join(root, "_log")
         os.makedirs(logd, exist_ok=True)
         prev_ts = 0
         for v, c in enumerate(_TLOG_COMMITS):
             payload = dict(c)
-            stats = {f: slice_stats[f] for f in c["add"] if f in slice_stats}
-            if stats:
-                payload["stats"] = dict(sorted(stats.items()))
+            payload["stats"] = {f: slice_stats[f] for f in sorted(c["add"])}
             prev_ts = payload["ts"] = _tlog_next_ts(
                 json.dumps(c, sort_keys=True), prev_ts
             )
@@ -1170,7 +1153,8 @@ def _tlog_same_commit(
 def _tlog_relation(spark: SparkSession, files: list[str]) -> DataFrame:
     """ONE memoized relation over a set of immutable table files (one
     listing, one scan job — separate per-file relations each pay
-    plan-time listing + footer reads). Memoization is exactly the
+    plan-time listing + footer reads; the schema comes from the
+    footers, see :func:`_tlog_read`). Memoization is exactly the
     metadata caching real formats do: copy-on-write means a commit
     never rewrites a live file, so a (spec, files) key can never go
     stale within an application."""
@@ -1188,8 +1172,59 @@ def _tlog_relation(spark: SparkSession, files: list[str]) -> DataFrame:
         gen = 0
     memo_key = (spark.sparkContext.applicationId, _tlog_spec_stamp(), gen, *files)
     if memo_key not in _TLOG_RELATION_MEMO:
-        _TLOG_RELATION_MEMO[memo_key] = spark.read.parquet(*files)
+        _TLOG_RELATION_MEMO[memo_key] = _tlog_read(spark, files)
     return _TLOG_RELATION_MEMO[memo_key]
+
+
+# the footer key Spark's parquet writer stores its row schema under
+# (ParquetReadSupport.SPARK_METADATA_KEY)
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _tlog_footer_schema(files: list[str]):
+    """The schema Spark wrote ``files`` with, read on the driver from
+    the footer of each file group's first part file: the same
+    row-metadata string Spark's own inference deserializes, without
+    the inference job. None (infer instead) when a path is not a flat
+    group of part files, a footer lacks the key (pyarrow-written
+    files), or two groups disagree, so that inference picks the
+    schema exactly as before."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    schemas = set()
+    for path in files:
+        if os.path.isdir(path):
+            with os.scandir(path) as it:
+                parts = sorted(
+                    (e for e in it if not e.name.startswith(("_", "."))),
+                    key=lambda e: e.name,
+                )
+            if not parts or any(e.is_dir() for e in parts):
+                return None  # nested dirs: Spark's listing decides
+            path = parts[0].path
+        try:
+            metadata = pq.read_schema(path).metadata or {}
+        except (OSError, pa.ArrowException):
+            return None  # let Spark raise its own error for the path
+        schemas.add(metadata.get(_SPARK_ROW_METADATA))
+    if len(schemas) != 1 or None in schemas:
+        return None
+    return StructType.fromJson(json.loads(schemas.pop()))
+
+
+def _tlog_read(spark: SparkSession, files: list[str]) -> DataFrame:
+    """A scan of table-log file groups with the schema taken from their
+    footers (:func:`_tlog_footer_schema`), so building it starts no
+    Spark job. Unmemoized: :func:`_tlog_relation` memoizes it for
+    committed groups, while a group staged but not yet committed can
+    be staged again under new part-file names."""
+    schema = _tlog_footer_schema(files)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*files)
 
 
 _TLOG_FILE_RE = r"/(file_[A-Za-z0-9_]+)/"
@@ -3102,7 +3137,7 @@ def _tlog_apply_dv(spark: SparkSession, sf_dir: str, root: str) -> None:
 
     def build() -> None:
         base = _tlog_latest_version(root)
-        target_rel = spark.read.parquet(os.path.join(root, spec["target"]))
+        target_rel = _tlog_read(spark, [os.path.join(root, spec["target"])])
         doomed = target_rel.filter(
             F.col("o_orderkey") % spec["del_mod"] == spec["del_residue"]
         ).select("o_orderkey")

@@ -234,10 +234,11 @@ def spread_small_scan(df: DataFrame, key: str) -> DataFrame:
     same row placement.
     """
     sess = df.sparkSession
-    p = min(
-        sess.sparkContext.defaultParallelism,
-        int(sess.conf.get("spark.sql.shuffle.partitions", "200")),
-    )
+    p = sess.sparkContext.defaultParallelism
+    try:
+        p = min(p, int(sess.conf.get("spark.sql.shuffle.partitions", "200")))
+    except ValueError:  # e.g. "auto": no fixed count to cap at
+        pass
     if df.rdd.getNumPartitions() >= p:
         return df
     return df.repartition(p, F.col(key))

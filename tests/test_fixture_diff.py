@@ -70,3 +70,35 @@ def test_identical_trees_exit_0_and_a_changed_commit_byte_exits_1(tmp_path):
     rows = _run(a, b)
     assert rows.returncode == 1
     assert rows.stdout.split() == [os.path.join("hbdbps_tlogx_abc", "file_b0") + "/"]
+
+
+def test_a_differing_group_names_what_differs(tmp_path):
+    """stderr says which part of a differing group differs: its file
+    name (beyond the per-write UUID), its schema or its rows."""
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    _tree(a, "part-00000-0f8b6c1e-2d4a-4c3b-9a51-6e7d8c9b0a12-c000.snappy.parquet")
+    _tree(b, "part-00000-7a2e4d90-5b1c-4f6e-8d3a-1c2b3e4f5a67.c000.snappy.parquet")
+    group = os.path.join("hbdbps_tlogx_abc", "file_b0") + "/"
+    named = _run(a, b)
+    assert named.returncode == 1
+    assert named.stdout.split() == [group]
+    assert (
+        f"{group}: file name (part-00000--c000.snappy.parquet vs "
+        "part-00000-.c000.snappy.parquet)"
+    ) in named.stderr.splitlines()
+
+    part = next(
+        os.path.join(b, group, n)
+        for n in os.listdir(os.path.join(b, group))
+        if n.endswith(".parquet")
+    )
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int32()),
+            "value": [0.5, 1.5, 2.5],
+        }),
+        part,
+    )
+    typed = _run(a, b)
+    line = next(x for x in typed.stderr.splitlines() if x.startswith(group))
+    assert "file name (" in line and "schema (" in line and "rows (" not in line

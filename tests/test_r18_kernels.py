@@ -233,3 +233,27 @@ def test_semlsh_plane_dot_margin(spark):
     planes = np.array(_semlsh_planes(), dtype=np.float64)
     margin = np.abs(v @ planes.T).min()
     assert margin > 1e-9, f"plane-dot margin {margin} too close to reassociation error"
+
+
+def test_spread_small_scan_tolerates_a_non_integer_shuffle_setting(spark, monkeypatch):
+    """``spark.sql.shuffle.partitions`` may read ``auto`` on some
+    platforms (OSS Spark refuses to set it, so ``conf.get`` is stubbed):
+    the spread then targets ``defaultParallelism`` instead of raising."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+        spread_small_scan,
+    )
+
+    real_get = RuntimeConfig.get
+
+    def get(self, key, *default):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(self, key, *default)
+
+    monkeypatch.setattr(RuntimeConfig, "get", get)
+    one = spark.range(100).coalesce(1)
+    spread = spread_small_scan(one, "id")
+    assert spread.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(r.id for r in spread.collect()) == list(range(100))

@@ -11,6 +11,7 @@ import subprocess
 import sys
 import tempfile
 
+import pyarrow as pa
 import pytest
 
 from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
@@ -321,6 +322,112 @@ def test_merge_rewrite_job_count_is_flat(spark):
         assert live == {"file_A_m1", "file_C_m1", "file_D", "file_I_m1"}
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def _jobs_started(spark, fn):
+    """(fn's result, Spark jobs started while it ran)."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
+    out = fn()
+    return out, dag.nextJobId() - j0
+
+
+def test_tlog_build_is_one_staged_write_with_slice_stats(spark, tmp_path):
+    """The base table lands in ONE Spark job: every slice of the
+    exploded ``orders`` is staged by one write, and the three base
+    commits carry the per-slice [min, max] of that same job's
+    observation — equal to the bounds recomputed from ``orders``."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _TLOG_SLICES,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+        load_table,
+    )
+
+    load_table(spark, SF_SMOKE, "orders")  # a cold corpus read is not the build's
+    root = str(tmp_path / "base")
+    _, jobs = _jobs_started(spark, lambda: _tlog_build(spark, SF_SMOKE, root))
+    assert jobs == 1, f"base build started {jobs} Spark jobs"
+    assert _tlog_built_ok(root)
+
+    orders = pq.read_table(
+        os.path.join(SF_SMOKE, "orders.parquet"), columns=["o_orderkey", "o_totalprice"]
+    )
+    residue = pc.bit_wise_and(orders["o_orderkey"], 3)  # keys are non-negative
+    expected = {}
+    for name, residues in _TLOG_SLICES.items():
+        rows = orders.filter(pc.is_in(residue, value_set=pa.array(residues, pa.int64())))
+        group = pq.read_table(os.path.join(root, f"file_{name}"))
+        assert group.num_rows == rows.num_rows
+        assert sorted(group["o_orderkey"].to_pylist()) == sorted(
+            rows["o_orderkey"].to_pylist()
+        )
+        expected[f"file_{name}"] = {
+            c: [pc.min(rows[c]).as_py(), pc.max(rows[c]).as_py()]
+            for c in ("o_orderkey", "o_totalprice")
+        }
+    for v, c in enumerate(_TLOG_COMMITS):
+        commit = json.load(open(os.path.join(root, "_log", f"{v:06d}.json")))
+        assert commit["stats"] == {f: expected[f] for f in c["add"]}, v
+
+
+def _spark_group(spark, path, select):
+    """A file group of two Spark-written part files at ``path``."""
+    spark.sql(f"SELECT {select}").repartition(2).write.mode("overwrite").parquet(path)
+    return path
+
+
+def test_tlog_relation_takes_its_schema_from_group_footers(spark, tmp_path):
+    """A relation over Spark-written groups reads its schema from their
+    footers: building it starts no Spark job (no inference job), and
+    the schema equals the one ``spark.read.parquet`` infers."""
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_footer_schema,
+        _tlog_relation,
+    )
+
+    files = [
+        _spark_group(spark, str(tmp_path / g), "id AS o_orderkey, CAST(id AS DOUBLE) "
+                     "AS o_totalprice, CAST(id AS STRING) AS tag FROM range(10)")
+        for g in ("file_A", "file_B")
+    ]
+    assert _tlog_footer_schema(files) is not None
+    rel, jobs = _jobs_started(spark, lambda: _tlog_relation(spark, files))
+    assert jobs == 0, f"building the relation started {jobs} Spark jobs"
+    assert rel.schema == spark.read.parquet(*files).schema
+    assert rel.count() == 20
+
+
+def test_tlog_relation_falls_back_to_inference(spark, tmp_path):
+    """Where the footers cannot settle the schema — a pyarrow-written
+    group (no Spark row metadata), or two groups written with different
+    schemas — the relation infers it, as ``spark.read.parquet`` does."""
+    import pyarrow.parquet as pq
+
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_footer_schema,
+        _tlog_relation,
+    )
+
+    arrow = tmp_path / "arrow" / "file_A"
+    arrow.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"o_orderkey": [1, 2], "o_totalprice": [1.5, 2.5]}),
+        str(arrow / "part-00000.parquet"),
+    )
+    mixed = [
+        _spark_group(spark, str(tmp_path / "mixed" / "file_A"), "id AS o_orderkey FROM range(4)"),
+        _spark_group(
+            spark, str(tmp_path / "mixed" / "file_B"),
+            "id AS o_orderkey, CAST(id AS DOUBLE) AS o_totalprice FROM range(4)",
+        ),
+    ]
+    for files in ([str(arrow)], mixed):
+        assert _tlog_footer_schema(files) is None
+        assert _tlog_relation(spark, files).schema == spark.read.parquet(*files).schema
 
 
 def test_stale_partial_dir_rebuilds_and_raises_descriptively(spark, tlog_dir):

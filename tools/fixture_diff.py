@@ -18,7 +18,9 @@ Walks A and B side by side (hidden entries such as ``.ckpt``,
   removed (and by content among equal names).
 
 Prints each path that differs (or exists on one side only) and exits
-1 if any does, 0 otherwise.
+1 if any does, 0 otherwise. For each differing group, stderr names
+what differs: the part count, or for each kind (file name, schema,
+rows) the first pair of part files that differ in it.
 """
 
 from __future__ import annotations
@@ -60,8 +62,22 @@ def _group(path: str) -> list:
     return sorted(parts)
 
 
-def _same_group(a: str, b: str) -> bool:
-    return _group(a) == _group(b)
+def _group_diff(a: str, b: str) -> str | None:
+    """None if groups ``a`` and ``b`` hold the same parts, else what
+    differs: the part count, or each kind (file name, schema, rows)
+    with the first pair of parts, matched in sorted order, that
+    differs in it."""
+    pa_, pb_ = _group(a), _group(b)
+    if pa_ == pb_:
+        return None
+    if len(pa_) != len(pb_):
+        return f"part count {len(pa_)} vs {len(pb_)}"
+    kinds = []
+    for i, kind in enumerate(("file name", "schema", "rows")):
+        pair = next(((x, y) for x, y in zip(pa_, pb_) if x[i] != y[i]), None)
+        if pair:
+            kinds.append(f"{kind} ({pair[0][0]} vs {pair[1][0]})")
+    return "; ".join(kinds)
 
 
 def _text(path: str, top: str) -> bytes:
@@ -72,27 +88,33 @@ def _text(path: str, top: str) -> bytes:
     return data
 
 
-def diff(a: str, b: str) -> tuple[list[str], int, int]:
-    """(differing relative paths, files compared, groups compared)."""
+def diff(a: str, b: str) -> tuple[list[str], dict[str, str], int, int]:
+    """(differing relative paths, what differs in each differing group,
+    files compared, groups compared)."""
     fa, ga = _walk(a)
     fb, gb = _walk(b)
     differ = sorted((fa ^ fb) | (ga ^ gb))
     for rel in sorted(fa & fb):
         if _text(os.path.join(a, rel), a) != _text(os.path.join(b, rel), b):
             differ.append(rel)
+    why = {}
     for rel in sorted(ga & gb):
-        if not _same_group(os.path.join(a, rel), os.path.join(b, rel)):
+        w = _group_diff(os.path.join(a, rel), os.path.join(b, rel))
+        if w:
             differ.append(rel + "/")
-    return sorted(differ), len(fa & fb), len(ga & gb)
+            why[rel + "/"] = w
+    return sorted(differ), why, len(fa & fb), len(ga & gb)
 
 
 def main(argv: list[str]) -> int:
     if len(argv) != 2 or not all(os.path.isdir(p) for p in argv):
         print(__doc__.strip().splitlines()[2].strip(), file=sys.stderr)
         return 2
-    differ, n_files, n_groups = diff(*argv)
+    differ, why, n_files, n_groups = diff(*argv)
     for rel in differ:
         print(rel)
+    for rel, w in why.items():
+        print(f"{rel}: {w}", file=sys.stderr)
     print(
         f"{len(differ)} differ; compared {n_files} files byte for byte "
         f"and {n_groups} parquet groups by content",
