@@ -99,73 +99,12 @@ def _verified_past_rounds() -> list[str]:
                 first_seen.setdefault(name, len(first_seen))
     return sorted(newest, key=lambda n: (newest[n], first_seen[n]))
 
-# Hand-curated head of the never-verified set: the entries the next
-# driver window should reach first (highest value / recently fixed).
-# Never-verified entries missing from this list still precede all
-# verified ones — they follow in registration order. Entries below
-# that have since earned a green driver row are filtered out by
-# _ordered_names, so stale listing here is harmless (the list is the
-# PRIORITY among whatever remains unverified, not a status record).
-_PRIORITY_WINDOW = [
-    # --- ROUND 17 state: all 20 r16-new entries earned green driver
-    # rows in CORRECTNESS_r16, so the front is this round's two new
-    # operators. Everything after them is the VERDICT-mandated r09
-    # attestation drain: the verified back is ordered stalest-first,
-    # so the remaining 48 slots pick up the r09 rows automatically
-    # (49 exist; `_DRAIN_LAST` cedes the one overflow slot to the
-    # rows-only-by-nature `dedup_simhash`, whose driver check adds
-    # the least over its local xxhash64 pins — it drains first in
-    # r18).
-    # VERDICT r16 #3: bucketed layout as table-log metadata (the one
-    # carried SURVEY §7 r17-queue item)
-    "table_log_bucketed_join",
-    # VERDICT r16 #5: retention for the quantized index under a
-    # catalog floor pin
-    "sim_search_ann_ivf_quantized_vacuumed",
-    # (Entries here that have since earned a green driver row are
-    # filtered out by _ordered_names — the list is the PRIORITY among
-    # whatever remains unverified, not a status record.)
-    # remaining never-verified entries follow in registration order
-]
-
-# Verified-but-stale rows worth re-earning AHEAD of the general
-# oldest-first back. Empty for round 10: the five rows-only sketches
-# this held were all re-attested in r09, and the newest-round-
-# ascending verified back already self-drains stalest-first — listing
-# anything here would burn window slots the r02 composite backlog
-# needs (VERDICT r09 item 5). Keep the mechanism for future rounds
-# where a specific stale row must jump the queue.
-_REFRESH_TAIL: list[str] = [
-    # Empty for round 13: the 4 new ops + 46 of the 50-row r06 block
-    # fill the 50-slot window — any entry here would push an r06 row
-    # out of the drain (VERDICT r12 item 2).
-]
-
-# Verified entries deliberately pushed to the very END of the drain
-# order. Round 17: 2 new ops + 49 r09-stale rows = 51 candidates for
-# the 50-slot window, so exactly one r09 row must wait for r18; the
-# natural (first-seen) loser would be `mm_decode_real_jpeg` — a full
-# hash oracle — while `dedup_simhash` is rows-only BY NATURE (its
-# xxhash64 invariants are pytest-pinned locally; the driver's
-# rows-only re-check adds the least of any r09 row). Cede the slot
-# deliberately instead of by tiebreak accident.
-_DRAIN_LAST: list[str] = [
-    "dedup_simhash",
-]
-
-
 def _ordered_names() -> list[str]:
-    verified = _verified_past_rounds()
-    front = [n for n in _PRIORITY_WINDOW if n in REGISTRY and n not in verified]
-    placed = set(front) | set(verified)
-    middle = [n for n in REGISTRY if n not in placed]
-    refresh = [n for n in _REFRESH_TAIL if n in REGISTRY and n in verified]
-    back = [
-        n for n in verified
-        if n in REGISTRY and n not in refresh and n not in _DRAIN_LAST
-    ]
-    deferred = [n for n in _DRAIN_LAST if n in REGISTRY and n in verified]
-    return front + middle + refresh + back + deferred
+    """Never-verified entries first, in registration order, then the
+    verified ones stalest-first (``_verified_past_rounds``)."""
+    verified = [n for n in _verified_past_rounds() if n in REGISTRY]
+    placed = set(verified)
+    return [n for n in REGISTRY if n not in placed] + verified
 
 
 def entry(spark: SparkSession) -> DataFrame:

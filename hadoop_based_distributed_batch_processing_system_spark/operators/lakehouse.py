@@ -53,11 +53,15 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_changes_fingerprint,
     _tlog_colmap_binding,
     _tlog_commit_rebase,
+    _tlog_bucket_rule,
+    _tlog_bucket_spec,
+    _tlog_bucketed_commit_validate,
+    _tlog_bucketed_stage,
     _tlog_commit_ts,
+    _tlog_delete,
     _tlog_dml_root,
     _tlog_drain,
     _tlog_drain_once,
-    _tlog_dv_frame,
     _tlog_feed_groups,
     _tlog_feed_units,
     _tlog_fingerprint,
@@ -67,6 +71,7 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_live_dvs,
     _tlog_live_files,
     _tlog_live_stats,
+    _tlog_merge,
     _tlog_read,
     _tlog_relation,
     _tlog_respell,
@@ -75,6 +80,7 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_snapshot_fingerprints,
     _tlog_staged_write_with_stats,
     _tlog_synthetic_stream,
+    _tlog_update,
     _tlog_vacuumed,
     _tlog_version_as_of,
     _tlog_zone_write,
@@ -1140,10 +1146,6 @@ def _tlog_rollup_consume(
         merged, rollup_root, groups, require_all=False
     )
     os.makedirs(os.path.join(rollup_root, "_log"), exist_ok=True)
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        TableLogConflictError,
-    )
-
     try:
         _tlog_commit_rebase(
             rollup_root,
@@ -3437,10 +3439,6 @@ def table_log_catalog_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     file; a downstream warehouse applying these batches transactionally
     (S9-repl's apply) holds cross-table consistency end-to-end."""
     root_a, root_b, cat = _tlog_apply_ctx(spark, sf_dir)
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_changes_fingerprint,
-    )
-
     latest = _tlog_catalog_latest(cat)
     parts: list[DataFrame] = []
     for cv in range(1, latest + 1):
@@ -4580,68 +4578,6 @@ def _tlog_colmap_translate(pred: str, fields: list[dict], binding: dict) -> str:
     )
 
 
-def _tlog_colmap_delete(
-    spark: SparkSession, root: str, logical_pred: str
-) -> tuple[int, dict[str, str]]:
-    """DELETE WHERE <logical predicate> on a COLUMN-MAPPED table,
-    compiled to MERGE-ON-READ deletion vectors: the predicate filters
-    the snapshot read (``_tlog_rows`` respells every cohort to the
-    logical names), doomed keys are collected across every cohort in
-    one staged write, and ONE OCC commit binds every sidecar —
-    statement-atomic across cohorts. The mechanism is
-    DV-only BY DESIGN under mapping: a sidecar references ROWS (by
-    key), never column spellings, so it is immune to the physical-
-    schema divergence that makes a copy-on-write rewrite under
-    mapping subtle (a rewrite must re-spell and re-bind; production
-    formats pair column mapping with merge-on-read deletes for this
-    exact reason — compaction materializes the DVs later under one
-    spelling). Prior bindings union into the new sidecars (replay's
-    latest-binding-wins rule). Returns (version, new bindings)."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_live_colmap,
-    )
-
-    base = _tlog_latest_version(root)
-    if _tlog_live_colmap(root, base) is None:
-        raise RuntimeError("logical-name DELETE requires an active mapping")
-    dvs = _tlog_live_dvs(root, base)
-    v = base + 1
-    doomed = (
-        _tlog_rows(spark, root, base)
-        .filter(F.expr(logical_pred))
-        .select(
-            F.concat(F.lit("dv_"), "file", F.lit(f"_v{v}")).alias("tgt"),
-            "o_orderkey",
-            F.col("file").alias("src_file"),
-        )
-    )
-    hit = sorted(
-        r["src_file"]
-        for r in doomed.select("src_file").distinct().collect()
-    )
-    if not hit:
-        return base, {}
-    dv = {f: f"dv_{f}_v{v}" for f in hit}
-    staged = doomed.drop("src_file")
-    prior = {f: dvs[f] for f in hit if f in dvs}
-    if prior:
-        staged = staged.unionByName(
-            _tlog_dv_frame(spark, root, prior).select(
-                F.concat(F.lit("dv_"), "file", F.lit(f"_v{v}")).alias("tgt"),
-                "o_orderkey",
-            )
-        )
-    promoted, _stats = _tlog_staged_write_with_stats(
-        staged, root, sorted(dv.values()), require_all=True, constraints={}
-    )
-    version = _tlog_commit_rebase(
-        root, add=[], remove=[], base_version=base,
-        read_set=set(hit), dv=dv,
-    )
-    return version, dv
-
-
 _TLOG_CMD_SPEC = {"impl": 1, "pred": _TLOG_CMD_PRED}
 
 
@@ -4666,7 +4602,7 @@ def _tlog_apply_cmd(spark: SparkSession, sf_dir: str, root: str) -> None:
             # lifecycle from scratch (WAP discipline)
             wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-        _tlog_colmap_delete(spark, root, _TLOG_CMD_PRED)
+        _tlog_delete(spark, root, _TLOG_CMD_PRED)
 
     built_once(root, "_CMD", stamp, build)
 
@@ -4970,84 +4906,8 @@ def _tlog_cmu_root(sf_dir: str) -> str:
     )
 
 
-def _tlog_colmap_update(
-    spark: SparkSession, root: str, logical_pred: str, set_col: str, bump: float
-) -> tuple[int, list[str], list[str]]:
-    """UPDATE SET under COLUMN MAPPING, copy-on-write: discovery
-    filters the snapshot read by the LOGICAL predicate (every cohort
-    respelled to the head names — one matched-groups job); the
-    rewrite re-reads ONLY the matched groups through the same reader
-    and applies the logical update — the rewrite normalizes spelling
-    opportunistically (the compact operator's rule: CoW work already
-    paid for re-binds for free). Unmatched groups are never read
-    again, never rewritten (mtime-pinned). New groups bind the head
-    spelling in ``colphys``; ONE OCC commit publishes the statement.
-    Returns (version, rewritten groups, untouched groups)."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_live_colmap,
-    )
-
-    base = _tlog_latest_version(root)
-    cmap = _tlog_live_colmap(root, base)
-    if cmap is None:
-        raise RuntimeError("logical-name UPDATE requires an active mapping")
-    head_binding = {str(f["id"]): f["name"] for f in cmap["fields"]}
-    # DISCOVERY through the DV-aware reader (ADVICE r16 #1): a group
-    # whose only matching rows are already DV-dead must classify as
-    # unmatched, else the rewrite stages an empty group and
-    # require_all aborts the statement on a legal table state.
-    matched = {
-        r["file"]
-        for r in _tlog_rows(spark, root, base)
-        .filter(F.expr(logical_pred))
-        .select("file")
-        .distinct()
-        .collect()
-    }
-    untouched = sorted(
-        os.path.basename(p)
-        for p in _tlog_live_files(root, base)
-        if os.path.basename(p) not in matched
-    )
-    if not matched:
-        return base, [], untouched
-    v = base + 1
-    respelled = _tlog_rows(
-        spark, root, base, [os.path.join(root, g) for g in sorted(matched)]
-    )
-    staged = (
-        respelled.withColumn(
-            set_col,
-            F.when(
-                F.expr(logical_pred), F.col(set_col) + F.lit(bump)
-            ).otherwise(F.col(set_col)),
-        )
-        .withColumn(
-            "tgt",
-            F.concat(
-                F.lit(f"file_cmu{v}_"), F.regexp_replace("file", "^file_", "")
-            ),
-        )
-        .drop("file")
-    )
-    new_names = [f"file_cmu{v}_{g.removeprefix('file_')}" for g in matched]
-    promoted, stats = _tlog_staged_write_with_stats(
-        staged, root, sorted(new_names), require_all=True,
-    )
-    version = _tlog_commit_rebase(
-        root,
-        add=promoted,
-        remove=sorted(matched),
-        base_version=base,
-        read_set=set(matched),
-        stats=stats or None,
-        colphys={g: head_binding for g in promoted},
-    )
-    return version, sorted(matched), untouched
-
-
 _TLOG_CMU_SPEC = {"impl": 1, "pred": _TLOG_CMU_PRED, "bump": _TLOG_CMU_BUMP}
+_TLOG_CMU_ASSIGN = {"price_usd": f"price_usd + {_TLOG_CMU_BUMP}"}
 
 
 def _tlog_apply_cmu(spark: SparkSession, sf_dir: str, root: str) -> None:
@@ -5070,12 +4930,10 @@ def _tlog_apply_cmu(spark: SparkSession, sf_dir: str, root: str) -> None:
         if _latest(root) != 6:
             wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-        _, rewritten, untouched = _tlog_colmap_update(
-            spark, root, _TLOG_CMU_PRED, "price_usd", _TLOG_CMU_BUMP
-        )
-        if "file_C" not in untouched:
+        w = _tlog_update(spark, root, _TLOG_CMU_PRED, _TLOG_CMU_ASSIGN)
+        if "file_C" not in w.untouched:
             raise RuntimeError(
-                f"mapped UPDATE rewrote file_C (rewrote {rewritten}) — "
+                f"mapped UPDATE rewrote file_C (rewrote {w.remove}) — "
                 "CoW discovery must skip groups with no matched rows"
             )
 
@@ -5316,96 +5174,30 @@ def _tlog_cmm_root(sf_dir: str) -> str:
     )
 
 
-def _tlog_colmap_merge(
-    spark: SparkSession, root: str, updates: DataFrame, inserts: DataFrame
-) -> tuple[int, list[str], list[str]]:
-    """MERGE INTO a COLUMN-MAPPED table, copy-on-write: discovery
-    joins the source's match keys against the snapshot read (every
-    cohort's key respelled to its logical name — a mapped table may
-    have renamed the key too); matched groups rewrite
-    re-spelled to the head names with the update applied (broadcast
-    left join — merge sources are dimension-sized; at terabyte
-    source scale this becomes a bucketed shuffle join), not-matched
-    source rows land in one head-spelled insert group, and ONE OCC
-    commit publishes rewrites + inserts with their ``colphys``
-    bindings. Unmatched groups survive unrewritten. ``updates`` is
-    (o_orderkey, new_price); ``inserts`` is (o_orderkey, price_usd).
-    Returns (version, rewritten groups, untouched groups)."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_live_colmap,
-    )
-
-    base = _tlog_latest_version(root)
-    cmap = _tlog_live_colmap(root, base)
-    if cmap is None:
-        raise RuntimeError("mapped MERGE requires an active mapping")
-    head_binding = {str(f["id"]): f["name"] for f in cmap["fields"]}
-    # Discovery reads through the DV-aware reader (ADVICE r16 #1,
-    # same as UPDATE): a group whose only source-matched rows are
-    # DV-dead is NOT a rewrite target — without this the rewrite
-    # stages it empty and require_all aborts the whole MERGE on a
-    # legal table state.
-    matched = {
-        r["file"]
-        for r in _tlog_rows(spark, root, base)
-        .select("file", "o_orderkey")
-        .join(F.broadcast(updates.select("o_orderkey")), "o_orderkey")
-        .select("file")
-        .distinct()
-        .collect()
-    }
-    untouched = sorted(
-        os.path.basename(p)
-        for p in _tlog_live_files(root, base)
-        if os.path.basename(p) not in matched
-    )
-    v = base + 1
-    parts = []
-    new_names = [f"file_cmm{v}_{g.removeprefix('file_')}" for g in matched]
-    if matched:
-        respelled = _tlog_rows(
-            spark, root, base, [os.path.join(root, g) for g in sorted(matched)]
-        )
-        merged = (
-            respelled.join(F.broadcast(updates), "o_orderkey", "left")
-            .withColumn("price_usd", F.coalesce("new_price", "price_usd"))
-            .drop("new_price")
-        )
-        parts.append(
-            merged.withColumn(
-                "tgt",
-                F.concat(
-                    F.lit(f"file_cmm{v}_"),
-                    F.regexp_replace("file", "^file_", ""),
-                ),
-            ).drop("file")
-        )
-    ins_name = f"file_cmm{v}_ins"
-    new_names.append(ins_name)
-    parts.append(inserts.withColumn("tgt", F.lit(ins_name)))
-    staged = parts[0]
-    for p in parts[1:]:
-        staged = staged.unionByName(p)
-    promoted, stats = _tlog_staged_write_with_stats(
-        staged, root, sorted(new_names), require_all=True,
-    )
-    version = _tlog_commit_rebase(
-        root,
-        add=promoted,
-        remove=sorted(matched),
-        base_version=base,
-        read_set=set(matched),
-        stats=stats or None,
-        colphys={g: head_binding for g in promoted},
-    )
-    return version, sorted(matched), untouched
-
-
 _TLOG_CMM_SPEC = {
     "impl": 1, "mod": _TLOG_CMM_MOD, "res": _TLOG_CMM_RES,
     "upd": _TLOG_CMM_UPD_BUMP, "ins": _TLOG_CMM_INS_BUMP,
 }
+
+
+def _tlog_cmm_source(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """The mapped MERGE's (updates, inserts): the key band's prices
+    bumped, and the band re-keyed negative as not-matched inserts."""
+    band = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderkey") % _TLOG_CMM_MOD == _TLOG_CMM_RES
+    )
+    return (
+        band.select(
+            "o_orderkey",
+            (F.col("o_totalprice") + _TLOG_CMM_UPD_BUMP).alias("price_usd"),
+        ),
+        band.select(
+            (-F.col("o_orderkey")).alias("o_orderkey"),
+            (F.col("o_totalprice") + _TLOG_CMM_INS_BUMP).alias("price_usd"),
+        ),
+    )
 
 
 def _tlog_apply_cmm(spark: SparkSession, sf_dir: str, root: str) -> None:
@@ -5428,18 +5220,7 @@ def _tlog_apply_cmm(spark: SparkSession, sf_dir: str, root: str) -> None:
         if _latest(root) != 6:
             wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-        band = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_orderkey") % _TLOG_CMM_MOD == _TLOG_CMM_RES
-        )
-        updates = band.select(
-            "o_orderkey",
-            (F.col("o_totalprice") + _TLOG_CMM_UPD_BUMP).alias("new_price"),
-        )
-        inserts = band.select(
-            (-F.col("o_orderkey")).alias("o_orderkey"),
-            (F.col("o_totalprice") + _TLOG_CMM_INS_BUMP).alias("price_usd"),
-        )
-        _tlog_colmap_merge(spark, root, updates, inserts)
+        _tlog_merge(spark, root, *_tlog_cmm_source(spark, sf_dir))
 
     built_once(root, "_CMM", stamp, build)
 
@@ -5752,25 +5533,9 @@ def _tlog_apply_cmx(spark: SparkSession, sf_dir: str, root: str) -> None:
         if _latest(root) != 6:
             wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
-        _tlog_colmap_delete(spark, root, _TLOG_CMD_PRED)
-        _tlog_colmap_update(
-            spark, root, _TLOG_CMU_PRED, "price_usd", _TLOG_CMU_BUMP
-        )
-        band = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_orderkey") % _TLOG_CMM_MOD == _TLOG_CMM_RES
-        )
-        _tlog_colmap_merge(
-            spark,
-            root,
-            band.select(
-                "o_orderkey",
-                (F.col("o_totalprice") + _TLOG_CMM_UPD_BUMP).alias("new_price"),
-            ),
-            band.select(
-                (-F.col("o_orderkey")).alias("o_orderkey"),
-                (F.col("o_totalprice") + _TLOG_CMM_INS_BUMP).alias("price_usd"),
-            ),
-        )
+        _tlog_delete(spark, root, _TLOG_CMD_PRED)
+        _tlog_update(spark, root, _TLOG_CMU_PRED, _TLOG_CMU_ASSIGN)
+        _tlog_merge(spark, root, *_tlog_cmm_source(spark, sf_dir))
 
     built_once(root, "_CMX", stamp, build)
 
@@ -6337,7 +6102,6 @@ def stream_ingest_colmap_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 # consult it, the commit gate enforces it, readers co-locate on it.
 
 _TLOG_BKT_N = 8
-_TLOG_BKT_RULE_RE = r"bucket\((\w+), (\d+)\)"
 
 
 def _tlog_bkt_roots(sf_dir: str) -> tuple[str, str]:
@@ -6346,57 +6110,6 @@ def _tlog_bkt_roots(sf_dir: str) -> tuple[str, str]:
         os.path.join(tempfile.gettempdir(), f"hbdbps_tlogbkto_{tag}"),
         os.path.join(tempfile.gettempdir(), f"hbdbps_tlogbktl_{tag}"),
     )
-
-
-def _tlog_bucket_spec(root: str, version: int) -> tuple[str, int] | None:
-    """The live bucket(key, N) layout at ``version``, parsed from the
-    replayed partitioning rule; None when the table is not bucketed
-    (or carries a non-bucket layout rule)."""
-    import re
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_partitioning,
-    )
-
-    spec = _tlog_live_partitioning(root, version)
-    if not spec:
-        return None
-    m = re.fullmatch(_TLOG_BKT_RULE_RE, spec.get("rule", ""))
-    return (m.group(1), int(m.group(2))) if m else None
-
-
-def _tlog_bucketed_stage(
-    spark: SparkSession, df: DataFrame, root: str, gname: str,
-    declared: tuple[str, int],
-) -> None:
-    """WRITER half of the bucketed layout: hash-route ``df``'s rows
-    into bucket-tagged files (murmur3(key) % N, the engine's native
-    bucketed write — the bucket id lands in each file name) inside
-    ONE new file group. The write goes through a throwaway external
-    catalog entry because bucketBy is only reachable via saveAsTable;
-    dropping it detaches the metadata and keeps the files — the LOG,
-    not the session catalog, owns the table. A writer is expected to
-    have read ``declared`` from the live spec; the commit gate
-    (_tlog_bucketed_commit) is what refuses one that didn't."""
-    import uuid
-
-    key, n = declared
-    tmp = f"hbdbps_bktw_{uuid.uuid4().hex[:12]}"
-    (
-        # repartition by the bucket key with N partitions: Spark's
-        # HashPartitioning uses the same murmur3 % N as the bucketed
-        # write, so each task owns exactly one bucket and emits ONE
-        # file — the scale-correct writer shape (bounded files per
-        # group, no cross-task bucket interleaving)
-        df.repartition(n, F.col(key))
-        .write.bucketBy(n, key)
-        .sortBy(key)
-        .option("path", os.path.join(root, gname))
-        .mode("overwrite")
-        .format("parquet")
-        .saveAsTable(tmp)
-    )
-    spark.sql(f"DROP TABLE {tmp}")  # external: metadata only, files stay
 
 
 def _tlog_bucketed_commit(
@@ -6415,16 +6128,8 @@ def _tlog_bucketed_commit(
     parquet write has no tag; a wrong-N write either declares wrongly
     or tags out of range). Bootstrap commits (base -1) validate
     against the ``partitioning`` rule they are about to establish."""
-    import glob
-    import re
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-    )
-
     if partitioning is not None:
-        m = re.fullmatch(_TLOG_BKT_RULE_RE, partitioning.get("rule", ""))
-        live = (m.group(1), int(m.group(2))) if m else None
+        live = _tlog_bucket_rule(partitioning)
     else:
         live = _tlog_bucket_spec(root, base_version)
     if live is not None:
@@ -6434,42 +6139,6 @@ def _tlog_bucketed_commit(
         read_set=set(), partitioning=partitioning, colphys=colphys,
         column_mapping=column_mapping,
     )
-
-
-def _tlog_bucketed_commit_validate(
-    root: str, add: list[str], declared: tuple[str, int] | None,
-    live: tuple[str, int],
-) -> None:
-    """The bucket gate's checks, shared by append commits and the
-    re-bucket compaction: declared-spec equality plus physical
-    bucket-tag conformance of every staged file."""
-    import glob
-    import re
-
-    if declared != live:
-        raise RuntimeError(
-            f"bucketing spec violation at {root}: the table requires "
-            f"bucket({live[0]}, {live[1]}) but the writer declared "
-            f"{declared} — refusing the commit (route the write "
-            "through the live spec)"
-        )
-    _key, n = live
-    for g in add:
-        parts = glob.glob(os.path.join(root, g, "*.parquet"))
-        if not parts:
-            raise RuntimeError(
-                f"bucketing spec violation at {root}: staged group "
-                f"{g} has no data files"
-            )
-        for p in parts:
-            m = re.search(r"_(\d{5})[.c\-]", os.path.basename(p))
-            if not m or int(m.group(1)) >= n:
-                raise RuntimeError(
-                    f"bucketing spec violation at {root}: file "
-                    f"{os.path.basename(p)} in group {g} carries no "
-                    f"bucket tag < {n} — the group was not written "
-                    "through the bucket layout"
-                )
 
 
 def _tlog_bucketed_serve(
@@ -6499,11 +6168,6 @@ def _tlog_bucketed_serve(
     builder wins), and the catalog entry is version-keyed."""
     import glob
     import shutil
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version,
-        _tlog_live_files,
-    )
 
     import re
 
@@ -6555,10 +6219,6 @@ def _tlog_apply_bkt(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     convention) — the mixed-commit state that proves co-location
     survives appends."""
     import json
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version,
-    )
 
     o_root, l_root = _tlog_bkt_roots(sf_dir)
     jobs = [
@@ -6685,7 +6345,6 @@ def _tlog_bucket_group_specs(
     spec_id, derived from commit order instead of stored per file —
     equivalent here because spec changes are themselves commits."""
     import json
-    import re
 
     logd = os.path.join(root, "_log")
     cur: tuple[str, int] | None = None
@@ -6693,10 +6352,7 @@ def _tlog_bucket_group_specs(
     for v in range(version + 1):
         c = json.load(open(os.path.join(logd, f"{v:06d}.json")))
         if c.get("partitioning"):
-            m = re.fullmatch(
-                _TLOG_BKT_RULE_RE, c["partitioning"].get("rule", "")
-            )
-            cur = (m.group(1), int(m.group(2))) if m else None
+            cur = _tlog_bucket_rule(c["partitioning"])
         for f in c["remove"]:
             specs.pop(f, None)
         for f in c["add"]:
@@ -6711,11 +6367,6 @@ def _tlog_bucket_evolve(root: str, key: str, n_new: int) -> int:
     spec-evolution contract); only writers feel the change, at the
     commit gate."""
     import json
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_latest_version,
-    )
 
     base = _tlog_latest_version(root)
     old = _tlog_bucket_spec(root, base)
@@ -6746,11 +6397,6 @@ def _tlog_bucketed_serve_mixed(
     documented graceful degradation)."""
     import glob
     import shutil
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version,
-        _tlog_live_files,
-    )
 
     head = _tlog_latest_version(root)
     specs = _tlog_bucket_group_specs(root, head)
@@ -6808,12 +6454,6 @@ def _tlog_bucket_rebucket(spark: SparkSession, root: str) -> int:
     their zero-Exchange plans; a no-op (all groups already on the head
     spec) publishes nothing. Cost = read+write only the stale cohort
     once — the same economics as every compaction here."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_latest_version,
-        _tlog_live_files,
-    )
-
     head = _tlog_latest_version(root)
     spec = _tlog_bucket_spec(root, head)
     if spec is None:
@@ -6911,202 +6551,6 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
             )
 
     _tlog_drain_once(root, "_BKTIN", stamp, "_BKTIN_SPEC", build)
-
-
-# --- DML on a BUCKETED table (r19 queue candidate (a), machinery -----------
-# pre-built in r17 surplus; the registry entry + oracle land with a
-# future window). Copy-on-write THROUGH the layout gate: discovery is
-# one distributed scan over the live groups (input_file_name ->
-# group, the CDC-images shape); the rewrite of every matched group is
-# staged through _tlog_bucketed_stage under the HEAD spec — so DML
-# normalizes bucket-layout debt on touched groups exactly as colmap
-# rewrites normalize rename debt ("respell-then-apply"'s layout twin)
-# — and ONE OCC commit swaps matched groups for the rewrite,
-# gate-validated. An UPDATE that moves the BUCKET KEY is safe by
-# construction: the stage re-hashes every row, so moved keys land in
-# the bucket their NEW value murmur3-routes to (an in-place file
-# rewrite would silently break co-location — the invariant the
-# pinning test checks file-by-file). A group whose every row is
-# deleted is dropped from the add set, never staged empty (the
-# ADVICE r16 empty-group lesson, carried to the bucketed path).
-
-
-def _tlog_bucket_matched_groups(
-    spark: SparkSession, root: str, head: int, pred: str
-) -> list[str]:
-    """Groups with at least one row matching ``pred`` at ``head`` —
-    one scan job over the live set, group names recovered from file
-    paths (the discovery half of bucketed DML). The collect is
-    metadata-bounded: one row per matched GROUP, never per data
-    row."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_files,
-        _tlog_relation,
-    )
-
-    live = _tlog_live_files(root, head)
-    if not live:
-        return []
-    rel = _tlog_relation(spark, live).withColumn(
-        "_g", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-    )
-    return sorted(
-        r["_g"]
-        for r in rel.filter(F.expr(pred)).select("_g").distinct().collect()
-    )
-
-
-def _tlog_bucket_dml(
-    spark: SparkSession, root: str, pred: str,
-    rewrite, gname_prefix: str,
-) -> int:
-    """Shared CoW core of bucketed DELETE/UPDATE: discover matched
-    groups, apply ``rewrite`` (a DataFrame -> DataFrame callable that
-    encodes the statement's semantics) to the matched cohort, stage
-    the result under the HEAD spec through the bucket gate, and swap
-    in ONE OCC commit (read_set = the matched groups, so a racing
-    writer that touched any of them forces re-derivation). No match
-    -> no commit (head returned unchanged); empty rewrite -> a
-    remove-only commit (nothing staged)."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_latest_version,
-        _tlog_relation,
-    )
-
-    head = _tlog_latest_version(root)
-    spec = _tlog_bucket_spec(root, head)
-    if spec is None:
-        raise RuntimeError(
-            f"table at {root} has no bucket layout — route DML through "
-            "the plain table-log path"
-        )
-    matched = _tlog_bucket_matched_groups(spark, root, head, pred)
-    if not matched:
-        return head
-    v = head + 1
-    gname = f"file_{gname_prefix}{v}"
-    cohort = _tlog_relation(
-        spark, [os.path.join(root, g) for g in matched]
-    )
-    out = rewrite(cohort)
-    add: list[str] = []
-    if not out.isEmpty():
-        _tlog_bucketed_stage(spark, out, root, gname, spec)
-        _tlog_bucketed_commit_validate(root, [gname], spec, spec)
-        add = [gname]
-    return _tlog_commit_rebase(
-        root, add=add, remove=matched, base_version=head,
-        read_set=set(matched),
-    )
-
-
-def _tlog_bucket_delete(spark: SparkSession, root: str, pred: str) -> int:
-    """DELETE WHERE ``pred`` on a bucketed table: survivors of every
-    matched group re-staged under the head spec, untouched groups
-    untouched (mtime-pinned), data_change:true (the feed sees it)."""
-    return _tlog_bucket_dml(
-        spark, root, pred,
-        lambda df: df.filter(~F.expr(pred)), "bdel",
-    )
-
-
-def _tlog_bucket_update(
-    spark: SparkSession, root: str, pred: str, assign: dict[str, str]
-) -> int:
-    """UPDATE SET ``assign`` WHERE ``pred`` on a bucketed table:
-    matched groups rewritten whole (matching rows transformed,
-    non-matching copied), staged under the head spec. Assignments to
-    the bucket key itself are legal — the stage re-hashes, so moved
-    keys land in their new bucket and co-location survives."""
-    def _rw(df: DataFrame) -> DataFrame:
-        cols = [
-            F.when(F.expr(pred), F.expr(assign[c]))
-            .otherwise(F.col(c)).alias(c)
-            if c in assign else F.col(c)
-            for c in df.columns
-        ]
-        return df.select(*cols)
-
-    return _tlog_bucket_dml(spark, root, pred, _rw, "bupd")
-
-
-def _tlog_bucket_merge(
-    spark: SparkSession, root: str, updates: DataFrame,
-    inserts: DataFrame | None = None,
-) -> int:
-    """MERGE INTO a bucketed table — the last DML verb through the
-    layout gate. ``updates``' FIRST column is the match key (its
-    remaining columns overwrite same-named target columns on matched
-    rows); ``inserts`` carries not-matched rows in the target schema.
-    Discovery is one scan + broadcast semi-join (the source's key set
-    is the small side by construction — a MERGE source dwarfed by the
-    fact table is the 100 TB shape); matched groups rewrite with the
-    update applied, inserts hash-route into the SAME staged group, so
-    upserted rows are co-located with the survivors from day one; ONE
-    OCC commit swaps matched groups for the merged group. No matches
-    and no inserts -> no commit."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_latest_version,
-        _tlog_live_files,
-        _tlog_relation,
-    )
-
-    head = _tlog_latest_version(root)
-    spec = _tlog_bucket_spec(root, head)
-    if spec is None:
-        raise RuntimeError(
-            f"table at {root} has no bucket layout — route MERGE through "
-            "the plain table-log path"
-        )
-    key, vcols = updates.columns[0], updates.columns[1:]
-    live = _tlog_live_files(root, head)
-    rel = _tlog_relation(spark, live).withColumn(
-        "_g", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-    )
-    matched = sorted(
-        r["_g"]
-        for r in rel.join(
-            F.broadcast(updates.select(key)), key, "left_semi"
-        ).select("_g").distinct().collect()
-    )
-    parts: list[DataFrame] = []
-    if matched:
-        cohort = _tlog_relation(
-            spark, [os.path.join(root, g) for g in matched]
-        )
-        src = updates.select(
-            F.col(key).alias("_mk"),
-            *[F.col(c).alias(f"_u_{c}") for c in vcols],
-        )
-        parts.append(
-            cohort.join(
-                F.broadcast(src), cohort[key] == F.col("_mk"), "left"
-            ).select(
-                *[
-                    F.coalesce(F.col(f"_u_{c}"), F.col(c)).alias(c)
-                    if c in vcols else F.col(c)
-                    for c in cohort.columns
-                ]
-            )
-        )
-    if inserts is not None and not inserts.isEmpty():
-        tcols = parts[0].columns if parts else None
-        parts.append(inserts.select(*tcols) if tcols else inserts)
-    if not parts:
-        return head
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    v = head + 1
-    gname = f"file_bmrg{v}"
-    _tlog_bucketed_stage(spark, out, root, gname, spec)
-    _tlog_bucketed_commit_validate(root, [gname], spec, spec)
-    return _tlog_commit_rebase(
-        root, add=[gname], remove=matched, base_version=head,
-        read_set=set(matched),
-    )
 
 
 # --- Bucket key RENAME under COLUMN MAPPING (r19 queue candidate ----------
@@ -7354,75 +6798,6 @@ def _tlog_bucket_respell(spark: SparkSession, root: str) -> int:
         root, add=[gname], remove=sorted(stale), base_version=head,
         read_set=set(stale), data_change=False,
         colphys={gname: head_binding},
-    )
-
-
-def _tlog_bucket_colmap_delete(
-    spark: SparkSession, root: str, logical_pred: str
-) -> int:
-    """DELETE WHERE <logical predicate> on a MAPPED bucketed table —
-    the triangle of bucketing x column mapping x DML. Discovery
-    filters the snapshot read by the logical predicate (one job);
-    matched groups' survivors are RE-SPELLED TO THE HEAD NAMES FIRST
-    and the logical predicate applied on top (the respell-then-apply
-    rule shared with the colmap DML grid), staged under the head
-    spec with the head binding — so one statement pays rename debt
-    AND layout debt for every byte it touches; groups whose cohort
-    matched but whose own rows didn't are left untouched, and a
-    group deleted whole is never staged empty. ONE OCC commit,
-    data_change:true."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_latest_version,
-        _tlog_live_colmap,
-        _tlog_relation,
-    )
-
-    head = _tlog_latest_version(root)
-    spec = _tlog_bucket_spec(root, head)
-    cmap = _tlog_live_colmap(root, head)
-    if spec is None or cmap is None:
-        raise RuntimeError(
-            f"table at {root} needs both a bucket layout and a column "
-            "mapping for the mapped bucketed DELETE"
-        )
-    fields = cmap["fields"]
-    hits = {
-        r["file"]
-        for r in _tlog_rows(spark, root, head)
-        .filter(F.expr(logical_pred))
-        .select("file")
-        .distinct()
-        .collect()
-    }
-    matched: list[str] = []
-    parts: list[DataFrame] = []
-    for binding, _wspec, paths in _tlog_bucket_mapped_cohorts(root, head):
-        hit = sorted(os.path.basename(p) for p in paths if os.path.basename(p) in hits)
-        if not hit:
-            continue
-        matched.extend(hit)
-        respelled = _tlog_relation(
-            spark, [os.path.join(root, g) for g in hit]
-        ).select(*_tlog_respell(fields, binding))
-        parts.append(respelled.filter(~F.expr(logical_pred)))
-    if not matched:
-        return head
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    v = head + 1
-    gname = f"file_bcd{v}"
-    add: list[str] = []
-    colphys = None
-    if not out.isEmpty():
-        _tlog_bucketed_stage(spark, out, root, gname, spec)
-        _tlog_bucketed_commit_validate(root, [gname], spec, spec)
-        add = [gname]
-        colphys = {gname: {str(f["id"]): f["name"] for f in fields}}
-    return _tlog_commit_rebase(
-        root, add=add, remove=sorted(matched), base_version=head,
-        read_set=set(matched), colphys=colphys,
     )
 
 

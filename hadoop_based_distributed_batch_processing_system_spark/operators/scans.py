@@ -17,6 +17,7 @@ from __future__ import annotations
 import os
 import tempfile
 from collections.abc import Callable
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -2030,46 +2031,16 @@ _TLOG_MERGE_SPEC = {
 
 
 def _tlog_apply_merge(spark: SparkSession, sf_dir: str, root: str) -> None:
-    """Run the MERGE-INTO commit once per table dir (flock-serialized,
-    spec-stamped like the base build). Steps — the standard
-    copy-on-write MERGE plan:
-
-    1. file-pruning DISCOVERY: join the source's match keys against
-       the live data (tagged with ``input_file_name``) to find which
-       files actually contain matched rows — only those are
-       rewritten (here file_A and file_C; file_D survives
-       UNREWRITTEN into the new snapshot, pytest-pinned). Real
-       formats prune with manifest min/max stats before this join;
-       the file list that reaches the driver is metadata-sized.
-    2. REWRITE all affected files in ONE job: their rows (scanned
-       once, only those files) left-join the update source (broadcast
-       — MERGE sources are usually dimension-sized; at terabyte
-       source scale this becomes a shuffle join on the bucketed key),
-       matched rows take the new price, the not-matched source rows
-       union in as inserts, and every target group (`<name>_m1` per
-       affected file + the insert file) lands in a single
-       partitioned-by-target write, promoted to file groups by
-       rename (``_tlog_staged_write`` — one job however many files a
-       merge touches; the old files are never touched, so concurrent
-       readers of v2 are undisturbed).
-    3. COMMIT adds the rewritten+insert files and removes the
-       affected originals in ONE log entry via the optimistic
-       put-if-absent protocol (``_tlog_commit``) — the merge is
-       atomic: snapshot v3 sees all of it, v2 none. The 4th commit
-       hits the checkpoint cadence, so this also writes the log's
-       first checkpoint file.
-
-    A lost commit race with IDENTICAL content (another session ran
-    the same deterministic merge between our stamp check and commit)
-    is recovery, not conflict: adopt the winner's commit."""
+    """Run the registry MERGE once per table dir (flock-serialized,
+    spec-stamped like the base build) through :func:`_tlog_merge`: the
+    update band's keys take the bumped price and the re-keyed rows
+    insert. Only file_A and file_C hold matched keys, so file_D
+    survives unrewritten into the new snapshot (pytest-pinned); the
+    4th commit hits the checkpoint cadence, so this also writes the
+    log's first checkpoint file."""
     import json
 
     def build() -> None:
-        base = _tlog_latest_version(root)
-        live = _tlog_live_files(root, base)
-        rel = _tlog_relation(spark, live).withColumn(
-            "file", F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1)
-        )
         spec = _TLOG_MERGE_SPEC
         orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
         updates = orders.filter(
@@ -2077,65 +2048,12 @@ def _tlog_apply_merge(spark: SparkSession, sf_dir: str, root: str) -> None:
             & (F.col("o_orderkey") % 4).isin(*spec["update_residues"])
         ).select(
             "o_orderkey",
-            (F.col("o_totalprice") + spec["price_bump"]).alias("new_price"),
-        )
-        affected = sorted(
-            r["file"]
-            for r in rel.join(F.broadcast(updates), "o_orderkey")
-            .select("file")
-            .distinct()
-            .collect()
-        )
-        # ONE-JOB CoW rewrite (VERDICT r11 item 1: the previous
-        # per-affected-file loop scheduled one Spark write job per
-        # file — a 500-file merge was 500 sequential jobs at the
-        # ~150 ms scheduling floor). Scan ONLY the affected files
-        # once, apply the update join, union the insert rows, and
-        # write every target file group in ONE job partitioned by
-        # target name; the staged partition dirs are then promoted
-        # to top-level file groups (pure renames — the log's unit).
-        rewritten = (
-            _tlog_relation(
-                spark, [os.path.join(root, f) for f in affected]
-            )
-            .withColumn(
-                "tgt",
-                F.concat(
-                    F.regexp_extract(F.input_file_name(), _TLOG_FILE_RE, 1),
-                    F.lit("_m1"),
-                ),
-            )
-            .join(F.broadcast(updates), "o_orderkey", "left")
-            .select(
-                "tgt",
-                "o_orderkey",
-                F.coalesce("new_price", "o_totalprice").alias("o_totalprice"),
-            )
+            (F.col("o_totalprice") + spec["price_bump"]).alias("o_totalprice"),
         )
         inserts = orders.filter(F.col("o_orderkey") % spec["insert_every"] == 0).select(
-            F.lit("file_I_m1").alias("tgt"),
-            (-F.col("o_orderkey")).alias("o_orderkey"),
-            "o_totalprice",
+            (-F.col("o_orderkey")).alias("o_orderkey"), "o_totalprice"
         )
-        add = sorted(f"{f}_m1" for f in affected) + ["file_I_m1"]
-        # the rewrite records per-column stats in the same write job
-        # (r14): merged files stay prunable on clustered tables
-        _, stats = _tlog_staged_write_with_stats(
-            rewritten.unionByName(inserts), root, add
-        )
-        # WriteSerializable isolation (Delta's default level): a
-        # concurrent BLIND APPEND commutes with this merge and the
-        # commit rebases over it; any commit touching the files the
-        # rewrite derived from is a true conflict (identical content
-        # from a twin session is adopted as recovery)
-        _tlog_commit_rebase(
-            root,
-            add=add,
-            remove=list(affected),
-            base_version=base,
-            read_set=set(affected),
-            stats=stats or None,
-        )
+        _tlog_merge(spark, root, updates, inserts)
 
     built_once(
         root, "_MERGED", json.dumps(_TLOG_MERGE_SPEC, sort_keys=True), build,
@@ -2836,12 +2754,6 @@ def _tlog_land(
         import glob
         import shutil
 
-        from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
-            _tlog_bucket_spec,
-            _tlog_bucketed_commit_validate,
-            _tlog_bucketed_stage,
-        )
-
         live = _tlog_bucket_spec(root, base)
         _tlog_bucketed_stage(spark, batch_df, root, name, live)
         if not glob.glob(os.path.join(root, name, "*.parquet")):
@@ -3337,24 +3249,6 @@ def _tlog_predicate_bounds(predicate: str) -> dict[str, tuple[float, float]]:
     return bounds
 
 
-def _tlog_discovery_files(
-    spark: SparkSession, root: str, base: int, predicate: str
-) -> list[str]:
-    """The live file set a DML statement's discovery must scan:
-    intersect the predicate's derivable column bounds with the
-    manifest stats the log already records (the scans read-path
-    pruning, reused on the WRITE path — VERDICT r13 item 2). Files
-    without recorded stats are conservatively kept; predicates with
-    no derivable bounds scan everything, as before."""
-    live = _tlog_live_files(root, base)
-    bounds = _tlog_predicate_bounds(predicate)
-    if bounds:
-        stats = _tlog_live_stats(root, base)
-        for col, (lo, hi) in bounds.items():
-            live = _tlog_stats_prune(live, stats, col, lo, hi)
-    return live
-
-
 _TLOG_PRUNE_LO, _TLOG_PRUNE_HI = 1000, 2999
 
 
@@ -3757,13 +3651,13 @@ def table_log_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _tlog_fingerprint(spark, root)
 
 
-# ---- SQL-style DML entry points over the table-log ----------------------
+# ---- the one table-log writer: DELETE, UPDATE and MERGE ----------------
 
-# DELETE WHERE mechanism choice: a file whose matched fraction is at
-# or below this gets a deletion-vector sidecar (O(deleted keys), data
-# bytes untouched); above it, a copy-on-write rewrite is cheaper than
-# carrying a huge read-side anti-join. Delta's DV-vs-CoW heuristic,
-# reduced to one dial.
+# DELETE's mechanism dial on a plain table: a file whose matched
+# fraction is at or below this gets a deletion-vector sidecar (O(deleted
+# keys), data bytes untouched); above it, a copy-on-write rewrite is
+# cheaper than carrying a huge read-side anti-join. Delta's DV-vs-CoW
+# heuristic, reduced to one dial.
 _TLOG_DML_DV_MAX_FRACTION = 0.10
 
 # Registry specs (oracle-expressible):
@@ -3771,175 +3665,339 @@ _TLOG_DELETE_PRED = "o_orderkey % 251 = 7"     # ~0.4%/file -> all DV
 _TLOG_UPDATE_PRED = "o_orderkey % 12 = 0"      # %4==0 -> only file_A
 _TLOG_UPDATE_BUMP = 2.5                        # exact cents
 
+# a bucketed table's partitioning rule
+_TLOG_BKT_RULE_RE = r"bucket\((\w+), (\d+)\)"
 
-def _tlog_dml_delete_where(
-    spark: SparkSession, root: str, predicate: str
-) -> tuple[int, dict[str, str], list[str]]:
-    """DELETE WHERE ``predicate`` compiled to the CHEAPEST mechanism
-    PER FILE (VERDICT r12 item 5): one discovery scan counts total
-    and matched rows per live file; files with no matches are never
-    touched; files at or below the DV fraction get a doomed-keys
-    sidecar (data bytes untouched); denser files are rewritten
-    copy-on-write WITHOUT the matched rows — and a file whose every
-    row matches is simply dropped (its rewrite is empty). Sidecars
-    and rewrites land in ONE staged write job, and ONE OCC commit
-    publishes the whole statement atomically: add = rewritten
-    groups, remove = dense originals, dv = sparse bindings. Returns
-    (version, dv bindings, rewritten names) for the callers' pins.
 
-    Scale: the statement costs one metadata-sized discovery agg +
-    one write job over only the affected bytes — and since r14 the
-    discovery agg itself is PRE-PRUNED on manifest stats: a
-    range-expressible predicate intersects the log's per-file bounds
-    driver-side (``_tlog_discovery_files``), so a key-range DELETE on
-    a clustered 100-TB table opens only intersecting files (the same
-    pruning the read path does; stats-less files conservatively
-    scanned)."""
+def _tlog_bucket_rule(partitioning: dict | None) -> tuple[str, int] | None:
+    """(key, N) of a bucket(key, N) partitioning rule; None for no rule
+    or a non-bucket one."""
+    import re
+
+    m = re.fullmatch(_TLOG_BKT_RULE_RE, (partitioning or {}).get("rule", ""))
+    return (m.group(1), int(m.group(2))) if m else None
+
+
+def _tlog_bucket_spec(root: str, version: int) -> tuple[str, int] | None:
+    """The live bucket(key, N) layout at ``version``, parsed from the
+    replayed partitioning rule; None when the table is not bucketed
+    (or carries a non-bucket layout rule)."""
+    return _tlog_bucket_rule(_tlog_live_partitioning(root, version))
+
+
+def _tlog_bucketed_stage(
+    spark: SparkSession, df: DataFrame, root: str, gname: str,
+    declared: tuple[str, int],
+) -> None:
+    """WRITER half of the bucketed layout: hash-route ``df``'s rows
+    into bucket-tagged files (murmur3(key) % N, the engine's native
+    bucketed write — the bucket id lands in each file name) inside
+    ONE new file group. The write goes through a throwaway external
+    catalog entry because bucketBy is only reachable via saveAsTable;
+    dropping it detaches the metadata and keeps the files — the LOG,
+    not the session catalog, owns the table. A writer is expected to
+    have read ``declared`` from the live spec; the commit gate
+    (_tlog_bucketed_commit) is what refuses one that didn't."""
+    import uuid
+
+    key, n = declared
+    tmp = f"hbdbps_bktw_{uuid.uuid4().hex[:12]}"
+    (
+        # repartition by the bucket key with N partitions: Spark's
+        # HashPartitioning uses the same murmur3 % N as the bucketed
+        # write, so each task owns exactly one bucket and emits ONE
+        # file — the scale-correct writer shape (bounded files per
+        # group, no cross-task bucket interleaving)
+        df.repartition(n, F.col(key))
+        .write.bucketBy(n, key)
+        .sortBy(key)
+        .option("path", os.path.join(root, gname))
+        .mode("overwrite")
+        .format("parquet")
+        .saveAsTable(tmp)
+    )
+    spark.sql(f"DROP TABLE {tmp}")  # external: metadata only, files stay
+
+
+def _tlog_bucketed_commit_validate(
+    root: str, add: list[str], declared: tuple[str, int] | None,
+    live: tuple[str, int],
+) -> None:
+    """The bucket gate's checks, shared by append commits and the
+    re-bucket compaction: declared-spec equality plus physical
+    bucket-tag conformance of every staged file."""
+    import glob
+    import re
+
+    if declared != live:
+        raise RuntimeError(
+            f"bucketing spec violation at {root}: the table requires "
+            f"bucket({live[0]}, {live[1]}) but the writer declared "
+            f"{declared} — refusing the commit (route the write "
+            "through the live spec)"
+        )
+    _key, n = live
+    for g in add:
+        parts = glob.glob(os.path.join(root, g, "*.parquet"))
+        if not parts:
+            raise RuntimeError(
+                f"bucketing spec violation at {root}: staged group "
+                f"{g} has no data files"
+            )
+        for p in parts:
+            m = re.search(r"_(\d{5})[.c\-]", os.path.basename(p))
+            if not m or int(m.group(1)) >= n:
+                raise RuntimeError(
+                    f"bucketing spec violation at {root}: file "
+                    f"{os.path.basename(p)} in group {g} carries no "
+                    f"bucket tag < {n} — the group was not written "
+                    "through the bucket layout"
+                )
+
+
+class TableLogWrite(NamedTuple):
+    """What one DELETE, UPDATE or MERGE did: the committed ``version``
+    (the base version when the statement changed nothing and committed
+    nothing), the data groups it added, the groups it removed (CoW
+    rewrites and files deleted whole), its new deletion-vector
+    bindings (file -> sidecar) and the live groups it left
+    untouched."""
+
+    version: int
+    add: list[str]
+    remove: list[str]
+    dv: dict[str, str]
+    untouched: list[str]
+
+
+def _tlog_delete(spark: SparkSession, root: str, pred: str) -> TableLogWrite:
+    """DELETE WHERE ``pred``: each touched file gets a deletion vector
+    or a CoW rewrite without the matched rows, and a file matched
+    whole is dropped (:func:`_tlog_write`)."""
+    return _tlog_write(spark, root, "delete", pred=pred)
+
+
+def _tlog_update(
+    spark: SparkSession, root: str, pred: str, assign: dict[str, str]
+) -> TableLogWrite:
+    """UPDATE SET ``assign`` (column -> SQL expression) WHERE ``pred``:
+    a CoW rewrite of every touched file. Assigning the bucket key of a
+    bucketed table is legal: the stage re-hashes every row, so a moved
+    key lands in the bucket its new value routes to."""
+    return _tlog_write(spark, root, "update", pred=pred, assign=assign)
+
+
+def _tlog_merge(
+    spark: SparkSession, root: str, updates: DataFrame,
+    inserts: DataFrame | None = None,
+) -> TableLogWrite:
+    """MERGE INTO the table: ``updates``' first column is the match key
+    and its other columns overwrite the same-named target columns of
+    the matched rows (a NULL source value keeps the target's); the
+    files holding matched rows are rewritten CoW, and ``inserts``
+    (rows in the target's columns) land in the same staged write."""
+    return _tlog_write(spark, root, "merge", updates=updates, inserts=inserts)
+
+
+def _tlog_write(
+    spark: SparkSession,
+    root: str,
+    verb: str,
+    pred: str | None = None,
+    assign: dict[str, str] | None = None,
+    updates: DataFrame | None = None,
+    inserts: DataFrame | None = None,
+) -> TableLogWrite:
+    """THE table-log writer: one statement, one staged write, one OCC
+    commit, as MapReduce sends every job's output through one
+    ``OutputFormat`` and its committer. The layout comes from the
+    table's own metadata at the base version: a bucket(key, N) rule
+    makes it BUCKETED, a column mapping makes it MAPPED (predicates and
+    assignments spell the logical names), else it is PLAIN.
+
+    1. DISCOVER through the snapshot read (:func:`_tlog_rows`, deletion
+       vectors applied), in one aggregate job that counts each file's
+       rows and the rows ``pred`` matches (DELETE, UPDATE; an unmapped
+       table's files are first pruned on manifest stats), or, for
+       MERGE, the rows a broadcast semi-join on the source's key keeps.
+       A file with no match is never touched.
+    2. CHOOSE per touched file: DELETE binds a deletion vector where
+       the matched rows are at most ``dv_max`` of the file's rows —
+       plain ``_TLOG_DML_DV_MAX_FRACTION``; mapped 1, since a sidecar
+       names rows by key, never by column spelling; bucketed 0, since
+       rows must stay routed by their bucket. Every other touched file
+       is rewritten copy-on-write from the snapshot read, so a rewrite
+       never brings back a row a deletion vector had deleted.
+    3. STAGE everything in one job: sidecars and per-file rewrites
+       through :func:`_tlog_staged_write_with_stats` (plain, mapped —
+       a mapped rewrite lands in the head spelling), or ONE group
+       hash-routed under the live spec through
+       :func:`_tlog_bucketed_stage` and the bucket gate (bucketed). A
+       rewrite left without rows stages nothing.
+    4. COMMIT once (:func:`_tlog_commit_rebase`): read set = the touched
+       files, remove = the CoW files, dv = the new bindings (a new
+       binding replaces the old on replay, so each sidecar also holds
+       its file's prior doomed keys), stats from the staged write, and
+       on a mapped table the head binding of every added group.
+
+    Group names: plain ``{f}_d{v}``, ``{f}_u{v}``, ``{f}_m1`` and
+    ``file_I_m1``; mapped ``file_cmu{v}_*``, ``file_cmm{v}_*`` and
+    ``file_cmm{v}_ins``; bucketed ``file_bdel{v}`` (``file_bcd{v}`` when
+    mapped), ``file_bupd{v}`` and ``file_bmrg{v}``; sidecars
+    ``dv_{f}_v{v}``. A statement that touches nothing and inserts
+    nothing commits nothing."""
+    import glob
+    import shutil
+
     base = _tlog_latest_version(root)
-    live = _tlog_discovery_files(spark, root, base, predicate)
-    if not live:  # every file provably disjoint: a no-op statement
-        return base, {}, []
-    pred = F.expr(predicate)
-    # read through the snapshot reader (live deletion vectors
-    # applied): discovery must count only live rows, and a rewrite
-    # that ignored a bound sidecar would resurrect previously-deleted
-    # rows when the commit's remove drops the binding (the
-    # no-resurrection invariant every DV-aware rewrite in this format
-    # holds)
-    rel = _tlog_rows(spark, root, base, live)
-    dvs = _tlog_live_dvs(root, base)
-    per_file = {
-        r["file"]: (int(r["n"]), int(r["m"]))
-        for r in rel.groupBy("file")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.when(pred, 1).otherwise(0)).alias("m"),
-        )
-        .collect()
-    }
-    sparse = sorted(
-        f for f, (n, m) in per_file.items()
-        if 0 < m <= n * _TLOG_DML_DV_MAX_FRACTION
-    )
-    dense = sorted(
-        f for f, (n, m) in per_file.items()
-        if m > n * _TLOG_DML_DV_MAX_FRACTION
-    )
+    snap = _tlog_snapshot(root, base)
+    cmap = snap["column_mapping"]
+    head = {str(f["id"]): f["name"] for f in cmap["fields"]} if cmap else None
+    bucket = _tlog_bucket_rule(snap["partitioning"])
+    live = _tlog_unvacuumed(root, base, snap["live"])
     v = base + 1
-    dv = {f: f"dv_{f}_v{v}" for f in sparse}
-    rewritten = [f"{f}_d{v}" for f in dense]
-    parts: list[DataFrame] = []
-    if sparse:
-        doomed = rel.filter(pred & F.col("file").isin(sparse)).select(
-            F.concat(F.lit("dv_"), "file", F.lit(f"_v{v}")).alias("tgt"),
-            "o_orderkey",
+    files = live
+    if verb == "merge":
+        key, vcols = updates.columns[0], updates.columns[1:]
+        source = updates.select(
+            F.col(key).alias("_mk"), *[F.col(c).alias(f"_u_{c}") for c in vcols]
         )
-        # a new binding REPLACES a file's old one on replay, so the
-        # new sidecar must carry the UNION of old and new doomed keys
-        prior = {f: dvs[f] for f in sparse if f in dvs}
+        hit = F.col("_mk").isNotNull()
+        assign = {c: f"coalesce(`_u_{c}`, `{c}`)" for c in vcols}
+    else:
+        hit = F.coalesce(F.expr(pred), F.lit(False))
+        if cmap is None:  # manifest stats bound physical columns
+            for col, (lo, hi) in _tlog_predicate_bounds(pred).items():
+                files = _tlog_stats_prune(files, snap["stats"], col, lo, hi)
+
+    # 1. DISCOVER
+    counts = {}
+    if files:
+        rows = _tlog_rows(spark, root, base, files)
+        matched = hit
+        if verb == "merge":  # only the rows the source's keys match
+            rows = rows.join(
+                F.broadcast(source.select("_mk")), F.col(key) == F.col("_mk"),
+                "left_semi",
+            )
+            matched = F.lit(True)
+        counts = {
+            r["file"]: (r["n"], r["m"])
+            for r in rows.groupBy("file")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.when(matched, 1).otherwise(0)).alias("m"),
+            )
+            .collect()
+        }
+    touched = sorted(f for f, (_n, m) in counts.items() if m)
+    untouched = sorted({os.path.basename(p) for p in live} - set(touched))
+
+    # 2. CHOOSE
+    dv_max = 0 if bucket else 1 if cmap else _TLOG_DML_DV_MAX_FRACTION
+    dv = {
+        f: f"dv_{f}_v{v}"
+        for f in touched
+        if verb == "delete" and counts[f][1] <= counts[f][0] * dv_max
+    }
+    cow = [f for f in touched if f not in dv]
+    # the CoW files whose rewrite keeps rows (DELETE drops a file matched whole)
+    keep = [f for f in cow if verb != "delete" or counts[f][1] < counts[f][0]]
+    if bucket:
+        tag = {"delete": "bcd" if cmap else "bdel", "update": "bupd", "merge": "bmrg"}
+        ins_name = f"file_{tag[verb]}{v}"  # the one group every row lands in
+        names = dict.fromkeys(keep, ins_name)
+    elif cmap:
+        names = {f: f"file_cm{verb[0]}{v}_{f.removeprefix('file_')}" for f in keep}
+        ins_name = f"file_cm{verb[0]}{v}_ins"
+    else:
+        suffix = "_m1" if verb == "merge" else f"_{verb[0]}{v}"
+        names = {f: f + suffix for f in keep}
+        ins_name = "file_I_m1" + _tlog_regroup_suffix(live, "file_I_m1", base)
+
+    # 3. STAGE
+    parts: list[DataFrame] = []
+    if touched:
+        rows = _tlog_rows(spark, root, base, [os.path.join(root, f) for f in touched])
+        cols = [c for c in rows.columns if c != "file"]
+        if verb == "merge":
+            rows = rows.join(F.broadcast(source), F.col(key) == F.col("_mk"), "left")
+    if dv:
+        tgt = F.concat(F.lit("dv_"), "file", F.lit(f"_v{v}")).alias("tgt")
+        doomed = rows.filter(hit & F.col("file").isin(list(dv))).select(
+            tgt, F.col(head["1"] if head else "o_orderkey").alias("o_orderkey")
+        )
+        prior = {f: snap["dv"][f] for f in dv if f in snap["dv"]}
         if prior:
             doomed = doomed.unionByName(
-                _tlog_dv_frame(spark, root, prior).select(
-                    F.concat(F.lit("dv_"), "file", F.lit(f"_v{v}")).alias("tgt"),
-                    "o_orderkey",
-                )
+                _tlog_dv_frame(spark, root, prior).select(tgt, "o_orderkey")
             )
         parts.append(doomed)
-    if dense:
-        parts.append(
-            rel.filter(~pred & F.col("file").isin(dense)).select(
-                F.concat("file", F.lit(f"_d{v}")).alias("tgt"),
-                "o_orderkey",
-                "o_totalprice",
+    if keep:
+        kept = rows.filter(F.col("file").isin(keep))
+        if verb == "delete":
+            kept = kept.filter(~hit)
+        out = [
+            F.when(hit, F.expr(assign[c])).otherwise(F.col(c)).alias(c)
+            if c in (assign or {}) else F.col(c)
+            for c in cols
+        ]
+        if not bucket:
+            out.append(
+                F.create_map(*[F.lit(x) for kv in sorted(names.items()) for x in kv])[
+                    F.col("file")
+                ].alias("tgt")
             )
-        )
-    add: list[str] = []
-    stats: dict[str, dict] = {}
+        parts.append(kept.select(*out))
+    if inserts is not None:
+        ins = inserts.select(*cols) if touched else inserts
+        parts.append(ins if bucket else ins.withColumn("tgt", F.lit(ins_name)))
+    # the groups discovery proved non-empty; the insert group may stage nothing
+    expected = sorted(dv.values()) + sorted(set(names.values()))
+    promoted: list[str] = []
+    wstats: dict[str, dict] = {}
     if parts:
-        union = parts[0]
+        staged = parts[0]
         for p in parts[1:]:
-            union = union.unionByName(p, allowMissingColumns=True)
-        # one job stages every sidecar AND every rewrite (per-column
-        # stats observed in the same pass); a dense file whose every
-        # row matched stages nothing and is simply dropped by the
-        # commit (require_all=False)
-        promoted_list, wstats = _tlog_staged_write_with_stats(
-            union, root, sorted(dv.values()) + rewritten, require_all=False
-        )
-        promoted = set(promoted_list)
-        missing_dv = sorted(set(dv.values()) - promoted)
-        if missing_dv:
-            raise RuntimeError(
-                f"DELETE discovery counted matches but staged no sidecar "
-                f"for {missing_dv} — refusing a lossy commit"
+            staged = staged.unionByName(p, allowMissingColumns=True)
+        if bucket:
+            _tlog_bucketed_stage(spark, staged, root, ins_name, bucket)
+            if glob.glob(os.path.join(root, ins_name, "*.parquet")):
+                _tlog_bucketed_commit_validate(root, [ins_name], bucket, bucket)
+                promoted = [ins_name]
+            else:
+                shutil.rmtree(os.path.join(root, ins_name), ignore_errors=True)
+        else:
+            promoted, wstats = _tlog_staged_write_with_stats(
+                staged, root,
+                expected + ([ins_name] if inserts is not None else []),
+                require_all=False,
+                # sidecars alone carry no data columns to check
+                constraints=None if keep or inserts is not None else {},
             )
-        add = sorted(set(rewritten) & promoted)
-        # stats bind to DATA files the commit adds — a sidecar is not
-        # a data file, and an entry for one would linger in replay
-        # state forever (sidecars never pass through add/remove)
-        stats = {g: s for g, s in wstats.items() if g in set(add)}
+    missing = sorted(set(expected) - set(promoted))
+    if missing:
+        raise RuntimeError(
+            f"{verb.upper()} discovery counted rows for {missing} but the "
+            "staged write produced none — refusing a lossy commit"
+        )
+    add = sorted(set(promoted) - set(dv.values()))
+    stats = {g: wstats[g] for g in add if g in wstats}
+
+    # 4. COMMIT
+    if not (add or cow or dv):
+        return TableLogWrite(base, [], [], {}, untouched)
     version = _tlog_commit_rebase(
         root,
         add=add,
-        remove=dense,
+        remove=cow,
         base_version=base,
-        read_set=set(sparse) | set(dense),
+        read_set=set(touched),
         dv=dv or None,
         stats=stats or None,
+        colphys={g: head for g in add} if head and add else None,
     )
-    return version, dv, add
-
-
-def _tlog_dml_update_set(
-    spark: SparkSession, root: str, predicate: str, bump: float
-) -> tuple[int, list[str]]:
-    """UPDATE SET o_totalprice = o_totalprice + ``bump`` WHERE
-    ``predicate``, compiled to a copy-on-write rewrite of ONLY the
-    files containing matched rows (an update has no sidecar shortcut
-    — new values must be written somewhere; merge-on-read formats
-    pair a delete vector WITH an insert file, which this repo's
-    merge operator already models). Discovery prunes to matched
-    files; one staged write rewrites them all; one OCC commit swaps
-    them. Returns (version, rewritten names). Discovery pre-prunes on
-    manifest stats for range-expressible predicates
-    (``_tlog_discovery_files`` — VERDICT r13 item 2), so a key-range
-    UPDATE on a clustered table never opens disjoint files."""
-    base = _tlog_latest_version(root)
-    live = _tlog_discovery_files(spark, root, base, predicate)
-    if not live:  # every file provably disjoint: a no-op statement
-        return base, []
-    pred = F.expr(predicate)
-    affected = sorted(
-        r["file"]
-        for r in _tlog_rows(spark, root, base, live)
-        .filter(pred)
-        .select("file")
-        .distinct()
-        .collect()
-    )
-    if not affected:
-        return base, []
-    v = base + 1
-    add = [f"{f}_u{v}" for f in affected]
-    # the snapshot read MATERIALIZES the affected files' deletion
-    # vectors in the rewrite — the commit's remove drops their
-    # bindings, and a rewrite that kept the doomed rows would
-    # resurrect them
-    rewritten = _tlog_rows(
-        spark, root, base, [os.path.join(root, f) for f in affected]
-    ).select(
-        F.concat("file", F.lit(f"_u{v}")).alias("tgt"),
-        "o_orderkey",
-        F.when(pred, F.col("o_totalprice") + bump)
-        .otherwise(F.col("o_totalprice"))
-        .alias("o_totalprice"),
-    )
-    _, stats = _tlog_staged_write_with_stats(rewritten, root, add)
-    version = _tlog_commit_rebase(
-        root, add=add, remove=affected, base_version=base,
-        read_set=set(affected), stats=stats or None,
-    )
-    return version, add
+    return TableLogWrite(version, add, cow, dv, untouched)
 
 
 def _tlog_dml_root(sf_dir: str) -> str:
@@ -3985,10 +4043,11 @@ def _tlog_apply_dml(spark: SparkSession, sf_dir: str, root: str) -> None:
             wipe_root(root)
             _tlog_build(spark, sf_dir, root)
         if _tlog_latest_version(root) == 2:
-            _tlog_dml_delete_where(spark, root, _TLOG_DELETE_PRED)
+            _tlog_delete(spark, root, _TLOG_DELETE_PRED)
         if _tlog_latest_version(root) == 3:
-            _tlog_dml_update_set(
-                spark, root, _TLOG_UPDATE_PRED, _TLOG_UPDATE_BUMP
+            _tlog_update(
+                spark, root, _TLOG_UPDATE_PRED,
+                {"o_totalprice": f"o_totalprice + {_TLOG_UPDATE_BUMP}"},
             )
 
     built_once(root, "_DML", stamp, build)

@@ -25,6 +25,14 @@ def test_driver_surface_shapes():
     assert set(os_) <= set(qs), "every oracle key must be a query key"
 
 
+def test_driver_surface_covers_the_registry():
+    """queries() serves every registry entry exactly once, and
+    oracle_sql() exactly the entries that carry an oracle, with it."""
+    qs, os_ = se.queries(), se.oracle_sql()
+    assert len(qs) == len(REG) and set(qs) == set(REG)
+    assert os_ == {n: s.oracle for n, s in REG.items() if s.oracle is not None}
+
+
 @pytest.mark.parametrize("spec", ALL_SPECS, ids=[s.name for s in ALL_SPECS])
 def test_query_executes_smoke(spark, spec):
     df = spec.fn(spark, SF_SMOKE)

@@ -1587,7 +1587,7 @@ def test_delete_where_picks_mechanism_per_file(spark, tlog_dir):
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _TLOG_DML_DV_MAX_FRACTION,
-        _tlog_dml_delete_where,
+        _tlog_delete,
         _tlog_dv_frame,
         _tlog_live_dvs,
     )
@@ -1616,7 +1616,8 @@ def test_delete_where_picks_mechanism_per_file(spark, tlog_dir):
     }
     survivors_expected = rel.filter(~F.expr(pred)).count()
 
-    v, dv, rewritten = _tlog_dml_delete_where(spark, tlog_dir, pred)
+    w = _tlog_delete(spark, tlog_dir, pred)
+    v, dv, rewritten = w.version, w.dv, w.add
     commit = json.load(open(os.path.join(tlog_dir, "_log", f"{v:06d}.json")))
     # full-match file dropped, nothing re-added for it
     assert "file_C" in commit["remove"]
@@ -1647,7 +1648,7 @@ def test_update_set_rewrites_only_affected_files(spark, tlog_dir):
     import pyspark.sql.functions as F
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_dml_update_set,
+        _tlog_update,
     )
 
     rel = spark.read.parquet(*_tlog_live_files(tlog_dir, 2))
@@ -1659,7 +1660,10 @@ def test_update_set_rewrites_only_affected_files(spark, tlog_dir):
         f: os.stat(os.path.join(tlog_dir, f)).st_mtime_ns
         for f in ("file_C", "file_D")
     }
-    v, add = _tlog_dml_update_set(spark, tlog_dir, "o_orderkey % 12 = 0", 2.5)
+    w = _tlog_update(
+        spark, tlog_dir, "o_orderkey % 12 = 0", {"o_totalprice": "o_totalprice + 2.5"}
+    )
+    v, add = w.version, w.add
     assert add == [f"file_A_u{v}"]
     commit = json.load(open(os.path.join(tlog_dir, "_log", f"{v:06d}.json")))
     assert commit["remove"] == ["file_A"]
@@ -1709,9 +1713,9 @@ def test_dml_discovery_prunes_on_manifest_stats(spark):
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_apply_compact,
         _tlog_commit,
-        _tlog_dml_delete_where,
-        _tlog_dml_update_set,
+        _tlog_delete,
         _tlog_live_stats,
+        _tlog_update,
     )
 
     root = tempfile.mkdtemp(prefix="hbdbps_tlog_dmlprune_")
@@ -1754,15 +1758,16 @@ def test_dml_discovery_prunes_on_manifest_stats(spark):
     assert disjoint_from(ulo, uhi), "update range must also skip >=1 group"
     scans._tlog_relation = recording
     try:
-        v, dv, rewritten = _tlog_dml_delete_where(
-            spark, root, f"o_orderkey BETWEEN {lo} AND {hi}"
-        )
+        w = _tlog_delete(spark, root, f"o_orderkey BETWEEN {lo} AND {hi}")
+        v, dv, rewritten = w.version, w.dv, w.add
         assert not set(scanned) & disjoint, "DELETE discovery opened disjoint files"
         assert "file_nostats" in scanned, "stats-less file must be conservatively scanned"
         scanned.clear()
-        v2, add = _tlog_dml_update_set(
-            spark, root, f"o_orderkey BETWEEN {ulo} AND {uhi}", 1.0
+        w = _tlog_update(
+            spark, root, f"o_orderkey BETWEEN {ulo} AND {uhi}",
+            {"o_totalprice": "o_totalprice + 1.0"},
         )
+        v2, add = w.version, w.add
         assert not set(scanned) & disjoint_from(ulo, uhi), (
             "UPDATE discovery opened disjoint files"
         )
@@ -1829,8 +1834,8 @@ def test_rewrites_record_per_column_stats(spark, tlog_dir):
     files it adds (r14): MERGE rewrites and DML UPDATE rewrites leave
     their new file groups prunable on any column."""
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_dml_update_set,
         _tlog_live_stats,
+        _tlog_update,
     )
 
     _tlog_apply_merge(spark, SF_SMOKE, tlog_dir)
@@ -1838,7 +1843,10 @@ def test_rewrites_record_per_column_stats(spark, tlog_dir):
     st = _tlog_live_stats(tlog_dir, v)
     for g in ("file_A_m1", "file_C_m1", "file_I_m1"):
         assert {"o_orderkey", "o_totalprice"} <= st.get(g, {}).keys(), g
-    v2, add = _tlog_dml_update_set(spark, tlog_dir, "o_orderkey % 12 = 0", 2.5)
+    w = _tlog_update(
+        spark, tlog_dir, "o_orderkey % 12 = 0", {"o_totalprice": "o_totalprice + 2.5"}
+    )
+    v2, add = w.version, w.add
     st2 = _tlog_live_stats(tlog_dir, v2)
     assert add
     for g in add:
@@ -3312,18 +3320,21 @@ def test_dml_update_enforces_live_constraints_by_default(spark, tlog_dir):
         _tlog_add_constraint,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_dml_update_set,
+        _tlog_update,
     )
 
     _tlog_add_constraint(spark, tlog_dir, "pp", "o_totalprice > 0")
     base = _tlog_latest_version(tlog_dir)
     with pytest.raises(Exception, match="pp violated|CHECK constraint"):
-        _tlog_dml_update_set(
-            spark, tlog_dir, "o_orderkey % 4 = 0", -1_000_000.0
+        _tlog_update(
+            spark, tlog_dir, "o_orderkey % 4 = 0",
+            {"o_totalprice": "o_totalprice + -1000000.0"},
         )
     assert _tlog_latest_version(tlog_dir) == base, "rejected UPDATE committed"
     # a conforming UPDATE passes the same gate
-    v = _tlog_dml_update_set(spark, tlog_dir, "o_orderkey % 4 = 0", 2.0)
+    v = _tlog_update(
+        spark, tlog_dir, "o_orderkey % 4 = 0", {"o_totalprice": "o_totalprice + 2.0"}
+    )
     assert v[0] == base + 1
 
 
@@ -4024,10 +4035,10 @@ def test_colmap_delete_is_merge_on_read_across_cohorts(spark, tmp_path):
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
         _TLOG_CMD_PRED,
         _tlog_apply_cmap,
-        _tlog_colmap_delete,
         _tlog_colmap_translate,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_delete,
         _tlog_live_dvs,
     )
     from tests.conftest import SF_SMOKE
@@ -4053,7 +4064,8 @@ def test_colmap_delete_is_merge_on_read_across_cohorts(spark, tmp_path):
         for g in ("file_A", "file_C", "file_D", "file_F")
         for p in glob.glob(os.path.join(root, g, "*.parquet"))
     }
-    v, dv = _tlog_colmap_delete(spark, root, _TLOG_CMD_PRED)
+    w = _tlog_delete(spark, root, _TLOG_CMD_PRED)
+    v, dv = w.version, w.dv
     # (b) one commit; sidecars span both spellings' cohorts
     assert v == base + 1
     assert "file_F" in dv  # post-rename cohort doomed
@@ -5093,6 +5105,126 @@ def test_mapped_read_applies_deletion_vectors(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
+@pytest.mark.parametrize("statement", ["plain_merge", "plain_update", "bucketed_delete"])
+def test_rewrite_keeps_dv_deleted_rows_deleted(spark, tmp_path, statement):
+    """A copy-on-write rewrite reads through the snapshot read: a
+    deletion vector bound on a file the statement rewrites (here the
+    ``o_orderkey % 24 = 0`` rows; the file keeps other matched rows)
+    must keep those rows deleted after the rewrite drops the binding —
+    for MERGE and UPDATE on a plain table and DELETE on a bucketed
+    one."""
+    import pyspark.sql.functions as F
+
+    from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
+        _tlog_bucketed_commit,
+        _tlog_bucketed_stage,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_commit_rebase,
+        _tlog_delete,
+        _tlog_live_dvs,
+        _tlog_rows,
+        _tlog_update,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+        load_table,
+    )
+
+    doomed = "o_orderkey % 24 = 0 AND o_orderkey > 0"  # MERGE inserts key -0
+    root = str(tmp_path / statement)
+    if statement == "bucketed_delete":
+        os.makedirs(os.path.join(root, "_log"))
+        raw = load_table(spark, SF_SMOKE, "orders").select(
+            "o_orderkey", "o_totalprice"
+        )
+        spec8 = ("o_orderkey", 8)
+        for v, (name, parity) in enumerate((("file_bkt0", 0), ("file_bkt1", 1))):
+            _tlog_bucketed_stage(
+                spark, raw.filter(F.col("o_orderkey") % 2 == parity), root,
+                name, spec8,
+            )
+            _tlog_bucketed_commit(
+                root, [name], v - 1, spec8,
+                partitioning=(
+                    {"spec_id": 0, "rule": "bucket(o_orderkey, 8)"}
+                    if v == 0 else None
+                ),
+            )
+        target = "file_bkt0"  # the even keys, every doomed key among them
+    else:
+        _tlog_build(spark, SF_SMOKE, root)
+        target = "file_A"  # the o_orderkey % 4 = 0 slice
+    base = _tlog_latest_version(root)
+    sidecar = f"dv_{target}_v{base + 1}"
+    spark.read.parquet(os.path.join(root, target)).filter(doomed).select(
+        "o_orderkey"
+    ).write.parquet(os.path.join(root, sidecar))
+    _tlog_commit_rebase(
+        root, add=[], remove=[], base_version=base,
+        read_set={target}, dv={target: sidecar},
+    )
+    head = _tlog_latest_version(root)
+    keys = spark.read.parquet(os.path.join(root, sidecar))
+
+    def visible(version: int) -> int:
+        """How many of the sidecar's keys the snapshot read shows."""
+        return _tlog_rows(spark, root, version).join(
+            keys, "o_orderkey", "left_semi"
+        ).count()
+
+    assert keys.count() > 0 and visible(head) == 0
+
+    if statement == "plain_merge":
+        _tlog_apply_merge(spark, SF_SMOKE, root)
+    elif statement == "plain_update":
+        _tlog_update(
+            spark, root, "o_orderkey % 8 = 0", {"o_totalprice": "o_totalprice + 1.0"}
+        )
+    else:
+        _tlog_delete(spark, root, "o_orderkey % 10 = 4")
+    after = _tlog_latest_version(root)
+    commit = json.load(open(os.path.join(root, "_log", f"{after:06d}.json")))
+    assert after == head + 1 and target in commit["remove"]  # rewritten
+    assert target not in _tlog_live_dvs(root, after)  # binding dropped
+    assert visible(after) == 0
+
+
+@pytest.mark.parametrize("layout", ["plain", "bucketed"])
+def test_delete_keeps_rows_whose_predicate_is_null(spark, tmp_path, layout):
+    """DELETE WHERE removes the rows its predicate holds for, as in SQL:
+    a row whose predicate is NULL (here a NULL price) survives the
+    copy-on-write rewrite of its file."""
+    from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
+        _tlog_bucketed_commit,
+        _tlog_bucketed_stage,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_delete,
+        _tlog_rows,
+    )
+
+    root = str(tmp_path / layout)
+    os.makedirs(os.path.join(root, "_log"))
+    df = spark.createDataFrame(
+        [(1, 5.0), (2, None), (3, 2000.0), (4, 7.0)],
+        "o_orderkey long, o_totalprice double",
+    )
+    if layout == "bucketed":
+        spec = ("o_orderkey", 8)
+        _tlog_bucketed_stage(spark, df, root, "file_A", spec)
+        _tlog_bucketed_commit(
+            root, ["file_A"], -1, spec,
+            partitioning={"spec_id": 0, "rule": "bucket(o_orderkey, 8)"},
+        )
+    else:
+        df.coalesce(1).write.parquet(os.path.join(root, "file_A"))
+        _tlog_commit(root, add=["file_A"], remove=[], base_version=-1)
+    w = _tlog_delete(spark, root, "o_totalprice < 1000")
+    assert w.remove == ["file_A"] and not w.dv  # half the rows: CoW
+    got = _tlog_rows(spark, root, w.version).drop("file").collect()
+    assert sorted(map(tuple, got), key=str) == [(2, None), (3, 2000.0)]
+
+
 def test_colmap_merge_updates_both_spellings_and_inserts_once(spark, tmp_path):
     """S9-cmap-mrg pins: (a) ONE commit, rewrites + the insert group,
     all bound at the head spelling; (b) a matched key present in BOTH
@@ -5533,10 +5665,10 @@ def test_colmap_update_skips_group_whose_matches_are_all_dv_dead(spark, tmp_path
     and aborting under require_all on a legal table state."""
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
         _tlog_apply_cmap,
-        _tlog_colmap_update,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit_rebase,
+        _tlog_update,
     )
 
     root = str(tmp_path / "cmudv")
@@ -5552,9 +5684,10 @@ def test_colmap_update_skips_group_whose_matches_are_all_dv_dead(spark, tmp_path
     )
     head = _tlog_latest_version(root)
     # the predicate matches ONLY file_A's slice — every match is DV-dead
-    version, rewritten, untouched = _tlog_colmap_update(
-        spark, root, "o_orderkey % 4 = 0", "price_usd", 1.0
+    w = _tlog_update(
+        spark, root, "o_orderkey % 4 = 0", {"price_usd": "price_usd + 1.0"}
     )
+    version, rewritten, untouched = w.version, w.remove, w.untouched
     assert rewritten == []
     assert "file_A" in untouched
     assert version == head  # a no-op statement publishes no commit
@@ -5568,10 +5701,10 @@ def test_colmap_merge_skips_group_whose_matches_are_all_dv_dead(spark, tmp_path)
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
         _tlog_apply_cmap,
-        _tlog_colmap_merge,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit_rebase,
+        _tlog_merge,
     )
 
     root = str(tmp_path / "cmmdv")
@@ -5588,14 +5721,13 @@ def test_colmap_merge_skips_group_whose_matches_are_all_dv_dead(spark, tmp_path)
     head = _tlog_latest_version(root)
     # source keys drawn from file_A only — all its rows are DV-dead
     updates = file_a.select(
-        "o_orderkey", F.lit(999.0).alias("new_price")
+        "o_orderkey", F.lit(999.0).alias("price_usd")
     ).limit(5)
     inserts = spark.createDataFrame(
         [(999999991, 1.25)], "o_orderkey long, price_usd double"
     )
-    version, rewritten, untouched = _tlog_colmap_merge(
-        spark, root, updates, inserts
-    )
+    w = _tlog_merge(spark, root, updates, inserts)
+    version, rewritten, untouched = w.version, w.remove, w.untouched
     assert rewritten == []
     assert "file_A" in untouched
     assert version == head + 1  # the insert leg still commits
@@ -6192,16 +6324,16 @@ def test_bucketed_dml_cow_through_the_layout_gate(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
-        _tlog_bucket_delete,
         _tlog_bucket_evolve,
         _tlog_bucket_group_specs,
-        _tlog_bucket_update,
         _tlog_bucketed_commit,
         _tlog_bucketed_serve_mixed,
         _tlog_bucketed_stage,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_change_units,
+        _tlog_delete,
+        _tlog_update,
     )
     from hadoop_based_distributed_batch_processing_system_spark.plans.inspect import (
         physical_plan,
@@ -6263,7 +6395,7 @@ def test_bucketed_dml_cow_through_the_layout_gate(spark, tmp_path):
         p: os.stat(p).st_mtime_ns
         for p in _glob.glob(os.path.join(root, "file_bkt1", "*.parquet"))
     }
-    v2 = _tlog_bucket_delete(spark, root, "o_orderkey % 10 = 4")
+    v2 = _tlog_delete(spark, root, "o_orderkey % 10 = 4").version
     assert v2 == v1 + 1
     assert odd_mtimes == {p: os.stat(p).st_mtime_ns for p in odd_mtimes}
     c2 = json.load(open(os.path.join(root, "_log", f"{v2:06d}.json")))
@@ -6287,10 +6419,10 @@ def test_bucketed_dml_cow_through_the_layout_gate(spark, tmp_path):
 
     # (c) UPDATE moves the bucket key: re-hash lands moved rows right
     shift = 5_000_000
-    v3 = _tlog_bucket_update(
+    v3 = _tlog_update(
         spark, root, "o_orderkey % 10 = 2",
         {"o_orderkey": f"o_orderkey + {shift}"},
-    )
+    ).version
     assert v3 == v2 + 1
     assert odd_mtimes == {p: os.stat(p).st_mtime_ns for p in odd_mtimes}
     assert _routing_violations(
@@ -6310,7 +6442,7 @@ def test_bucketed_dml_cow_through_the_layout_gate(spark, tmp_path):
     assert _agg(served) == _agg(expect)
 
     # (d) DELETE that empties a whole group: removed, nothing staged
-    v4 = _tlog_bucket_delete(spark, root, "o_orderkey % 2 = 1")
+    v4 = _tlog_delete(spark, root, "o_orderkey % 2 = 1").version
     c4 = json.load(open(os.path.join(root, "_log", f"{v4:06d}.json")))
     assert c4["remove"] == ["file_bkt1"] and c4["add"] == []
     assert "file_bkt1" not in {
@@ -6319,11 +6451,11 @@ def test_bucketed_dml_cow_through_the_layout_gate(spark, tmp_path):
     expect = expect.filter("o_orderkey % 2 = 0")
 
     # no-op DML: nothing matches, no commit
-    assert _tlog_bucket_delete(spark, root, "o_orderkey < 0") == v4
+    assert _tlog_delete(spark, root, "o_orderkey < 0").version == v4
 
     # (e) evolve the spec, then let ONE statement pay the layout debt
     v5 = _tlog_bucket_evolve(root, "o_orderkey", 16)
-    v6 = _tlog_bucket_delete(spark, root, "o_orderkey % 10 = 6")
+    v6 = _tlog_delete(spark, root, "o_orderkey % 10 = 6").version
     assert v6 == v5 + 1
     specs = _tlog_bucket_group_specs(root, v6)
     assert specs == {f"file_bdel{v6}": ("o_orderkey", 16)}
@@ -6355,10 +6487,12 @@ def test_bucketed_merge_colocates_upserts(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
-        _tlog_bucket_merge,
         _tlog_bucketed_commit,
         _tlog_bucketed_serve_mixed,
         _tlog_bucketed_stage,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_merge,
     )
     from hadoop_based_distributed_batch_processing_system_spark.plans.inspect import (
         physical_plan,
@@ -6410,7 +6544,7 @@ def test_bucketed_merge_colocates_upserts(spark, tmp_path):
         (-F.col("o_orderkey")).alias("o_orderkey"),
         (F.col("o_totalprice") + 0.25).alias("o_totalprice"),
     )
-    v2 = _tlog_bucket_merge(spark, root, updates, inserts)
+    v2 = _tlog_merge(spark, root, updates, inserts).version
     assert v2 == v1 + 1
     assert even_mtimes == {p: os.stat(p).st_mtime_ns for p in even_mtimes}
     c2 = json.load(open(os.path.join(root, "_log", f"{v2:06d}.json")))
@@ -6447,7 +6581,7 @@ def test_bucketed_merge_colocates_upserts(spark, tmp_path):
         (F.col("o_orderkey") + 50_000_000).alias("o_orderkey"),
         "o_totalprice",
     )
-    v3 = _tlog_bucket_merge(spark, root, far.limit(0), far)
+    v3 = _tlog_merge(spark, root, far.limit(0), far).version
     c3 = json.load(open(os.path.join(root, "_log", f"{v3:06d}.json")))
     assert c3["remove"] == [] and c3["add"] == [f"file_bmrg{v3}"]
     expect = expect.unionByName(far)
@@ -6455,7 +6589,7 @@ def test_bucketed_merge_colocates_upserts(spark, tmp_path):
     assert _agg(served) == _agg(expect)
 
     # (e) empty merge: no commit
-    assert _tlog_bucket_merge(spark, root, far.limit(0), far.limit(0)) == v3
+    assert _tlog_merge(spark, root, far.limit(0), far.limit(0)).version == v3
 
 
 def test_bucketed_serve_point_lookup_prunes_buckets(spark):
@@ -6681,12 +6815,14 @@ def test_bucketed_colmap_delete_respells_then_applies(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
-        _tlog_bucket_colmap_delete,
         _tlog_bucket_key_rename,
         _tlog_bucketed_commit,
         _tlog_bucketed_serve_mapped,
         _tlog_bucketed_stage,
         _tlog_colmap_translate,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_delete,
     )
     from hadoop_based_distributed_batch_processing_system_spark.plans.inspect import (
         physical_plan,
@@ -6750,7 +6886,7 @@ def test_bucketed_colmap_delete_respells_then_applies(spark, tmp_path):
         p: os.stat(p).st_mtime_ns
         for p in _glob.glob(os.path.join(root, "file_bktB", "*.parquet"))
     }
-    v4 = _tlog_bucket_colmap_delete(spark, root, pred)
+    v4 = _tlog_delete(spark, root, pred).version
     assert v4 == v3 + 1
     c4 = json.load(open(os.path.join(root, "_log", f"{v4:06d}.json")))
     # (b) file_bktB shares file_bktA's cohort but none of its rows
@@ -6801,7 +6937,7 @@ def test_bucketed_colmap_delete_respells_then_applies(spark, tmp_path):
     )
     assert "Exchange" not in plan
     # nothing left to match: no-op without a commit
-    assert _tlog_bucket_colmap_delete(spark, root, "order_id % 10 = -7") == v4
+    assert _tlog_delete(spark, root, "order_id % 10 = -7").version == v4
 
 
 def test_mapped_bucketed_stream_ingest_tracks_spelling_per_batch(spark, tmp_path):
