@@ -40,23 +40,27 @@ from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
 )
 from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
     TableLogConflictError,
+    _TLOG_COMMITS,
     _TLOG_DELETE_PRED,
     _TLOG_FILE_RE,
+    _TLOG_SLICES,
     _TLOG_UPDATE_BUMP,
     _TLOG_UPDATE_PRED,
     _tlog_apply_changes,
     _tlog_apply_dml,
-    _tlog_build,
+    _tlog_batch_committed,
     _tlog_bindings_ever,
-    _tlog_change_rows_for,
-    _tlog_change_units,
-    _tlog_changes_fingerprint,
-    _tlog_colmap_binding,
-    _tlog_commit_rebase,
     _tlog_bucket_rule,
     _tlog_bucket_spec,
     _tlog_bucketed_commit_validate,
     _tlog_bucketed_stage,
+    _tlog_build,
+    _tlog_change_rows_for,
+    _tlog_change_units,
+    _tlog_changes_fingerprint,
+    _tlog_colmap_binding,
+    _tlog_commit,
+    _tlog_commit_rebase,
     _tlog_commit_ts,
     _tlog_delete,
     _tlog_dml_root,
@@ -68,19 +72,26 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_land,
     _tlog_latest_version,
     _tlog_latest_version_safe,
+    _tlog_live_colmap,
+    _tlog_live_constraints,
     _tlog_live_dvs,
     _tlog_live_files,
+    _tlog_live_partitioning,
     _tlog_live_stats,
     _tlog_merge,
     _tlog_read,
     _tlog_relation,
-    _tlog_respell,
+    _tlog_replay_map,
+    _tlog_replicate,
+    _tlog_rewrite,
     _tlog_root,
     _tlog_rows,
     _tlog_snapshot_fingerprints,
     _tlog_staged_write_with_stats,
     _tlog_synthetic_stream,
+    _tlog_ts_stamps,
     _tlog_update,
+    _tlog_vacuum,
     _tlog_vacuumed,
     _tlog_version_as_of,
     _tlog_zone_write,
@@ -152,9 +163,6 @@ def _tlog_wap_audit(spark: SparkSession, root: str, payload: dict) -> list[str]:
     (presumed commit, VERDICT r14 #1).
     One bounded agg job over only the staged bytes. Returns the list
     of violations — empty means publishable."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_constraints,
-    )
 
     failures: list[str] = []
     files = [os.path.join(root, g) for g in payload["add"]]
@@ -719,10 +727,9 @@ def _tlog_compact_trigger(
     thousands of tables without touching the data plane. Below the
     threshold nothing happens (no commit, no job). At or above it, the
     ``k`` smallest groups (size, then name — deterministic) rewrite
-    into one through the staged-write kernel, applying any live DV
-    bindings (a compaction that ignored sidecars would resurrect
-    deleted rows), and ONE OCC rebase commit publishes the merge.
-    Returns the decision record."""
+    into one key-sorted group through :func:`_tlog_rewrite` (live DV
+    bindings applied, one ``dataChange: false`` commit). Returns the
+    decision record."""
     base = _tlog_latest_version(root)
     live = [os.path.basename(p) for p in _tlog_live_files(root, base)]
     if len(live) < threshold:
@@ -732,20 +739,8 @@ def _tlog_compact_trigger(
         }
     sizes = {g: _tlog_group_bytes(root, g) for g in live}
     victims = sorted(live, key=lambda g: (sizes[g], g))[:k]
-    merged = f"file_ctr_{base + 1}"
-    rel = _tlog_rows(spark, root, base, [os.path.join(root, g) for g in victims])
-    promoted, stats = _tlog_staged_write_with_stats(
-        rel.select("o_orderkey", "o_totalprice").withColumn("tgt", F.lit(merged)),
-        root,
-        [merged],
-    )
-    v = _tlog_commit_rebase(
-        root,
-        add=promoted,
-        remove=victims,
-        base_version=base,
-        read_set=set(victims),
-        stats=stats,
+    v = _tlog_rewrite(
+        spark, root, victims, f"file_ctr_{base + 1}", cluster=["o_orderkey"]
     )
     return {
         "fired": 1, "live_before": len(live),
@@ -789,15 +784,7 @@ def _tlog_apply_trigger(spark: SparkSession, sf_dir: str, root: str) -> None:
             .filter(F.expr(_TLOG_TRG_PRED))
             .select("o_orderkey", "o_totalprice")
         )
-        promoted, stats = _tlog_staged_write_with_stats(
-            slice_df.withColumn("tgt", F.lit("file_trg_small")),
-            root,
-            ["file_trg_small"],
-        )
-        _tlog_commit_rebase(
-            root, add=promoted, remove=[], base_version=2, read_set=set(),
-            stats=stats,
-        )
+        _tlog_land(spark, root, slice_df, None, "file_trg_small")
         d2 = _tlog_compact_trigger(spark, root)
         if not d2["fired"]:
             raise RuntimeError(f"trigger failed to fire at threshold: {d2}")
@@ -1061,9 +1048,6 @@ def _tlog_rollup_consume(
     MIN/MAX are deliberately absent: they are not self-maintainable
     under deletes (a delete of the current max forces a rescan), the
     textbook materialized-view-maintenance boundary."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_batch_committed,
-    )
 
     if _tlog_batch_committed(rollup_root, version):
         return  # replayed source commit: idempotent no-op
@@ -1352,15 +1336,7 @@ def _tlog_apply_clone(spark: SparkSession, sf_dir: str, root: str) -> None:
             .filter(F.expr(_TLOG_CLN_ADD_PRED))
             .select("o_orderkey", "o_totalprice")
         )
-        promoted, stats = _tlog_staged_write_with_stats(
-            slice_df.withColumn("tgt", F.lit("file_cln_add")),
-            root,
-            ["file_cln_add"],
-        )
-        _tlog_commit_rebase(
-            root, add=promoted, remove=[], base_version=0, read_set=set(),
-            stats=stats,
-        )
+        _tlog_land(spark, root, slice_df, None, "file_cln_add")
         # local DV on the borrowed file_D: the clone deletes rows the
         # source keeps — the sidecar lives in the CLONE
         rel = os.path.relpath(src_root, root)
@@ -1457,7 +1433,8 @@ def _tlog_apply_ev_cluster(spark: SparkSession, sf_dir: str, root: str) -> None:
     batches are arrival-ordered (hash-split here — the worst case:
     every batch spans the whole month), so a time-range query prunes
     nothing; one OPTIMIZE-style rewrite into 8-day groups gives every
-    group a TIGHT ts bound in the manifest stats. The commit carries
+    group a TIGHT ts bound in the manifest stats, each group sorted by
+    time (:func:`_tlog_rewrite`). The commit carries
     ``dataChange: false`` — live content is identical, so change-feed
     consumers (the rollup, the stream feeds) skip it instead of
     netting a table-sized add/remove pair to zero (Delta's OPTIMIZE
@@ -1475,28 +1452,11 @@ def _tlog_apply_ev_cluster(spark: SparkSession, sf_dir: str, root: str) -> None:
             os.path.basename(p) for p in _tlog_live_files(root, base)
         ]
         week = F.floor((F.dayofmonth("ts") - 1) / 8).cast("int")
-        groups = [f"file_evw{w}_v{base + 1}" for w in range(_TLOG_EV_WEEKS)]
-        clustered = (
-            _tlog_relation(spark, [os.path.join(root, g) for g in live])
-            .withColumn(
-                "tgt",
-                F.concat(
-                    F.lit("file_evw"), week.cast("string"),
-                    F.lit(f"_v{base + 1}"),
-                ),
-            )
-        )
-        promoted, stats = _tlog_staged_write_with_stats(
-            clustered, root, groups, require_all=False
-        )
-        _tlog_commit_rebase(
-            root,
-            add=promoted,
-            remove=live,
-            base_version=base,
-            read_set=set(live),
-            stats=stats,
-            data_change=False,
+        _tlog_rewrite(
+            spark, root, live,
+            F.concat(F.lit("file_evw"), week.cast("string"), F.lit(f"_v{base + 1}")),
+            [f"file_evw{w}_v{base + 1}" for w in range(_TLOG_EV_WEEKS)],
+            ["ts", "event_id"],
         )
 
     built_once(root, "_CLUSTERED", stamp, build, resume=lambda: True)
@@ -1634,9 +1594,6 @@ def _tlog_add_constraint(
     readers could never trust it), then commit the name -> predicate
     mapping as replayed log metadata. Validation is one agg over the
     live files, applying live DVs; the commit is metadata-sized."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_constraints,
-    )
 
     base = _tlog_latest_version(root)
     rel = _tlog_rows(spark, root, base)
@@ -1668,10 +1625,6 @@ def _tlog_apply_chk(spark: SparkSession, sf_dir: str, root: str) -> None:
     constraint and a violating append are both REJECTED (asserted);
     v4 is a clean append through the enforcing write path."""
     import json
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_constraints,
-    )
 
     stamp = json.dumps(_TLOG_CHK_SPEC, sort_keys=True)
 
@@ -1713,16 +1666,7 @@ def _tlog_apply_chk(spark: SparkSession, sf_dir: str, root: str) -> None:
                 raise RuntimeError("constraint-violating append was written")
             if _tlog_latest_version(root) != 3:
                 raise RuntimeError("rejected append mutated the log")
-            promoted, stats = _tlog_staged_write_with_stats(
-                slice_df.withColumn("tgt", F.lit("file_chk_add")),
-                root,
-                ["file_chk_add"],
-                constraints=live_cons,
-            )
-            _tlog_commit_rebase(
-                root, add=promoted, remove=[], base_version=3,
-                read_set=set(), stats=stats,
-            )
+            _tlog_land(spark, root, slice_df, None, "file_chk_add")
 
     built_once(root, "_CHK", stamp, build)
 
@@ -1804,12 +1748,6 @@ def _tlog_apply_rid(spark: SparkSession, sf_dir: str, root: str) -> None:
     rewrite. Carrying the id is the entire feature: it is what lets
     downstream consumers recognize the re-keyed row as the same row."""
     import json
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _TLOG_COMMITS,
-        _TLOG_SLICES,
-        _tlog_commit,
-    )
 
     stamp = json.dumps(_TLOG_RID_SPEC, sort_keys=True)
 
@@ -2025,9 +1963,6 @@ def _tlog_pev_write_under_spec(
     rows by the rule it names (day(ts) or week(ts)); per-column stats
     record in the same write either way, which is what keeps readers
     layout-agnostic."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_partitioning,
-    )
 
     spec = _tlog_live_partitioning(root, base) or {"spec_id": 0, "rule": "day(ts)"}
     if spec["rule"] == "day(ts)":
@@ -2063,11 +1998,6 @@ def _tlog_apply_pev(spark: SparkSession, sf_dir: str, root: str) -> None:
     appends days 17+ as week files. The table ends with BOTH layouts
     live at once."""
     import json
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit,
-        _tlog_live_partitioning,
-    )
 
     stamp = json.dumps(_TLOG_PEV_SPEC, sort_keys=True)
 
@@ -2199,12 +2129,6 @@ def _tlog_apply_pcm(spark: SparkSession, sf_dir: str, root: str) -> None:
     layouts AND both spellings live at once, the state a long-lived
     production table actually reaches."""
     import json
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit,
-        _tlog_live_colmap,
-        _tlog_live_partitioning,
-    )
 
     stamp = json.dumps(_TLOG_PCM_SPEC, sort_keys=True)
 
@@ -2918,10 +2842,6 @@ def _tlog_catalog_mint_check(tables: dict[str, dict], grace: int) -> None:
     grace clamp already spared. Raises descriptively on a pin older
     than the window; pins whose root carries no log (bootstrap
     placeholders) pass through."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version,
-        _tlog_ts_stamps,
-    )
 
     for name, pin in sorted(tables.items()):
         logd = os.path.join(pin["root"], "_log")
@@ -3584,9 +3504,6 @@ def _tlog_apply_ccr(spark: SparkSession, sf_dir: str) -> tuple[dict, str]:
     whole or not at all, one swap per swap."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit,
-    )
     from hadoop_based_distributed_batch_processing_system_spark.sources.pyds import (
         register_catalog_feed_source,
     )
@@ -3775,11 +3692,6 @@ def _tlog_vacuum_floor(
     A grace wider than the table's history clamps the horizon to 0
     (vacuum deletes nothing). Returns
     (effective horizon, deleted groups)."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version as _latest_v,
-        _tlog_ts_stamps,
-        _tlog_vacuum,
-    )
 
     if (retain_version is None) == (retain_ts is None):
         raise ValueError("pass exactly one of retain_version / retain_ts")
@@ -3788,7 +3700,7 @@ def _tlog_vacuum_floor(
     floor = _tlog_catalog_retention_floor(root, catalogs or [])
     effective = retain_version if floor is None else min(retain_version, floor)
     if grace is not None:
-        latest = _latest_v(root)
+        latest = _tlog_latest_version(root)
         stamps = _tlog_ts_stamps(root, latest)
         cutoff = stamps[latest] - grace
         eligible = [v for v, t in enumerate(stamps) if t <= cutoff]
@@ -3809,10 +3721,6 @@ def _tlog_apply_vcf(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import json
     import shutil
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit,
-    )
-
     root, cat = _tlog_vcf_roots(sf_dir)
     stamp = json.dumps(_TLOG_VCF_SPEC, sort_keys=True)
 
@@ -3827,16 +3735,10 @@ def _tlog_apply_vcf(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         )
         # v3: compaction — one sorted rewrite; base groups now dead at
         # head, live ONLY through the catalog pin
-        live = _tlog_live_files(root, 2)
-        rel = _tlog_relation(spark, live).sortWithinPartitions("o_orderkey")
-        promoted, stats = _tlog_staged_write_with_stats(
-            rel.withColumn("tgt", F.lit("file_vcf_c")), root, ["file_vcf_c"],
-            constraints={},
-        )
-        _tlog_commit(
-            root, add=promoted,
-            remove=[os.path.basename(p) for p in live],
-            base_version=2, stats=stats or None, data_change=False,
+        _tlog_rewrite(
+            spark, root,
+            [os.path.basename(p) for p in _tlog_live_files(root, 2)],
+            "file_vcf_c", cluster=["o_orderkey"],
         )
         # v4: an append so the head and the pin diverge in content too
         slice_df = (
@@ -3844,14 +3746,7 @@ def _tlog_apply_vcf(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .filter(F.expr(_TLOG_VCF_PRED))
             .select("o_orderkey", "o_totalprice")
         )
-        promoted, stats = _tlog_staged_write_with_stats(
-            slice_df.withColumn("tgt", F.lit("file_vcf_a")), root,
-            ["file_vcf_a"],
-        )
-        _tlog_commit(
-            root, add=promoted, remove=[], base_version=3,
-            stats=stats or None,
-        )
+        _tlog_land(spark, root, slice_df, None, "file_vcf_a")
         # the FLOORED vacuum: retention says head, the pin says v2 —
         # the pin wins: everything the pinned snapshot references
         # survives (file_B, dead BEFORE the pin, is legitimately
@@ -4185,11 +4080,6 @@ def _tlog_apply_cdeep(spark: SparkSession, sf_dir: str, root: str) -> None:
     import json
     import shutil
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit,
-        _tlog_vacuum,
-    )
-
     stamp = json.dumps(_TLOG_CDEEP_SPEC, sort_keys=True)
 
     def build() -> None:
@@ -4208,15 +4098,7 @@ def _tlog_apply_cdeep(spark: SparkSession, sf_dir: str, root: str) -> None:
             .filter(F.expr(_TLOG_CDEEP_ADD_PRED))
             .select("o_orderkey", "o_totalprice")
         )
-        promoted, stats = _tlog_staged_write_with_stats(
-            slice_df.withColumn("tgt", F.lit("file_cd_add")),
-            root,
-            ["file_cd_add"],
-        )
-        _tlog_commit_rebase(
-            root, add=promoted, remove=[], base_version=0, read_set=set(),
-            stats=stats,
-        )
+        _tlog_land(spark, root, slice_df, None, "file_cd_add")
         # v2: local DV on the BORROWED file_D
         rel = os.path.relpath(src_root, root)
         doomed = (
@@ -4340,10 +4222,6 @@ def _tlog_colmap_prune(
     unknown binding or missing stats keeps conservatively. Returns
     (kept, skipped) group names — the property that makes rename
     free: pre-rename files keep pruning on their old spelling."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_colmap,
-        _tlog_replay_map,
-    )
 
     cmap = _tlog_live_colmap(root, version) or {"fields": []}
     fid = next(
@@ -4379,11 +4257,6 @@ def _tlog_apply_cmap(spark: SparkSession, sf_dir: str, root: str) -> None:
     v6 DROPS ``channel`` (pure metadata — field 3 leaves the logical
     schema; file_F keeps the bytes, unreachable)."""
     import json
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit,
-        _tlog_live_colmap,
-    )
 
     stamp = json.dumps(_TLOG_CMAP_SPEC, sort_keys=True)
 
@@ -4589,15 +4462,11 @@ def _tlog_apply_cmd(spark: SparkSession, sf_dir: str, root: str) -> None:
     files (physical price_usd) in the same statement."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version as _latest,
-    )
-
     stamp = json.dumps(_TLOG_CMD_SPEC, sort_keys=True)
 
     def build() -> None:
         _tlog_apply_cmap(spark, sf_dir, root)
-        if _latest(root) != 6:
+        if _tlog_latest_version(root) != 6:
             # a stale/crashed delete on this root: rebuild the base
             # lifecycle from scratch (WAP discipline)
             wipe_root(root)
@@ -4687,27 +4556,21 @@ def _tlog_colmap_compact(spark: SparkSession, root: str) -> tuple[int, list[str]
     mapping feature targets). A file group needs rewriting iff it
     carries a deletion-vector binding (the merge-on-read debt mapped
     DML defers by design) or its physical spelling differs from the
-    HEAD logical schema's. Each doomed cohort is read DV-applied,
-    re-spelled to the head names, and rewritten as key-ranged sorted
-    groups in ONE staged write; ONE OCC commit then adds the new
-    groups (bound to the head spelling in ``colphys``, per-column
-    stats observed in the write job), removes every rewritten group
-    (dropping their DV bindings and stale bindings on replay), and
-    carries ``dataChange=false`` — the rows were already logically
-    deleted, so change-feed consumers skip the rewrite entirely.
-    Groups already spelled at head with no DVs are NOT touched (their
-    mtimes survive — the incremental-OPTIMIZE property). Returns
-    (version, rewritten group names, kept group names).
+    HEAD logical schema's. The doomed groups go through ONE
+    :func:`_tlog_rewrite`: read DV-applied under the head spelling,
+    rewritten as key-ranged sorted groups bound to the head spelling,
+    one ``dataChange: false`` commit removing every rewritten group
+    (dropping their DV bindings and stale bindings on replay) — the
+    rows were already logically deleted, so change-feed consumers skip
+    the rewrite entirely. Groups already spelled at head with no DVs
+    are NOT touched (their mtimes survive — the incremental-OPTIMIZE
+    property). Returns (version, rewritten group names, kept group
+    names).
 
     Scale: cost = one scan per doomed binding signature (bounded by
     schema-change count) + the rewrite bytes; the commit is O(groups)
     metadata. Post-compact the table is single-spelling and DV-free,
     so readers drop both the per-cohort union and the anti-join."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_live_colmap,
-        _tlog_replay_map,
-    )
 
     base = _tlog_latest_version(root)
     cmap = _tlog_live_colmap(root, base)
@@ -4743,36 +4606,16 @@ def _tlog_colmap_compact(spark: SparkSession, root: str) -> tuple[int, list[str]
         if st is not None:
             key_lo = st[0] if key_lo is None else min(key_lo, st[0])
             key_hi = st[1] if key_hi is None else max(key_hi, st[1])
-    merged = _tlog_rows(
-        spark, root, base, [os.path.join(root, g) for g in sorted(doomed)]
-    ).drop("file")
     v = base + 1
     key_name = head_binding[key_fid]
     if key_lo is not None and key_lo < key_hi:
-        thr = (key_lo + key_hi) // 2
         groups = [f"file_cmc{v}_lo", f"file_cmc{v}_hi"]
-        merged = merged.withColumn(
-            "tgt",
-            F.when(F.col(key_name) <= F.lit(thr), groups[0]).otherwise(groups[1]),
-        )
+        cut = F.when(
+            F.col(key_name) <= F.lit((key_lo + key_hi) // 2), groups[0]
+        ).otherwise(groups[1])
     else:
-        groups = [f"file_cmc{v}_all"]
-        merged = merged.withColumn("tgt", F.lit(groups[0]))
-    merged = merged.sortWithinPartitions(key_name)
-    promoted, stats = _tlog_staged_write_with_stats(
-        # rows come from already-committed (validated) snapshots
-        merged, root, groups, require_all=False, constraints={}
-    )
-    version = _tlog_commit_rebase(
-        root,
-        add=promoted,
-        remove=doomed,
-        base_version=base,
-        read_set=set(doomed),
-        stats=stats or None,
-        data_change=False,
-        colphys={g: head_binding for g in promoted},
-    )
+        groups, cut = None, f"file_cmc{v}_all"
+    version = _tlog_rewrite(spark, root, doomed, cut, groups, [key_name])
     return version, doomed, kept
 
 
@@ -4789,16 +4632,11 @@ def _tlog_apply_cmc(spark: SparkSession, sf_dir: str, root: str) -> None:
     DVs materialized, while file_G survives byte-identical."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit,
-        _tlog_latest_version as _latest,
-    )
-
     stamp = json.dumps(_TLOG_CMC_SPEC, sort_keys=True)
 
     def build() -> None:
         _tlog_apply_cmd(spark, sf_dir, root)
-        if _latest(root) != 7:
+        if _tlog_latest_version(root) != 7:
             # stale/crashed state on this root: rebuild the whole
             # lifecycle from scratch (WAP discipline)
             wipe_root(root)
@@ -4810,13 +4648,9 @@ def _tlog_apply_cmc(spark: SparkSession, sf_dir: str, root: str) -> None:
             .filter(F.expr(_TLOG_CMC_PRED))
             .select("o_orderkey", F.col("o_totalprice").alias("price_usd"))
         )
-        promoted, stats = _tlog_staged_write_with_stats(
-            slice_df.withColumn("tgt", F.lit("file_G")), root, ["file_G"]
-        )
-        _tlog_commit(
-            root, add=promoted, remove=[], base_version=7,
-            stats=stats or None,
-            colphys={"file_G": {"1": "o_orderkey", "2": "price_usd"}},
+        _tlog_land(
+            spark, root, slice_df, None, "file_G",
+            colphys={"1": "o_orderkey", "2": "price_usd"},
         )
         # v9: OPTIMIZE under the mapping
         _tlog_colmap_compact(spark, root)
@@ -4919,15 +4753,11 @@ def _tlog_apply_cmu(spark: SparkSession, sf_dir: str, root: str) -> None:
     never rewritten."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version as _latest,
-    )
-
     stamp = json.dumps(_TLOG_CMU_SPEC, sort_keys=True)
 
     def build() -> None:
         _tlog_apply_cmap(spark, sf_dir, root)
-        if _latest(root) != 6:
+        if _tlog_latest_version(root) != 6:
             wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
         w = _tlog_update(spark, root, _TLOG_CMU_PRED, _TLOG_CMU_ASSIGN)
@@ -5021,10 +4851,6 @@ def _tlog_colmap_restore(spark: SparkSession, root: str, to_version: int) -> int
     re-binding would strand the mapped read on the bootstrap error).
     Bindings come from the immutable cross-version union — the same
     resolution the mapped change feed uses (``_tlog_bindings_ever``)."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_live_colmap,
-    )
 
     head = _tlog_latest_version(root)
     target_files = {
@@ -5066,15 +4892,11 @@ def _tlog_apply_cmr(spark: SparkSession, sf_dir: str, root: str) -> None:
     file_F return — re-binding the re-added file)."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version as _latest,
-    )
-
     stamp = json.dumps(_TLOG_CMR_SPEC, sort_keys=True)
 
     def build() -> None:
         _tlog_apply_cmap(spark, sf_dir, root)
-        if _latest(root) != 6:
+        if _tlog_latest_version(root) != 6:
             wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
         _tlog_colmap_restore(spark, root, 3)   # roll back across the rename
@@ -5132,9 +4954,6 @@ def table_log_colmap_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata, and production formats carry it per manifest entry."""
     root = _tlog_cmr_root(sf_dir)
     _tlog_apply_cmr(spark, sf_dir, root)
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_colmap,
-    )
 
     parts = []
     for phase, v in (("rolled_back", 7), ("rolled_forward", 8)):
@@ -5209,15 +5028,11 @@ def _tlog_apply_cmm(spark: SparkSession, sf_dir: str, root: str) -> None:
     inserts (landing head-spelled)."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version as _latest,
-    )
-
     stamp = json.dumps(_TLOG_CMM_SPEC, sort_keys=True)
 
     def build() -> None:
         _tlog_apply_cmap(spark, sf_dir, root)
-        if _latest(root) != 6:
+        if _tlog_latest_version(root) != 6:
             wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
         _tlog_merge(spark, root, *_tlog_cmm_source(spark, sf_dir))
@@ -5310,10 +5125,6 @@ def _tlog_colmap_add_constraint(
     validator's raw multi-cohort scan would crash on the spelling a
     cohort lacks), and the LOGICAL predicate is what commits: each
     WRITER translates it to its own spelling at enforcement time."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_live_constraints,
-    )
 
     base = _tlog_latest_version(root)
     snap = _tlog_rows(spark, root, base)
@@ -5341,11 +5152,6 @@ def _tlog_colmap_append(
     over its binding) before riding the staged write — a pre-rename
     producer is held to the renamed constraint without ever learning
     the rename. One staged write, one OCC commit binding the group."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_live_colmap,
-        _tlog_live_constraints,
-    )
 
     base = _tlog_latest_version(root)
     cmap = _tlog_live_colmap(root, base)
@@ -5381,15 +5187,11 @@ def _tlog_apply_cmk(spark: SparkSession, sf_dir: str, root: str) -> None:
     translating choke point."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version as _latest,
-    )
-
     stamp = json.dumps(_TLOG_CMK_SPEC, sort_keys=True)
 
     def build() -> None:
         _tlog_apply_cmap(spark, sf_dir, root)
-        if _latest(root) != 6:
+        if _tlog_latest_version(root) != 6:
             wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
         # an unsatisfiable mapped ADD is rejected after validating
@@ -5419,7 +5221,7 @@ def _tlog_apply_cmk(spark: SparkSession, sf_dir: str, root: str) -> None:
         except Exception as e:  # Spark wraps the raise_error
             if "positive" not in str(e):
                 raise
-        if _latest(root) != 7:
+        if _tlog_latest_version(root) != 7:
             raise RuntimeError("rejected append advanced the log")
         # v8: the clean append, still OLD-spelled, lands through the
         # same translating choke point
@@ -5522,15 +5324,11 @@ def _tlog_apply_cmx(spark: SparkSession, sf_dir: str, root: str) -> None:
     earlier statements' sidecar debt and binding churn."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version as _latest,
-    )
-
     stamp = json.dumps(_TLOG_CMX_SPEC, sort_keys=True)
 
     def build() -> None:
         _tlog_apply_cmap(spark, sf_dir, root)
-        if _latest(root) != 6:
+        if _tlog_latest_version(root) != 6:
             wipe_root(root)
             _tlog_apply_cmap(spark, sf_dir, root)
         _tlog_delete(spark, root, _TLOG_CMD_PRED)
@@ -5752,9 +5550,6 @@ def stream_table_log_replicate_colmap(spark: SparkSession, sf_dir: str) -> DataF
     src = _tlog_cmu_root(sf_dir)
     _tlog_apply_cmu(spark, sf_dir, src)
     dst = _tlog_rcm_root(sf_dir)
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_replicate,
-    )
 
     _tlog_replicate(
         spark, sf_dir, src, dst,
@@ -5792,10 +5587,6 @@ def _tlog_apply_scm(spark: SparkSession, sf_dir: str) -> str:
     physical ``o_totalprice`` — the mapping, not a rewrite, serves
     them under ``price_usd``."""
     import json
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit,
-    )
 
     src, root = _tlog_scm_dirs(sf_dir)
     stamp = json.dumps(_TLOG_SCM_SPEC, sort_keys=True)
@@ -5948,11 +5739,6 @@ def _tlog_apply_sdp(spark: SparkSession, sf_dir: str) -> str:
     post-drop commits bind ONLY ids 1/2: the channel bytes land
     physically and are unreachable from birth."""
     import json
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit,
-        _tlog_live_colmap,
-    )
 
     src, root = _tlog_sdp_dirs(sf_dir)
     stamp = json.dumps(_TLOG_SDP_SPEC, sort_keys=True)
@@ -6453,7 +6239,8 @@ def _tlog_bucket_rebucket(spark: SparkSession, root: str) -> int:
     skip it, the OPTIMIZE discipline). Restores single-spec serves and
     their zero-Exchange plans; a no-op (all groups already on the head
     spec) publishes nothing. Cost = read+write only the stale cohort
-    once — the same economics as every compaction here."""
+    once (:func:`_tlog_rewrite`, DVs applied) — the same economics as
+    every compaction here."""
     head = _tlog_latest_version(root)
     spec = _tlog_bucket_spec(root, head)
     if spec is None:
@@ -6466,15 +6253,7 @@ def _tlog_bucket_rebucket(spark: SparkSession, root: str) -> int:
     )
     if not stale:
         return head
-    v = head + 1
-    gname = f"file_rbk{v}"
-    df = _tlog_relation(spark, [os.path.join(root, g) for g in stale])
-    _tlog_bucketed_stage(spark, df, root, gname, spec)
-    _tlog_bucketed_commit_validate(root, [gname], spec, spec)
-    return _tlog_commit_rebase(
-        root, add=[gname], remove=stale, base_version=head,
-        read_set=set(stale), data_change=False,
-    )
+    return _tlog_rewrite(spark, root, stale, f"file_rbk{head + 1}")
 
 
 # --- Streaming ingest INTO a bucketed table (r18 queue (c), ----------------
@@ -6509,10 +6288,6 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
     carry 8-way tags, post-evolution groups 16-way, and the mixed
     snapshot reads whole."""
     import json
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit,
-    )
 
     stamp = json.dumps(_TLOG_BKTIN_SPEC, sort_keys=True)
 
@@ -6586,12 +6361,6 @@ def _tlog_bucket_key_rename(root: str, new_name: str) -> int:
     cannot be renamed safely)."""
     import json
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_latest_version,
-        _tlog_live_colmap,
-    )
-
     base = _tlog_latest_version(root)
     spec = _tlog_bucket_spec(root, base)
     if spec is None:
@@ -6631,10 +6400,6 @@ def _tlog_bucket_mapped_cohorts(
     two axes a mapped bucketed serve must respect. Returns
     [(binding, written_spec, paths)] sorted deterministically; raises
     the bootstrap error on an unbound live group (mapping active)."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_live_files,
-        _tlog_replay_map,
-    )
 
     phys = _tlog_replay_map(root, head, "colphys")
     specs = _tlog_bucket_group_specs(root, head)
@@ -6672,11 +6437,6 @@ def _tlog_bucketed_serve_mapped(
     import glob
     import re
     import shutil
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_latest_version,
-        _tlog_live_colmap,
-    )
 
     head = _tlog_latest_version(root)
     spec = _tlog_bucket_spec(root, head)
@@ -6757,13 +6517,8 @@ def _tlog_bucket_respell(spark: SparkSession, root: str) -> int:
     debt AND layout debt in the same pass — one binding signature and
     one written spec for future schema ops, and across a bucket-COUNT
     evolution it is what restores the zero-Exchange plan (same-N
-    spelling mixes never lost it). No stale cohort -> no commit."""
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit_rebase,
-        _tlog_latest_version,
-        _tlog_live_colmap,
-        _tlog_relation,
-    )
+    spelling mixes never lost it). The fold is :func:`_tlog_rewrite`'s
+    (DVs applied). No stale cohort -> no commit."""
 
     head = _tlog_latest_version(root)
     spec = _tlog_bucket_spec(root, head)
@@ -6774,31 +6529,15 @@ def _tlog_bucket_respell(spark: SparkSession, root: str) -> int:
             "mapping for the respell compaction"
         )
     head_binding = {str(f["id"]): f["name"] for f in cmap["fields"]}
-    stale: list[str] = []
-    parts: list[DataFrame] = []
-    for binding, wspec, paths in _tlog_bucket_mapped_cohorts(root, head):
-        if binding == head_binding and wspec == spec:
-            continue
-        stale.extend(os.path.basename(p) for p in paths)
-        parts.append(
-            _tlog_relation(spark, sorted(paths)).select(
-                *_tlog_respell(cmap["fields"], binding)
-            )
-        )
-    if not parts:
-        return head
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    v = head + 1
-    gname = f"file_rsp{v}"
-    _tlog_bucketed_stage(spark, out, root, gname, spec)
-    _tlog_bucketed_commit_validate(root, [gname], spec, spec)
-    return _tlog_commit_rebase(
-        root, add=[gname], remove=sorted(stale), base_version=head,
-        read_set=set(stale), data_change=False,
-        colphys={gname: head_binding},
+    stale = sorted(
+        os.path.basename(p)
+        for binding, wspec, paths in _tlog_bucket_mapped_cohorts(root, head)
+        if binding != head_binding or wspec != spec
+        for p in paths
     )
+    if not stale:
+        return head
+    return _tlog_rewrite(spark, root, stale, f"file_rsp{head + 1}")
 
 
 # --- Streaming ingest into a MAPPED bucketed table with a ------------------
@@ -6834,11 +6573,6 @@ def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
     so pre-rename groups bind the old spelling and post-rename groups
     the new, the per-batch spelling-tracking proof."""
     import json
-
-    from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
-        _tlog_commit,
-        _tlog_live_colmap,
-    )
 
     stamp = json.dumps(_TLOG_BKCMS_SPEC, sort_keys=True)
 

@@ -20,7 +20,7 @@ from collections.abc import Callable
 from typing import NamedTuple
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from hadoop_based_distributed_batch_processing_system_spark.built import (
     built_once,
@@ -1901,9 +1901,11 @@ def _tlog_change_units(
         # content is identical on both sides — emitting its add/remove
         # pair would cost consumers a table-sized read that nets to
         # zero; the flag is the WRITER'S promise, valid only because
-        # every flagged path in this package rewrites content-
-        # preservingly (DV materialization included: those rows were
-        # already logically dead)
+        # every flagged rewrite goes through _tlog_rewrite, which reads
+        # through the DV-aware snapshot read (DV materialization
+        # included: those rows were already logically dead); the
+        # other flagged commits carry metadata only (spec evolution,
+        # renames) or fold groups no DV binds (the IVF index fold)
         return []
     dv_prev = _tlog_live_dvs(root, version - 1) if version > 0 else {}
     dv_now = _tlog_live_dvs(root, version)
@@ -2021,11 +2023,13 @@ def table_log_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 #  - UPDATE rows: orders with o_orderkey % 3 == 0 AND % 4 IN (0, 2)
 #    (so they live ONLY in file_A / file_C at v2) get price + 1.00;
 #  - INSERT rows: orders with o_orderkey % 7 == 0 re-keyed to
-#    -o_orderkey (guaranteed unmatched — source keys are positive).
+#    -(o_orderkey + 1) (guaranteed unmatched — source keys are >= 0,
+#    and `orders` holds key 0).
 _TLOG_MERGE_SPEC = {
     "update_every": 3,
     "update_residues": [0, 2],
     "insert_every": 7,
+    "insert_key": "-(o_orderkey + 1)",
     "price_bump": 1.0,
 }
 
@@ -2037,10 +2041,15 @@ def _tlog_apply_merge(spark: SparkSession, sf_dir: str, root: str) -> None:
     insert. Only file_A and file_C hold matched keys, so file_D
     survives unrewritten into the new snapshot (pytest-pinned); the
     4th commit hits the checkpoint cadence, so this also writes the
-    log's first checkpoint file."""
+    log's first checkpoint file. A root that carries a MERGE stamped
+    under another spec is wiped back to the base first: the MERGE
+    composes on the base, never on an older MERGE."""
     import json
 
     def build() -> None:
+        if read_text(os.path.join(root, "_MERGED")) is not None:
+            wipe_root(root)
+            _tlog_build(spark, sf_dir, root)
         spec = _TLOG_MERGE_SPEC
         orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
         updates = orders.filter(
@@ -2051,7 +2060,7 @@ def _tlog_apply_merge(spark: SparkSession, sf_dir: str, root: str) -> None:
             (F.col("o_totalprice") + spec["price_bump"]).alias("o_totalprice"),
         )
         inserts = orders.filter(F.col("o_orderkey") % spec["insert_every"] == 0).select(
-            (-F.col("o_orderkey")).alias("o_orderkey"), "o_totalprice"
+            F.expr(spec["insert_key"]).alias("o_orderkey"), "o_totalprice"
         )
         _tlog_merge(spark, root, updates, inserts)
 
@@ -2076,7 +2085,7 @@ def _tlog_apply_merge(spark: SparkSession, sf_dir: str, root: str) -> None:
                       THEN o_totalprice + 1.0 ELSE o_totalprice END AS p
           FROM orders
           UNION ALL
-          SELECT -o_orderkey AS k, o_totalprice AS p
+          SELECT -(o_orderkey + 1) AS k, o_totalprice AS p
           FROM orders WHERE o_orderkey % 7 = 0
         )
         SELECT CAST(CASE WHEN k < 0 THEN -1 ELSE k % 4 END AS INTEGER) AS bucket,
@@ -2269,94 +2278,39 @@ def _tlog_vacuumed(root: str) -> set[str]:
 
 def _tlog_apply_compact(spark: SparkSession, sf_dir: str, root: str) -> None:
     """OPTIMIZE-style COMPACTION COMMIT once per table dir (flock +
-    stamp): read the latest snapshot's live files, rewrite them as
-    ONE range-partitioned, key-sorted file group (small-file
+    stamp): rewrite the latest snapshot's live files as four
+    equal-width key ranges, each one key-sorted file group (small-file
     compaction + clustering in one pass — sorted non-overlapping
-    runs are what make manifest min/max stats selective), and
-    publish add+remove in a single put-if-absent commit. The
-    snapshot's CONTENT is unchanged by construction — that is the
-    oracle: compaction is a physical re-layout, logically a no-op."""
-    import json
+    runs are what make manifest min/max stats selective), through
+    :func:`_tlog_rewrite`. The snapshot's CONTENT is unchanged by
+    construction — that is the oracle: compaction is a physical
+    re-layout, logically a no-op. The rewrite materializes deletion
+    vectors: the rewritten rows leave out the doomed keys and the
+    commit drops every binding, so the compacted table carries zero
+    DVs."""
+    n_ranges = 4
 
     def build() -> None:
         base = _tlog_latest_version(root)
-        live = _tlog_live_files(root, base)
-        # MATERIALIZE deletion vectors during the rewrite (VERDICT
-        # r11 item 3 — both DV docstrings name compaction as the
-        # point where the read-side anti-join debt is paid down): the
-        # snapshot read drops doomed keys from the rewritten rows, and
-        # the commit's remove set drops every binding on replay, so
-        # the compacted table carries zero DVs.
-        rel = _tlog_rows(spark, root, base).drop("file")
-        # 4 disjoint key ranges, sorted within each, ONE write job: a
-        # staging dir partitioned by the range id, then each range is
-        # promoted to its own top-level file group (the log's unit).
-        # The ranges split the snapshot's key extent into equal
-        # widths, so the groups are a function of the snapshot alone
-        # (a sampled range partitioner seeds its sketch from the RDD
-        # id, which moves with everything the process ran before).
-        # Per-group [min, max] stats for EVERY column are observed in
-        # the SAME write (the zorder path's r12/r13 discipline; the
-        # old form paid a post-write read job and recorded only
-        # o_orderkey — VERDICT r13 item 8).
-        from pyspark.sql import Observation
-
-        columns = rel.columns
-        n_ranges = 4
-        suffix = _tlog_regroup_suffix(live, "file_compact_r", base)
-        kmin, kmax = _tlog_extents(root, base, rel, ["o_orderkey"])["o_orderkey"]
+        live = [os.path.basename(p) for p in _tlog_live_files(root, base)]
+        # the ranges split the snapshot's key extent into equal widths,
+        # so the groups are a function of the snapshot alone (a sampled
+        # range partitioner seeds its sketch from the RDD id, which
+        # moves with everything the process ran before)
+        kmin, kmax = _tlog_extents(
+            root, base, _tlog_rows(spark, root, base), ["o_orderkey"]
+        )["o_orderkey"]
         kspan = max(1, kmax - kmin + 1)
-        obs = Observation("compact_group_stats")
-        aggs = []
-        for i in range(n_ranges):
-            cond = F.col("rg") == i
-            for c in columns:
-                aggs += [
-                    F.min(F.when(cond, F.col(c))).alias(f"r{i}:{c}:lo"),
-                    F.max(F.when(cond, F.col(c))).alias(f"r{i}:{c}:hi"),
-                ]
-        staging = os.path.join(root, ".compact_staging")
-        (
-            rel.withColumn(
-                "rg",
-                F.expr(f"CAST((o_orderkey - {kmin}) * {n_ranges} div {kspan} AS INT)"),
-            )
-            .repartition(n_ranges, "rg")
-            .sortWithinPartitions("rg", "o_orderkey")
-            .observe(obs, *aggs)
-            .write.mode("overwrite")
-            .partitionBy("rg")
-            .parquet(staging)
-        )
-        import shutil
-
-        m = obs.get  # blocks on the write action's completion
-        groups = sorted(
-            d for d in os.listdir(staging) if d.startswith("rg=")
-        )
-        add, stats = [], {}
-        for d in groups:
-            rg = d.split("=")[1]
-            gname = f"file_compact_r{rg}{suffix}"
-            dst = os.path.join(root, gname)
-            shutil.rmtree(dst, ignore_errors=True)
-            os.replace(os.path.join(staging, d), dst)
-            open(os.path.join(dst, "_SUCCESS"), "w").close()
-            add.append(gname)
-            if m[f"r{rg}:{columns[0]}:lo"] is not None:
-                stats[gname] = {
-                    c: [m[f"r{rg}:{c}:lo"], m[f"r{rg}:{c}:hi"]] for c in columns
-                }
-        shutil.rmtree(staging, ignore_errors=True)
-        removed = sorted(os.path.basename(p) for p in live)
-        # read set = the files the rewrite derived from (all live at
-        # base): concurrent blind appends commute — their files stay
-        # live beside the compact groups, exactly Delta's OPTIMIZE
-        # semantics — while a concurrent rewrite of our inputs is a
-        # true conflict
-        _tlog_commit_rebase(
-            root, add=add, remove=removed, base_version=base,
-            read_set=set(removed), stats=stats,
+        suffix = _tlog_regroup_suffix(live, "file_compact_r", base)
+        _tlog_rewrite(
+            spark, root, live,
+            F.concat(
+                F.lit("file_compact_r"),
+                F.expr(f"(o_orderkey - {kmin}) * {n_ranges} div {kspan}"),
+                F.lit(suffix),
+            ),
+            [f"file_compact_r{i}{suffix}" for i in range(n_ranges)],
+            ["o_orderkey"],
         )
 
     # v2 marker: an older layout (v1: one file group, no stats; spec
@@ -2731,11 +2685,12 @@ def _tlog_drain(stream: DataFrame, fn, root: str) -> None:
 
 
 def _tlog_land(
-    spark: SparkSession, root: str, batch_df: DataFrame, batch_id: int,
+    spark: SparkSession, root: str, batch_df: DataFrame, batch_id: int | None,
     name: str, bucketed: bool = False, colphys: dict[str, str] | None = None,
 ) -> None:
-    """THE landing of an append drain: micro-batch ``batch_id`` becomes
-    file group ``name`` and ONE atomic commit keyed by the batch id.
+    """THE landing of an append: micro-batch ``batch_id`` becomes file
+    group ``name`` and ONE atomic commit keyed by the batch id (a
+    one-off append passes None and its commit carries no batch key).
     The source replays offsets deterministically, the put-if-absent
     commit publishes the whole group or none of it, and the batch id
     is checked FIRST, from metadata alone: a re-delivered batch runs
@@ -2746,7 +2701,7 @@ def _tlog_land(
     nothing. ``colphys`` is a mapped group's field id -> physical name
     binding. The commit is a blind append, rebased over any concurrent
     commit."""
-    if _tlog_batch_committed(root, batch_id):
+    if batch_id is not None and _tlog_batch_committed(root, batch_id):
         return  # re-delivered batch: idempotent no-op
     base = max(_tlog_latest_version_safe(root), -1)
     stats: dict[str, dict] = {}
@@ -3279,18 +3234,20 @@ def _tlog_apply_zorder_compact(spark: SparkSession, sf_dir: str, root: str) -> N
     BOTH columns in the commit. A 1-D sorted compaction gives tight
     bounds on its own column only; the Z-layout gives every group a
     bounded window in EACH dimension, so manifest-stats pruning
-    works for predicates on either or both (VERDICT r11 item 5)."""
-    import json
-
+    works for predicates on either or both (VERDICT r11 item 5).
+    The rewrite is :func:`_tlog_rewrite`'s, so deletion vectors are
+    applied and per-group stats for every column observed in the
+    write."""
     from hadoop_based_distributed_batch_processing_system_spark.operators.sorts import (
         _morton_expr,
     )
 
     def build() -> None:
         base = _tlog_latest_version(root)
-        live = _tlog_live_files(root, base)
-        rel = _tlog_relation(spark, live)
-        ext = _tlog_extents(root, base, rel, ["o_orderkey", "o_totalprice"])
+        live = [os.path.basename(p) for p in _tlog_live_files(root, base)]
+        ext = _tlog_extents(
+            root, base, _tlog_rows(spark, root, base), ["o_orderkey", "o_totalprice"]
+        )
         (kmin, kmax), (pmin, pmax) = ext["o_orderkey"], ext["o_totalprice"]
         kspan, pspan = max(1, kmax - kmin + 1), max(pmax - pmin, 1e-9)
         a = (
@@ -3303,38 +3260,18 @@ def _tlog_apply_zorder_compact(spark: SparkSession, sf_dir: str, root: str) -> N
         )
         zexpr = _morton_expr(a, b, lambda x, n: f"shiftleft({x}, {n})")
         suffix = _tlog_regroup_suffix(live, "file_zorder_r", base)
-        add = [f"file_zorder_r{i}{suffix}" for i in range(_TLOG_Z_GROUPS)]
         # group = the zkey's equal-width range over its 16-bit extent
         # (its top bits: a quadtree cell of the scaled key x price
         # plane), a function of the snapshot's extents alone
-        clustered = (
-            rel.withColumn("zkey", F.expr(zexpr))
-            .withColumn(
-                "tgt",
-                F.concat(
-                    F.lit("file_zorder_r"),
-                    F.expr(f"zkey * {_TLOG_Z_GROUPS} div 65536"),
-                    F.lit(suffix),
-                ),
-            )
-            .repartition(_TLOG_Z_GROUPS, "tgt")
-            .sortWithinPartitions("tgt", "zkey")
-            .select("tgt", "o_orderkey", "o_totalprice")
-        )
-        # per-group [min, max] stats for EVERY column are OBSERVED
-        # during the staged write itself (conditional aggregates over
-        # the bounded group set) — writers collect stats in the same
-        # pass that writes the data, like production formats; the r12
-        # form re-read the promoted files in an extra job (VERDICT
-        # r12 item 7), and the r13 form hardcoded the two columns
-        # (VERDICT r13 item 8)
-        promoted, stats = _tlog_staged_write_with_stats(
-            clustered, root, add, require_all=False
-        )
-        removed = sorted(os.path.basename(p) for p in live)
-        _tlog_commit_rebase(
-            root, add=promoted, remove=removed, base_version=base,
-            read_set=set(removed), stats=stats,
+        _tlog_rewrite(
+            spark, root, live,
+            F.concat(
+                F.lit("file_zorder_r"),
+                F.expr(f"({zexpr}) * {_TLOG_Z_GROUPS} div 65536"),
+                F.lit(suffix),
+            ),
+            [f"file_zorder_r{i}{suffix}" for i in range(_TLOG_Z_GROUPS)],
+            [F.expr(zexpr)],
         )
 
     # spec "v1" cut its groups at sampled zkey boundaries; an older
@@ -3998,6 +3935,80 @@ def _tlog_write(
         colphys={g: head for g in add} if head and add else None,
     )
     return TableLogWrite(version, add, cow, dv, untouched)
+
+
+def _tlog_rewrite(
+    spark: SparkSession,
+    root: str,
+    files: list[str],
+    cut: str | Column,
+    groups: list[str] | None = None,
+    cluster: list | tuple = (),
+) -> int:
+    """THE content-preserving rewrite — compaction, clustering,
+    re-bucketing, respelling — with :func:`_tlog_write`'s shape: one
+    read, one staged job, one commit, the layout taken from the log at
+    the base version (a bucket(key, N) rule makes it BUCKETED, a column
+    mapping MAPPED). Callers choose only the file groups ``files`` and
+    the ``cut``.
+
+    1. READ ``files`` through :func:`_tlog_rows` at the base version:
+       deletion vectors applied, a mapped table under its head names.
+    2. STAGE every row in one job into the group ``cut`` names — one
+       group name, or a column naming each row's group among
+       ``groups`` — sorted there by ``cluster`` (columns or
+       expressions), through :func:`_tlog_staged_write_with_stats`; a
+       bucketed table stages ONE group (``cut`` a name) hash-routed
+       under the live spec through :func:`_tlog_bucketed_stage` and the
+       bucket gate. A group that gets no row is not added.
+    3. COMMIT once, ``dataChange: false`` (live content is unchanged, so
+       change-feed consumers skip the commit): ``files`` are the remove
+       set and the read set, which drops their DV bindings on replay —
+       step 1 already left out the rows those bound — with the staged
+       stats and, on a mapped table, the head binding of each added
+       group.
+
+    Returns the committed version."""
+    import glob
+
+    base = _tlog_latest_version(root)
+    snap = _tlog_snapshot(root, base)
+    gone = sorted(set(files) - snap["live"])
+    if gone:
+        raise RuntimeError(f"cannot rewrite {gone} at {root}: not live at v{base}")
+    bucket = _tlog_bucket_rule(snap["partitioning"])
+    rows = _tlog_rows(
+        spark, root, base, [os.path.join(root, f) for f in sorted(files)]
+    ).drop("file")
+    stats: dict[str, dict] = {}
+    if bucket:
+        _tlog_bucketed_stage(spark, rows, root, cut, bucket)
+        add = [cut] if glob.glob(os.path.join(root, cut, "*.parquet")) else []
+        _tlog_bucketed_commit_validate(root, add, bucket, bucket)
+    else:
+        if isinstance(cut, str):
+            groups, cut = [cut], F.lit(cut)
+        add, stats = _tlog_staged_write_with_stats(
+            rows.withColumn("tgt", cut)
+            .repartition(len(groups), "tgt")
+            .sortWithinPartitions("tgt", *cluster),
+            root,
+            groups,
+            require_all=False,
+            constraints={},  # every row passed the checks when first written
+        )
+    cmap = snap["column_mapping"]
+    head = {str(f["id"]): f["name"] for f in cmap["fields"]} if cmap else None
+    return _tlog_commit_rebase(
+        root,
+        add=add,
+        remove=sorted(files),
+        base_version=base,
+        read_set=set(files),
+        stats=stats or None,
+        data_change=False,
+        colphys={g: head for g in add} if head and add else None,
+    )
 
 
 def _tlog_dml_root(sf_dir: str) -> str:

@@ -3141,15 +3141,18 @@ def _ivfq_index_compact(spark: SparkSession, root: str) -> int:
     the folded base+delta groups (live content is identical by
     construction — feed consumers skip it). Clusters without delta
     debt are untouched. Returns the committed version (or the head
-    unchanged when there is nothing to fold)."""
+    unchanged when there is nothing to fold). The fold stages through
+    the table log's staging kernel (:func:`_tlog_staged_write`), not the
+    rewriter: its rows carry vectors and no DV key, and per-column
+    manifest stats would copy vectors into the log."""
     import os
     import re
-    import shutil
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_commit_rebase,
         _tlog_latest_version,
         _tlog_live_files,
+        _tlog_staged_write,
     )
 
     base = _tlog_latest_version(root)
@@ -3170,31 +3173,20 @@ def _ivfq_index_compact(spark: SparkSession, root: str) -> int:
     if not doomed_clusters:
         return base
     v = base + 1
-    staging = os.path.join(root, ".ivfqc_staging")
-    merged = spark.read.parquet(
-        *[p for g in doomed_clusters.values() for p in g["base"] + g["delta"]]
-    ).withColumn(
-        "cluster",
-        F.regexp_extract(
-            F.input_file_name(), r"file_qd?list(\d+)_", 1
-        ).cast("int"),
+    folded = [p for g in doomed_clusters.values() for p in g["base"] + g["delta"]]
+    cluster = F.regexp_extract(F.input_file_name(), r"file_qd?list(\d+)_", 1)
+    add = _tlog_staged_write(
+        spark.read.parquet(*folded).withColumn(
+            "tgt",
+            F.concat(F.lit("file_qlist"), cluster.cast("int"), F.lit(f"_m{v}")),
+        ),
+        root,
+        [f"file_qlist{c}_m{v}" for c in sorted(doomed_clusters)],
+        require_all=False,
     )
-    merged.write.mode("overwrite").partitionBy("cluster").parquet(staging)
-    add, remove = [], []
-    for d in sorted(os.listdir(staging)):
-        if not d.startswith("cluster="):
-            continue
-        c = int(d.split("=")[1])
-        gname = f"file_qlist{c}_m{v}"
-        dst = os.path.join(root, gname)
-        shutil.rmtree(dst, ignore_errors=True)
-        os.replace(os.path.join(staging, d), dst)
-        add.append(gname)
-    shutil.rmtree(staging, ignore_errors=True)
-    for groups in doomed_clusters.values():
-        remove += [os.path.basename(p) for p in groups["base"] + groups["delta"]]
+    remove = sorted(os.path.basename(p) for p in folded)
     return _tlog_commit_rebase(
-        root, add=sorted(add), remove=sorted(remove), base_version=base,
+        root, add=add, remove=remove, base_version=base,
         read_set=set(remove), data_change=False,
     )
 

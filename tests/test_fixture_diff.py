@@ -54,9 +54,15 @@ def test_identical_trees_exit_0_and_a_changed_commit_byte_exits_1(tmp_path):
     open(commit, "wb").write(bytes(data))
     changed = _run(a, b)
     assert changed.returncode == 1, changed.stdout + changed.stderr
-    assert changed.stdout.split() == [
-        os.path.join("hbdbps_tlogx_abc", "_log", "000000.json")
-    ]
+    rel = os.path.join("hbdbps_tlogx_abc", "_log", "000000.json")
+    assert changed.stdout.split() == [rel]
+    # stderr names the top-level keys whose values differ, a key on one
+    # side only included
+    assert f"{rel}: keys ts" in changed.stderr.splitlines()
+    flag = b', "dataChange": false, "ts"'
+    open(commit, "wb").write(bytes(data).replace(b', "ts"', flag))
+    flagged = _run(a, b)
+    assert f"{rel}: keys dataChange, ts" in flagged.stderr.splitlines()
 
     # a group whose rows differ is reported by its directory
     shutil.copy(commit.replace(os.path.join(b, ""), os.path.join(a, "")), commit)
@@ -102,3 +108,4 @@ def test_a_differing_group_names_what_differs(tmp_path):
     typed = _run(a, b)
     line = next(x for x in typed.stderr.splitlines() if x.startswith(group))
     assert "file name (" in line and "schema (" in line and "rows (" not in line
+

@@ -23,6 +23,7 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_latest_version,
     _tlog_live_files,
     _tlog_merge_root,
+    _tlog_rows,
     _TLOG_CHECKPOINT_EVERY,
     _TLOG_COMMITS,
 )
@@ -261,7 +262,8 @@ def test_merge_is_cow_minimal_and_checkpointed(spark):
     keys: file_D (residues 1,3 — no update keys) survives into v3
     unrewritten, the affected files are replaced by their _m1 copies
     plus the insert file, and the 4th commit wrote the log's first
-    checkpoint."""
+    checkpoint. No insert lands on a target key (``orders`` holds key
+    0), and a MERGE stamped under another spec is redone on the base."""
     root = _tlog_build(spark, SF_SMOKE, _tlog_merge_root(SF_SMOKE))
     _tlog_apply_merge(spark, SF_SMOKE, root)
     latest = _tlog_latest_version(root)
@@ -275,9 +277,19 @@ def test_merge_is_cow_minimal_and_checkpointed(spark):
     assert os.path.exists(
         os.path.join(root, "_log", f"{latest:06d}.checkpoint.json")
     ), "merge commit crossed the cadence but wrote no checkpoint"
+    # the inserts are re-keyed off every source key, key 0 included:
+    # none lands on a target key
+    assert _tlog_rows(spark, root, latest).filter("o_orderkey = 0").count() == 1
     # idempotence: re-applying is a stamp-guarded no-op (no new commit)
     _tlog_apply_merge(spark, SF_SMOKE, root)
     assert _tlog_latest_version(root) == latest
+    # a root merged under another spec is wiped back to the base and
+    # merged once: never a second MERGE on top of the first
+    with open(os.path.join(root, "_MERGED"), "w") as fh:
+        fh.write("{}")
+    _tlog_apply_merge(spark, SF_SMOKE, root)
+    assert _tlog_latest_version(root) == latest
+    assert _tlog_rows(spark, root, latest).filter("o_orderkey = 0").count() == 1
 
 
 def test_merge_rewrite_job_count_is_flat(spark):
@@ -5105,21 +5117,33 @@ def test_mapped_read_applies_deletion_vectors(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
-@pytest.mark.parametrize("statement", ["plain_merge", "plain_update", "bucketed_delete"])
-def test_rewrite_keeps_dv_deleted_rows_deleted(spark, tmp_path, statement):
-    """A copy-on-write rewrite reads through the snapshot read: a
-    deletion vector bound on a file the statement rewrites (here the
-    ``o_orderkey % 24 = 0`` rows; the file keeps other matched rows)
-    must keep those rows deleted after the rewrite drops the binding —
-    for MERGE and UPDATE on a plain table and DELETE on a bucketed
-    one."""
+_REWRITES = ["range", "zorder", "colmap", "trigger", "rebucket", "respell"]
+
+
+@pytest.mark.parametrize(
+    "statement",
+    ["plain_merge", "plain_update", "bucketed_delete", *_REWRITES, "ev_cluster", "vcf"],
+)
+def test_rewrite_keeps_dv_deleted_rows_deleted(spark, tmp_path, monkeypatch, statement):
+    """A rewrite reads through the snapshot read: a deletion vector
+    bound on a file the statement rewrites (here the
+    ``o_orderkey % 24 = 0`` rows) must keep those rows deleted after
+    the rewrite drops the binding — for MERGE and UPDATE on a plain
+    table, DELETE on a bucketed one, and every content-preserving
+    rewrite of a table that can carry a DV (range and Z-order
+    compaction, the mapped compaction, the compaction trigger, the
+    re-bucket and the respell). Each rewrite, and the event clustering
+    and the pinned-vacuum compaction (tables without a DV), must also
+    leave the snapshot's rows unchanged and commit ``dataChange:
+    false``: ``_tlog_change_units`` skips such commits."""
     import pyspark.sql.functions as F
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
-        _tlog_bucketed_commit,
-        _tlog_bucketed_stage,
+    from hadoop_based_distributed_batch_processing_system_spark.operators import (
+        lakehouse,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
+        _tlog_apply_compact,
+        _tlog_apply_zorder_compact,
         _tlog_commit_rebase,
         _tlog_delete,
         _tlog_live_dvs,
@@ -5130,49 +5154,93 @@ def test_rewrite_keeps_dv_deleted_rows_deleted(spark, tmp_path, statement):
         load_table,
     )
 
-    doomed = "o_orderkey % 24 = 0 AND o_orderkey > 0"  # MERGE inserts key -0
+    doomed = "o_orderkey % 24 = 0"
     root = str(tmp_path / statement)
-    if statement == "bucketed_delete":
+    target = "file_A"  # the o_orderkey % 4 = 0 slice
+    if statement in ("bucketed_delete", "rebucket", "respell"):
         os.makedirs(os.path.join(root, "_log"))
         raw = load_table(spark, SF_SMOKE, "orders").select(
             "o_orderkey", "o_totalprice"
         )
         spec8 = ("o_orderkey", 8)
+        binding = {"1": "o_orderkey", "2": "o_totalprice"}
         for v, (name, parity) in enumerate((("file_bkt0", 0), ("file_bkt1", 1))):
-            _tlog_bucketed_stage(
+            lakehouse._tlog_bucketed_stage(
                 spark, raw.filter(F.col("o_orderkey") % 2 == parity), root,
                 name, spec8,
             )
-            _tlog_bucketed_commit(
-                root, [name], v - 1, spec8,
-                partitioning=(
-                    {"spec_id": 0, "rule": "bucket(o_orderkey, 8)"}
-                    if v == 0 else None
-                ),
-            )
+            boot = {
+                "partitioning": {"spec_id": 0, "rule": "bucket(o_orderkey, 8)"},
+            } if v == 0 else {}
+            if statement == "respell":
+                boot["colphys"] = {name: binding}
+                if v == 0:
+                    boot["column_mapping"] = {"fields": [
+                        {"id": 1, "name": "o_orderkey"},
+                        {"id": 2, "name": "o_totalprice"},
+                    ]}
+            lakehouse._tlog_bucketed_commit(root, [name], v - 1, spec8, **boot)
+        if statement == "rebucket":  # both groups now on a stale spec
+            lakehouse._tlog_bucket_evolve(root, "o_orderkey", 16)
+        elif statement == "respell":  # both groups now on a stale spelling
+            lakehouse._tlog_bucket_key_rename(root, "okey")
         target = "file_bkt0"  # the even keys, every doomed key among them
+    elif statement == "ev_cluster":
+        lakehouse._tlog_apply_ev_ingest(spark, SF_SMOKE, root)
+        target = None  # the events table has no DV key
+    elif statement == "vcf":
+        monkeypatch.setattr(
+            lakehouse, "_tlog_vcf_roots",
+            lambda _sf: (root, str(tmp_path / "cat")),
+        )
+        target = None
     else:
         _tlog_build(spark, SF_SMOKE, root)
-        target = "file_A"  # the o_orderkey % 4 = 0 slice
-    base = _tlog_latest_version(root)
-    sidecar = f"dv_{target}_v{base + 1}"
-    spark.read.parquet(os.path.join(root, target)).filter(doomed).select(
-        "o_orderkey"
-    ).write.parquet(os.path.join(root, sidecar))
-    _tlog_commit_rebase(
-        root, add=[], remove=[], base_version=base,
-        read_set={target}, dv={target: sidecar},
-    )
-    head = _tlog_latest_version(root)
-    keys = spark.read.parquet(os.path.join(root, sidecar))
+        if statement == "colmap":  # map the table and rename the price
+            _tlog_commit_rebase(
+                root, add=[], remove=[], base_version=2, read_set=set(),
+                data_change=False,
+                column_mapping={"fields": [
+                    {"id": 1, "name": "o_orderkey"},
+                    {"id": 2, "name": "price_usd"},
+                ]},
+                colphys={
+                    f"file_{s}": {"1": "o_orderkey", "2": "o_totalprice"}
+                    for s in "ACD"
+                },
+            )
+    if target:
+        base = _tlog_latest_version(root)
+        sidecar = f"dv_{target}_v{base + 1}"
+        spark.read.parquet(os.path.join(root, target)).filter(doomed).select(
+            "o_orderkey"
+        ).write.parquet(os.path.join(root, sidecar))
+        _tlog_commit_rebase(
+            root, add=[], remove=[], base_version=base,
+            read_set={target}, dv={target: sidecar},
+        )
+        keys = spark.read.parquet(os.path.join(root, sidecar))
 
     def visible(version: int) -> int:
-        """How many of the sidecar's keys the snapshot read shows."""
-        return _tlog_rows(spark, root, version).join(
-            keys, "o_orderkey", "left_semi"
+        """How many of the sidecar's keys the snapshot read shows (the
+        key is the first column, under its head name)."""
+        rows = _tlog_rows(spark, root, version)
+        k = rows.columns[0]
+        return rows.join(
+            keys.withColumnRenamed("o_orderkey", k), k, "left_semi"
         ).count()
 
-    assert keys.count() > 0 and visible(head) == 0
+    def content(version: int) -> list:
+        return sorted(map(tuple, _tlog_rows(spark, root, version).drop("file").collect()))
+
+    if statement == "vcf":
+        lakehouse._tlog_apply_vcf(spark, SF_SMOKE)
+        head = 2  # the lifecycle's compaction commits v3 on the base
+    else:
+        head = _tlog_latest_version(root)
+    before = content(head)
+    if target:
+        assert keys.count() > 0 and visible(head) == 0
 
     if statement == "plain_merge":
         _tlog_apply_merge(spark, SF_SMOKE, root)
@@ -5180,13 +5248,33 @@ def test_rewrite_keeps_dv_deleted_rows_deleted(spark, tmp_path, statement):
         _tlog_update(
             spark, root, "o_orderkey % 8 = 0", {"o_totalprice": "o_totalprice + 1.0"}
         )
-    else:
+    elif statement == "bucketed_delete":
         _tlog_delete(spark, root, "o_orderkey % 10 = 4")
-    after = _tlog_latest_version(root)
+    elif statement == "range":
+        _tlog_apply_compact(spark, SF_SMOKE, root)
+    elif statement == "zorder":
+        _tlog_apply_zorder_compact(spark, SF_SMOKE, root)
+    elif statement == "colmap":
+        lakehouse._tlog_colmap_compact(spark, root)
+    elif statement == "trigger":
+        lakehouse._tlog_compact_trigger(spark, root, threshold=3, k=2)
+    elif statement == "rebucket":
+        lakehouse._tlog_bucket_rebucket(spark, root)
+    elif statement == "respell":
+        lakehouse._tlog_bucket_respell(spark, root)
+    elif statement == "ev_cluster":
+        lakehouse._tlog_apply_ev_cluster(spark, SF_SMOKE, root)
+    after = head + 1
+    if statement != "vcf":
+        assert _tlog_latest_version(root) == after
     commit = json.load(open(os.path.join(root, "_log", f"{after:06d}.json")))
-    assert after == head + 1 and target in commit["remove"]  # rewritten
-    assert target not in _tlog_live_dvs(root, after)  # binding dropped
-    assert visible(after) == 0
+    if target:
+        assert target in commit["remove"]  # rewritten
+        assert target not in _tlog_live_dvs(root, after)  # binding dropped
+        assert visible(after) == 0
+    if statement in _REWRITES or statement in ("ev_cluster", "vcf"):
+        assert content(after) == before
+        assert commit.get("dataChange") is False
 
 
 @pytest.mark.parametrize("layout", ["plain", "bucketed"])

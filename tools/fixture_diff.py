@@ -20,7 +20,9 @@ Walks A and B side by side (hidden entries such as ``.ckpt``,
 Prints each path that differs (or exists on one side only) and exits
 1 if any does, 0 otherwise. For each differing group, stderr names
 what differs: the part count, or for each kind (file name, schema,
-rows) the first pair of part files that differ in it.
+rows) the first pair of part files that differ in it. For each
+differing ``*.json`` file (commits, checkpoints), stderr names the
+top-level keys whose values differ.
 """
 
 from __future__ import annotations
@@ -80,6 +82,22 @@ def _group_diff(a: str, b: str) -> str | None:
     return "; ".join(kinds)
 
 
+def _json_diff(a: bytes, b: bytes) -> str | None:
+    """The top-level keys whose values differ between two JSON objects
+    (a key on one side only counts), or None when either is not one."""
+    import json
+
+    try:
+        ja, jb = json.loads(a), json.loads(b)
+    except ValueError:
+        return None
+    if not (isinstance(ja, dict) and isinstance(jb, dict)):
+        return None
+    missing = object()
+    keys = sorted(k for k in ja.keys() | jb.keys() if ja.get(k, missing) != jb.get(k, missing))
+    return "keys " + ", ".join(keys)
+
+
 def _text(path: str, top: str) -> bytes:
     with open(path, "rb") as fh:
         data = fh.read()
@@ -89,15 +107,18 @@ def _text(path: str, top: str) -> bytes:
 
 
 def diff(a: str, b: str) -> tuple[list[str], dict[str, str], int, int]:
-    """(differing relative paths, what differs in each differing group,
-    files compared, groups compared)."""
+    """(differing relative paths, what differs in each differing group
+    or JSON file, files compared, groups compared)."""
     fa, ga = _walk(a)
     fb, gb = _walk(b)
     differ = sorted((fa ^ fb) | (ga ^ gb))
-    for rel in sorted(fa & fb):
-        if _text(os.path.join(a, rel), a) != _text(os.path.join(b, rel), b):
-            differ.append(rel)
     why = {}
+    for rel in sorted(fa & fb):
+        ta, tb = _text(os.path.join(a, rel), a), _text(os.path.join(b, rel), b)
+        if ta != tb:
+            differ.append(rel)
+            if rel.endswith(".json") and (w := _json_diff(ta, tb)):
+                why[rel] = w
     for rel in sorted(ga & gb):
         w = _group_diff(os.path.join(a, rel), os.path.join(b, rel))
         if w:
