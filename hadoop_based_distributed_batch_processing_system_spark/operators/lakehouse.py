@@ -58,6 +58,7 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_change_rows_for,
     _tlog_change_units,
     _tlog_changes_fingerprint,
+    _tlog_cohorts,
     _tlog_colmap_binding,
     _tlog_commit,
     _tlog_commit_rebase,
@@ -86,10 +87,12 @@ from hadoop_based_distributed_batch_processing_system_spark.operators.scans impo
     _tlog_rewrite,
     _tlog_root,
     _tlog_rows,
+    _tlog_snapshot,
     _tlog_snapshot_fingerprints,
     _tlog_staged_write_with_stats,
     _tlog_synthetic_stream,
     _tlog_ts_stamps,
+    _tlog_unvacuumed,
     _tlog_update,
     _tlog_vacuum,
     _tlog_vacuumed,
@@ -5930,14 +5933,26 @@ def _tlog_bucketed_commit(
 def _tlog_bucketed_serve(
     spark: SparkSession, root: str, alias: str, ddl: str
 ) -> DataFrame:
-    """READ half: materialize the head snapshot as a session-catalog
-    BUCKETED table so the engine's planner sees the layout. Spark's
+    """READ half: materialize the head snapshot as session-catalog
+    BUCKETED tables so the engine's planner sees the layout. Spark's
     bucketed scan resolves bucket ids from FILE NAMES under a catalog
     table with bucket metadata — production table formats hand the
     same information to the planner through their manifest; this
     adapter bridges log -> catalog with one HARD LINK per live data
     file (zero bytes copied, O(files) metadata) into a per-version
     serve directory, then a CLUSTERED BY external table over it.
+
+    One table per COHORT (:func:`_tlog_bucket_cohorts`: one physical
+    binding, one written spec), declared with the key spelling and
+    bucket count its files were WRITTEN under, never the head's — a
+    table declared with the head's N after a spec evolution sends
+    lookups and co-partitioned joins to the wrong buckets. ``ddl``
+    spells the head's names; a mapped cohort is declared in its own
+    physical spelling and respelled by field id (an unbound field reads
+    as a NULL of its DDL type). The cohorts union: equal-N cohorts stay
+    co-partitioned (zero Exchange), a bucket-COUNT mix pays one until
+    :func:`_tlog_bucket_rebucket` folds it. One cohort serves from
+    ``_serve_v{head}`` as ``{alias}_v{head}``; more add ``_c{i}``.
 
     Point lookups: an equality filter on the bucket key prunes to
     ONE bucket (``SelectedBucketsCount: 1 out of N`` — reading 1/N of
@@ -5949,47 +5964,72 @@ def _tlog_bucketed_serve(
     ``spark.sql.sources.bucketing.autoBucketedScan.enabled=false``
     around lookup-shaped queries to keep it (pinned by
     ``test_bucketed_serve_point_lookup_prunes_buckets``).
-    Snapshot immutability makes both idempotent and race-safe: the
+    Snapshot immutability makes both idempotent and race-safe: a
     serve dir is built under a temp name and renamed in (first
-    builder wins), and the catalog entry is version-keyed."""
+    builder wins), and the catalog entries are version-keyed."""
     import glob
+    import re
     import shutil
 
-    import re
-
     head = _tlog_latest_version(root)
-    spec = _tlog_bucket_spec(root, head)
+    snap, cohorts = _tlog_bucket_cohorts(root, head)
+    spec = _tlog_bucket_rule(snap["partitioning"])
     if spec is None:
         raise RuntimeError(f"table at {root} has no bucket layout to serve")
-    key, n = spec
-    serve = os.path.join(root, f"_serve_v{head}")
-    if not os.path.isdir(serve):
-        tmp = f"{serve}.tmp.{os.getpid()}"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
-        for p in _tlog_live_files(root, head):
-            for f in sorted(glob.glob(os.path.join(p, "*.parquet"))):
-                os.link(f, os.path.join(tmp, os.path.basename(f)))
-        try:
-            os.rename(tmp, serve)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)  # another builder won
-        # drop SUPERSEDED serve dirs: their hard links would otherwise
-        # keep group bytes alive past a vacuum (link count > 1 defeats
-        # byte reclamation) — the serve bridge must never extend a
-        # file's lifetime beyond the log's own retention decisions
-        for entry in os.listdir(root):
-            m = re.fullmatch(r"_serve_v(\d+)(?:_n\d+)?", entry)
-            if m and int(m.group(1)) < head:
-                shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
-    tname = f"{alias}_v{head}"
-    if not spark.catalog.tableExists(tname):
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {tname} ({ddl}) USING parquet "
-            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n} BUCKETS "
-            f"LOCATION '{serve}'"
-        )
-    return spark.table(tname)
+    cmap = snap["column_mapping"]
+    head_binding = None
+    if cmap:
+        fid = {f["name"]: str(f["id"]) for f in cmap["fields"]}
+        head_binding = {i: name for name, i in fid.items()}
+        cols = [c.strip().split(None, 1) for c in ddl.split(",")]
+    # drop SUPERSEDED serve dirs: their hard links would otherwise
+    # keep group bytes alive past a vacuum (link count > 1 defeats
+    # byte reclamation) — the serve bridge must never extend a
+    # file's lifetime beyond the log's own retention decisions
+    for entry in os.listdir(root):
+        m = re.fullmatch(r"_serve_v(\d+)(?:_\w+)?", entry)
+        if m and int(m.group(1)) < head:
+            shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
+    parts = []
+    # an empty snapshot serves as one empty cohort under the head layout
+    for i, (binding, (key, n), paths) in enumerate(
+        cohorts or [(head_binding, spec, [])]
+    ):
+        suffix = f"_c{i}" if len(cohorts) > 1 else ""
+        serve = os.path.join(root, f"_serve_v{head}{suffix}")
+        if not os.path.isdir(serve):
+            tmp = f"{serve}.tmp.{os.getpid()}"
+            shutil.rmtree(tmp, ignore_errors=True)
+            os.makedirs(tmp)
+            for p in paths:
+                for f in sorted(glob.glob(os.path.join(p, "*.parquet"))):
+                    os.link(f, os.path.join(tmp, os.path.basename(f)))
+            try:
+                os.rename(tmp, serve)
+            except OSError:
+                shutil.rmtree(tmp, ignore_errors=True)  # another builder won
+        decl = ddl
+        if cmap:  # (logical name, type, this cohort's physical name)
+            phys = [(name, typ, binding.get(fid[name])) for name, typ in cols]
+            decl = ", ".join(f"{pn} {typ}" for _n, typ, pn in phys if pn)
+        tname = f"{alias}_v{head}{suffix}"
+        if not spark.catalog.tableExists(tname):
+            spark.sql(
+                f"CREATE TABLE IF NOT EXISTS {tname} ({decl}) USING parquet "
+                f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n} BUCKETS "
+                f"LOCATION '{serve}'"
+            )
+        part = spark.table(tname)
+        if cmap:
+            part = part.select(*(
+                F.col(pn).alias(name) if pn else F.lit(None).cast(typ).alias(name)
+                for name, typ, pn in phys
+            ))
+        parts.append(part)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p)
+    return out
 
 
 _TLOG_BKT_SPEC = {"impl": 1, "n": _TLOG_BKT_N, "split_mod": 5}
@@ -6034,13 +6074,8 @@ def _tlog_apply_bkt(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             _tlog_bucketed_commit(
                 root, ["file_bkt0"], -1, spec, partitioning=rule,
             )
-            # the APPEND writer consults the LIVE spec from the log
-            live = _tlog_bucket_spec(root, 0)
-            _tlog_bucketed_stage(
-                spark, df.filter(F.col(key) % mod == 0), root,
-                "file_bkt1", live,
-            )
-            _tlog_bucketed_commit(root, ["file_bkt1"], 0, live)
+            # the APPEND lands under the LIVE spec, read from the log
+            _tlog_land(spark, root, df.filter(F.col(key) % mod == 0), None, "file_bkt1")
 
         built_once(root, "_BKT", stamp, build)
     return o_root, l_root
@@ -6111,13 +6146,13 @@ def table_log_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Bucket SPEC EVOLUTION + re-bucket compaction (r18 queue (a), ----------
+# --- Bucket SPEC EVOLUTION + layout compaction (r18 queue (a), -------------
 # machinery pre-built in r17; the registry entry lands with the r18
 # window). Evolution is a partitioning REPLACE (Iceberg spec
 # evolution): pre-evolution groups keep the layout they were written
 # under, the commit gate holds NEW writers to the NEW spec, mixed
 # snapshots serve per-cohort (the co-located join degrades to one
-# Exchange on the evolved side), and a dataChange:false re-bucket
+# Exchange on the evolved side), and a dataChange:false layout
 # compaction restores single-spec zero-Exchange plans.
 
 
@@ -6146,23 +6181,44 @@ def _tlog_bucket_group_specs(
     return specs
 
 
+def _tlog_bucket_cohorts(
+    root: str, version: int
+) -> tuple[dict, list[tuple[dict | None, tuple[str, int], list[str]]]]:
+    """The snapshot at ``version`` and its live groups split into
+    COHORTS by (physical binding, written spec): :func:`_tlog_cohorts`
+    splits by binding (one cohort, binding None, on an unmapped table)
+    and :func:`_tlog_bucket_group_specs` by the spec each group was
+    written under. Sorted by binding, then spec; a live group with no
+    written bucket spec raises — a bucketed reader cannot place it."""
+    snap = _tlog_snapshot(root, version)
+    specs = _tlog_bucket_group_specs(root, version)
+    live = _tlog_unvacuumed(root, version, snap["live"])
+    phys = snap["colphys"] if snap["column_mapping"] else None
+    out = []
+    for binding, paths in _tlog_cohorts(live, phys):
+        by_spec: dict[tuple[str, int], list[str]] = {}
+        for p in paths:
+            written = specs.get(os.path.basename(p))
+            if written is None:
+                raise RuntimeError(
+                    f"group {os.path.basename(p)} at {root} has no bucket "
+                    "layout — a bucketed reader cannot place it"
+                )
+            by_spec.setdefault(written, []).append(p)
+        out += [(binding, w, ps) for w, ps in sorted(by_spec.items())]
+    return snap, out
+
+
 def _tlog_bucket_evolve(root: str, key: str, n_new: int) -> int:
     """EVOLVE the bucket spec: one metadata-only commit replacing the
     partitioning rule with bucket(key, n_new). Zero files move —
     existing groups keep their written layout (readable forever, the
     spec-evolution contract); only writers feel the change, at the
-    commit gate."""
-    import json
-
+    commit gate. Spec ids only grow (this is the one writer that
+    raises one), so the live rule's id is the table's largest."""
     base = _tlog_latest_version(root)
-    old = _tlog_bucket_spec(root, base)
-    spec_id = 0
-    if old is not None:
-        logd = os.path.join(root, "_log")
-        for v in range(base + 1):
-            c = json.load(open(os.path.join(logd, f"{v:06d}.json")))
-            if c.get("partitioning"):
-                spec_id = max(spec_id, int(c["partitioning"].get("spec_id", 0)))
+    live = _tlog_live_partitioning(root, base)
+    spec_id = int(live.get("spec_id", 0)) if _tlog_bucket_rule(live) else 0
     return _tlog_commit_rebase(
         root, add=[], remove=[], base_version=base, read_set=set(),
         data_change=False,
@@ -6170,90 +6226,32 @@ def _tlog_bucket_evolve(root: str, key: str, n_new: int) -> int:
     )
 
 
-def _tlog_bucketed_serve_mixed(
-    spark: SparkSession, root: str, alias: str, ddl: str
-) -> DataFrame:
-    """Serve a possibly MIXED-layout snapshot: cohorts grouped by the
-    spec their groups were written under, one bucketed catalog table
-    per cohort (hard-link bridge, as the single-spec serve), unioned.
-    A single-cohort snapshot falls through to the plain serve — and
-    keeps its zero-Exchange plans; a mixed snapshot's union erases
-    the partitioning property, so the evolved side pays ONE Exchange
-    until the re-bucket compaction folds the old cohort (the
-    documented graceful degradation)."""
-    import glob
-    import shutil
-
-    head = _tlog_latest_version(root)
-    specs = _tlog_bucket_group_specs(root, head)
-    live = _tlog_live_files(root, head)
-    cohorts: dict[tuple[str, int], list[str]] = {}
-    for p in live:
-        s = specs.get(os.path.basename(p))
-        if s is None:
-            raise RuntimeError(
-                f"group {os.path.basename(p)} at {root} has no bucket "
-                "layout — a bucketed serve cannot place it"
-            )
-        cohorts.setdefault(s, []).append(p)
-    if len(cohorts) == 1:
-        return _tlog_bucketed_serve(spark, root, alias, ddl)
-    import re
-
-    for entry in os.listdir(root):
-        m = re.fullmatch(r"_serve_v(\d+)(?:_n\d+)?", entry)
-        if m and int(m.group(1)) < head:
-            shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
-    parts = []
-    for (key, n), paths in sorted(cohorts.items()):
-        serve = os.path.join(root, f"_serve_v{head}_n{n}")
-        if not os.path.isdir(serve):
-            tmp = f"{serve}.tmp.{os.getpid()}"
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.makedirs(tmp)
-            for p in paths:
-                for f in sorted(glob.glob(os.path.join(p, "*.parquet"))):
-                    os.link(f, os.path.join(tmp, os.path.basename(f)))
-            try:
-                os.rename(tmp, serve)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-        tname = f"{alias}_v{head}_n{n}"
-        if not spark.catalog.tableExists(tname):
-            spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {tname} ({ddl}) USING parquet "
-                f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n} BUCKETS "
-                f"LOCATION '{serve}'"
-            )
-        parts.append(spark.table(tname))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def _tlog_bucket_rebucket(spark: SparkSession, root: str) -> int:
-    """RE-BUCKET COMPACTION: rewrite every group whose written layout
-    differs from the HEAD spec into one new head-spec group, committed
-    dataChange:false (live content identical — change-feed consumers
-    skip it, the OPTIMIZE discipline). Restores single-spec serves and
-    their zero-Exchange plans; a no-op (all groups already on the head
-    spec) publishes nothing. Cost = read+write only the stale cohort
-    once (:func:`_tlog_rewrite`, DVs applied) — the same economics as
-    every compaction here."""
+    """LAYOUT COMPACTION: fold every group whose cohort (binding and
+    written spec, :func:`_tlog_bucket_cohorts`) differs from the
+    head's into ONE head-spelled, head-spec group through
+    :func:`_tlog_rewrite` (DVs applied, dataChange:false — the OPTIMIZE
+    discipline). It restores single-spec serves and their zero-Exchange
+    plans after a spec evolution, and leaves one binding signature
+    after a key rename. The group is ``file_rsp{v}`` on a mapped table,
+    ``file_rbk{v}`` otherwise; no stale group -> no commit."""
     head = _tlog_latest_version(root)
-    spec = _tlog_bucket_spec(root, head)
+    snap, cohorts = _tlog_bucket_cohorts(root, head)
+    spec = _tlog_bucket_rule(snap["partitioning"])
     if spec is None:
         raise RuntimeError(f"table at {root} has no bucket layout")
-    specs = _tlog_bucket_group_specs(root, head)
+    cmap = snap["column_mapping"]
+    want = ({str(f["id"]): f["name"] for f in cmap["fields"]} if cmap else None, spec)
     stale = sorted(
         os.path.basename(p)
-        for p in _tlog_live_files(root, head)
-        if specs.get(os.path.basename(p)) != spec
+        for binding, written, paths in cohorts
+        if (binding, written) != want
+        for p in paths
     )
     if not stale:
         return head
-    return _tlog_rewrite(spark, root, stale, f"file_rbk{head + 1}")
+    group = f"file_{'rsp' if cmap else 'rbk'}{head + 1}"
+    return _tlog_rewrite(spark, root, stale, group)
 
 
 # --- Streaming ingest INTO a bucketed table (r18 queue (c), ----------------
@@ -6308,7 +6306,7 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
                 _tlog_bucket_evolve(root, "event_id", 16)
             _tlog_land(
                 spark, root, batch_df.select("event_id", "bucket", "value"),
-                batch_id, f"file_bktin_b{batch_id}", bucketed=True,
+                batch_id, f"file_bktin_b{batch_id}",
             )
 
         _tlog_drain(
@@ -6336,33 +6334,31 @@ def _tlog_apply_bkt_ingest(spark: SparkSession, root: str) -> None:
 # is a re-spelling of the same source field, not spec evolution
 # (Iceberg binds specs by field id; the rule's display name follows
 # the rename). Zero rows move: murmur3 routing is value-based, so
-# every pre-rename file keeps serving its buckets. The mapped serve
-# cohorts live groups by (physical binding, written spec), builds one
-# bucketed catalog table per cohort CLUSTERED BY the cohort's OWN
-# physical spelling, and aliases physical -> logical by field id —
-# Spark's alias-aware output partitioning carries the bucketed
-# distribution through the rename projection, so zero-Exchange plans
-# hold ON THE NEW NAME over the OLD bytes (probed and pinned) — and
-# stronger: a MIXED-spelling snapshot stays exchange-free too,
-# because murmur3 routing is value-based and Spark unions same-N
-# bucketed scans co-partitioned (verified against overlapping keys
-# across cohorts: no duplicate groups in the final AQE plan, no
-# Exchange). The spelling axis is free where the bucket-COUNT axis
-# (spec evolution) degrades; the respell compaction
-# (dataChange:false) still exists to normalize rename debt — one
-# binding signature for future schema ops — not to restore a plan.
+# every pre-rename file keeps serving its buckets. The serve declares
+# each (binding, written spec) cohort CLUSTERED BY its OWN physical
+# spelling and aliases physical -> logical by field id — Spark's
+# alias-aware output partitioning carries the bucketed distribution
+# through the rename projection, so zero-Exchange plans hold ON THE
+# NEW NAME over the OLD bytes (probed and pinned) — and stronger: a
+# MIXED-spelling snapshot stays exchange-free too, because murmur3
+# routing is value-based and Spark unions same-N bucketed scans
+# co-partitioned (verified against overlapping keys across cohorts:
+# no duplicate groups in the final AQE plan, no Exchange). The
+# spelling axis is free where the bucket-COUNT axis (spec evolution)
+# degrades; the layout compaction (dataChange:false) still folds
+# rename debt — one binding signature for future schema ops — not to
+# restore a plan.
 
 
 def _tlog_bucket_key_rename(root: str, new_name: str) -> int:
     """Rename the bucket key column: ONE metadata commit carrying the
     mapping update AND the partitioning re-spelling (atomic by
-    construction — both live in the same commit JSON). Requires an
-    active column mapping (a spelling without field ids under it
-    cannot be renamed safely)."""
-    import json
-
+    construction — both live in the same commit JSON) under the live
+    rule's spec id. Requires an active column mapping (a spelling
+    without field ids under it cannot be renamed safely)."""
     base = _tlog_latest_version(root)
-    spec = _tlog_bucket_spec(root, base)
+    live = _tlog_live_partitioning(root, base)
+    spec = _tlog_bucket_rule(live)
     if spec is None:
         raise RuntimeError(f"table at {root} has no bucket layout")
     cmap = _tlog_live_colmap(root, base)
@@ -6379,165 +6375,15 @@ def _tlog_bucket_key_rename(root: str, new_name: str) -> int:
             f"bucket key {key} is not a mapped field at {root}"
         )
     fld["name"] = new_name
-    spec_id = 0
-    logd = os.path.join(root, "_log")
-    for v in range(base + 1):
-        c = json.load(open(os.path.join(logd, f"{v:06d}.json")))
-        if c.get("partitioning"):
-            spec_id = max(spec_id, int(c["partitioning"].get("spec_id", 0)))
     return _tlog_commit_rebase(
         root, add=[], remove=[], base_version=base, read_set=set(),
         data_change=False,
         column_mapping={"fields": fields},
-        partitioning={"spec_id": spec_id, "rule": f"bucket({new_name}, {n})"},
+        partitioning={
+            "spec_id": int(live.get("spec_id", 0)),
+            "rule": f"bucket({new_name}, {n})",
+        },
     )
-
-
-def _tlog_bucket_mapped_cohorts(
-    root: str, head: int
-) -> list[tuple[dict, tuple[str, int], list[str]]]:
-    """Live groups cohorted by (physical binding, written spec) — the
-    two axes a mapped bucketed serve must respect. Returns
-    [(binding, written_spec, paths)] sorted deterministically; raises
-    the bootstrap error on an unbound live group (mapping active)."""
-
-    phys = _tlog_replay_map(root, head, "colphys")
-    specs = _tlog_bucket_group_specs(root, head)
-    cohorts: dict[tuple, tuple[dict, tuple[str, int], list[str]]] = {}
-    for p in _tlog_live_files(root, head):
-        g = os.path.basename(p)
-        binding = _tlog_colmap_binding(phys, g)
-        wspec = specs.get(g)
-        if wspec is None:
-            raise RuntimeError(
-                f"group {g} at {root} has no bucket layout — a bucketed "
-                "serve cannot place it"
-            )
-        k = (tuple(sorted(binding.items())), wspec)
-        if k not in cohorts:
-            cohorts[k] = (binding, wspec, [])
-        cohorts[k][2].append(p)
-    return [cohorts[k] for k in sorted(cohorts)]
-
-
-def _tlog_bucketed_serve_mapped(
-    spark: SparkSession, root: str, alias: str, logical_ddl: str
-) -> DataFrame:
-    """Serve a COLUMN-MAPPED bucketed snapshot: one bucketed catalog
-    table per (binding, written-spec) cohort — hard-link bridge,
-    physical DDL translated from ``logical_ddl`` by field id,
-    CLUSTERED BY the cohort's own key spelling — then physical ->
-    logical aliasing and a union. Alias-aware output partitioning
-    keeps each cohort's bucketed distribution visible under the
-    LOGICAL name, and same-N cohorts union co-partitioned — so
-    zero-Exchange plans survive a rename with zero bytes moved EVEN
-    on mixed-spelling snapshots (value-based murmur3 routing doesn't
-    care what the column is called). Only a bucket-COUNT mismatch
-    across cohorts (spec evolution) reintroduces the shuffle."""
-    import glob
-    import re
-    import shutil
-
-    head = _tlog_latest_version(root)
-    spec = _tlog_bucket_spec(root, head)
-    cmap = _tlog_live_colmap(root, head)
-    if spec is None or cmap is None:
-        raise RuntimeError(
-            f"table at {root} needs both a bucket layout and a column "
-            "mapping for the mapped bucketed serve"
-        )
-    key, _n = spec
-    # logical_ddl: "name TYPE" pairs in logical (head) spelling
-    ddl_types = {}
-    order = []
-    for entry in logical_ddl.split(","):
-        name, typ = entry.strip().split(None, 1)
-        ddl_types[name] = typ
-        order.append(name)
-    name_to_fid = {f["name"]: str(f["id"]) for f in cmap["fields"]}
-    key_fid = name_to_fid[key]
-    cohorts = _tlog_bucket_mapped_cohorts(root, head)
-    for entry in os.listdir(root):
-        m = re.fullmatch(r"_serve_v(\d+)(?:_[mn]\d+)?", entry)
-        if m and int(m.group(1)) < head:
-            shutil.rmtree(os.path.join(root, entry), ignore_errors=True)
-    parts = []
-    for idx, (binding, (wkey, wn), paths) in enumerate(cohorts):
-        serve = os.path.join(root, f"_serve_v{head}_m{idx}")
-        if not os.path.isdir(serve):
-            tmp = f"{serve}.tmp.{os.getpid()}"
-            shutil.rmtree(tmp, ignore_errors=True)
-            os.makedirs(tmp)
-            for p in paths:
-                for f in sorted(glob.glob(os.path.join(p, "*.parquet"))):
-                    os.link(f, os.path.join(tmp, os.path.basename(f)))
-            try:
-                os.rename(tmp, serve)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-        phys_cols = []
-        sel = []
-        for name in order:
-            fid = name_to_fid[name]
-            pname = binding.get(fid)
-            if pname is not None:
-                phys_cols.append(f"{pname} {ddl_types[name]}")
-                sel.append(F.col(pname).alias(name))
-            else:
-                # field added after this cohort was written
-                sel.append(
-                    F.lit(None).cast(ddl_types[name]).alias(name)
-                )
-        pkey = binding[key_fid]
-        assert pkey == wkey, (
-            f"cohort written under bucket({wkey}) but field {key_fid} "
-            f"binds {pkey} — the rename commit must re-spell the rule"
-        )
-        tname = f"{alias}_v{head}_m{idx}"
-        if not spark.catalog.tableExists(tname):
-            spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {tname} "
-                f"({', '.join(phys_cols)}) USING parquet "
-                f"CLUSTERED BY ({pkey}) SORTED BY ({pkey}) "
-                f"INTO {wn} BUCKETS LOCATION '{serve}'"
-            )
-        parts.append(spark.table(tname).select(*sel))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _tlog_bucket_respell(spark: SparkSession, root: str) -> int:
-    """RESPELL COMPACTION for the mapped bucketed table: fold every
-    cohort whose physical binding OR written spec differs from the
-    head into ONE head-spelled, head-spec group (dataChange:false —
-    live content identical, feed consumers skip it). The bucketed
-    twin of colmap OPTIMIZE: every rewritten byte pays down rename
-    debt AND layout debt in the same pass — one binding signature and
-    one written spec for future schema ops, and across a bucket-COUNT
-    evolution it is what restores the zero-Exchange plan (same-N
-    spelling mixes never lost it). The fold is :func:`_tlog_rewrite`'s
-    (DVs applied). No stale cohort -> no commit."""
-
-    head = _tlog_latest_version(root)
-    spec = _tlog_bucket_spec(root, head)
-    cmap = _tlog_live_colmap(root, head)
-    if spec is None or cmap is None:
-        raise RuntimeError(
-            f"table at {root} needs both a bucket layout and a column "
-            "mapping for the respell compaction"
-        )
-    head_binding = {str(f["id"]): f["name"] for f in cmap["fields"]}
-    stale = sorted(
-        os.path.basename(p)
-        for binding, wspec, paths in _tlog_bucket_mapped_cohorts(root, head)
-        if binding != head_binding or wspec != spec
-        for p in paths
-    )
-    if not stale:
-        return head
-    return _tlog_rewrite(spark, root, stale, f"file_rsp{head + 1}")
 
 
 # --- Streaming ingest into a MAPPED bucketed table with a ------------------
@@ -6609,7 +6455,7 @@ def _tlog_apply_bktcm_ingest(spark: SparkSession, root: str) -> None:
                         for src, f in zip(("event_id", "bucket", "value"), fields)
                     )
                 ),
-                batch_id, f"file_bkcms_b{batch_id}", bucketed=True,
+                batch_id, f"file_bkcms_b{batch_id}",
                 colphys={str(f["id"]): f["name"] for f in fields},
             )
 

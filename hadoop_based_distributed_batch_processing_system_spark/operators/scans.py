@@ -2686,7 +2686,7 @@ def _tlog_drain(stream: DataFrame, fn, root: str) -> None:
 
 def _tlog_land(
     spark: SparkSession, root: str, batch_df: DataFrame, batch_id: int | None,
-    name: str, bucketed: bool = False, colphys: dict[str, str] | None = None,
+    name: str, colphys: dict[str, str] | None = None,
 ) -> None:
     """THE landing of an append: micro-batch ``batch_id`` becomes file
     group ``name`` and ONE atomic commit keyed by the batch id (a
@@ -2695,26 +2695,29 @@ def _tlog_land(
     commit publishes the whole group or none of it, and the batch id
     is checked FIRST, from metadata alone: a re-delivered batch runs
     no Spark job and writes nothing (Delta's txn appId/version rule).
-    The group is staged with per-column stats from the write itself,
-    or on a ``bucketed`` table hash-routed under the live spec and
-    checked at the bucket gate; a batch that stages nothing commits
+    The layout comes from the same snapshot fold as the batch check,
+    as :func:`_tlog_write` takes it: on a table whose rule is
+    bucket(key, N) the group is hash-routed under that rule and
+    checked at the bucket gate, else it is staged with per-column
+    stats from the write itself; a batch that stages nothing commits
     nothing. ``colphys`` is a mapped group's field id -> physical name
     binding. The commit is a blind append, rebased over any concurrent
     commit."""
-    if batch_id is not None and _tlog_batch_committed(root, batch_id):
-        return  # re-delivered batch: idempotent no-op
     base = max(_tlog_latest_version_safe(root), -1)
+    snap = _tlog_snapshot(root, base)
+    if batch_id is not None and batch_id in snap["batches"]:
+        return  # re-delivered batch: idempotent no-op
+    bucket = _tlog_bucket_rule(snap["partitioning"])
     stats: dict[str, dict] = {}
-    if bucketed:
+    if bucket:
         import glob
         import shutil
 
-        live = _tlog_bucket_spec(root, base)
-        _tlog_bucketed_stage(spark, batch_df, root, name, live)
+        _tlog_bucketed_stage(spark, batch_df, root, name, bucket)
         if not glob.glob(os.path.join(root, name, "*.parquet")):
             shutil.rmtree(os.path.join(root, name), ignore_errors=True)
             return
-        _tlog_bucketed_commit_validate(root, [name], live, live)
+        _tlog_bucketed_commit_validate(root, [name], bucket, bucket)
     else:
         promoted, stats = _tlog_staged_write_with_stats(
             batch_df.withColumn("tgt", F.lit(name)), root, [name],

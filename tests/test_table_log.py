@@ -1037,11 +1037,11 @@ def test_empty_micro_batch_lands_nothing(spark, tmp_path):
         partitioning={"spec_id": 0, "rule": "bucket(event_id, 8)"},
     )
     empty = spark.createDataFrame([], "event_id long, bucket int, value double")
-    for root, kw, head in ((plain, {}, -2), (bucketed, {"bucketed": True}, 0)):
+    for root, head in ((plain, -2), (bucketed, 0)):
         done: list = []
         t = threading.Thread(
             target=lambda: done.append(
-                _tlog_land(spark, root, empty, 0, "file_empty_b0", **kw)
+                _tlog_land(spark, root, empty, 0, "file_empty_b0")
             ),
             daemon=True,
         )
@@ -1050,6 +1050,58 @@ def test_empty_micro_batch_lands_nothing(spark, tmp_path):
         assert done == [None], f"landing an empty batch on {root} did not return"
         assert _tlog_latest_version_safe(root) == head, "an empty batch committed"
         assert sorted(os.listdir(root)) == ["_log"], os.listdir(root)
+
+
+def test_land_reads_the_bucket_layout_from_the_log(spark, tmp_path, monkeypatch):
+    """A landing takes the bucket layout from the log, as the writer
+    does: into a bucket(o_orderkey, 8) root, ``_tlog_land`` with no
+    layout argument stages a group whose every row sits in the file
+    tagged pmod(hash(o_orderkey), 8), and a group staged under another
+    spec is refused at the bucket gate without a commit."""
+    from pyspark.sql import functions as F
+
+    from hadoop_based_distributed_batch_processing_system_spark.operators import (
+        scans,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+        load_table,
+    )
+
+    root = str(tmp_path / "bland")
+    os.makedirs(os.path.join(root, "_log"))
+    _tlog_commit(
+        root, add=[], remove=[], base_version=-1, data_change=False,
+        partitioning={"spec_id": 0, "rule": "bucket(o_orderkey, 8)"},
+    )
+    raw = load_table(spark, SF_SMOKE, "orders").select("o_orderkey", "o_totalprice")
+    scans._tlog_land(
+        spark, root, raw.filter("o_orderkey % 2 = 0"), None, "file_plain"
+    )
+    assert _tlog_latest_version(root) == 1
+    tagged = (
+        spark.read.parquet(os.path.join(root, "file_plain"))
+        .withColumn(
+            "_tag",
+            F.regexp_extract(F.input_file_name(), r"_(\d{5})[.c\-]", 1),
+        )
+        .withColumn("_want", F.expr("pmod(hash(o_orderkey), 8)"))
+    )
+    assert tagged.count() == raw.filter("o_orderkey % 2 = 0").count()
+    assert tagged.filter("_tag = '' OR CAST(_tag AS INT) != _want").count() == 0
+
+    # a group staged under bucket(o_orderkey, 16) is refused at the gate
+    stage = scans._tlog_bucketed_stage
+    monkeypatch.setattr(
+        scans, "_tlog_bucketed_stage",
+        lambda spark, df, root, g, _declared: stage(
+            spark, df, root, g, ("o_orderkey", 16)
+        ),
+    )
+    with pytest.raises(RuntimeError, match="bucketing spec violation"):
+        scans._tlog_land(
+            spark, root, raw.filter("o_orderkey % 2 = 1"), None, "file_wrong"
+        )
+    assert _tlog_latest_version(root) == 1
 
 
 def test_landing_zone_mtime_order_is_name_order(spark, tmp_path):
@@ -2440,26 +2492,21 @@ def test_multi_asof_shared_clock_premise(spark):
         assert _tlog_commit_ts(base, v) == _tlog_commit_ts(dml, v)
 
 
-def test_compact_trigger_skip_is_metadata_only_and_fire_preserves(spark, tlog_dir, monkeypatch):
+def test_compact_trigger_skip_is_metadata_only_and_fire_preserves(spark, tlog_dir):
     """The trigger's SKIP path costs metadata only — below threshold
-    it must decide without any data-plane read (relation poisoned);
-    the FIRE path merges exactly the k smallest groups, preserves
-    content, and materializes any DV binding on a victim."""
+    it must decide without starting a Spark job; the FIRE path merges
+    exactly the k smallest groups, preserves content, and materializes
+    any DV binding on a victim."""
     import pyspark.sql.functions as F
 
-    from hadoop_based_distributed_batch_processing_system_spark.operators import (
-        lakehouse,
-    )
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
         _tlog_compact_trigger,
     )
 
-    def _poisoned(*_a, **_k):
-        raise AssertionError("trigger skip path touched the data plane")
-
-    monkeypatch.setattr(lakehouse, "_tlog_relation", _poisoned)
-    d = _tlog_compact_trigger(spark, tlog_dir, threshold=99)
-    monkeypatch.undo()
+    d, jobs = _jobs_started(
+        spark, lambda: _tlog_compact_trigger(spark, tlog_dir, threshold=99)
+    )
+    assert jobs == 0, f"trigger skip path started {jobs} Spark jobs"
     assert d == {
         "fired": 0, "live_before": 3, "live_after": 3, "version": 2,
     }
@@ -5258,10 +5305,8 @@ def test_rewrite_keeps_dv_deleted_rows_deleted(spark, tmp_path, monkeypatch, sta
         lakehouse._tlog_colmap_compact(spark, root)
     elif statement == "trigger":
         lakehouse._tlog_compact_trigger(spark, root, threshold=3, k=2)
-    elif statement == "rebucket":
+    elif statement in ("rebucket", "respell"):
         lakehouse._tlog_bucket_rebucket(spark, root)
-    elif statement == "respell":
-        lakehouse._tlog_bucket_respell(spark, root)
     elif statement == "ev_cluster":
         lakehouse._tlog_apply_ev_cluster(spark, SF_SMOKE, root)
     after = head + 1
@@ -6233,7 +6278,7 @@ def test_bucket_spec_evolution_and_rebucket_compaction(spark, tmp_path):
         _tlog_bucket_evolve,
         _tlog_bucket_group_specs,
         _tlog_bucketed_commit,
-        _tlog_bucketed_serve_mixed,
+        _tlog_bucketed_serve,
         _tlog_bucketed_stage,
         _tlog_bucket_rebucket,
     )
@@ -6291,7 +6336,7 @@ def test_bucket_spec_evolution_and_rebucket_compaction(spark, tmp_path):
 
     # (d) mixed serve: full content, Exchange present (degradation)
     ddl = "o_orderkey BIGINT, o_orderpriority STRING"
-    mixed = _tlog_bucketed_serve_mixed(spark, root, "hbdbps_bkev_t", ddl)
+    mixed = _tlog_bucketed_serve(spark, root, "hbdbps_bkev_t", ddl)
     assert mixed.count() == df.count()
     plan_mixed = physical_plan(
         mixed.groupBy("o_orderkey").agg(F.count(F.lit(1)).alias("n"))
@@ -6308,13 +6353,72 @@ def test_bucket_spec_evolution_and_rebucket_compaction(spark, tmp_path):
     assert any(g.startswith("file_rbk") for g in live)
     specs3 = _tlog_bucket_group_specs(root, v3)
     assert set(specs3.values()) == {spec16}
-    single = _tlog_bucketed_serve_mixed(spark, root, "hbdbps_bkev_t", ddl)
+    single = _tlog_bucketed_serve(spark, root, "hbdbps_bkev_t", ddl)
     assert single.count() == df.count()
     plan_single = physical_plan(
         single.groupBy("o_orderkey").agg(F.count(F.lit(1)).alias("n"))
     )
     assert "Exchange" not in plan_single
     assert _tlog_bucket_rebucket(spark, root) == v3  # no-op, no commit
+
+
+def test_bucketed_serve_declares_the_written_spec(spark, tmp_path):
+    """A serve declares each cohort with the bucket count its files were
+    WRITTEN under, not the head's: a table written bucket(o_orderkey, 8)
+    and evolved to 16 with no new write still serves every row through
+    a merge-hinted join with a 16-way copy of the same rows, and every
+    point lookup with autoBucketedScan off finds its key, pruned to one
+    of the 8 written buckets."""
+    from pyspark.sql import functions as F
+
+    from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
+        _tlog_bucket_evolve,
+        _tlog_bucketed_commit,
+        _tlog_bucketed_serve,
+        _tlog_bucketed_stage,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.plans.inspect import (
+        physical_plan,
+    )
+    from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+        load_table,
+    )
+
+    raw = load_table(spark, SF_SMOKE, "orders").select("o_orderkey", "o_totalprice")
+    roots = {}
+    for n in (8, 16):
+        root = roots[n] = str(tmp_path / f"bk{n}")
+        os.makedirs(os.path.join(root, "_log"))
+        spec = ("o_orderkey", n)
+        _tlog_bucketed_stage(spark, raw, root, "file_bkt0", spec)
+        _tlog_bucketed_commit(
+            root, ["file_bkt0"], -1, spec,
+            partitioning={"spec_id": 0, "rule": f"bucket(o_orderkey, {n})"},
+        )
+    _tlog_bucket_evolve(roots[8], "o_orderkey", 16)  # no new write
+    ddl = "o_orderkey BIGINT, o_totalprice DOUBLE"
+    old = _tlog_bucketed_serve(spark, roots[8], "hbdbps_bkwr_a", ddl)
+    new = _tlog_bucketed_serve(spark, roots[16], "hbdbps_bkwr_b", ddl)
+    n_rows = raw.count()
+    joined = old.join(new.hint("merge"), old.o_orderkey == new.o_orderkey)
+    assert joined.count() == n_rows
+
+    keys = sorted(r[0] for r in raw.select("o_orderkey").collect())
+    keys = keys[:: len(keys) // 40][:40]
+    conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "false")
+        assert "SelectedBucketsCount: 1 out of 8" in physical_plan(
+            old.filter(F.col("o_orderkey") == keys[0])
+        )
+        missed = [
+            k for k in keys
+            if old.filter(F.col("o_orderkey") == k).count() != 1
+        ]
+    finally:
+        spark.conf.set(conf, prev)
+    assert missed == []
 
 
 def test_bucketed_stream_ingest_tracks_spec_per_batch(spark, tmp_path):
@@ -6415,7 +6519,7 @@ def test_bucketed_dml_cow_through_the_layout_gate(spark, tmp_path):
         _tlog_bucket_evolve,
         _tlog_bucket_group_specs,
         _tlog_bucketed_commit,
-        _tlog_bucketed_serve_mixed,
+        _tlog_bucketed_serve,
         _tlog_bucketed_stage,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
@@ -6494,7 +6598,7 @@ def test_bucketed_dml_cow_through_the_layout_gate(spark, tmp_path):
     ) == 0
     expect = raw.filter("o_orderkey % 10 != 4")
     ddl = "o_orderkey BIGINT, o_totalprice DOUBLE"
-    served = _tlog_bucketed_serve_mixed(spark, root, "hbdbps_bdml_t", ddl)
+    served = _tlog_bucketed_serve(spark, root, "hbdbps_bdml_t", ddl)
     assert _agg(served) == _agg(expect)
     plan = physical_plan(
         served.groupBy("o_orderkey").agg(F.count(F.lit(1)).alias("n"))
@@ -6526,7 +6630,7 @@ def test_bucketed_dml_cow_through_the_layout_gate(spark, tmp_path):
             F.expr("o_orderkey % 10 = 2"), F.col("o_orderkey") + shift
         ).otherwise(F.col("o_orderkey")),
     )
-    served = _tlog_bucketed_serve_mixed(spark, root, "hbdbps_bdml_t", ddl)
+    served = _tlog_bucketed_serve(spark, root, "hbdbps_bdml_t", ddl)
     assert _agg(served) == _agg(expect)
 
     # (d) DELETE that empties a whole group: removed, nothing staged
@@ -6551,7 +6655,7 @@ def test_bucketed_dml_cow_through_the_layout_gate(spark, tmp_path):
         os.path.join(root, f"file_bdel{v6}"), "o_orderkey", 16
     ) == 0
     expect = expect.filter("o_orderkey % 10 != 6")
-    served = _tlog_bucketed_serve_mixed(spark, root, "hbdbps_bdml_t", ddl)
+    served = _tlog_bucketed_serve(spark, root, "hbdbps_bdml_t", ddl)
     assert _agg(served) == _agg(expect)
     plan = physical_plan(
         served.groupBy("o_orderkey").agg(F.count(F.lit(1)).alias("n"))
@@ -6576,7 +6680,7 @@ def test_bucketed_merge_colocates_upserts(spark, tmp_path):
 
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
         _tlog_bucketed_commit,
-        _tlog_bucketed_serve_mixed,
+        _tlog_bucketed_serve,
         _tlog_bucketed_stage,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
@@ -6657,7 +6761,7 @@ def test_bucketed_merge_colocates_upserts(spark, tmp_path):
         ).otherwise(F.col("o_totalprice")),
     ).unionByName(inserts)
     ddl = "o_orderkey BIGINT, o_totalprice DOUBLE"
-    served = _tlog_bucketed_serve_mixed(spark, root, "hbdbps_bmrg_t", ddl)
+    served = _tlog_bucketed_serve(spark, root, "hbdbps_bmrg_t", ddl)
     assert _agg(served) == _agg(expect)
     plan = physical_plan(
         served.groupBy("o_orderkey").agg(F.count(F.lit(1)).alias("n"))
@@ -6673,7 +6777,7 @@ def test_bucketed_merge_colocates_upserts(spark, tmp_path):
     c3 = json.load(open(os.path.join(root, "_log", f"{v3:06d}.json")))
     assert c3["remove"] == [] and c3["add"] == [f"file_bmrg{v3}"]
     expect = expect.unionByName(far)
-    served = _tlog_bucketed_serve_mixed(spark, root, "hbdbps_bmrg_t", ddl)
+    served = _tlog_bucketed_serve(spark, root, "hbdbps_bmrg_t", ddl)
     assert _agg(served) == _agg(expect)
 
     # (e) empty merge: no commit
@@ -6751,9 +6855,9 @@ def test_bucket_key_rename_under_column_mapping(spark, tmp_path):
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
         _tlog_bucket_group_specs,
         _tlog_bucket_key_rename,
-        _tlog_bucket_respell,
+        _tlog_bucket_rebucket,
         _tlog_bucketed_commit,
-        _tlog_bucketed_serve_mapped,
+        _tlog_bucketed_serve,
         _tlog_bucketed_stage,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
@@ -6831,7 +6935,7 @@ def test_bucket_key_rename_under_column_mapping(spark, tmp_path):
 
     # (c) zero-Exchange on the NEW name over the OLD bytes
     ddl = "order_id BIGINT, o_totalprice DOUBLE"
-    served = _tlog_bucketed_serve_mapped(spark, root, "hbdbps_bkcm_t", ddl)
+    served = _tlog_bucketed_serve(spark, root, "hbdbps_bkcm_t", ddl)
     assert served.columns == ["order_id", "o_totalprice"]
     expect = raw.withColumnRenamed("o_orderkey", "order_id")
     assert _agg(served, "order_id") == _agg(expect, "order_id")
@@ -6851,7 +6955,7 @@ def test_bucket_key_rename_under_column_mapping(spark, tmp_path):
         colphys={"file_bktC": {"1": "order_id", "2": "o_totalprice"}},
     )
     assert _tlog_bucket_group_specs(root, v3)["file_bktC"] == spec_new
-    served = _tlog_bucketed_serve_mapped(spark, root, "hbdbps_bkcm_t", ddl)
+    served = _tlog_bucketed_serve(spark, root, "hbdbps_bkcm_t", ddl)
     expect = expect.unionByName(band)
     assert _agg(served, "order_id") == _agg(expect, "order_id")
     plan = physical_plan(
@@ -6870,19 +6974,19 @@ def test_bucket_key_rename_under_column_mapping(spark, tmp_path):
         p: os.stat(p).st_mtime_ns
         for p in _glob.glob(os.path.join(root, "file_bktC", "*.parquet"))
     }
-    v4 = _tlog_bucket_respell(spark, root)
+    v4 = _tlog_bucket_rebucket(spark, root)
     assert v4 == v3 + 1
     assert _tlog_change_units(root, v4) == []  # content identical
     assert c_mtimes == {p: os.stat(p).st_mtime_ns for p in c_mtimes}
     live = {os.path.basename(p) for p in _tlog_live_files(root, v4)}
     assert live == {"file_bktC", f"file_rsp{v4}"}
-    served = _tlog_bucketed_serve_mapped(spark, root, "hbdbps_bkcm_t", ddl)
+    served = _tlog_bucketed_serve(spark, root, "hbdbps_bkcm_t", ddl)
     assert _agg(served, "order_id") == _agg(expect, "order_id")
     plan = physical_plan(
         served.groupBy("order_id").agg(F.count(F.lit(1)).alias("n"))
     )
     assert "Exchange" not in plan
-    assert _tlog_bucket_respell(spark, root) == v4  # no-op
+    assert _tlog_bucket_rebucket(spark, root) == v4  # no-op
 
 
 def test_bucketed_colmap_delete_respells_then_applies(spark, tmp_path):
@@ -6905,7 +7009,7 @@ def test_bucketed_colmap_delete_respells_then_applies(spark, tmp_path):
     from hadoop_based_distributed_batch_processing_system_spark.operators.lakehouse import (
         _tlog_bucket_key_rename,
         _tlog_bucketed_commit,
-        _tlog_bucketed_serve_mapped,
+        _tlog_bucketed_serve,
         _tlog_bucketed_stage,
         _tlog_colmap_translate,
     )
@@ -7007,7 +7111,7 @@ def test_bucketed_colmap_delete_respells_then_applies(spark, tmp_path):
         .filter("NOT (order_id % 10 = 4)")
     )
     ddl = "order_id BIGINT, o_totalprice DOUBLE"
-    served = _tlog_bucketed_serve_mapped(spark, root, "hbdbps_bcd_t", ddl)
+    served = _tlog_bucketed_serve(spark, root, "hbdbps_bcd_t", ddl)
 
     def _agg(df):
         r = df.agg(
@@ -7052,7 +7156,7 @@ def test_mapped_bucketed_stream_ingest_tracks_spelling_per_batch(spark, tmp_path
         _TLOG_BKCMS_ROWS,
         _tlog_apply_bktcm_ingest,
         _tlog_bucket_spec,
-        _tlog_bucketed_serve_mapped,
+        _tlog_bucketed_serve,
     )
     from hadoop_based_distributed_batch_processing_system_spark.operators.scans import (
         _tlog_replay_map,
@@ -7086,7 +7190,7 @@ def test_mapped_bucketed_stream_ingest_tracks_spelling_per_batch(spark, tmp_path
         assert tags and tags[-1] < 8
 
     # (c) logical head read: closed form + zero-Exchange on evt_id
-    served = _tlog_bucketed_serve_mapped(
+    served = _tlog_bucketed_serve(
         spark, root, "hbdbps_bkcms_t",
         "evt_id BIGINT, bucket INT, value DOUBLE",
     )
