@@ -34,6 +34,7 @@ from hadoop_based_distributed_batch_processing_system_spark.registry import regi
 from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
     load_table,
     parquet_row_count,
+    session_parallelism,
     spread_small_scan,
 )
 
@@ -844,7 +845,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs so DuckDB can oracle the fixpoint with a recursive CTE."""
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
     edges = pairs.union(pairs.select(F.col("id_b"), F.col("id_a"))).toDF("u", "v")
-    edges = edges.repartition(32, "v").cache()
+    edges = edges.repartition(session_parallelism(spark), "v").cache()
 
     labels = edges.select(F.col("u")).distinct().select("u", F.col("u").alias("label")).cache()
     for _ in range(_CC_MAX_ITERS):

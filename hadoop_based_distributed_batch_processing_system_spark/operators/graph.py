@@ -26,7 +26,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from hadoop_based_distributed_batch_processing_system_spark.registry import register
-from hadoop_based_distributed_batch_processing_system_spark.sources.io import load_table
+from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+    load_table,
+    session_parallelism,
+)
 
 _DAMPING = 0.85
 _ITERS = 10
@@ -239,7 +242,7 @@ def pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         pairs.select(F.col("cnode").alias("src"), F.col("snode").alias("dst"))
         .union(pairs.select(F.col("snode"), F.col("cnode")))
-        .repartition(32, "src")
+        .repartition(session_parallelism(spark), "src")
         .cache()
     )
     nodes = edges.select(F.col("src").alias("node")).distinct().cache()

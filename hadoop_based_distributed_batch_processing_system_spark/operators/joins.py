@@ -26,7 +26,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from hadoop_based_distributed_batch_processing_system_spark.registry import register
-from hadoop_based_distributed_batch_processing_system_spark.sources.io import corpus_tag, load_table
+from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+    corpus_tag,
+    load_table,
+    session_parallelism,
+)
 
 
 @register(
@@ -1265,7 +1269,7 @@ def entity_resolution_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     universe = base.union(typo).distinct()
 
     edges = pairs.union(pairs.select(F.col("v"), F.col("u"))).toDF("u", "v")
-    edges = edges.repartition(16, "v").cache()
+    edges = edges.repartition(session_parallelism(spark), "v").cache()
     labels = edges.select("u").distinct().select("u", F.col("u").alias("label")).cache()
     for _ in range(_ER_MAX_ITERS):
         neighbor = (

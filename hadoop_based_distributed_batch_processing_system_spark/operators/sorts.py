@@ -24,7 +24,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from hadoop_based_distributed_batch_processing_system_spark.registry import register
-from hadoop_based_distributed_batch_processing_system_spark.sources.io import corpus_tag, load_table
+from hadoop_based_distributed_batch_processing_system_spark.sources.io import (
+    corpus_tag,
+    load_table,
+    session_parallelism,
+)
 
 
 @register(
@@ -142,7 +146,7 @@ def secondary_sort_user_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
     return (
-        ev.repartition(32, "user_id")
+        ev.repartition(session_parallelism(spark), "user_id")
         .sortWithinPartitions("user_id", "ts", "event_id")
         .mapInPandas(scan, "user_id long, n_events long, timeline string")
         .orderBy("user_id")

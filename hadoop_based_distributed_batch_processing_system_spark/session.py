@@ -17,6 +17,11 @@ Scale notes (100 TB discipline):
   with a high initial value). Exposed via env for the bench driver.
 - session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle (naive-UTC) regardless of host timezone.
+- Python workers: ``spark.python.daemon.module`` runs
+  :mod:`.pyworker`, so a reused worker stops re-reading Spark's zip
+  archives before every task, and ``spark.executorEnv.PYTHONPATH``
+  holds this package's parent directory, so workers import the daemon
+  and kernels pickled by reference from any working directory.
 """
 
 from __future__ import annotations
@@ -24,6 +29,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -51,5 +58,7 @@ def get_spark(
         # regenerated with a different encoding mid-build once already
         # arrow transfer for the pandas-UDF operators (X1/X2, multimodal)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", f"{__package__}.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     return builder.getOrCreate()

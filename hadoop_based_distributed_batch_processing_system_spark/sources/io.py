@@ -207,6 +207,19 @@ def parquet_row_count(sf_dir: str, name: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
+def session_parallelism(spark: SparkSession) -> int:
+    """Partition count for an explicit ``repartition``: the session's
+    shuffle partitions, capped by its default parallelism (the cores
+    of a local session), so a stage never asks for more tasks than the
+    session sizes its shuffles for."""
+    p = spark.sparkContext.defaultParallelism
+    try:
+        p = min(p, int(spark.conf.get("spark.sql.shuffle.partitions", "200")))
+    except ValueError:  # e.g. "auto": no fixed count to cap at
+        pass
+    return p
+
+
 def spread_small_scan(df: DataFrame, key: str) -> DataFrame:
     """Scale-ADAPTIVE parallelism restore for CPU-heavy narrow maps
     over a small scan (guide §2.6 idle capacity / §2.5 deterministic
@@ -233,12 +246,7 @@ def spread_small_scan(df: DataFrame, key: str) -> DataFrame:
     never rand(); SPARK-38388), so a retried map task reproduces the
     same row placement.
     """
-    sess = df.sparkSession
-    p = sess.sparkContext.defaultParallelism
-    try:
-        p = min(p, int(sess.conf.get("spark.sql.shuffle.partitions", "200")))
-    except ValueError:  # e.g. "auto": no fixed count to cap at
-        pass
+    p = session_parallelism(df.sparkSession)
     if df.rdd.getNumPartitions() >= p:
         return df
     return df.repartition(p, F.col(key))
